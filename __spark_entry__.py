@@ -719,20 +719,20 @@ def q_kg_triples(spark, sf_dir):
 
 def _build_mention_snapshot(spark):
     from corenlp_spark.operators.mentions import mention_rows
-    from corenlp_spark.plans.fused import annotate_fused
+    from corenlp_spark.plans.fused import annotate
 
-    return mention_rows(annotate_fused(_golden_docs(spark))).select(
+    return mention_rows(annotate(_golden_docs(spark))).select(
         "doc_id", "sent_idx", "ner",
         F.coalesce(F.col("nner"), F.lit("")).alias("nner"), "text")
 
 
 def q_kg_mentions(spark, sf_dir):
-    """LIVE staged-path NER + mention chunking, hash-checked against a
-    DuckDB aggregation over the snapshotted mention rows (the fused and
-    staged paths are equal by construction — tests assert it — so the
-    staged live run must reproduce the fused snapshot exactly)."""
+    """LIVE NER + mention chunking (the kernel cut at NER), hash-checked
+    against a DuckDB aggregation over the snapshotted mention rows (a cut
+    skips only later kernels, so the live run must reproduce the
+    full-annotation snapshot exactly)."""
     from corenlp_spark.operators.mentions import mention_rows
-    from corenlp_spark.plans.pipeline import annotate
+    from corenlp_spark.plans.fused import annotate
 
     _ensure_snapshot("_mentions", lambda: _build_mention_snapshot(spark))
     m = mention_rows(annotate(_golden_docs(spark), upto="ner"))
@@ -775,11 +775,11 @@ def q_kg_mentions_oracle(spark, sf_dir):
     import os
 
     from corenlp_spark.operators.mentions import mention_rows
-    from corenlp_spark.plans.fused import annotate_fused
+    from corenlp_spark.plans.fused import annotate
 
     path = _ann_tokens_path()
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        ann = annotate_fused(_golden_docs(spark))
+        ann = annotate(_golden_docs(spark))
         flat = ann.select("doc_id", F.explode("tokens").alias("t")).select(
             "doc_id", F.col("t.idx").alias("idx"), F.col("t.sent").alias("sent"),
             F.col("t.word").alias("word"), F.col("t.ner").alias("ner"),
@@ -884,11 +884,11 @@ def _entity_link_oracle() -> str:
 
 
 def _build_sutime_tokens(spark):
-    from corenlp_spark.operators.sutime import sutime_docs, with_docdate
-    from corenlp_spark.plans.pipeline import annotate
+    from corenlp_spark.operators.sutime import with_docdate
+    from corenlp_spark.plans.fused import annotate
 
     docs = with_docdate(_golden_docs(spark), fixed="2013-02-21")
-    ann = sutime_docs(annotate(docs, upto="ner"))
+    ann = annotate(docs, upto="ner", sutime=True)
     return ann.select("doc_id", F.explode("tokens").alias("t")).select(
         "doc_id", F.col("t.idx").alias("idx"), F.col("t.sent").alias("sent"),
         F.col("t.word").alias("word"), F.col("t.ner").alias("ner"),
@@ -930,9 +930,9 @@ def q_kg_coref_oracle(spark, sf_dir):
     path = _ann_tokens_path() + "_coref"
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         from corenlp_spark.operators.graph import coref_chains_rows
-        from corenlp_spark.plans.fused import annotate_fused
+        from corenlp_spark.plans.fused import annotate
 
-        ch = coref_chains_rows(annotate_fused(_golden_docs(spark))).select(
+        ch = coref_chains_rows(annotate(_golden_docs(spark))).select(
             "doc_id", "cluster_id", "sent_idx", "start_tok", "text",
             "kind", "representative")
         ch.write.mode("overwrite").parquet(path)
@@ -955,9 +955,9 @@ def _build_kbp_arms(spark):
         kbp_semgrex_relations, kbp_statistical_relations,
         kbp_tokensregex_relations,
     )
-    from corenlp_spark.plans.fused import annotate_fused
+    from corenlp_spark.plans.fused import annotate
 
-    ann = annotate_fused(_golden_docs(spark).unionByName(kbp_docs(spark)))
+    ann = annotate(_golden_docs(spark).unionByName(kbp_docs(spark)))
     cols = ["doc_id", "sent_idx", "subj", "relation", "obj", "confidence"]
     return (kbp_tokensregex_relations(ann).select(*cols)
             .unionByName(kbp_semgrex_relations(ann).select(*cols))
@@ -1018,9 +1018,9 @@ def q_kg_entailed_oracle(spark, sf_dir):
 
 def _build_entfrags(spark):
     from corenlp_spark.operators.entail import entailed_docs
-    from corenlp_spark.plans.fused import annotate_fused
+    from corenlp_spark.plans.fused import annotate
 
-    return entailed_docs(annotate_fused(_golden_docs(spark))).select(
+    return entailed_docs(annotate(_golden_docs(spark))).select(
         "fragment", "score")
 
 
@@ -1029,10 +1029,10 @@ def q_kg_entailed(spark, sf_dir):
     edges, naturalli/ForwardEntailerSearchProblem.java:119-220 re-expressed)
     hash-checked against the DuckDB replay over snapshotted fragments."""
     from corenlp_spark.operators.entail import entailed_docs
-    from corenlp_spark.plans.fused import annotate_fused
+    from corenlp_spark.plans.fused import annotate
 
     _ensure_snapshot("_entfrags", lambda: _build_entfrags(spark))
-    fr = entailed_docs(annotate_fused(_golden_docs(spark)))
+    fr = entailed_docs(annotate(_golden_docs(spark)))
     return (
         fr.groupBy("fragment")
         .agg(F.count("*").alias("n"), F.round(F.max("score"), 6).alias("max_score"))
@@ -1043,7 +1043,7 @@ def q_kg_entailed(spark, sf_dir):
 
 def _build_chains(spark):
     from corenlp_spark.operators.graph import coref_chains_rows
-    from corenlp_spark.plans.pipeline import annotate
+    from corenlp_spark.plans.fused import annotate
 
     return coref_chains_rows(annotate(_golden_docs(spark), upto="coref"))
 
@@ -1052,7 +1052,7 @@ def q_kg_coref_chains(spark, sf_dir):
     """LIVE multi-sieve coref + chain aggregation, hash-checked against the
     DuckDB replay over snapshotted chain rows."""
     from corenlp_spark.operators.graph import coref_chains_rows
-    from corenlp_spark.plans.pipeline import annotate
+    from corenlp_spark.plans.fused import annotate
 
     _ensure_snapshot("_chains", lambda: _build_chains(spark))
     ch = coref_chains_rows(annotate(_golden_docs(spark), upto="coref"))
@@ -1069,7 +1069,7 @@ def q_kg_coref_chains(spark, sf_dir):
 
 
 def q_kg_entity_link(spark, sf_dir):
-    """LIVE staged-path linking (broadcast caseless dict + salted canonical
+    """LIVE linking (broadcast caseless dict + salted canonical
     aggregation), hash-checked against the DuckDB dictionary-replay over
     the snapshotted mention rows (same SQL as the _oracle twin — the live
     run must reproduce the snapshot exactly)."""
@@ -1077,7 +1077,7 @@ def q_kg_entity_link(spark, sf_dir):
         alias_dict, canonical_entities, link_mentions,
     )
     from corenlp_spark.operators.mentions import mention_rows
-    from corenlp_spark.plans.pipeline import annotate
+    from corenlp_spark.plans.fused import annotate
 
     _ensure_snapshot("_mentions", lambda: _build_mention_snapshot(spark))
     m = mention_rows(annotate(_golden_docs(spark), upto="ner"))
@@ -1093,7 +1093,7 @@ def q_kg_entity_link(spark, sf_dir):
 
 def _build_kbparm1(spark):
     from corenlp_spark.operators.kbp import kbp_tokensregex_relations
-    from corenlp_spark.plans.pipeline import annotate
+    from corenlp_spark.plans.fused import annotate
 
     ann = annotate(_golden_docs(spark), upto="coref")
     return kbp_tokensregex_relations(ann).select(
@@ -1105,7 +1105,7 @@ def q_kg_kbp(spark, sf_dir):
     patterns), hash-checked against the DuckDB aggregation replay over the
     snapshotted arm output."""
     from corenlp_spark.operators.kbp import kbp_tokensregex_relations
-    from corenlp_spark.plans.pipeline import annotate
+    from corenlp_spark.plans.fused import annotate
 
     _ensure_snapshot("_kbparm1", lambda: _build_kbparm1(spark))
     ann = annotate(_golden_docs(spark), upto="coref")
@@ -1195,10 +1195,10 @@ def q_kg_kbp_ensemble(spark, sf_dir):
         kbp_ensemble, kbp_semgrex_relations, kbp_statistical_relations,
         kbp_tokensregex_relations,
     )
-    from corenlp_spark.plans.fused import annotate_fused
+    from corenlp_spark.plans.fused import annotate
 
     _ensure_snapshot("_kbparms", lambda: _build_kbp_arms(spark))
-    ann = annotate_fused(_golden_docs(spark).unionByName(kbp_docs(spark)))
+    ann = annotate(_golden_docs(spark).unionByName(kbp_docs(spark)))
     arm1 = kbp_tokensregex_relations(ann)
     arm2 = kbp_semgrex_relations(ann)
     arm3 = kbp_statistical_relations(ann)
@@ -1230,7 +1230,7 @@ def _kg_quote_docs(spark):
 
 def _build_qdual(spark):
     from corenlp_spark.operators.aux_annotators import quote_docs
-    from corenlp_spark.plans.pipeline import annotate
+    from corenlp_spark.plans.fused import annotate
 
     q = quote_docs(annotate(_kg_quote_docs(spark), upto="ner"))
     return q.select(F.explode("quotes").alias("q")).select(
@@ -1244,7 +1244,7 @@ def q_kg_quotes(spark, sf_dir):
     (the attribution ALGEBRA itself is independently replayed in
     kg_quotes_oracle)."""
     from corenlp_spark.operators.aux_annotators import quote_docs
-    from corenlp_spark.plans.pipeline import annotate
+    from corenlp_spark.plans.fused import annotate
 
     _ensure_snapshot("_qdual", lambda: _build_qdual(spark))
     q = quote_docs(annotate(_kg_quote_docs(spark), upto="ner"))
@@ -1262,12 +1262,12 @@ def q_kg_sutime(spark, sf_dir):
     window-SQL chunking replay over the snapshotted sutime tokens (same
     bytes as kg_sutime_oracle, DATE/TIME/DURATION classes)."""
     from corenlp_spark.operators.mentions import mention_rows
-    from corenlp_spark.operators.sutime import sutime_docs, with_docdate
-    from corenlp_spark.plans.pipeline import annotate
+    from corenlp_spark.operators.sutime import with_docdate
+    from corenlp_spark.plans.fused import annotate
 
     _ensure_snapshot("_sutime", lambda: _build_sutime_tokens(spark))
     docs = with_docdate(_golden_docs(spark), fixed="2013-02-21")
-    ann = sutime_docs(annotate(docs, upto="ner"))
+    ann = annotate(docs, upto="ner", sutime=True)
     m = mention_rows(ann)
     return (
         m.filter(F.col("ner").isin("DATE", "TIME", "DURATION"))
@@ -1337,7 +1337,7 @@ def q_kg_quotes_oracle(spark, sf_dir):
     import os
 
     from corenlp_spark.operators.aux_annotators import quote_docs
-    from corenlp_spark.plans.pipeline import annotate
+    from corenlp_spark.plans.fused import annotate
 
     tpath = _ann_tokens_path() + "_qtoks"
     spath = _ann_tokens_path() + "_qspans"

@@ -15,6 +15,20 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+# the operator suite: the SQL-checkable queries, run as actions
+SUITE = (
+    "pricing_summary", "top_orders_per_segment", "dedup_exact",
+    "dedup_minhash", "dedup_simhash", "dedup_simhash_pairs",
+    "dedup_ngram_jaccard",
+    "doc_fingerprint", "rolling_fingerprints", "token_count",
+    "quality_score", "lang_id", "ann_cosine_topk", "embedding_dups",
+    "events_sessions", "events_daily", "events_funnel",
+    "mention_chunks", "entity_link_dict", "gopher_quality",
+    "gopher_repetition", "pii_scan", "decontam_overlap", "source_quota",
+    "paragraph_dedup", "quality_lm", "kmeans_clusters",
+    "dedup_components",
+)
+
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -79,19 +93,6 @@ def main() -> None:
     queries["kg_pipeline"] = round(kg_wall, 3)
     triples_per_sec = n_raw / kg_wall if kg_wall else 0.0
 
-    # operator suite (the SQL-checkable queries, run as actions)
-    suite = [
-        "pricing_summary", "top_orders_per_segment", "dedup_exact",
-        "dedup_minhash", "dedup_simhash", "dedup_simhash_pairs",
-        "dedup_ngram_jaccard",
-        "doc_fingerprint", "rolling_fingerprints", "token_count",
-        "quality_score", "lang_id", "ann_cosine_topk", "embedding_dups",
-        "events_sessions", "events_daily", "events_funnel",
-        "mention_chunks", "entity_link_dict", "gopher_quality",
-        "gopher_repetition", "pii_scan", "decontam_overlap", "source_quota",
-        "paragraph_dedup", "quality_lm", "kmeans_clusters",
-        "dedup_components",
-    ]
     qfns = em.queries()
     # untimed per-query warm-up at the smallest sf: first execution of each
     # query shape pays whole-stage-codegen compile + JVM JIT (~2-4 s measured
@@ -101,19 +102,19 @@ def main() -> None:
     # same policy as the kg_pipeline warm-up above.
     warm_dir = "/root/testdata/sf0.001"
     if os.path.isdir(warm_dir):
-        for name in suite:
+        for name in SUITE:
             qfns[name](spark, warm_dir).write.format("noop").mode("overwrite").save()
     # best-of-2 per query (same noisy-host rationale as kg_pipeline): two
     # full-sf passes interleaved so neighbor-load spikes don't pin one query.
     times: dict[str, float] = {}
     for _ in range(2):
-        for name in suite:
+        for name in SUITE:
             t0 = time.time()
             df = qfns[name](spark, sf_dir)
             df.write.format("noop").mode("overwrite").save()
             dt = time.time() - t0
             times[name] = min(times.get(name, float("inf")), dt)
-    for name in suite:
+    for name in SUITE:
         queries[name] = round(times[name], 3)
 
     total = round(sum(queries.values()), 3)

@@ -40,23 +40,11 @@ def main() -> None:
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
     import __spark_entry__ as em
+    from bench import SUITE
     from corenlp_spark.session import get_spark
 
     qfns = em.queries()
-    if "--all" in args:
-        names = [
-            "pricing_summary", "top_orders_per_segment", "dedup_exact",
-            "dedup_minhash", "dedup_simhash", "dedup_simhash_pairs",
-            "dedup_ngram_jaccard", "doc_fingerprint", "rolling_fingerprints",
-            "token_count", "quality_score", "lang_id", "ann_cosine_topk",
-            "embedding_dups", "events_sessions", "events_daily",
-            "events_funnel", "mention_chunks", "entity_link_dict",
-            "gopher_quality", "gopher_repetition", "pii_scan",
-            "decontam_overlap", "source_quota", "paragraph_dedup",
-            "quality_lm", "kmeans_clusters", "dedup_components",
-        ]
-    else:
-        names = args
+    names = list(SUITE) if "--all" in args else args
     spark = get_spark(
         app_name="corenlp_spark_bench_extra",
         master=f"local[{cpus}]",

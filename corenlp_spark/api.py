@@ -27,8 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 # requirements DAG (Annotator.DEFAULT_REQUIREMENTS, Annotator.java:128-162,
-# collapsed onto this engine's fused stages: tokenize+ssplit are one stage,
-# pos+lemma are one stage)
+# collapsed onto the cuts of the fused kernel: tokenize+ssplit are one cut,
+# pos+lemma are one cut)
 _REQUIRES: dict[str, tuple[str, ...]] = {
     "tokenize": (),
     "cleanxml": (),            # folded into tokenize (markup barriers)
@@ -53,9 +53,9 @@ _REQUIRES: dict[str, tuple[str, ...]] = {
     "sentiment": ("depparse",),  # polarity-aware lexicon scorer
 }
 
-# execution order of the real stages backing the annotator names
-_STAGE_ORDER = ["docdate", "tokenize", "pos", "ner", "sutime", "depparse",
-                "coref"]
+# annotate() cuts backing the annotator names, deepest first
+_CUTS = (("coref", {"coref"}), ("depparse", {"depparse"}), ("ner", {"ner"}),
+         ("tag", {"pos", "lemma"}), ("tokenize", {"tokenize"}))
 
 
 class Pipeline:
@@ -92,30 +92,21 @@ class Pipeline:
         here; row-shaped outputs are reached through the dedicated accessors
         (.mentions/.triples/.entailed/.links/.genders/.kbp/.json) — every
         annotator accepted at construction has an execution path."""
-        from corenlp_spark.operators.coref import coref_docs
-        from corenlp_spark.operators.depparse import depparse_docs
-        from corenlp_spark.operators.ner import ner_docs
-        from corenlp_spark.operators.sutime import sutime_docs, with_docdate
-        from corenlp_spark.operators.tag import tag_docs
-        from corenlp_spark.operators.tokenize import tokenize_docs
+        from corenlp_spark.operators.sutime import with_docdate
+        from corenlp_spark.plans.fused import annotate
 
         df = docs
         a = self.annotators
         if "docdate" in a or "sutime" in a:
             df = with_docdate(df, fixed=self.props.get("docdate.fixed"),
                               from_tags=bool(self.props.get("docdate.useTags")))
-        if "tokenize" in a:
-            df = tokenize_docs(df, options=self.props.get("tokenize.options"))
-        if "pos" in a or "lemma" in a:
-            df = tag_docs(df)
-        if "ner" in a:
-            df = ner_docs(df)
-        if "sutime" in a:
-            df = sutime_docs(df)
-        if "depparse" in a:
-            df = depparse_docs(df)
-        if "coref" in a:
-            df = coref_docs(df)
+        # the deepest requested layer picks the cut of the one fused kernel
+        upto = next((cut for cut, names in _CUTS if names & a), None)
+        if upto is not None:
+            df = annotate(df, upto, self.props.get("tokenize.options"),
+                          sutime="sutime" in a)
+            if upto == "coref" and "depparse" not in a:
+                df = df.drop("deps")  # coref alone does not provide a parse
         # doc-shaped auxiliary annotators ride on the document row like any
         # other stage (ADVICE r2: a requested annotator must never be a
         # silent no-op). Row-shaped outputs (entitymentions/entitylink/
@@ -180,9 +171,9 @@ class Pipeline:
             kbp_ensemble, kbp_semgrex_relations, kbp_statistical_relations,
             kbp_tokensregex_relations,
         )
-        from corenlp_spark.plans.fused import annotate_fused
+        from corenlp_spark.plans.fused import annotate
 
-        ann = annotate_fused(docs)
+        ann = annotate(docs)
         arm1 = kbp_tokensregex_relations(ann)
         arm2 = kbp_semgrex_relations(ann)
         arm3 = kbp_statistical_relations(ann)

@@ -1592,18 +1592,6 @@ _ANCHOR_SENTS: list[str] = [
     . . 5 punct""",
 ]
 
-_XPOS_TO_UPOS = {
-    "NN": "NOUN", "NNS": "NOUN", "NNP": "PROPN", "NNPS": "PROPN",
-    "VB": "VERB", "VBD": "VERB", "VBG": "VERB", "VBN": "VERB",
-    "VBP": "VERB", "VBZ": "VERB", "MD": "AUX",
-    "JJ": "ADJ", "JJR": "ADJ", "JJS": "ADJ",
-    "RB": "ADV", "RBR": "ADV", "RBS": "ADV",
-    "DT": "DET", "PRP": "PRON", "PRP$": "PRON", "WP": "PRON", "WDT": "PRON",
-    "IN": "ADP", "TO": "PART", "POS": "PART", "CC": "CCONJ", "CD": "NUM",
-    "EX": "PRON", ".": "PUNCT", ",": "PUNCT", ":": "PUNCT",
-}
-
-
 def _parse_block(block: str) -> tuple[list[str], list[str], list]:
     lines = [ln.strip() for ln in block.strip().splitlines()]
     rows = [ln.split() for ln in lines[1:]]  # first line = plain text
@@ -1811,22 +1799,3 @@ def dep_corpus() -> list[tuple[list[str], list[str], list]]:
              ("the", "DT", 6, "det"), (ns2, "NN", 4, "obj"),
              (".", ".", 2, "punct")])
     return out
-
-
-def to_conllu() -> str:
-    """Render the gold treebank as CoNLL-U (consumed by sources/conllu.py —
-    the interchange-format path a cluster user feeds real treebanks in by)."""
-    out = []
-    for si, (words, xpos, edges) in enumerate(load()):
-        head_of = {d: h for h, d, r in edges}
-        rel_of = {d: r for h, d, r in edges}
-        out.append(f"# sent_id = gold-{si}")
-        out.append("# text = " + " ".join(words))
-        for i, (w, xp) in enumerate(zip(words, xpos)):
-            upos = _XPOS_TO_UPOS.get(xp, "X")
-            out.append("\t".join([
-                str(i + 1), w, w.lower(), upos, xp, "_",
-                str(head_of[i] + 1), rel_of[i], "_", "_",
-            ]))
-        out.append("")
-    return "\n".join(out) + "\n"

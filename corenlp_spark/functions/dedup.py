@@ -69,57 +69,6 @@ def paragraph_dup_stats(docs: DataFrame, min_docs: int = 2) -> DataFrame:
     )
 
 
-def _tokens(col):
-    toks = F.split(F.lower(F.regexp_replace(col, r"[^\w\s]", " ")), r"\s+")
-    return F.filter(toks, lambda t: t != "")
-
-
-def _shingles_of(tk_col, k: int):
-    """Shingles from an ALREADY-MATERIALIZED token-array column.
-
-    The tokenization expression must not be inlined here: Catalyst does not
-    CSE subexpressions inside nested higher-order-function lambdas, so an
-    inlined split/filter tree is re-evaluated once per F.get — O(k·n²) per
-    row. Callers materialize tokens with withColumn first."""
-    n = F.size(tk_col)
-    idx = F.sequence(F.lit(0), F.greatest(n - k, F.lit(0)))
-    return F.array_distinct(
-        F.transform(
-            idx,
-            lambda i: F.concat_ws(" ", *[F.get(tk_col, i + j) for j in range(k)]),
-        )
-    )
-
-
-def _shingles(col, k: int = 3):
-    """Word k-shingles straight from a text column (small inputs only — see
-    _shingles_of for the materialized fast path)."""
-    return _shingles_of(_tokens(col), k)
-
-
-def _shingle_table(docs: DataFrame, k: int) -> DataFrame:
-    """(doc_id, sh): the per-doc distinct shingle array."""
-    return docs.withColumn("_tk", _tokens(F.col("text"))).select(
-        "doc_id", _shingles_of(F.col("_tk"), k).alias("sh")
-    )
-
-
-def _band_sigs(sh: DataFrame, n_bands: int) -> DataFrame:
-    """(doc_id, band, mh) from a shingle-array table."""
-    bands = F.array(*[
-        F.struct(
-            F.lit(b).alias("band"),
-            F.array_min(
-                F.transform("sh", lambda s: F.md5(F.concat(s, F.lit(f"#{b}"))))
-            ).alias("mh"),
-        )
-        for b in range(n_bands)
-    ])
-    return sh.select("doc_id", F.explode(bands).alias("x")).select(
-        "doc_id", F.col("x.band").alias("band"), F.col("x.mh").alias("mh")
-    )
-
-
 #: (n_bands → gram → [band-salted md5 hexes]) — see _shingle_mhs_kernel
 _MD5_BAND_CACHE: dict[int, dict[str, list[str]]] = {}
 #: token → truncated md5 int — see simhash()

@@ -42,14 +42,6 @@ def _hits(toks: Column, words: list[str]) -> Column:
     return F.size(F.filter(toks, lambda t: F.array_contains(arr, t)))
 
 
-def lang_scores(col) -> list[Column]:
-    toks = tokens(col)
-    return [
-        (_hits(toks, ws) / F.greatest(F.size(toks), F.lit(1))).alias(f"score_{lang}")
-        for lang, ws in LANG_MARKERS.items()
-    ]
-
-
 # explicit tie-break priority, highest wins ties; mirrors the DuckDB oracle's
 # CASE order (es > fr > en > de) exactly — ADVICE.md round 1 ('la' is in both
 # the fr and es marker lists, so score ties are reachable)

@@ -50,10 +50,6 @@ def load_weights(name: str) -> dict:
     return json.loads(gzip.decompress(data).decode("utf-8"))
 
 
-def have_weights(name: str) -> bool:
-    return os.path.exists(os.path.join(WEIGHTS_DIR, f"{name}.json.gz"))
-
-
 def _pos_features(words: list[str], i: int, prev_tag: str,
                   prev2_tag: str = "<s>") -> list[str]:
     """left3words-style frame (ExtractorFrames.java:104-145) + the
@@ -565,11 +561,6 @@ def _ner_sent_features(words: list[str], pos: list[str]) -> list[list[str]]:
             feats.append("cc-pair")
         out.append(feats)
     return out
-
-
-def _ner_features(words: list[str], pos: list[str], i: int) -> list[str]:
-    """Single-token view (kept for tests/debugging)."""
-    return _ner_sent_features(words, pos)[i]
 
 
 class StructuredPerceptronNER:

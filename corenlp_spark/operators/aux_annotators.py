@@ -208,11 +208,6 @@ def truecase_docs(df: DataFrame) -> DataFrame:
     return df.mapInPandas(run, schema=out_schema)
 
 
-def gender_of_mention(text: str) -> str:
-    first = text.split()[0].lower() if text else ""
-    return GENDER_FIRST_NAMES.get(first, "UNKNOWN")
-
-
 def gender_mentions(mentions: DataFrame) -> DataFrame:
     """mentions → + gender column (PERSON first-name dictionary, broadcast-
     style driver constant; pure SQL CASE chain keeps it JVM-side)."""

@@ -26,7 +26,7 @@ from typing import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from corenlp_spark.operators.openie import _Graph
+from corenlp_spark.operators.openie import _Graph, edges_by_sent
 
 # deletion affinity per relation (NaturalLogicWeights spirit: high = freely
 # deletable modifier, low = meaning-bearing; core arguments never delete)
@@ -137,10 +137,7 @@ def entailed_docs(df: DataFrame) -> DataFrame:
             for doc_id, toks, sents, deps in zip(
                 pdf["doc_id"], pdf["tokens"], pdf["sentences"], pdf["deps"]
             ):
-                by_sent: dict[int, list] = {}
-                for e in deps:
-                    by_sent.setdefault(e["sent_idx"], []).append(
-                        (e["head"], e["dep"], e["rel"]))
+                by_sent = edges_by_sent(deps)
                 for s in sents:
                     edges = by_sent.get(s["sent_idx"])
                     if not edges:

@@ -284,6 +284,7 @@ def kbp_semgrex_relations(annotated: DataFrame) -> DataFrame:
 
     import pandas as pd
 
+    from corenlp_spark.operators.openie import edges_by_sent
     from corenlp_spark.operators.semgrex import (
         SentenceGraph, compile_semgrex, match_semgrex,
     )
@@ -299,10 +300,7 @@ def kbp_semgrex_relations(annotated: DataFrame) -> DataFrame:
             for doc_id, toks, sents, deps in zip(
                 pdf["doc_id"], pdf["tokens"], pdf["sentences"], pdf["deps"]
             ):
-                by_sent: dict[int, list] = {}
-                for e in deps:
-                    by_sent.setdefault(e["sent_idx"], []).append(
-                        (e["head"], e["dep"], e["rel"]))
+                by_sent = edges_by_sent(deps)
                 for s in sents:
                     edges = by_sent.get(s["sent_idx"])
                     if not edges:

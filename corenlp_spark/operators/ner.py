@@ -24,10 +24,6 @@ Zero shuffle; no per-row Python — everything runs inside mapInPandas batches.
 from __future__ import annotations
 
 import re
-from typing import Iterator
-
-import pandas as pd
-from pyspark.sql import DataFrame
 
 NER_TOKENS_TYPE = (
     "array<struct<idx:int,word:string,original:string,begin:int,end:int,"
@@ -530,7 +526,7 @@ def numeric_pass(words: list[str], ner: list[str], nner: list[str]) -> None:
             t += 1
             continue
         if lw in ("today", "yesterday", "tomorrow"):
-            # symbolic offset Timex; sutime_docs resolves it against docdate
+            # symbolic offset Timex; SUTime resolves it against docdate
             off = {"today": "P0D", "yesterday": "P-1D", "tomorrow": "P1D"}[lw]
             ner[t], nner[t] = "DATE", f"OFFSET {off}"
             t += 1
@@ -684,32 +680,3 @@ def tag_ner_batch(sents: list[tuple[list[str], list[str]]]
         ner, nner = results[i]
         numeric_pass(words, ner, nner)
     return results
-
-
-def ner_docs(df: DataFrame) -> DataFrame:
-    """DataFrame transform: + ner, nner fields on the tokens array."""
-    passthrough = [f for f in df.schema.fields if f.name != "tokens"]
-    out_schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in passthrough)
-    out_schema += f", tokens {NER_TOKENS_TYPE}"
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            new_tokens = []
-            for toks, sents in zip(pdf["tokens"], pdf["sentences"]):
-                toks = [dict(t) for t in toks]
-                for s in sents:
-                    seg = toks[s["start_tok"] : s["end_tok"]]
-                    words = [t["word"] for t in seg]
-                    pos = [t["pos"] for t in seg]
-                    ner, nner = tag_sentence_ner(words, pos)
-                    for t, a, b in zip(seg, ner, nner):
-                        t["ner"], t["nner"] = a, b
-                for t in toks:  # tokens outside any sentence (none expected)
-                    t.setdefault("ner", "O")
-                    t.setdefault("nner", "")
-                new_tokens.append(toks)
-            pdf = pdf.copy()
-            pdf["tokens"] = new_tokens
-            yield pdf
-
-    return df.mapInPandas(run, schema=out_schema)

@@ -32,6 +32,8 @@ TRIPLES_SCHEMA = (
     "doc_id string, sent_idx int, subj string, pred string, obj string, "
     "confidence double, subj_head int, obj_head int"
 )
+TRIPLE_COLUMNS = ("doc_id", "sent_idx", "subj", "pred", "obj", "confidence",
+                  "subj_head", "obj_head")
 
 # downward-monotone clause governors (NaturalLogicAnnotator operator lexicon)
 _DOWNWARD_GOVERNORS = {"doubt", "deny", "refuse", "fail", "reject", "doubtful"}
@@ -500,47 +502,27 @@ def extract_sentence(g: _Graph) -> list[tuple[str, str, str, float, int, int]]:
     return out
 
 
+def edges_by_sent(deps) -> dict[int, list[tuple[int, int, str]]]:
+    """deps column entries → per-sentence (head, dep, rel) edge lists."""
+    by_sent: dict[int, list] = {}
+    for e in deps:
+        by_sent.setdefault(e["sent_idx"], []).append((e["head"], e["dep"], e["rel"]))
+    return by_sent
+
+
 def openie_docs(df: DataFrame) -> DataFrame:
-    """docs(+tokens,+deps) → triples table (exploded)."""
+    """annotated docs(+tokens, sentences, deps) → triples table (exploded),
+    without pronoun canonicalization."""
+    from corenlp_spark.plans.fused import doc_triples
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            rows = {k: [] for k in
-                    ("doc_id", "sent_idx", "subj", "pred", "obj",
-                     "confidence", "subj_head", "obj_head")}
+            rows = []
             for doc_id, toks, sents, deps in zip(
                 pdf["doc_id"], pdf["tokens"], pdf["sentences"], pdf["deps"]
             ):
-                by_sent: dict[int, list] = {}
-                for e in deps:
-                    by_sent.setdefault(e["sent_idx"], []).append(
-                        (e["head"], e["dep"], e["rel"])
-                    )
-                for s in sents:
-                    edges = by_sent.get(s["sent_idx"], [])
-                    if not edges:
-                        continue
-                    a, b = s["start_tok"], s["end_tok"]
-                    seg = toks[a:b]
-                    g = _Graph(
-                        [t["word"] for t in seg], [t["lemma"] for t in seg],
-                        edges, a, [t["pos"] for t in seg],
-                    )
-                    best: dict[tuple, tuple] = {}
-                    for subj, pred, obj, conf, sh, oh in extract_sentence(g):
-                        key = (subj.lower(), pred.lower(), obj.lower())
-                        if key not in best or best[key][3] < conf:
-                            best[key] = (subj, pred, obj, conf, sh, oh)
-                    for subj, pred, obj, conf, sh, oh in best.values():
-                        rows["doc_id"].append(doc_id)
-                        rows["sent_idx"].append(s["sent_idx"])
-                        rows["subj"].append(subj)
-                        rows["pred"].append(pred)
-                        rows["obj"].append(obj)
-                        rows["confidence"].append(conf)
-                        rows["subj_head"].append(sh)
-                        rows["obj_head"].append(oh)
-            yield pd.DataFrame(rows)
+                rows.extend((doc_id, *t) for t in doc_triples(toks, sents, deps))
+            yield pd.DataFrame(rows, columns=TRIPLE_COLUMNS)
 
     return df.mapInPandas(run, schema=TRIPLES_SCHEMA)
 
@@ -557,17 +539,14 @@ def natlog_docs(df: DataFrame) -> DataFrame:
     mark instead of re-walking the tree. Narrow per-doc transform — output
     inherits the docs partitioning, no shuffle.
     """
-    from corenlp_spark.plans.fused import _annotate_one
+    from corenlp_spark.plans.fused import _annotate_batch
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = {k: [] for k in ("doc_id", "sent_idx", "tok_idx", "word", "polarity")}
-            for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-                tokens, sentences, deps, _ = _annotate_one(spans)
-                by_sent: dict[int, list] = {}
-                for e in deps:
-                    by_sent.setdefault(e["sent_idx"], []).append(
-                        (e["head"], e["dep"], e["rel"]))
+            ann = _annotate_batch(list(pdf["spans"]), upto="depparse")
+            for doc_id, (tokens, sentences, deps, _) in zip(pdf["doc_id"], ann):
+                by_sent = edges_by_sent(deps)
                 for s in sentences:
                     a, b = s["start_tok"], s["end_tok"]
                     seg = tokens[a:b]

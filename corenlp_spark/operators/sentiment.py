@@ -111,18 +111,15 @@ def sentiment_docs(df: DataFrame) -> DataFrame:
     Computes natlog polarity marks per sentence when a deps column is
     available in the annotation (the fused kernel recomputes them cheaply);
     without deps the lexicon negation-window fallback applies."""
-    from corenlp_spark.operators.openie import _Graph, compute_polarity
-    from corenlp_spark.plans.fused import _annotate_one
+    from corenlp_spark.operators.openie import _Graph, compute_polarity, edges_by_sent
+    from corenlp_spark.plans.fused import _annotate_batch
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = {k: [] for k in ("doc_id", "sent_idx", "sentiment", "score")}
-            for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
-                tokens, sentences, deps, _ = _annotate_one(spans)
-                by_sent: dict[int, list] = {}
-                for e in deps:
-                    by_sent.setdefault(e["sent_idx"], []).append(
-                        (e["head"], e["dep"], e["rel"]))
+            ann = _annotate_batch(list(pdf["spans"]), upto="depparse")
+            for doc_id, (tokens, sentences, deps, _) in zip(pdf["doc_id"], ann):
+                by_sent = edges_by_sent(deps)
                 for s in sentences:
                     a, b = s["start_tok"], s["end_tok"]
                     seg = tokens[a:b]

@@ -17,15 +17,15 @@ rules in ``time/rules/english.sutime.txt``):
 Timex values stay strings (``pipeline/WikidictAnnotator.java:125-140``
 consumes them as strings — SURVEY.md §1.1).
 
-Narrow mapInPandas; the docdate column is plain Spark SQL.
+``annotate_tokens`` runs inside the fused annotation kernel right after NER
+(``plans.fused.annotate(..., sutime=True)``); the docdate column is plain
+Spark SQL.
 """
 
 from __future__ import annotations
 
 import datetime
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -1617,7 +1617,7 @@ def _compose_anchor(toks: list[dict], lower: list[str], words: list[str],
 
 def annotate_tokens(toks: list[dict], docdate: datetime.date) -> None:
     """In-place sutime kernel over one doc's token dicts: resolve →
-    ranges → compose/anchor → mods (the per-doc body of sutime_docs;
+    ranges → compose/anchor → mods (run by the fused kernel right after NER;
     also the serving/audit path)."""
     words = [t["word"] for t in toks]
     lower = [w.lower() for w in words]
@@ -1639,22 +1639,3 @@ def annotate_tokens(toks: list[dict], docdate: datetime.date) -> None:
     _mark_ranges(toks, lower)
     _compose_anchor(toks, lower, words, docdate)
     _mark_mods(toks, lower)
-
-
-def sutime_docs(df: DataFrame) -> DataFrame:
-    """Resolve relative temporal expressions against the docdate column
-    (requires tokens + docdate; overwrites only O-tagged tokens)."""
-    out_schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            new_tokens = []
-            for toks, dd in zip(pdf["tokens"], pdf["docdate"]):
-                toks = [dict(t) for t in toks]
-                annotate_tokens(toks, datetime.date.fromisoformat(str(dd)))
-                new_tokens.append(toks)
-            pdf = pdf.copy()
-            pdf["tokens"] = new_tokens
-            yield pdf
-
-    return df.mapInPandas(run, schema=out_schema)

@@ -20,12 +20,6 @@ The stage is narrow: per-doc, zero shuffle.
 from __future__ import annotations
 
 import re
-from typing import Iterator
-
-import pandas as pd
-from pyspark.sql import DataFrame
-
-from corenlp_spark.operators.tokenize import SENTENCES_TYPE
 
 TAGGED_TOKENS_TYPE = (
     "array<struct<idx:int,word:string,original:string,begin:int,end:int,"
@@ -345,31 +339,3 @@ def lemmatize(word: str, pos: str) -> str:
     if lw.endswith("ese"):
         return word  # nationality adjectives keep case (Chinese/JJ)
     return lw
-
-
-def tag_docs(df: DataFrame) -> DataFrame:
-    """DataFrame transform: + pos, lemma fields on the tokens array."""
-    passthrough = [f for f in df.schema.fields if f.name != "tokens"]
-    out_schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in passthrough)
-    out_schema += f", tokens {TAGGED_TOKENS_TYPE}"
-    _ = SENTENCES_TYPE  # sentences column passes through
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            new_tokens = []
-            for toks, sents in zip(pdf["tokens"], pdf["sentences"]):
-                words = [t["word"] for t in toks]
-                starts = {s["start_tok"] for s in sents}
-                tags = pos_tag(words, starts)
-                out = []
-                for t, tag in zip(toks, tags):
-                    t = dict(t)
-                    t["pos"] = tag
-                    t["lemma"] = lemmatize(t["word"], tag)
-                    out.append(t)
-                new_tokens.append(out)
-            pdf = pdf.copy()
-            pdf["tokens"] = new_tokens
-            yield pdf
-
-    return df.mapInPandas(run, schema=out_schema)

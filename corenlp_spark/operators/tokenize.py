@@ -24,10 +24,8 @@ The input ``spans`` column passes through untouched (span-sequence invariant).
 from __future__ import annotations
 
 import re
-from typing import Iterable, Iterator
-
-import pandas as pd
-from pyspark.sql import DataFrame
+from types import MappingProxyType
+from typing import Iterable, Mapping
 
 TOKENS_TYPE = (
     "array<struct<idx:int,word:string,original:string,begin:int,end:int,"
@@ -382,22 +380,22 @@ DEFAULT_OPTIONS = {
 }
 
 
-_DEFAULT_RESOLVED: dict | None = None
+_DEFAULT_RESOLVED: Mapping | None = None
 
 
-def _resolve_options(options: dict | None) -> dict:
+def _resolve_options(options: dict | None) -> Mapping:
+    """Resolved tokenizer options, read-only: the default set is resolved
+    once and shared by every call, so no caller may change it."""
     global _DEFAULT_RESOLVED
     if not options:
-        # default options resolve once; callers never mutate the dict
-        # (per-line recursion copies before overriding)
         if _DEFAULT_RESOLVED is None:
             d = dict(DEFAULT_OPTIONS)
             _apply_option_defaults(d)
-            _DEFAULT_RESOLVED = d
+            _DEFAULT_RESOLVED = MappingProxyType(d)
         return _DEFAULT_RESOLVED
     opt = dict(DEFAULT_OPTIONS, **options)
     _apply_option_defaults(opt)
-    return opt
+    return MappingProxyType(opt)
 
 
 def _apply_option_defaults(opt: dict) -> None:
@@ -679,10 +677,6 @@ def _split_on(tokens, cls: str):
         else:
             out.append((w, o, b, e))
     return out
-
-
-def _split_hyphenated(tokens):
-    return _split_on(tokens, "-")
 
 
 def _sentend_follows(s: str, i: int) -> bool:
@@ -1055,28 +1049,6 @@ def annotate_doc(spans: Iterable[dict],
             i += 1
         close_sentence(span_idx)  # span end is also a boundary
     return tokens, sentences
-
-
-def tokenize_docs(df: DataFrame, options: dict | None = None) -> DataFrame:
-    """DataFrame transform: docs(doc_id, spans, ...) → + tokens, sentences.
-
-    ``options``: PTBTokenizer option subset (DEFAULT_OPTIONS keys)."""
-    out_schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields)
-    out_schema += f", tokens {TOKENS_TYPE}, sentences {SENTENCES_TYPE}"
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            toks_col, sents_col = [], []
-            for spans in pdf["spans"]:
-                t, s = annotate_doc(spans, options)
-                toks_col.append(t)
-                sents_col.append(s)
-            pdf = pdf.copy()
-            pdf["tokens"] = toks_col
-            pdf["sentences"] = sents_col
-            yield pdf
-
-    return df.mapInPandas(run, schema=out_schema)
 
 
 # ---------------------------------------------------------------------------

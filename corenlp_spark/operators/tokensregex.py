@@ -30,11 +30,7 @@ Simple groups still flatten to per-element capture labels.
 from __future__ import annotations
 
 import re
-from dataclasses import dataclass, field
-from typing import Iterator
-
-import pandas as pd
-from pyspark.sql import DataFrame
+from dataclasses import dataclass
 
 _ATTRS = {"word", "lemma", "pos", "ner", "nner"}
 
@@ -477,49 +473,3 @@ def find_all(elems, toks: list[dict]):
         else:
             i += 1
     return out
-
-
-# ---------------------------------------------------------------------------
-# TokensRegexNER-style multi-pattern annotator (priority overwrite)
-# ---------------------------------------------------------------------------
-
-@dataclass
-class NerRule:
-    pattern: str
-    ner: str
-    priority: float = 0.0
-    elems: list = field(default_factory=list)
-
-
-def tokensregex_ner(df: DataFrame, rules: list[tuple[str, str, float]]) -> DataFrame:
-    """Overwrite token NER tags by priority rules (TokensRegexNERAnnotator
-    semantics, ``pipeline/TokensRegexNERAnnotator.java:91-118``: higher
-    priority wins; never overwrites an existing non-O tag of equal class).
-
-    rules: (tokensregex pattern, ner tag, priority).
-    """
-    compiled = sorted(
-        [NerRule(p, t, pr, compile_pattern(p)) for p, t, pr in rules],
-        key=lambda r: -r.priority,
-    )
-    out_schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            new_tokens = []
-            for toks in pdf["tokens"]:
-                toks = [dict(t) for t in toks]
-                claimed = [False] * len(toks)
-                for rule in compiled:
-                    for s, e, _ in find_all(rule.elems, toks):
-                        if any(claimed[k] for k in range(s, e)):
-                            continue  # higher-priority rule already owns it
-                        for k in range(s, e):
-                            toks[k]["ner"] = rule.ner
-                            claimed[k] = True
-                new_tokens.append(toks)
-            pdf = pdf.copy()
-            pdf["tokens"] = new_tokens
-            yield pdf
-
-    return df.mapInPandas(run, schema=out_schema)

@@ -1,21 +1,21 @@
-"""Fused single-pass annotation: all per-doc kernels in ONE ``mapInPandas``.
+"""The annotation path: all per-doc kernels in ONE ``mapInPandas``.
 
-The staged path (plans/pipeline.py) serializes fat nested token/dep columns
-through Arrow between every stage — correct, checkpointable, but 5 transfers.
-This path composes the same pure-Python kernels in-process and crosses Arrow
-exactly once per batch, emitting either the fully-annotated doc row or the
-small triples rows directly. This is the trick the reference plays with its
-single mutable Annotation tree (``pipeline/AnnotationPipeline.java:66-83``) —
-re-expressed as operator fusion inside one narrow Spark stage, which is what
-whole-stage codegen does for JVM operators and we do manually for the Python
-kernels.
+The kernels (tokenize → POS+lemma → NER → depparse → coref, and OpenIE on
+top) compose in-process and cross Arrow exactly once per batch, emitting
+either the annotated doc row (``annotate``) or the small triples rows
+directly (``extract_triples_fused``). This is the trick the reference plays
+with its single mutable Annotation tree
+(``pipeline/AnnotationPipeline.java:66-83``) — re-expressed as operator
+fusion inside one narrow Spark stage, which is what whole-stage codegen does
+for JVM operators and we do manually for the Python kernels.
 
-Identical results to the staged path by construction (same kernels, same
-order); tests assert equality.
+The model kernels decode BATCHED across all docs of the Arrow batch;
+``tests/test_batched_kernels.py`` pins batch == per-sentence decoding.
 """
 
 from __future__ import annotations
 
+import datetime
 from typing import Iterator
 
 import pandas as pd
@@ -24,169 +24,205 @@ from pyspark.sql import DataFrame
 from corenlp_spark.operators.coref import COREF_TYPE, detect_mentions, run_sieves
 from corenlp_spark.operators.depparse import DEPS_TYPE
 from corenlp_spark.operators.ner import NER_TOKENS_TYPE, tag_ner_batch
-from corenlp_spark.operators.openie import TRIPLES_SCHEMA, _Graph, extract_sentence
-from corenlp_spark.operators.tag import lemmatize, pos_tag_batch
-from corenlp_spark.operators.tokenize import SENTENCES_TYPE, annotate_doc
+from corenlp_spark.operators.openie import (
+    TRIPLE_COLUMNS, TRIPLES_SCHEMA, _Graph, edges_by_sent, extract_sentence,
+)
+from corenlp_spark.operators.tag import TAGGED_TOKENS_TYPE, lemmatize, pos_tag_batch
+from corenlp_spark.operators.tokenize import SENTENCES_TYPE, TOKENS_TYPE, annotate_doc
+
+#: the cuts of ``annotate``, in kernel order; a cut skips every later kernel
+CUTS = ("tokenize", "tag", "ner", "depparse", "coref")
+_TOKENS_TYPES = (TOKENS_TYPE, TAGGED_TOKENS_TYPE, NER_TOKENS_TYPE,
+                 NER_TOKENS_TYPE, NER_TOKENS_TYPE)
 
 
-def _annotate_batch(spans_list) -> list[tuple[list[dict], list[dict],
-                                              list[dict], list[dict]]]:
-    """Many docs → [(tokens, sentences, deps, coref)] with the three model
-    kernels (POS, NER, depparse) BATCHED ACROSS ALL DOCS of the Arrow batch
-    — one numpy score per decoding step for the whole batch instead of one
-    per sentence (VERDICT r3 #1; SURVEY §2.2 depparse row). Results are
-    identical to the per-doc path by construction (the batch decoders are
-    bitwise-equal to their per-sentence twins).
+def _annotate_batch(spans_list, upto: str = "coref", options: dict | None = None,
+                    docdates: list[datetime.date] | None = None,
+                    ) -> list[tuple[list[dict], list[dict], list[dict], list[dict]]]:
+    """Many docs → [(tokens, sentences, deps, coref)], running the kernels up
+    to and including the ``upto`` cut (later layers stay empty lists).
+
+    The three model kernels (POS, NER, depparse) are BATCHED ACROSS ALL DOCS
+    of the Arrow batch — one numpy score per decoding step for the whole
+    batch instead of one per sentence (VERDICT r3 #1; SURVEY §2.2 depparse
+    row). ``options`` are the tokenizer options; ``docdates`` (one per doc)
+    runs SUTime right after NER, so coref sees the temporal NER tags.
 
     Null-safe: a malformed row (null spans / null span structs) yields empty
     annotations instead of failing the task — one bad record in a 100 TB
     scan must never kill the job."""
-    from corenlp_spark.models.parser import get_trained_parser
-
+    cut = CUTS.index(upto)
     n_docs = len(spans_list)
-    toks_sents: list[tuple[list[dict], list[dict]]] = []
-    for spans in spans_list:
-        if spans is None:
-            toks_sents.append(([], []))
-            continue
-        spans = [s for s in spans if s is not None]
-        toks_sents.append(annotate_doc(spans))
-
-    # POS for all docs in one batch, then lemmas (dict lookups, per token)
-    tag_lists = pos_tag_batch([
-        ([t["word"] for t in tokens], {s["start_tok"] for s in sentences})
-        for tokens, sentences in toks_sents
-    ])
-    for (tokens, _), tags in zip(toks_sents, tag_lists):
-        for t, tag in zip(tokens, tags):
-            t["pos"] = tag
-            t["lemma"] = lemmatize(t["word"], tag)
-
-    # sentence segments across the whole batch → batched NER, batched parse
-    segs: list[tuple[int, dict, int, int]] = []
-    for di, (tokens, sentences) in enumerate(toks_sents):
-        for s in sentences:
-            segs.append((di, s, s["start_tok"], s["end_tok"]))
-    seg_words = []
-    seg_pos = []
-    for di, s, a, b in segs:
-        seg = toks_sents[di][0][a:b]
-        seg_words.append([t["word"] for t in seg])
-        seg_pos.append([t["pos"] for t in seg])
-    ner_out = tag_ner_batch(list(zip(seg_words, seg_pos)))
-    for (di, s, a, b), (ner, nner) in zip(segs, ner_out):
-        for t, x, y in zip(toks_sents[di][0][a:b], ner, nner):
-            t["ner"], t["nner"] = x, y
-    parses = get_trained_parser().parse_batch(list(zip(seg_words, seg_pos)))
-
+    toks_sents = [
+        ([], []) if spans is None
+        else annotate_doc([s for s in spans if s is not None], options)
+        for spans in spans_list
+    ]
     deps_by_doc: list[list[dict]] = [[] for _ in range(n_docs)]
-    for (di, s, a, b), edges in zip(segs, parses):
-        dd = deps_by_doc[di]
-        si = s["sent_idx"]
-        for h, d, r in edges:
-            dd.append({"sent_idx": si, "head": (h + a) if h >= 0 else -1,
-                       "dep": d + a, "rel": r})
+    coref_by_doc: list[list[dict]] = [[] for _ in range(n_docs)]
 
-    out = []
-    for di, (tokens, sentences) in enumerate(toks_sents):
-        ms = detect_mentions(tokens, sentences)
-        run_sieves(ms, tokens)
-        best = {}
-        for m in ms:
-            cur = best.get(m.cluster)
-            rank = (m.kind != "pronoun", len(m.text))
-            if cur is None or rank > (cur.kind != "pronoun", len(cur.text)):
-                best[m.cluster] = m
-        coref = [
-            {"cluster_id": m.cluster, "sent_idx": m.sent, "start_tok": m.start,
-             "end_tok": m.end, "text": m.text, "head": m.head_idx,
-             "kind": m.kind, "representative": best[m.cluster] is m}
-            for m in ms
-        ]
-        out.append((tokens, sentences, deps_by_doc[di], coref))
-    return out
+    if cut >= 1:
+        # POS for all docs in one batch, then lemmas (dict lookups, per token)
+        tag_lists = pos_tag_batch([
+            ([t["word"] for t in tokens], {s["start_tok"] for s in sentences})
+            for tokens, sentences in toks_sents
+        ])
+        for (tokens, _), tags in zip(toks_sents, tag_lists):
+            for t, tag in zip(tokens, tags):
+                t["pos"] = tag
+                t["lemma"] = lemmatize(t["word"], tag)
+
+    if cut >= 2:
+        # sentence segments across the whole batch → batched NER, batched parse
+        segs: list[tuple[int, dict, int, int]] = []
+        for di, (tokens, sentences) in enumerate(toks_sents):
+            for s in sentences:
+                segs.append((di, s, s["start_tok"], s["end_tok"]))
+        seg_words = []
+        seg_pos = []
+        for di, s, a, b in segs:
+            seg = toks_sents[di][0][a:b]
+            seg_words.append([t["word"] for t in seg])
+            seg_pos.append([t["pos"] for t in seg])
+        ner_out = tag_ner_batch(list(zip(seg_words, seg_pos)))
+        for (di, s, a, b), (ner, nner) in zip(segs, ner_out):
+            for t, x, y in zip(toks_sents[di][0][a:b], ner, nner):
+                t["ner"], t["nner"] = x, y
+        if docdates is not None:
+            from corenlp_spark.operators.sutime import annotate_tokens
+
+            for (tokens, _), docdate in zip(toks_sents, docdates):
+                annotate_tokens(tokens, docdate)
+
+    if cut >= 3:
+        from corenlp_spark.models.parser import get_trained_parser
+
+        parses = get_trained_parser().parse_batch(list(zip(seg_words, seg_pos)))
+        for (di, s, a, b), edges in zip(segs, parses):
+            dd = deps_by_doc[di]
+            si = s["sent_idx"]
+            for h, d, r in edges:
+                dd.append({"sent_idx": si, "head": (h + a) if h >= 0 else -1,
+                           "dep": d + a, "rel": r})
+
+    if cut >= 4:
+        for (tokens, sentences), coref in zip(toks_sents, coref_by_doc):
+            ms = detect_mentions(tokens, sentences)
+            run_sieves(ms, tokens)
+            # representative mention per cluster: longest entity mention,
+            # earliest on tie (CorefChain representative semantics)
+            best = {}
+            for m in ms:
+                cur = best.get(m.cluster)
+                rank = (m.kind != "pronoun", len(m.text))
+                if cur is None or rank > (cur.kind != "pronoun", len(cur.text)):
+                    best[m.cluster] = m
+            coref.extend(
+                {"cluster_id": m.cluster, "sent_idx": m.sent, "start_tok": m.start,
+                 "end_tok": m.end, "text": m.text, "head": m.head_idx,
+                 "kind": m.kind, "representative": best[m.cluster] is m}
+                for m in ms
+            )
+
+    return [(tokens, sentences, deps, coref) for (tokens, sentences), deps, coref
+            in zip(toks_sents, deps_by_doc, coref_by_doc)]
 
 
-def _annotate_one(spans) -> tuple[list[dict], list[dict], list[dict], list[dict]]:
-    """spans → (tokens, sentences, deps, coref) — single-doc view of
-    _annotate_batch (kept for the staged path and tests)."""
-    return _annotate_batch([spans])[0]
+def annotate(docs: DataFrame, upto: str | None = None, options: dict | None = None,
+             *, sutime: bool = False) -> DataFrame:
+    """docs(doc_id, spans, ...) → + the annotation columns of the ``upto`` cut
+    (default: all of them) in one Arrow pass:
 
+      tokenize/tag/ner: tokens, sentences (tokens typed per cut);
+      depparse: + deps;  coref: + deps, coref.
 
-def annotate_fused(df: DataFrame) -> DataFrame:
-    """docs → + tokens, sentences, deps, coref in one Arrow pass."""
-    out_schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields)
-    out_schema += (f", tokens {NER_TOKENS_TYPE}, sentences {SENTENCES_TYPE}, "
-                   f"deps {DEPS_TYPE}, coref {COREF_TYPE}")
+    ``options`` are the tokenizer options (``tokenize.DEFAULT_OPTIONS``
+    keys). ``sutime`` resolves temporal expressions against the docs'
+    ``docdate`` column right after NER — the ``sutime`` annotator of
+    ``api.Pipeline``."""
+    if upto is None:
+        upto = CUTS[-1]
+    if upto not in CUTS:
+        raise ValueError(f"unknown annotation cut {upto!r}; one of {CUTS}")
+    cut = CUTS.index(upto)
+    if sutime and cut < CUTS.index("ner"):
+        raise ValueError("sutime runs after NER; use upto='ner' or later")
+    added = [("tokens", _TOKENS_TYPES[cut]), ("sentences", SENTENCES_TYPE),
+             ("deps", DEPS_TYPE), ("coref", COREF_TYPE)][:max(2, cut)]
+    names = [name for name, _ in added]
+    out_schema = ", ".join(
+        [f"{f.name} {f.dataType.simpleString()}" for f in docs.schema.fields
+         if f.name not in names]
+        + [f"{name} {type_}" for name, type_ in added])
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            cols = {"tokens": [], "sentences": [], "deps": [], "coref": []}
-            for tk, se, de, co in _annotate_batch(list(pdf["spans"])):
-                cols["tokens"].append(tk)
-                cols["sentences"].append(se)
-                cols["deps"].append(de)
-                cols["coref"].append(co)
+            docdates = ([datetime.date.fromisoformat(str(d)) for d in pdf["docdate"]]
+                        if sutime else None)
+            ann = _annotate_batch(list(pdf["spans"]), upto, options, docdates)
             pdf = pdf.copy()
-            for k, v in cols.items():
-                pdf[k] = v
+            for i, name in enumerate(names):
+                pdf[name] = [a[i] for a in ann]
             yield pdf
 
-    return df.mapInPandas(run, schema=out_schema)
+    return docs.mapInPandas(run, schema=out_schema)
+
+
+def pronoun_reps(coref) -> dict[int, str]:
+    """Token index → representative text, for every pronoun mention whose
+    cluster has a non-pronoun representative (the coref-representative
+    rewrite of ``naturalli/OpenIE.java:393-437``)."""
+    reps = {m["cluster_id"]: m["text"] for m in coref
+            if m["representative"] and m["kind"] != "pronoun"}
+    return {t: reps[m["cluster_id"]] for m in coref
+            if m["kind"] == "pronoun" and m["cluster_id"] in reps
+            for t in range(m["start_tok"], m["end_tok"])}
+
+
+def doc_triples(tokens, sentences, deps, rep_of: dict[int, str] | None = None
+                ) -> list[tuple]:
+    """One doc's OpenIE triples as (sent_idx, subj, pred, obj, confidence,
+    subj_head, obj_head): ``extract_sentence`` per parsed sentence, subjects
+    rewritten through ``rep_of`` (see ``pronoun_reps``), and the most
+    confident triple per caseless (subj, pred, obj) within a sentence."""
+    by_sent = edges_by_sent(deps)
+    out = []
+    for s in sentences:
+        edges = by_sent.get(s["sent_idx"])
+        if not edges:
+            continue
+        a, b = s["start_tok"], s["end_tok"]
+        seg = tokens[a:b]
+        g = _Graph([t["word"] for t in seg], [t["lemma"] for t in seg], edges, a,
+                   [t["pos"] for t in seg])
+        best: dict[tuple, tuple] = {}
+        for subj, pred, obj, conf, sh, oh in extract_sentence(g):
+            if rep_of:
+                subj = rep_of.get(sh, subj)
+            key = (subj.lower(), pred.lower(), obj.lower())
+            if key not in best or best[key][3] < conf:
+                best[key] = (subj, pred, obj, conf, sh, oh)
+        out.extend((s["sent_idx"], *t) for t in best.values())
+    return out
 
 
 def extract_triples_fused(df: DataFrame, canonicalize: bool = True) -> DataFrame:
     """docs → triples in ONE pass: no nested columns ever cross Arrow.
 
-    Includes in-process pronoun canonicalization (the coref-representative
-    rewrite of ``naturalli/OpenIE.java:393-437``) so the output equals the
-    staged canonicalize_triples(openie, coref) join, minus the shuffle.
-    """
+    With ``canonicalize``, pronoun subjects are rewritten to their coref
+    representative in-process, so the output equals the
+    ``canonicalize_triples(openie, coref)`` join, minus the shuffle; without
+    it the coref kernel is skipped."""
+    upto = "coref" if canonicalize else "depparse"
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            rows = {k: [] for k in ("doc_id", "sent_idx", "subj", "pred", "obj",
-                                    "confidence", "subj_head", "obj_head")}
-            ann = _annotate_batch(list(pdf["spans"]))
-            for doc_id, (tokens, sentences, deps, coref) in zip(
-                    pdf["doc_id"], ann):
-                by_sent: dict[int, list] = {}
-                for e in deps:
-                    by_sent.setdefault(e["sent_idx"], []).append(
-                        (e["head"], e["dep"], e["rel"]))
-                # pronoun → representative text map (doc-local)
-                rep_of: dict[int, str] = {}
-                if canonicalize:
-                    reps = {m["cluster_id"]: m["text"] for m in coref
-                            if m["representative"] and m["kind"] != "pronoun"}
-                    for m in coref:
-                        if m["kind"] == "pronoun" and m["cluster_id"] in reps:
-                            for t in range(m["start_tok"], m["end_tok"]):
-                                rep_of[t] = reps[m["cluster_id"]]
-                for s in sentences:
-                    edges = by_sent.get(s["sent_idx"], [])
-                    if not edges:
-                        continue
-                    a, b = s["start_tok"], s["end_tok"]
-                    seg = tokens[a:b]
-                    g = _Graph([t["word"] for t in seg],
-                               [t["lemma"] for t in seg], edges, a,
-                               [t["pos"] for t in seg])
-                    best: dict[tuple, tuple] = {}
-                    for subj, pred, obj, conf, sh, oh in extract_sentence(g):
-                        subj = rep_of.get(sh, subj)
-                        key = (subj.lower(), pred.lower(), obj.lower())
-                        if key not in best or best[key][3] < conf:
-                            best[key] = (subj, pred, obj, conf, sh, oh)
-                    for subj, pred, obj, conf, sh, oh in best.values():
-                        rows["doc_id"].append(doc_id)
-                        rows["sent_idx"].append(s["sent_idx"])
-                        rows["subj"].append(subj)
-                        rows["pred"].append(pred)
-                        rows["obj"].append(obj)
-                        rows["confidence"].append(conf)
-                        rows["subj_head"].append(sh)
-                        rows["obj_head"].append(oh)
-            yield pd.DataFrame(rows)
+            rows = []
+            ann = _annotate_batch(list(pdf["spans"]), upto)
+            for doc_id, (tokens, sentences, deps, coref) in zip(pdf["doc_id"], ann):
+                rep_of = pronoun_reps(coref) if canonicalize else None
+                rows.extend((doc_id, *t)
+                            for t in doc_triples(tokens, sentences, deps, rep_of))
+            yield pd.DataFrame(rows, columns=TRIPLE_COLUMNS)
 
     return df.mapInPandas(run, schema=TRIPLES_SCHEMA)

@@ -1,21 +1,17 @@
-"""Pipeline plan: ordered stage registry with schema contracts, per-stage
-checkpointing, lineage metrics, and resume.
+"""Checkpointed pipeline plan: the annotation pass and the triples pass each
+write a table; a rerun resumes from the furthest complete one, with lineage
+metrics per checkpoint.
 
 Behavioral reference (re-expressed):
-  - stage DAG + prerequisite completion: ``pipeline/Annotator.java:128-162``,
-    ``pipeline/StanfordCoreNLP.java:481`` (``ensurePrerequisiteAnnotators``) —
-    here a static ordered stage list whose requires/provides are checked
-    against DataFrame schemas at plan-build time (SURVEY.md §3.1);
-  - per-stage serialization checkpoints:
-    ``pipeline/ProtobufAnnotationSerializer.java`` — here per-stage table
-    writes (Iceberg when the catalog is on the classpath, parquet otherwise)
-    that make the pipeline resumable mid-stream;
+  - serialization checkpoints: ``pipeline/ProtobufAnnotationSerializer.java``
+    — here table writes (parquet) of the fused annotation output and of the
+    raw triples, which make the pipeline resumable;
   - per-stage timing/metrics: ``pipeline/AnnotationPipeline.java:66-83`` —
-    here a lineage table of per-partition row counts per stage.
+    here a lineage table of per-partition row counts per checkpoint.
 
 Partitioning contract (north rule): ingest repartitions by hashed doc_id
-range; every annotation stage is narrow, so the layout survives from
-tokenize through openie with zero intermediate shuffles.
+range; annotation and extraction are narrow, so the layout survives from
+the docs through the triples with zero intermediate shuffles.
 """
 
 from __future__ import annotations
@@ -23,63 +19,17 @@ from __future__ import annotations
 import json
 import os
 import time
-from dataclasses import dataclass
-from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from corenlp_spark.operators.coref import coref_docs
-from corenlp_spark.operators.depparse import depparse_docs
-from corenlp_spark.operators.ner import ner_docs
 from corenlp_spark.operators.openie import openie_docs
-from corenlp_spark.operators.tag import tag_docs
-from corenlp_spark.operators.tokenize import tokenize_docs
-
-
-@dataclass(frozen=True)
-class Stage:
-    name: str
-    fn: Callable[[DataFrame], DataFrame]
-    requires: tuple[str, ...]
-    provides: tuple[str, ...]
-
-
-STAGES: list[Stage] = [
-    Stage("tokenize", tokenize_docs, ("doc_id", "spans"), ("tokens", "sentences")),
-    Stage("tag", tag_docs, ("tokens",), ("tokens",)),
-    Stage("ner", ner_docs, ("tokens",), ("tokens",)),
-    Stage("depparse", depparse_docs, ("tokens", "sentences"), ("deps",)),
-    Stage("coref", coref_docs, ("tokens", "sentences"), ("coref",)),
-]
-
-
-def _check_contract(df: DataFrame, stage: Stage) -> None:
-    missing = [c for c in stage.requires if c not in df.columns]
-    if missing:
-        raise ValueError(
-            f"stage '{stage.name}' requires columns {missing} "
-            f"(have {df.columns}) — the analog of enforceRequirements"
-        )
-
-
-def annotate(docs: DataFrame, upto: str | None = None) -> DataFrame:
-    """Run the annotation stages (narrow, fused) up to and including ``upto``."""
-    df = docs
-    for st in STAGES:
-        _check_contract(df, st)
-        df = st.fn(df)
-        if upto is not None and st.name == upto:
-            break
-    return df
-
-
-def triples_of(annotated: DataFrame) -> DataFrame:
-    return openie_docs(annotated)
+from corenlp_spark.plans.fused import annotate
 
 
 class CheckpointedPipeline:
-    """Per-stage checkpointed run: each stage writes a table; a rerun resumes
-    from the last complete checkpoint (kill-and-resume semantics)."""
+    """Checkpointed run: the annotation and the triples each write a table;
+    a rerun resumes from the last complete checkpoint (kill-and-resume
+    semantics)."""
 
     def __init__(self, spark: SparkSession, root: str, partitions: int | None = None):
         self.spark, self.root = spark, root
@@ -117,26 +67,17 @@ class CheckpointedPipeline:
         return out
 
     def run(self, docs: DataFrame) -> DataFrame:
-        """docs → annotated docs → triples, checkpointing each stage; resumes
-        from the furthest complete checkpoint."""
-        if self.partitions:
-            docs = docs.repartition(self.partitions, "doc_id")
-        df = docs
-        resumed_from = None
-        # find furthest complete stage (checkpoints are written in order)
-        for i in range(len(STAGES) - 1, -1, -1):
-            if self._done(STAGES[i].name):
-                df = self.spark.read.parquet(self._path(STAGES[i].name))
-                resumed_from = i
-                break
-        for i, st in enumerate(STAGES):
-            if resumed_from is not None and i <= resumed_from:
-                continue
-            _check_contract(df, st)
-            df = self._write(st.fn(df), st.name)
-        # stage name is 'triples_raw' so downstream jobs can write their
-        # deduped/canonicalized KG to '<root>/triples' without colliding
-        # with the checkpoint they are lazily reading from
+        """docs → annotated docs → triples, checkpointing both; resumes from
+        the furthest complete checkpoint. The checkpoint name is
+        'triples_raw' so downstream jobs can write their deduped or
+        canonicalized KG to '<root>/triples' without colliding with the
+        checkpoint they are lazily reading from."""
         if self._done("triples_raw"):
             return self.spark.read.parquet(self._path("triples_raw"))
-        return self._write(triples_of(df), "triples_raw")
+        if self._done("annotated"):
+            ann = self.spark.read.parquet(self._path("annotated"))
+        else:
+            if self.partitions:
+                docs = docs.repartition(self.partitions, "doc_id")
+            ann = self._write(annotate(docs), "annotated")
+        return self._write(openie_docs(ann), "triples_raw")

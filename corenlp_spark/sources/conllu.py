@@ -128,7 +128,7 @@ def to_conllu_lines(annotated: DataFrame, mwt: bool = False) -> DataFrame:
     """Annotated docs → CoNLL-U-formatted lines (token rows as TSV strings).
 
     Token ids are sentence-local 1-based; when a ``deps`` column is present
-    (``depparse_docs`` / ``annotate_fused`` output) the HEAD/DEPREL columns
+    (``plans.fused.annotate`` output) the HEAD/DEPREL columns
     carry the real parse (root → 0/root), as ``CoNLLUOutputter.java`` does.
     Pure column algebra — token→edge resolution via a per-doc map lookup,
     no UDF.

@@ -133,10 +133,9 @@ def encode_sentence(sent: dict, tokens: list[dict],
 def encode_document(doc_id: str, text: str, tokens: list[dict],
                     sentences: list[dict], deps: list[dict] | None = None,
                     doc_date: str | None = None) -> bytes:
-    by_sent: dict[int, list[tuple[int, int, str]]] = {}
-    for e in deps or []:
-        by_sent.setdefault(e["sent_idx"], []).append(
-            (e["head"], e["dep"], e["rel"]))
+    from corenlp_spark.operators.openie import edges_by_sent
+
+    by_sent = edges_by_sent(deps or [])
     out = [_str(1, text)]
     for s in sentences:
         a, b = int(s["start_tok"]), int(s["end_tok"])

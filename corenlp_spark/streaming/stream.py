@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from corenlp_spark.data.synth import DOCS_SCHEMA
-from corenlp_spark.plans.pipeline import annotate, triples_of
+from corenlp_spark.plans.fused import annotate, extract_triples_fused
 
 
 def stream_docs(spark: SparkSession, path: str, max_files: int = 4) -> DataFrame:
@@ -27,9 +27,9 @@ def stream_docs(spark: SparkSession, path: str, max_files: int = 4) -> DataFrame
 
 
 def stream_triples(docs_stream: DataFrame) -> DataFrame:
-    """Incremental triples: the same narrow stages, no watermark needed
-    (stateless per-doc transforms)."""
-    return triples_of(annotate(docs_stream, upto="coref"))
+    """Incremental triples: the batch ``extract_triples_fused`` pass (with
+    pronoun canonicalization), no watermark needed (stateless per doc)."""
+    return extract_triples_fused(docs_stream)
 
 
 def run_stream_to_memory(spark: SparkSession, in_path: str, name: str = "triples_stream"):
@@ -56,11 +56,7 @@ def streaming_entity_counts(docs_stream: DataFrame):
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    from corenlp_spark.operators.ner import ner_docs
-    from corenlp_spark.operators.tag import tag_docs
-    from corenlp_spark.operators.tokenize import tokenize_docs
-
-    ann = ner_docs(tag_docs(tokenize_docs(docs_stream)))
+    ann = annotate(docs_stream, upto="ner")
 
     # doc-local mention chunking — same kernel as the batch fused path
     # (operators/mentions.chunk_mentions); the SQL-window variant is
@@ -147,11 +143,8 @@ def streaming_canonical_entities(docs_stream: DataFrame, aliases: DataFrame):
 
     from corenlp_spark.operators.entitylink import link_mentions
     from corenlp_spark.operators.mentions import chunk_mentions
-    from corenlp_spark.operators.ner import ner_docs
-    from corenlp_spark.operators.tag import tag_docs
-    from corenlp_spark.operators.tokenize import tokenize_docs
 
-    ann = ner_docs(tag_docs(tokenize_docs(docs_stream)))
+    ann = annotate(docs_stream, upto="ner")
 
     def chunk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

@@ -2,9 +2,9 @@
 
 Usage: python scripts/profile_kernel.py [n_docs] [--time-only]
 
-Reproduces exactly what one mapInPandas task does per batch:
-_annotate_batch over _doc_spans docs, then per-doc OpenIE extraction +
-canonicalization, mirroring plans/fused.extract_triples_fused.
+Reproduces what one mapInPandas task of plans/fused.extract_triples_fused
+does per batch: _annotate_batch over _doc_spans docs, then per-doc OpenIE
+extraction with pronoun canonicalization (doc_triples).
 """
 
 from __future__ import annotations
@@ -17,43 +17,13 @@ import time
 sys.path.insert(0, "/root/repo")
 
 from corenlp_spark.data.synth import _doc_spans  # noqa: E402
-from corenlp_spark.operators.openie import _Graph, extract_sentence  # noqa: E402
 from corenlp_spark.plans import fused  # noqa: E402
 
 
 def run(n_docs: int) -> int:
-    docs = [(f"doc-{i:09d}", _doc_spans(f"doc-{i:09d}", True)) for i in range(n_docs)]
-    spans_list = [s for _, s in docs]
-    ann = fused._annotate_batch(spans_list)
-    n = 0
-    for (doc_id, _), (tokens, sentences, deps, coref) in zip(docs, ann):
-        by_sent: dict[int, list] = {}
-        for e in deps:
-            by_sent.setdefault(e["sent_idx"], []).append(
-                (e["head"], e["dep"], e["rel"]))
-        reps = {m["cluster_id"]: m["text"] for m in coref
-                if m["representative"] and m["kind"] != "pronoun"}
-        rep_of: dict[int, str] = {}
-        for m in coref:
-            if m["kind"] == "pronoun" and m["cluster_id"] in reps:
-                for t in range(m["start_tok"], m["end_tok"]):
-                    rep_of[t] = reps[m["cluster_id"]]
-        for s in sentences:
-            edges = by_sent.get(s["sent_idx"], [])
-            if not edges:
-                continue
-            a, b = s["start_tok"], s["end_tok"]
-            seg = tokens[a:b]
-            g = _Graph([t["word"] for t in seg], [t["lemma"] for t in seg],
-                       edges, a, [t["pos"] for t in seg])
-            best: dict[tuple, tuple] = {}
-            for subj, pred, obj, conf, sh, oh in extract_sentence(g):
-                subj = rep_of.get(sh, subj)
-                key = (subj.lower(), pred.lower(), obj.lower())
-                if key not in best or best[key][3] < conf:
-                    best[key] = (subj, pred, obj, conf, sh, oh)
-            n += len(best)
-    return n
+    ann = fused._annotate_batch([_doc_spans(f"doc-{i:09d}", True) for i in range(n_docs)])
+    return sum(len(fused.doc_triples(tokens, sentences, deps, fused.pronoun_reps(coref)))
+               for tokens, sentences, deps, coref in ann)
 
 
 def main() -> None:

@@ -9,9 +9,10 @@ Cluster usage (north rule):
 Local smoke:
     python scripts/run_pipeline.py --synth 10000 --output /tmp/kg_out
 
-Writes: <output>/triples, <output>/entities, plus per-stage checkpoints,
-per-partition lineage metrics, and a run manifest. Resumable: re-running
-with the same --output resumes from the furthest complete checkpoint.
+Writes: <output>/annotated, <output>/triples, <output>/entities, per-partition
+lineage metrics, and a run manifest. With --checkpointed, re-running with the
+same --output resumes from the furthest complete checkpoint (annotated, then
+triples_raw).
 """
 
 from __future__ import annotations
@@ -32,13 +33,11 @@ def main() -> None:
     p.add_argument("--output", required=True)
     p.add_argument("--partitions", type=int, default=None)
     p.add_argument("--checkpointed", action="store_true",
-                   help="per-stage checkpoints (resumable); default = fused fast path")
+                   help="checkpoint the annotation and the raw triples (resumable)")
     p.add_argument("--cores", type=int, default=None, help="local[N] when not on a cluster")
     args = p.parse_args()
     if not args.input and not args.synth:
         p.error("one of --input or --synth is required")
-
-    from pyspark.sql import functions as F
 
     from corenlp_spark.data.synth import synth_docs
     from corenlp_spark.operators.entitylink import (
@@ -49,7 +48,7 @@ def main() -> None:
     )
     from corenlp_spark.operators.mentions import mention_rows
     from corenlp_spark.operators.openie import openie_docs
-    from corenlp_spark.plans.fused import annotate_fused
+    from corenlp_spark.plans.fused import annotate
     from corenlp_spark.plans.pipeline import CheckpointedPipeline
     from corenlp_spark.session import get_spark
 
@@ -67,17 +66,16 @@ def main() -> None:
         docs = docs.repartition(args.partitions, "doc_id")
 
     os.makedirs(args.output, exist_ok=True)
+    # one annotation pass feeds both the triple and the entity path
     if args.checkpointed:
         pipe = CheckpointedPipeline(spark, args.output, partitions=args.partitions)
         triples = pipe.run(docs)
-        ann = spark.read.parquet(os.path.join(args.output, "coref"))
-        triples = canonicalize_triples(triples, coref_chains_rows(ann))
-    else:
-        # one fused annotation pass feeds both the triple and the entity path
-        ann = annotate_fused(docs)
-        ann.write.mode("overwrite").parquet(f"{args.output}/annotated")
         ann = spark.read.parquet(f"{args.output}/annotated")
-        triples = canonicalize_triples(openie_docs(ann), coref_chains_rows(ann))
+    else:
+        annotate(docs).write.mode("overwrite").parquet(f"{args.output}/annotated")
+        ann = spark.read.parquet(f"{args.output}/annotated")
+        triples = openie_docs(ann)
+    triples = canonicalize_triples(triples, coref_chains_rows(ann))
 
     kg = dedup_triples(triples)
     kg.write.mode("overwrite").parquet(f"{args.output}/triples")

@@ -36,12 +36,21 @@ def test_pipeline_transform_and_outputs(spark):
 
 def test_tokenizer_properties_ride_through(spark):
     docs = synth_docs(spark, 5)
+
+    def words_of(pipe):
+        return {t["word"] for r in pipe(docs).collect() for t in r["tokens"]}
+
+    default = Pipeline("tokenize,ssplit")
+    before = words_of(default)
     strict = Pipeline("tokenize,ssplit",
                       properties={"tokenize.options": {"strict_treebank3": True}})
-    words = {t["word"] for r in strict(docs).collect() for t in r["tokens"]}
+    words = words_of(strict)
     # the golden pool contains "Gimme a phone, I'm gonna call." — under
     # strictTreebank3 the informal contraction stays whole
     assert "Gimme" in words and "gon" not in words
+    # the strict run must not leak into the shared default options
+    after = words_of(default)
+    assert after == before and "gon" in after
 
 
 def test_simple_api_analog(spark):

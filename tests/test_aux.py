@@ -8,8 +8,8 @@ from corenlp_spark.operators.aux_annotators import (
     gender_mentions, quote_docs, truecase_docs,
 )
 from corenlp_spark.operators.mentions import mention_rows
-from corenlp_spark.operators.sutime import sutime_docs, with_docdate
-from corenlp_spark.plans.pipeline import annotate
+from corenlp_spark.operators.sutime import with_docdate
+from corenlp_spark.plans.fused import annotate
 
 
 def _docs(spark, texts):
@@ -40,7 +40,7 @@ def test_relative_dates_resolve_against_docdate(spark):
         _docs(spark, ["He arrived yesterday. She leaves tomorrow. It happened last year."]),
         fixed="2013-02-21",
     )
-    out = sutime_docs(annotate(docs, upto="ner")).first()
+    out = annotate(docs, upto="ner", sutime=True).first()
     m = _tok_map(out)
     assert m["yesterday"] == ("DATE", "2013-02-20")
     assert m["tomorrow"] == ("DATE", "2013-02-22")
@@ -50,7 +50,7 @@ def test_relative_dates_resolve_against_docdate(spark):
 def test_durations_and_refs(spark):
     docs = with_docdate(_docs(spark, ["He worked there for three years. He is happy now."]),
                         fixed="2020-06-15")
-    out = sutime_docs(annotate(docs, upto="ner")).first()
+    out = annotate(docs, upto="ner", sutime=True).first()
     m = _tok_map(out)
     assert m["three"] == ("DURATION", "P3Y")
     assert m["years"] == ("DURATION", "P3Y")
@@ -66,7 +66,7 @@ def test_new_year_holiday_gate(spark):
         "We celebrated New Year in Sydney.",
         "The party is on New Year's Eve.",
     ]), fixed="2020-06-15")
-    rows = sutime_docs(annotate(docs, upto="ner")).collect()
+    rows = annotate(docs, upto="ner", sutime=True).collect()
     maps = [_tok_map(r) for r in rows]
     assert maps[0]["new"] == ("O", "") and maps[0]["year"] == ("O", "")
     assert maps[1]["new"] == ("DATE", "2020-01-01")
@@ -88,7 +88,7 @@ def test_sutime_ranges_sets_holidays_weekdays_quarters(spark):
         "Revenue grew in Q3 2020. The third quarter was strong.",
         "See you on Friday. He left last Friday.",
     ]), fixed="2020-06-15")
-    rows = sutime_docs(annotate(docs, upto="ner")).collect()
+    rows = annotate(docs, upto="ner", sutime=True).collect()
     maps = [_tok_map(r) for r in rows]
     # range: interval value over the whole from-to span
     assert maps[0]["1992"] == ("DATE", "1992/2004")
@@ -124,7 +124,7 @@ def test_sutime_week_arithmetic_duration_ranges_months(spark):
         "They met last March. The launch is next March. Sales rose last month.",
         "He left a week ago.",
     ]), fixed="2020-06-15")
-    rows = sutime_docs(annotate(docs, upto="ner")).collect()
+    rows = annotate(docs, upto="ner", sutime=True).collect()
     maps = [_tok_map(r) for r in rows]
     assert maps[0]["week"] == ("DATE", "2020-W23")
     assert maps[1]["ago"] == ("DATE", "2020-W23")
@@ -150,7 +150,7 @@ def test_sutime_tod_and_day_compounds(spark):
         "See you tonight. She ran this morning. He naps tomorrow afternoon.",
         "Lunch is at noon. The train departs at midnight.",
     ]), fixed="2020-06-15")
-    rows = sutime_docs(annotate(docs, upto="ner")).collect()
+    rows = annotate(docs, upto="ner", sutime=True).collect()
     maps = [_tok_map(r) for r in rows]
     assert maps[0]["tomorrow"] == ("DATE", "2020-06-17")
     assert maps[0]["yesterday"] == ("DATE", "2020-06-13")
@@ -170,7 +170,7 @@ def test_sutime_decades_seasons_meridiem_weekend(spark):
         "The show airs at 7 pm. See you next weekend.",
         "They met during the summer of 1969. Prices fall quickly.",
     ]), fixed="2020-06-15")
-    rows = sutime_docs(annotate(docs, upto="ner")).collect()
+    rows = annotate(docs, upto="ner", sutime=True).collect()
     maps = [_tok_map(r) for r in rows]
     assert maps[0]["1990s"] == ("DATE", "199X")
     assert maps[0]["mid-2015"] == ("DATE", "2015|MID")
@@ -239,7 +239,7 @@ def test_sutime_timex_mod_attributes(spark):
         "It lasted at least five days.",
         "The early results were promising.",
     ]), fixed="2020-06-15")
-    rows = sutime_docs(annotate(docs, upto="ner")).collect()
+    rows = annotate(docs, upto="ner", sutime=True).collect()
     maps = [_tok_map(r) for r in rows]
     assert maps[0]["about"] == ("DURATION", "P3W|APPROX")
     assert maps[0]["weeks"] == ("DURATION", "P3W|APPROX")
@@ -264,7 +264,7 @@ def test_sutime_subday_vague_nth_weekday(spark):
         "The product ships in mid-June.",
         "They meet the first Monday of March. Payday is the last Friday in June.",
     ]), fixed="2020-06-15")
-    rows = sutime_docs(annotate(docs, upto="ner")).collect()
+    rows = annotate(docs, upto="ner", sutime=True).collect()
     maps = [_tok_map(r) for r in rows]
     assert maps[0]["hours"] == ("DURATION", "PT3H")
     assert maps[0]["minutes"] == ("DURATION", "PT45M")
@@ -288,7 +288,7 @@ def test_sutime_movable_holidays(spark):
         "Good Friday precedes Easter. Ash Wednesday starts Lent.",
         "Banks close on Martin Luther King Day and Columbus Day.",
     ]), fixed="2020-06-15")
-    rows = sutime_docs(annotate(docs, upto="ner")).collect()
+    rows = annotate(docs, upto="ner", sutime=True).collect()
     maps = [_tok_map(r) for r in rows]
     assert maps[0]["memorial"] == ("DATE", "2020-05-25")
     assert maps[0]["labor"] == ("DATE", "2020-09-07")
@@ -305,7 +305,7 @@ def test_quote_pronoun_speaker_and_continuation(spark):
     and the conversational continuation sieve (an unattributed quote
     directly after an attributed one keeps the speaker)."""
     from corenlp_spark.operators.aux_annotators import quote_docs
-    from corenlp_spark.plans.pipeline import annotate
+    from corenlp_spark.plans.fused import annotate
 
     docs = _docs(spark, [
         '"We will win," he said.',
@@ -327,7 +327,7 @@ def test_sutime_time_ranges(spark):
         "The event runs from 5 pm to 7 pm.",
         "He worked from 1992 to 2004.",
     ]), fixed="2020-06-15")
-    rows = sutime_docs(annotate(docs, upto="ner")).collect()
+    rows = annotate(docs, upto="ner", sutime=True).collect()
     maps = [_tok_map(r) for r in rows]
     assert maps[0]["pm"] == ("TIME", "T17:00/T19:00")
     assert maps[1]["1992"] == ("DATE", "1992/2004")
@@ -342,7 +342,7 @@ def test_presidents_day_clitic_forms(spark):
         "President's Day closes banks.",
         "Presidents Day is in February.",
     ]), fixed="2020-06-15")
-    rows = sutime_docs(annotate(docs, upto="ner")).collect()
+    rows = annotate(docs, upto="ner", sutime=True).collect()
     for r in rows:
         vals = {t["nner"] for t in r["tokens"]
                 if t["ner"] == "DATE" and t["word"] in
@@ -397,7 +397,7 @@ def test_sutime_periodic_sets_and_pod_composition(spark):
         "It happened on the morning of June 5.",
         "She left on the evening of 5 June.",
     ]), fixed="2020-06-15")
-    rows = sutime_docs(annotate(docs, upto="ner")).collect()
+    rows = annotate(docs, upto="ner", sutime=True).collect()
     maps = [_tok_map(r) for r in rows]
     assert maps[0]["other"] == ("SET", "P2W")
     assert maps[0]["three"] == ("SET", "P3D")
@@ -417,7 +417,7 @@ def test_json_timex_mod_and_anchor(spark):
     docs = with_docdate(_docs(spark, [
         "He left early 2015. She arrives tomorrow. They met in June 1990.",
     ]), fixed="2020-06-15")
-    ann = sutime_docs(annotate(docs))
+    ann = annotate(docs, sutime=True)
     doc = json.loads(to_corenlp_json(ann).first()["json"])
     tx = {t["word"]: t.get("timex") for s in doc["sentences"]
           for t in s["tokens"]}
@@ -435,7 +435,7 @@ def test_sutime_timezone_joins_clock_span(spark):
     testSUIsoWithTimezone; r5 upgraded from the zone-free value)."""
     docs = with_docdate(_docs(spark, ["The call is at 5 pm EST today."]),
                         fixed="2020-06-15")
-    out = sutime_docs(annotate(docs, upto="ner")).first()
+    out = annotate(docs, upto="ner", sutime=True).first()
     m = _tok_map(out)
     assert m["5"] == ("TIME", "2020-06-15T17:00-0500")
     assert m["est"] == ("TIME", "2020-06-15T17:00-0500")
@@ -454,7 +454,7 @@ def test_sutime_r5_weekend_century_week_fortnight_decades(spark):
         "A decade ago things differed. It was built two centuries ago.",
         "Grunge ruled the mid-1990s.",
     ]), fixed="2020-06-15")
-    rows = sutime_docs(annotate(docs, upto="ner")).collect()
+    rows = annotate(docs, upto="ner", sutime=True).collect()
     maps = [_tok_map(r) for r in rows]
     assert maps[0]["eve"] == ("DATE", "2020-12-24")
     assert maps[0]["day"] == ("DATE", "2020-12-25")
@@ -491,7 +491,7 @@ def test_sutime_itest_duration_tranche(spark):
         "It has been warm in recent weeks.",
         "There are no more than 60 days. The 22-year old model left.",
     ]), fixed="2010-02-17")
-    rows = sutime_docs(annotate(docs, upto="ner")).collect()
+    rows = annotate(docs, upto="ner", sutime=True).collect()
     maps = [_tok_map(r) for r in rows]
     assert maps[0]["3-year"] == ("DURATION", "P3Y")
     assert maps[0]["four-month"] == ("DURATION", "P4M")
@@ -538,7 +538,7 @@ def test_sutime_itest_r5_tranche(spark):
         "It happened May 1. The play is the third week of April.",
         "She arrived Saturday night. He left 2 days before yesterday.",
     ]), fixed="1995-07-20")
-    rows = sutime_docs(annotate(docs, upto="ner")).collect()
+    rows = annotate(docs, upto="ner", sutime=True).collect()
     maps = [_tok_map(r) for r in rows]
     # written clock, docdate-anchored
     assert maps[0]["ten"] == ("TIME", "1995-07-20T02:50")

@@ -2,7 +2,6 @@
 ``dcoref/Constants.java:56`` + ``dcoref/Rules.java:123-316``)."""
 
 from corenlp_spark.operators.coref import detect_mentions, run_sieves
-from corenlp_spark.operators.ner import ner_docs  # noqa: F401 (spark path tested elsewhere)
 from corenlp_spark.operators.tokenize import annotate_doc
 from corenlp_spark.operators.tag import pos_tag, lemmatize
 from corenlp_spark.operators.ner import tag_sentence_ner

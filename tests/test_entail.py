@@ -60,9 +60,9 @@ def test_adverb_and_pp_deletion():
 
 def test_entailed_docs_operator(spark):
     from corenlp_spark.data.synth import synth_docs
-    from corenlp_spark.plans.fused import annotate_fused
+    from corenlp_spark.plans.fused import annotate
 
-    frs = entailed_docs(annotate_fused(synth_docs(spark, 30))).collect()
+    frs = entailed_docs(annotate(synth_docs(spark, 30))).collect()
     assert len(frs) > 0
     assert all(0.0 < r.score <= 1.0 for r in frs)
     assert all(r.fragment for r in frs)

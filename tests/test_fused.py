@@ -1,4 +1,5 @@
-"""Fused single-pass pipeline must equal the staged pipeline exactly."""
+"""The fused triples pass must equal OpenIE over the annotated docs plus the
+SQL pronoun canonicalization join, and stay one narrow stage."""
 
 from pyspark.sql import functions as F
 
@@ -6,8 +7,8 @@ from corenlp_spark.data.synth import synth_docs
 from corenlp_spark.operators.graph import (
     canonicalize_triples, coref_chains_rows,
 )
-from corenlp_spark.plans.fused import annotate_fused, extract_triples_fused
-from corenlp_spark.plans.pipeline import annotate, triples_of
+from corenlp_spark.operators.openie import openie_docs
+from corenlp_spark.plans.fused import annotate, extract_triples_fused
 
 
 def _keys(df):
@@ -22,21 +23,10 @@ def _keys(df):
 
 def test_fused_triples_equal_staged(spark):
     docs = synth_docs(spark, 100)
-    ann = annotate(docs, upto="coref")
-    staged = canonicalize_triples(triples_of(ann), coref_chains_rows(ann))
+    ann = annotate(docs)
+    staged = canonicalize_triples(openie_docs(ann), coref_chains_rows(ann))
     fused = extract_triples_fused(docs)
     assert _keys(staged) == _keys(fused)
-
-
-def test_fused_annotate_equal_staged(spark):
-    docs = synth_docs(spark, 60)
-    a = annotate(docs, upto="coref").select(
-        "doc_id", F.sha2(F.to_json(F.struct("tokens", "sentences", "deps", "coref")), 256).alias("h")
-    )
-    b = annotate_fused(docs).select(
-        "doc_id", F.sha2(F.to_json(F.struct("tokens", "sentences", "deps", "coref")), 256).alias("h")
-    )
-    assert a.alias("a").join(b.alias("b"), "doc_id").filter("a.h <> b.h").count() == 0
 
 
 def test_fused_is_single_narrow_stage(spark):
@@ -44,3 +34,25 @@ def test_fused_is_single_narrow_stage(spark):
     assert "Exchange" not in plan
     # exactly one annotation crossing (+1 for the synth generator itself)
     assert plan.count("MapInPandas") == 2
+
+
+def test_null_spans_yield_empty_annotations(spark):
+    """A NULL spans row and a NULL span element must not fail the task: the
+    NULL row gets empty annotations, the NULL element is skipped."""
+    from corenlp_spark.api import Pipeline
+    from corenlp_spark.data.synth import DOCS_SCHEMA
+    from corenlp_spark.streaming.stream import stream_triples
+
+    text = {"kind": "text", "text": "Obama visited Paris.", "media_ref": None,
+            "offset": 0}
+    docs = spark.createDataFrame([("d_null", None), ("d_elem", [None, text])],
+                                 schema=DOCS_SCHEMA)
+    for ann in (Pipeline("tokenize,ssplit,pos,lemma,ner")(docs),
+                annotate(docs, upto="ner")):
+        rows = {r["doc_id"]: r for r in ann.collect()}
+        assert rows["d_null"]["tokens"] == [] and rows["d_null"]["sentences"] == []
+        assert [t["word"] for t in rows["d_elem"]["tokens"]] == \
+            ["Obama", "visited", "Paris", "."]
+        assert all(t["ner"] for t in rows["d_elem"]["tokens"])
+    triples = stream_triples(docs).collect()
+    assert {r["doc_id"] for r in triples} == {"d_elem"}

@@ -8,8 +8,7 @@ from corenlp_spark.operators.kbp import (
     kbp_statistical_relations, kbp_tokensregex_relations,
 )
 from corenlp_spark.operators.mentions import mention_rows
-from corenlp_spark.plans.fused import annotate_fused
-from corenlp_spark.plans.pipeline import triples_of
+from corenlp_spark.plans.fused import annotate
 
 
 def _docs(spark, texts):
@@ -32,7 +31,7 @@ TEXTS = [
 
 
 def test_semgrex_arm(spark):
-    ann = annotate_fused(_docs(spark, TEXTS))
+    ann = annotate(_docs(spark, TEXTS))
     got = {(r.subj, r.relation, r.obj) for r in kbp_semgrex_relations(ann).collect()}
     assert ("Barack Obama", "per:city_of_birth", "Hawaii") in got
     assert ("Chris Manning", "per:employee_of", "Stanford University") in got
@@ -40,18 +39,18 @@ def test_semgrex_arm(spark):
 
 
 def test_statistical_arm_scores_and_thresholds(spark):
-    ann = annotate_fused(_docs(spark, TEXTS))
+    ann = annotate(_docs(spark, TEXTS))
     rows = kbp_statistical_relations(ann).collect()
     got = {(r.subj, r.relation, r.obj): r.confidence for r in rows}
     assert ("Barack Obama", "per:city_of_birth", "Hawaii") in got
     assert all(0.5 <= c <= 0.85 for c in got.values())
     # negative: "Obama visited Paris" has no birth/employ lemma → no relation
-    ann2 = annotate_fused(_docs(spark, ["Obama visited Paris."]))
+    ann2 = annotate(_docs(spark, ["Obama visited Paris."]))
     assert kbp_statistical_relations(ann2).count() == 0
 
 
 def test_ensemble_prefers_pattern_arm(spark):
-    ann = annotate_fused(_docs(spark, TEXTS))
+    ann = annotate(_docs(spark, TEXTS))
     arm1 = kbp_tokensregex_relations(ann)
     arm2 = kbp_semgrex_relations(ann)
     arm3 = kbp_statistical_relations(ann)
@@ -69,7 +68,7 @@ def test_tokensregex_arm_rejects_substring_false_positive(spark):
     'is worth'. The token-sequence arm (ie/KBPTokensregexExtractor.java
     semantics) requires the literal trigger token adjacent to the typed
     object capture — 'is worth 30 million' is rejected, 'is 34' fires."""
-    ann = annotate_fused(_docs(spark, [
+    ann = annotate(_docs(spark, [
         "Anna Keller is worth 30 million dollars.",
         "Anna Keller is 34.",
     ])).cache()
@@ -122,7 +121,7 @@ def test_statistical_arm_long_range_via_dep_path(spark):
     the lemma-between features get noisy, but the dependency path stays
     short, which is exactly what the reference's dep-path features buy
     (KBPStatisticalExtractor.java:363-425)."""
-    ann = annotate_fused(_docs(spark, [
+    ann = annotate(_docs(spark, [
         "Dana Whitfield , who had recently visited Bruges , works for Atlas Dynamics .",
     ]))
     got = {(r.subj, r.relation, r.obj)

@@ -15,8 +15,7 @@ from corenlp_spark.operators.kbp import (
     kbp_statistical_relations, kbp_tokensregex_relations,
 )
 from corenlp_spark.operators.mentions import mention_rows
-from corenlp_spark.plans.fused import annotate_fused
-from corenlp_spark.plans.pipeline import triples_of
+from corenlp_spark.plans.fused import annotate
 
 
 def test_taxonomy_covers_reference_inventory():
@@ -28,7 +27,7 @@ def test_taxonomy_covers_reference_inventory():
 
 
 def test_kbp_benchmark_f1(spark):
-    ann = annotate_fused(kbp_docs(spark)).cache()
+    ann = annotate(kbp_docs(spark)).cache()
     ens = kbp_ensemble(
         kbp_tokensregex_relations(ann),
         kbp_semgrex_relations(ann),

@@ -6,7 +6,6 @@ import os
 from pyspark.sql import functions as F
 
 from corenlp_spark.data.synth import synth_docs
-from corenlp_spark.operators.coref import coref_docs
 from corenlp_spark.operators.entitylink import (
     alias_dict, canonical_entities, link_mentions, minhash_candidates,
 )
@@ -15,7 +14,9 @@ from corenlp_spark.operators.graph import (
 )
 from corenlp_spark.operators.kbp import kbp_tokensregex_relations
 from corenlp_spark.operators.mentions import mention_rows
-from corenlp_spark.plans.pipeline import CheckpointedPipeline, annotate, triples_of
+from corenlp_spark.operators.openie import openie_docs
+from corenlp_spark.plans.fused import annotate
+from corenlp_spark.plans.pipeline import CheckpointedPipeline
 
 N = 80
 
@@ -77,7 +78,7 @@ def test_kbp_relations(spark):
 
 def test_pronoun_canonicalization(spark):
     ann = annotate(synth_docs(spark, N), upto="coref")
-    t = triples_of(ann)
+    t = openie_docs(ann)
     chains = coref_chains_rows(ann)
     canon = canonicalize_triples(t, chains)
     # "He was president." after "Barack Obama was born in Hawaii." must
@@ -105,7 +106,7 @@ def test_pronoun_canonicalization_single_doc(spark):
         schema=DOCS_SCHEMA,
     )
     ann = annotate(docs, upto="coref")
-    canon = canonicalize_triples(triples_of(ann), coref_chains_rows(ann))
+    canon = canonicalize_triples(openie_docs(ann), coref_chains_rows(ann))
     got = {(r.subj, r.pred, r.obj) for r in canon.collect()}
     assert ("Barack Obama", "was", "president") in got
     assert ("Barack Obama", "was born in", "Hawaii") in got
@@ -113,7 +114,7 @@ def test_pronoun_canonicalization_single_doc(spark):
 
 def test_dedup_triples(spark):
     ann = annotate(synth_docs(spark, N), upto="coref")
-    d = dedup_triples(triples_of(ann))
+    d = dedup_triples(openie_docs(ann))
     rows = d.collect()
     keys = [(r.subj, r.pred, r.obj) for r in rows]
     assert len(keys) == len(set(keys))
@@ -126,14 +127,14 @@ def test_checkpoint_resume(spark, tmp_path):
     t1 = pipe.run(synth_docs(spark, 30))
     n1 = t1.count()
     assert n1 > 0
-    # simulate kill after ner: delete later checkpoints, resume must rebuild
+    # simulate kill after annotation: delete the triples checkpoint, resume
+    # must rebuild it from the annotated checkpoint
     import shutil
 
-    for stage in ("depparse", "coref", "triples_raw"):
-        shutil.rmtree(os.path.join(root, stage), ignore_errors=True)
+    shutil.rmtree(os.path.join(root, "triples_raw"))
     pipe2 = CheckpointedPipeline(spark, root, partitions=4)
     t2 = pipe2.run(synth_docs(spark, 30))
     assert t2.count() == n1
-    # lineage metrics persisted per stage
-    assert os.path.exists(os.path.join(root, "_lineage_tokenize.json"))
+    # lineage metrics persisted per checkpoint
+    assert os.path.exists(os.path.join(root, "_lineage_annotated.json"))
     assert os.path.exists(os.path.join(root, "_metrics_triples_raw"))

@@ -272,14 +272,9 @@ def test_trained_parser_is_default_depparse_path():
 
 
 def test_trained_parser_on_spark(spark):
-    from corenlp_spark.operators.depparse import depparse_docs
-    from corenlp_spark.operators.ner import ner_docs
-    from corenlp_spark.operators.tag import tag_docs
-    from corenlp_spark.operators.tokenize import tokenize_docs
+    from corenlp_spark.plans.fused import annotate
 
-    ann = depparse_docs(
-        ner_docs(tag_docs(tokenize_docs(synth_docs(spark, 15)))),
-        model="trained")
+    ann = annotate(synth_docs(spark, 15), upto="depparse")
     rows = ann.collect()
     assert all(r["deps"] for r in rows if r["tokens"])
     n_roots = sum(1 for r in rows for e in r["deps"] if e["rel"] == "root")
@@ -307,17 +302,16 @@ def test_distributed_parameter_mixing_training(spark):
 def test_broadcast_inference_on_spark(spark):
     """Explicit broadcast-variable inference shape still works (the cluster
     deployment alternative to package-file weights)."""
-    from corenlp_spark.operators.tag import tag_docs
-    from corenlp_spark.operators.tokenize import tokenize_docs
+    from corenlp_spark.plans.fused import annotate
 
-    ann = tag_docs(tokenize_docs(synth_docs(spark, 20)))
+    ann = annotate(synth_docs(spark, 20), upto="tag")
     out = tag_with_model(ann, load_weights("pos"))
     rows = out.collect()
     n = agree = 0
     for r in rows:
         for t in r["tokens"]:
             n += 1
-            # tag_docs pins closed-class/punct; raw model predict may differ
+            # the tagger pins closed-class/punct; raw model predict may differ
             # there — agreement is over the open-class decisions
             agree += t["ppos"] == t["pos"]
     assert n > 0 and agree / n >= 0.90, f"model/pipeline agreement {agree/n:.3f}"

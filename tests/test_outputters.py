@@ -5,7 +5,7 @@ import json
 import pandas as pd
 
 from corenlp_spark.data.synth import DOCS_SCHEMA
-from corenlp_spark.plans.fused import annotate_fused
+from corenlp_spark.plans.fused import annotate
 from corenlp_spark.sources.conllu import read_conllu, to_conllu_lines
 from corenlp_spark.sources.json_out import to_corenlp_json
 
@@ -22,7 +22,7 @@ def _docs(spark, texts):
 
 
 def test_json_outputter_shape(spark):
-    ann = annotate_fused(_docs(spark, ["Barack Obama visited Paris. He spoke."]))
+    ann = annotate(_docs(spark, ["Barack Obama visited Paris. He spoke."]))
     row = to_corenlp_json(ann).first()
     doc = json.loads(row.json)
     assert doc["docId"] == "d0"
@@ -38,7 +38,7 @@ def test_json_outputter_shape(spark):
 def test_conll_tsv_text_xml_outputters(spark):
     from corenlp_spark.sources.outputters import to_conll, to_text, to_tsv, to_xml
 
-    ann = annotate_fused(_docs(spark, ["Barack Obama visited Paris. He spoke."]))
+    ann = annotate(_docs(spark, ["Barack Obama visited Paris. He spoke."]))
     conll = to_conll(ann).first().conll
     sents = conll.split("\n\n")
     assert len(sents) == 2
@@ -74,7 +74,7 @@ def test_conll_tsv_text_xml_outputters(spark):
 
 
 def test_conllu_roundtrip(spark, tmp_path):
-    ann = annotate_fused(_docs(spark, ["Obama visited Paris."]))
+    ann = annotate(_docs(spark, ["Obama visited Paris."]))
     lines = to_conllu_lines(ann)
     rows = lines.orderBy("doc_id", "sent_idx").collect()
     assert rows[0].line.split("\t")[1] == "Obama"
@@ -92,7 +92,7 @@ def test_conllu_roundtrip(spark, tmp_path):
 def test_conllu_real_heads_and_sentence_local_ids(spark, tmp_path):
     """HEAD/DEPREL carry the actual parse; multi-sentence docs restart ids
     at 1 per sentence (CoNLLUOutputter.java semantics)."""
-    ann = annotate_fused(_docs(spark, ["Obama visited Paris. Cats sleep."]))
+    ann = annotate(_docs(spark, ["Obama visited Paris. Cats sleep."]))
     rows = to_conllu_lines(ann).orderBy("sent_idx", "line").collect()
     by_sent = {}
     for r in rows:
@@ -121,10 +121,10 @@ def test_conllu_real_heads_and_sentence_local_ids(spark, tmp_path):
 def test_conllu_upos_and_enhanced_deps(spark):
     """UPOS column via the UniversalPOSMapper table and the enhanced graph
     in the DEPS column (head:rel — CoNLLUOutputter enhanced++ output)."""
-    from corenlp_spark.plans.fused import annotate_fused
+    from corenlp_spark.plans.fused import annotate
     from corenlp_spark.sources.conllu import to_conllu_lines
 
-    ann = annotate_fused(_docs(spark, ["Obama visited Paris."]))
+    ann = annotate(_docs(spark, ["Obama visited Paris."]))
     cols = {r.line.split("\t")[1]: r.line.split("\t")
             for r in to_conllu_lines(ann).collect()}
     assert cols["Obama"][3] == "PROPN"
@@ -140,13 +140,13 @@ def test_json_timex_object(spark):
     the |MOD serialization stripped to the clean TIMEX3 value."""
     import json
 
-    from corenlp_spark.operators.sutime import sutime_docs, with_docdate
-    from corenlp_spark.plans.pipeline import annotate
+    from corenlp_spark.operators.sutime import with_docdate
+    from corenlp_spark.plans.fused import annotate
     from corenlp_spark.sources.json_out import to_corenlp_json
 
     docs = with_docdate(_docs(spark, ["It took about three weeks."]),
                         fixed="2020-06-15")
-    ann = sutime_docs(annotate(docs, upto="depparse"))
+    ann = annotate(docs, upto="depparse", sutime=True)
     j = json.loads(to_corenlp_json(ann).collect()[0]["json"])
     toks = {t["word"]: t for t in j["sentences"][0]["tokens"]}
     assert toks["weeks"]["timex"] == {"type": "DURATION", "value": "P3W",
@@ -158,7 +158,7 @@ def test_conllu_feats_column(spark, tmp_path):
     """FEATS (column 6) carries the deterministic English UD subset derived
     from xpos+lemma (CoNLLUOutputter.java:54 via UDFeatureAnnotator;
     VERDICT r4 missing #5) and round-trips through the reader."""
-    ann = annotate_fused(_docs(spark, ["The cats visited a big city ."]))
+    ann = annotate(_docs(spark, ["The cats visited a big city ."]))
     rows = to_conllu_lines(ann).orderBy("sent_idx", "line").collect()
     by_form = {r.line.split("\t")[1]: r.line.split("\t") for r in rows}
     assert by_form["The"][5] == "Definite=Def|PronType=Art"
@@ -194,7 +194,7 @@ def test_conllu_english_mwt_ranges(spark):
     """EnglishMWTCombinerTest semantics: multi-word-token range rows
     before contraction splits (cannot / it's / wanna), lemmas want/to on
     the wanna parts (trees/ud/EnglishMWTCombiner.java rules)."""
-    from corenlp_spark.plans.fused import annotate_fused
+    from corenlp_spark.plans.fused import annotate
     from corenlp_spark.sources.conllu import to_conllu_lines
 
     docs = spark.createDataFrame(
@@ -203,7 +203,7 @@ def test_conllu_english_mwt_ranges(spark):
                   "media_ref": None, "offset": 0}])],
         "doc_id string, spans array<struct<kind:string,text:string,"
         "media_ref:string,offset:int>>")
-    rows = to_conllu_lines(annotate_fused(docs), mwt=True) \
+    rows = to_conllu_lines(annotate(docs), mwt=True) \
         .orderBy("sent_idx", "tid", "rank").collect()
     lines = [r.line for r in rows]
     ranges = [ln for ln in lines if "-" in ln.split("\t")[0]]

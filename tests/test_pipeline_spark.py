@@ -4,18 +4,15 @@ parallelism, stage outputs (SURVEY.md §5 strategy, BASELINE.md target gates).""
 from pyspark.sql import functions as F
 
 from corenlp_spark.data.synth import reassembled_sequence_expr, synth_docs
-from corenlp_spark.operators.depparse import depparse_docs
 from corenlp_spark.operators.mentions import mention_rows
-from corenlp_spark.operators.ner import ner_docs
 from corenlp_spark.operators.openie import openie_docs
-from corenlp_spark.operators.tag import tag_docs
-from corenlp_spark.operators.tokenize import tokenize_docs
+from corenlp_spark.plans.fused import annotate
 
 N_DOCS = 60
 
 
 def full(spark):
-    return depparse_docs(ner_docs(tag_docs(tokenize_docs(synth_docs(spark, N_DOCS)))))
+    return annotate(synth_docs(spark, N_DOCS), upto="depparse")
 
 
 def test_span_sequence_invariant(spark):
@@ -30,8 +27,8 @@ def test_span_sequence_invariant(spark):
 
 def test_determinism_across_partitioning(spark):
     h = lambda df: df.select("doc_id", F.sha2(F.to_json(F.struct("tokens", "deps")), 256).alias("h"))
-    a = h(depparse_docs(ner_docs(tag_docs(tokenize_docs(synth_docs(spark, 40, parts=1))))))
-    b = h(depparse_docs(ner_docs(tag_docs(tokenize_docs(synth_docs(spark, 40, parts=13))))))
+    a = h(annotate(synth_docs(spark, 40, parts=1), upto="depparse"))
+    b = h(annotate(synth_docs(spark, 40, parts=13), upto="depparse"))
     assert a.alias("a").join(b.alias("b"), "doc_id").filter("a.h <> b.h").count() == 0
 
 
@@ -39,9 +36,7 @@ def test_annotation_roundtrip_fidelity(spark, tmp_path):
     """Serializer round trip (ProtobufAnnotationSerializerTest analog): every
     annotation layer — tokens (word/original/offsets/pos/lemma/ner/nner),
     sentences, deps, coref — survives a parquet write + read byte-identically."""
-    from corenlp_spark.plans.fused import annotate_fused
-
-    ann = annotate_fused(synth_docs(spark, 40))
+    ann = annotate(synth_docs(spark, 40))
     path = str(tmp_path / "ann")
     ann.write.parquet(path)
     back = spark.read.parquet(path)
@@ -63,12 +58,10 @@ def test_wikidict_scale_linking_broadcasts_and_salts(spark):
         alias_dict, canonical_entities, link_mentions,
     )
     from corenlp_spark.operators.mentions import mention_rows
-    from corenlp_spark.plans.fused import annotate_fused
-
     big = [(f"surface {i}", f"Entity_{i}", 0.9) for i in range(100_000)]
     big += [("obama", "Barack_Obama", 0.9), ("paris", "Paris", 0.9)]
     aliases = alias_dict(spark, big)
-    m = mention_rows(annotate_fused(synth_docs(spark, 60)))
+    m = mention_rows(annotate(synth_docs(spark, 60)))
     linked = link_mentions(m, aliases)
     plan = linked._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan and "SortMergeJoin" not in plan
@@ -91,7 +84,7 @@ def test_triples_emitted_and_deduped(spark):
 
 
 def test_mentions_chunking(spark):
-    m = mention_rows(ner_docs(tag_docs(tokenize_docs(synth_docs(spark, N_DOCS)))))
+    m = mention_rows(annotate(synth_docs(spark, N_DOCS), upto="ner"))
     rows = m.collect()
     assert any(r.text == "International Business Machines" for r in rows)
     assert all(r.end_tok > r.start_tok for r in rows)

@@ -7,7 +7,7 @@ import __spark_entry__ as em
 from corenlp_spark.data.synth import synth_docs
 from corenlp_spark.operators.entitylink import alias_dict, link_mentions
 from corenlp_spark.operators.mentions import mention_rows
-from corenlp_spark.plans.fused import annotate_fused, extract_triples_fused
+from corenlp_spark.plans.fused import annotate, extract_triples_fused
 
 SF = "/root/testdata/sf0.01"
 
@@ -32,7 +32,7 @@ def test_dimension_join_broadcasts(spark):
 
 def test_alias_dict_join_broadcasts(spark):
     linked = link_mentions(
-        mention_rows(annotate_fused(synth_docs(spark, 10))), alias_dict(spark)
+        mention_rows(annotate(synth_docs(spark, 10))), alias_dict(spark)
     )
     assert "BroadcastHashJoin" in plan_of(linked)
 
@@ -53,7 +53,7 @@ def test_mention_rows_is_shuffle_free_and_matches_sql_twin(spark):
     the oracle and must agree row-for-row."""
     from corenlp_spark.operators.mentions import mention_rows, mention_rows_sql
 
-    ann = annotate_fused(synth_docs(spark, 30))
+    ann = annotate(synth_docs(spark, 30))
     fused = mention_rows(ann)
     assert "Exchange" not in plan_of(fused)
     assert {tuple(r) for r in fused.collect()} \
@@ -102,9 +102,6 @@ def test_scaled_dict_link_shuffle_path(spark):
     from corenlp_spark.operators.entitylink import (
         DEFAULT_ALIASES, link_mentions_scaled,
     )
-    from corenlp_spark.operators.ner import ner_docs
-    from corenlp_spark.operators.tag import tag_docs
-    from corenlp_spark.operators.tokenize import tokenize_docs
 
     # synthetic 120k-surface dictionary + the real aliases
     big = spark.range(120_000).select(
@@ -112,7 +109,7 @@ def test_scaled_dict_link_shuffle_path(spark):
         F.concat(F.lit("Entity_"), F.col("id")).alias("link"),
         F.lit(0.9).alias("score"),
     ).unionByName(alias_dict(spark))
-    m = mention_rows(ner_docs(tag_docs(tokenize_docs(synth_docs(spark, 60)))))
+    m = mention_rows(annotate(synth_docs(spark, 60), upto="ner"))
 
     shuf = link_mentions_scaled(m, big, strategy="shuffle")
     p = plan_of(shuf)

@@ -47,11 +47,11 @@ def test_token_offsets_are_monotone_and_disjoint(text):
 @given(st.lists(TEXT, max_size=4))
 def test_full_kernel_never_crashes(texts):
     """tokenize → pos → ner → parse → coref → openie on arbitrary spans."""
-    from corenlp_spark.plans.fused import _annotate_one
+    from corenlp_spark.plans.fused import _annotate_batch
 
     spans = [{"kind": "text", "text": t, "media_ref": None, "offset": i}
              for i, t in enumerate(texts)]
-    tokens, sentences, deps, coref = _annotate_one(spans)
+    tokens, sentences, deps, coref = _annotate_batch([spans])[0]
     n = len(tokens)
     for s in sentences:
         assert 0 <= s["start_tok"] < s["end_tok"] <= n

@@ -7,7 +7,7 @@ keys and length-delimited framing — at known positions, so compatibility
 does not silently drift.
 """
 
-from corenlp_spark.plans.fused import annotate_fused
+from corenlp_spark.plans.fused import annotate
 from corenlp_spark.sources.protobuf_out import (
     decode_document, encode_document, to_protobuf,
 )
@@ -38,7 +38,7 @@ def test_wire_format_primitives():
 
 
 def test_roundtrip_spark(spark):
-    ann = annotate_fused(_docs(spark, [
+    ann = annotate(_docs(spark, [
         "Barack Obama was born in Hawaii. He was elected in 2008.",
         "IBM announced a laboratory in Armonk.",
     ]))
@@ -67,7 +67,7 @@ def test_roundtrip_spark(spark):
 
 
 def test_polarity_field_roundtrips(spark):
-    ann = annotate_fused(_docs(spark, ["No politician likes taxes."]))
+    ann = annotate(_docs(spark, ["No politician likes taxes."]))
     buf = bytes(to_protobuf(ann).first().proto)
     doc = decode_document(buf)
     pol = {t["word"]: t.get("polarity") for t in doc["sentences"][0]["tokens"]}

@@ -86,9 +86,7 @@ def test_streaming_canonical_entities_matches_batch(spark, tmp_path):
         alias_dict, canonical_entities, link_mentions,
     )
     from corenlp_spark.operators.mentions import mention_rows
-    from corenlp_spark.operators.ner import ner_docs
-    from corenlp_spark.operators.tag import tag_docs
-    from corenlp_spark.operators.tokenize import tokenize_docs
+    from corenlp_spark.plans.fused import annotate
     from corenlp_spark.streaming.stream import (
         stream_docs, streaming_canonical_entities,
     )
@@ -115,7 +113,7 @@ def test_streaming_canonical_entities_matches_batch(spark, tmp_path):
            for r in final.collect()}
 
     docs = d1.unionByName(d2)
-    ann = ner_docs(tag_docs(tokenize_docs(docs)))
+    ann = annotate(docs, upto="ner")
     batch = canonical_entities(link_mentions(mention_rows(ann), aliases))
     want = {r.entity_key: (r.canonical_text, r.ner, r.n_mentions)
             for r in batch.collect()}
