@@ -1961,7 +1961,7 @@ def oracle_sql() -> dict[str, str]:
             ), tot AS (SELECT count(*) AS n FROM kept)
             SELECT source, lang,
                    count(*) AS n_docs,
-                   sum(length(text)) AS n_chars,
+                   CAST(sum(length(text)) AS BIGINT) AS n_chars,
                    round(count(*) * 1.0 / (SELECT n FROM tot), 6) AS frac
             FROM kept GROUP BY source, lang ORDER BY source, lang
         """,

@@ -11,5 +11,3 @@ each module's docstring as ``path:line``.
 """
 
 __version__ = "0.1.0"
-
-from corenlp_spark.session import get_spark  # noqa: F401

@@ -46,11 +46,12 @@ def pii_counts(col) -> list[Column]:
     the cascade rewrites bytes, so counting after would undercount kinds
     whose shapes overlap an earlier replacement). Gated on _PII_GATE —
     identical counts, but documents with no digit/'@' skip the regex
-    cascade entirely."""
+    cascade entirely. A NULL text has a NULL gate, matches neither branch
+    and counts NULL."""
     gate = col.rlike(_PII_GATE)
     return [
         F.when(gate, F.regexp_count(col, F.lit(pat)))
-        .otherwise(F.lit(0)).cast("long").alias(f"n_{kind}")
+        .when(~gate, F.lit(0)).cast("long").alias(f"n_{kind}")
         for kind, pat, _ in PII_PATTERNS
     ]
 

@@ -237,11 +237,14 @@ class ArcStandardParser:
         self._pstr: list[str] = []        # pid → pos string
         self._lid: dict[str, int] = {"<null>": 0}
         self._lstr: list[str] = ["<null>"]
-        # r6: one dict per dynamic template, keyed by collision-free
-        # composite ints (pos/label ids < 4096 by construction — registries
-        # only hold the tagset/labelset) or word tuples; replaces the shared
-        # tuple-keyed memo (same resolved ids, fewer allocations per probe)
-        self._tmemo: list[dict] = [dict() for _ in range(19)]
+        # feature-row memos of the three word-pair templates, keyed by
+        # (word, word), (word, pos id) and (pos id, word) tuples; the other
+        # templates resolve through the _ftab arrays or per-token rows
+        self._memo_s1w_s2w: dict[tuple, int] = {}
+        self._memo_s1w_s2p: dict[tuple, int] = {}
+        self._memo_s1p_s2w: dict[tuple, int] = {}
+        # id tables indexed by the registries above, rebuilt with them
+        self._ftab = None
         # (word, pos) → 19-row tuple; Zipfian token distribution makes the
         # hit rate ≈ 1 — capped so a pathological vocabulary cannot grow an
         # executor's memory without bound (beyond the cap, rows are built
@@ -347,7 +350,7 @@ class ArcStandardParser:
         NP = len(self._pstr)
         NL = len(self._lstr)
         VC = max_val
-        t = getattr(self, "_ftab", None)
+        t = self._ftab
         if t is not None and t["NP"] >= NP and t["NL"] >= NL \
                 and t["VC"] >= VC:
             return t
@@ -520,7 +523,8 @@ class ArcStandardParser:
         z = self._zrow
         lab_id = self._lab_id
         bias_row = W[self._bias_row]
-        m15, m16, m17 = self._tmemo[16], self._tmemo[17], self._tmemo[18]
+        m15, m16, m17 = (self._memo_s1w_s2w, self._memo_s1w_s2p,
+                         self._memo_s1p_s2w)
         i64 = np.int64
 
         active = cfgs

@@ -69,6 +69,13 @@ def get_spark(
         .config("spark.sql.optimizer.excludedRules",
                 "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
     )
+    if master == "local" or master.startswith("local["):
+        # Workers of a local master are forked on this host, where
+        # corenlp_spark is importable before the daemon starts (every UDF
+        # here already needs it). On a cluster, --py-files arrive per task,
+        # after the daemon starts, so executors keep pyspark's own daemon.
+        builder = builder.config("spark.python.daemon.module",
+                                 "corenlp_spark.worker_daemon")
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

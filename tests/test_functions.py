@@ -406,10 +406,11 @@ def test_pii_scan_and_redact(spark):
         [("a", "mail bob@corp.io or sue+x@a.b.co call 415-555-0173"),
          ("b", "ssn 078-05-1120 card 4111-1111-1111-1111 ip 10.0.42.7"),
          ("c", "clean text with plain numbers 123456789 and no shapes"),
-         ("d", "dotted phone 415.555.0173 and quad 192.168.1.254")],
+         ("d", "dotted phone 415.555.0173 and quad 192.168.1.254"),
+         ("e", None)],
         "doc_id string, text string")
     rows = {r["doc_id"]: r for r in pii_scan(df).collect()}
-    assert "c" not in rows                       # filtered: no PII
+    assert "c" not in rows and "e" not in rows   # filtered: no PII / NULL
     assert rows["a"]["n_email"] == 2 and rows["a"]["n_phone"] == 1
     assert rows["b"]["n_ssn"] == 1 and rows["b"]["n_card"] == 1 \
         and rows["b"]["n_ip"] == 1
@@ -417,9 +418,13 @@ def test_pii_scan_and_redact(spark):
     assert rows["b"]["n_phone"] == 0
     assert rows["d"]["n_phone"] == 1 and rows["d"]["n_ip"] == 1
     assert all(r["n_pii"] > 0 for r in rows.values())
-    # redaction actually rewrites the bytes: redact a doc directly
-    from corenlp_spark.functions.pii import pii_redact
+    # counts: a clean doc counts 0 of each kind, a NULL text counts NULL
+    from corenlp_spark.functions.pii import pii_counts, pii_redact
     from pyspark.sql import functions as F
+    counts = {r["doc_id"]: r[1:] for r in
+              df.select("doc_id", *pii_counts(F.col("text"))).collect()}
+    assert set(counts["c"]) == {0} and set(counts["e"]) == {None}
+    # redaction actually rewrites the bytes: redact a doc directly
     red = df.filter("doc_id = 'b'").select(
         pii_redact(F.col("text")).alias("t")).collect()[0]["t"]
     assert red == "ssn [SSN] card [CARD] ip [IP]"
