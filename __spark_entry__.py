@@ -439,24 +439,22 @@ def q_mention_chunks_sql(spark, sf_dir):
     to rediscover adjacency the array already encodes. Result rows are
     identical (same run boundaries, counts, max lengths; a tag with zero
     runs is absent either way)."""
-    import re
     from typing import Iterator
 
     import pandas as pd
 
+    from corenlp_spark.functions.textstats import word_tokens
+
     d = _spread(spark, _t(spark, sf_dir, "documents"))
     groups = {"TOOL": {"spark", "hash", "merge"},
               "ENTITY": {"customer", "order", "part"}}
-    punct = re.compile(r"[^\w\s]", re.ASCII)
-    ws = re.compile(r"\s+", re.ASCII)
 
     def run_stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         cols = [f"{p}_{t}" for t in ("ENTITY", "TOOL") for p in ("r", "k", "m")]
         for pdf in batches:
             out = {c: [] for c in cols}
             for text in pdf["text"]:
-                toks = [t for t in
-                        ws.split(punct.sub(" ", (text or "").lower())) if t]
+                toks = word_tokens(text)
                 for tag in ("ENTITY", "TOOL"):
                     words = groups[tag]
                     runs = toks_in = best = cur = 0

@@ -7,8 +7,11 @@ Four strategies over the ``documents`` table (doc_id, text, …):
   - simhash:      64-bit sign-sum of per-token md5 bits; hamming-ball match
   - n-gram jaccard: exact Jaccard on word n-gram sets for candidate pairs
 
-All column-level logic is built-in ``pyspark.sql.functions`` (JVM-side,
-codegen'd): no Python UDFs anywhere in this module. Hashes are md5-hex so a
+Column-level logic is built-in ``pyspark.sql.functions`` (JVM-side,
+codegen'd) except for three row- or bucket-local Arrow kernels
+(``mapInPandas``): shingling + minhash signatures (``_shingle_mhs_kernel``),
+the bucket-local Jaccard verify of ``minhash_dup_pairs``, and the simhash
+sign sum. Each is value-identical to its SQL form. Hashes are md5-hex so a
 DuckDB oracle can reproduce every value bit-for-bit.
 
 Scale notes: minhash bands bound the join fan-out (no O(n²) compare); the
@@ -83,13 +86,12 @@ def _shingle_mhs_kernel(n_bands: int, k: int, with_sh: bool, id_type: str):
     SQL twin, including the short-doc concat_ws-skips-missing semantics and
     lexicographic hex min)."""
     import hashlib
-    import re
     from typing import Iterator
 
     import pandas as pd
 
-    punct = re.compile(r"[^\w\s]", re.ASCII)
-    ws = re.compile(r"\s+", re.ASCII)
+    from corenlp_spark.functions.textstats import word_tokens
+
     suffixes = [f"#{b}".encode() for b in range(n_bands)]
     # r6: md5 is a pure function of (gram, band) and corpora repeat shingles
     # (Zipf), so per-gram band digests are cached across docs AND tasks
@@ -104,8 +106,7 @@ def _shingle_mhs_kernel(n_bands: int, k: int, with_sh: bool, id_type: str):
             if with_sh:
                 out["sh"] = []
             for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                toks = [t for t in
-                        ws.split(punct.sub(" ", (text or "").lower())) if t]
+                toks = word_tokens(text)
                 n = len(toks)
                 grams = list(dict.fromkeys(
                     " ".join(toks[i:i + k]) for i in range(max(n - k, 0) + 1)))
@@ -235,15 +236,14 @@ def simhash(docs: DataFrame, bits: int = 64) -> DataFrame:
     DuckDB oracle still replays the exploded ±1 form bit-for-bit.
     Docs with zero tokens are absent from the result, as before."""
     import hashlib
-    import re
     from typing import Iterator
 
     import numpy as np
     import pandas as pd
 
+    from corenlp_spark.functions.textstats import word_tokens
+
     id_type = docs.schema["doc_id"].dataType.simpleString()
-    punct = re.compile(r"[^\w\s]", re.ASCII)
-    ws = re.compile(r"\s+", re.ASCII)
     shifts = np.arange(60, dtype=np.uint64)
     pow2 = (np.uint64(1) << shifts).astype(np.int64)
     cache = _MD5_TOKEN_CACHE  # pure value cache (md5 of the token bytes)
@@ -253,9 +253,7 @@ def simhash(docs: DataFrame, bits: int = 64) -> DataFrame:
         for pdf in batches:
             ids, hs, counts = [], [], []
             for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                toks = dict.fromkeys(
-                    t for t in ws.split(punct.sub(" ", (text or "").lower()))
-                    if t)
+                toks = dict.fromkeys(word_tokens(text))
                 if not toks:
                     continue
                 ids.append(doc_id)

@@ -86,13 +86,16 @@ def _planes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
     return out
 
 
-def _assign_kernel(cents, vec_col: str, with_score: bool):
-    """Arrow-batched argmax-dot assignment, bit-identical to the
-    ``_cell_expr`` higher-order fold: dot products accumulate sequentially
-    over the dimension axis in float64 (same op order as F.aggregate and
-    DuckDB's list_dot_product), ties break toward the LARGER cell (the
-    array_max struct ordering). ~20× faster than the interpreted HOF tree
-    per row (guide §4.2)."""
+def _assign_kernel(cents, vec_col: str, carry: tuple[str, ...] = (),
+                   with_score: bool = False):
+    """Arrow-batched nearest-centroid (argmax-dot) assignment → ``cell``,
+    then the ``carry`` columns as they came in, then the winning dot ``s``
+    when ``with_score``. Dot products accumulate sequentially over the
+    dimension axis in float64 (same op order as the ``_dot`` fold and
+    DuckDB's list_dot_product) and ties break toward the LARGER cell (an
+    ``array_max`` over (score, cell) structs), so the DuckDB oracles replay
+    it bit-for-bit. ~20× faster than that interpreted HOF tree per row
+    (guide §4.2)."""
     from typing import Iterator
 
     import numpy as np
@@ -111,10 +114,10 @@ def _assign_kernel(cents, vec_col: str, with_score: bool):
             # last argmax = larger cell wins exact ties
             cell = (C.shape[0] - 1) - np.argmax(S[:, ::-1], axis=1)
             out = {"cell": cell.astype(np.int32)}
+            for c in carry:
+                out[c] = pdf[c].values
             if with_score:
                 out["s"] = S[np.arange(len(V)), cell]
-            else:
-                out[vec_col] = pdf[vec_col].values
             yield pd.DataFrame(out)
 
     return kern
@@ -130,13 +133,13 @@ def train_centroids(
     reaches the driver — the standard k-means-on-Spark shape that holds at
     any corpus size. Deterministic: seeded-unit-vector init, fixed
     iteration count, no RNG. Assignment runs as the Arrow/numpy kernel
-    (_assign_kernel — bit-parity with the interpreted fold)."""
+    ``_assign_kernel``."""
     from pyspark.sql import functions as F
 
     cents = _planes(dim, k)
     for _ in range(iters):
         celed = emb.select(vec_col).mapInPandas(
-            _assign_kernel(cents, vec_col, with_score=False),
+            _assign_kernel(cents, vec_col, carry=(vec_col,)),
             schema=f"cell int, {vec_col} array<float>")
         means = (
             celed.select("cell", F.posexplode(vec_col).alias("pos", "x"))
@@ -155,17 +158,6 @@ def train_centroids(
     return cents
 
 
-def _cell_expr(v, cents):
-    from pyspark.sql import functions as F
-
-    pairs = [
-        F.struct(_dot(v, F.array(*[F.lit(x) for x in c])).alias("s"),
-                 F.lit(i).alias("c"))
-        for i, c in enumerate(cents)
-    ]
-    return F.array_max(F.array(*pairs)).getField("c")
-
-
 def ivf_ann_pairs(
     emb: DataFrame, dim: int, n_cells: int = 16, threshold: float = 0.7,
     id_col: str = "vec_id", vec_col: str = "embedding",
@@ -179,11 +171,14 @@ def ivf_ann_pairs(
     # deterministic seeded centroids by default; a train_centroids() table
     # drops in via the ``centroids`` parameter (same broadcast literal path)
     cents = centroids if centroids is not None else _planes(dim, n_cells)
-    celed = emb.withColumn("cell", _cell_expr(F.col(vec_col), cents))
+    id_type = emb.schema[id_col].dataType.simpleString()
     # ids-only shuffle discipline (same as lsh_ann_pairs, VERDICT r3 #9):
     # the quadratic-fan-out cell join carries (id, cell) only; vectors
     # re-join by id once for the surviving candidate pairs
-    ids = celed.select(F.col(id_col).alias("id"), "cell")
+    ids = emb.select(id_col, vec_col).mapInPandas(
+        _assign_kernel(cents, vec_col, carry=(id_col,)),
+        schema=f"cell int, {id_col} {id_type}",
+    ).select(F.col(id_col).alias("id"), "cell")
     cand = (
         ids.select(F.col("id").alias("id_a"), "cell")
         .join(ids.select(F.col("id").alias("id_b"), "cell"), "cell")
@@ -338,7 +333,8 @@ def kmeans_cluster_summary(
     mixing weights): train the distributed Lloyd quantizer
     (``train_centroids`` — one shuffle per iteration, only k×dim floats at
     the driver), assign every vector to its argmax-dot centroid in one
-    codegen'd pass, and aggregate (cell, n_vecs, avg_score).
+    Arrow-kernel pass (``_assign_kernel``), and aggregate (cell, n_vecs,
+    avg_score).
 
     Deterministic end-to-end (seeded-LCG init, fixed iterations, explicit
     tie-break toward the larger cell), so a DuckDB oracle replays the full

@@ -1,13 +1,17 @@
 """Text analysis for training-data pipelines: language ID, quality scoring,
 token counting, document fingerprinting.
 
-Every function is pure built-in ``pyspark.sql.functions`` column algebra —
-JVM-side, whole-stage-codegen'd, and bit-for-bit reproducible in a DuckDB
-oracle (the formulas below are deliberately engine-portable: regexp token
-splits, md5 fingerprints, stopword-hit counts).
+Every function but one is built-in ``pyspark.sql.functions`` column
+algebra — JVM-side, whole-stage-codegen'd, and bit-for-bit reproducible in a
+DuckDB oracle (the formulas below are deliberately engine-portable: regexp
+token splits, md5 fingerprints, stopword-hit counts). ``gopher_repetition``
+is a row-local Arrow kernel over ``word_tokens``, the Python twin of
+``tokens``, and matches the SQL form the oracle replays value for value.
 """
 
 from __future__ import annotations
+
+import re
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -31,6 +35,16 @@ def tokens(col) -> Column:
     """Whitespace+punct tokenization as a column expr (portable)."""
     t = F.split(F.lower(F.regexp_replace(col, r"[^\w\s]", " ")), r"\s+")
     return F.filter(t, lambda x: x != "")
+
+
+_PUNCT = re.compile(r"[^\w\s]", re.ASCII)
+_WS = re.compile(r"\s+", re.ASCII)
+
+
+def word_tokens(text: str | None) -> list[str]:
+    """``tokens`` for one Python string, for the Arrow kernels: lowercase,
+    punctuation to spaces, whitespace split, no empties; NULL → []."""
+    return [t for t in _WS.split(_PUNCT.sub(" ", (text or "").lower())) if t]
 
 
 def token_count(col) -> Column:
@@ -230,12 +244,11 @@ def gopher_repetition(df, text_col: str = "text", id_col: str = "doc_id"):
     over the corpus. The previous shape exploded ~9·T gram rows per doc
     through a (doc, n, gram) groupBy plus a per-doc rollup — two exchanges
     carrying every gram string; this one carries nothing and is linear in
-    corpus size. Tokenization mirrors ``tokens()`` exactly (ASCII \\w/\\s,
-    the Java regex default) and rounding replicates F.round's BigDecimal
-    HALF_UP, so values are bit-identical; the DuckDB oracle still replays
-    the exploded groupBy form.
+    corpus size. Tokenization is ``word_tokens``, the Python twin of
+    ``tokens()`` (ASCII \\w/\\s, the Java regex default), and rounding
+    replicates F.round's BigDecimal HALF_UP, so values are bit-identical;
+    the DuckDB oracle still replays the exploded groupBy form.
     """
-    import re
     from collections import Counter
     from typing import Iterator
 
@@ -247,16 +260,13 @@ def gopher_repetition(df, text_col: str = "text", id_col: str = "doc_id"):
     frac_cols = [f"top{n}_frac" for n in top_ns] + [f"dup{n}_frac" for n in dup_ns]
     thresholds = [GOPHER_TOP_NGRAM[n] for n in top_ns] + [
         GOPHER_DUP_NGRAM[n] for n in dup_ns]
-    punct = re.compile(r"[^\w\s]", re.ASCII)
-    ws = re.compile(r"\s+", re.ASCII)
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out: dict[str, list] = {c: [] for c in ["doc_id", *frac_cols,
                                                     "passes_repetition"]}
             for doc_id, text in zip(pdf[id_col], pdf[text_col]):
-                toks = [t for t in ws.split(punct.sub(" ", (text or "").lower()))
-                        if t]
+                toks = word_tokens(text)
                 if len(toks) < 2:
                     # no repetition signal — absent from the result, same
                     # row set as the exploded groupBy form

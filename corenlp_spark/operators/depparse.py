@@ -1,27 +1,165 @@
-"""Dependency parsing: UD-style labeled edge lists per sentence.
+"""Dependency parsing: UD-style labeled edge lists per sentence, and the
+one graph view every downstream op reads them through.
 
 Behavioral reference (re-expressed):
   - transition-based parsing ``parser/nndep/DependencyParser.java`` /
-    ``parser/nndep/ArcStandard.java:68-102`` (Chen & Manning 2014). Here the
-    *output contract* (per-sentence labeled dependency graph, UD relations,
-    enhanced case-collapse like ``nmod:of``) is produced by a deterministic
-    chunk-and-attach clause parser — the same greedy left-to-right discipline,
-    rule-scored instead of NN-scored. The scorer is pluggable; a trained
-    arc-standard model can drop in without changing the stage contract.
+    ``parser/nndep/ArcStandard.java:68-102`` (Chen & Manning 2014). The
+    default producer is the trained arc-standard parser in
+    ``models/parser.py``; this module keeps the deterministic
+    chunk-and-attach clause parser (``parse_sentence(model="rule")``) as its
+    distillation teacher and fallback, and the post-parse rewrites both
+    parsers share (``enhance_edges``).
   - enhanced++ case-marker collapse (``nmod:<case>``):
     ``trees/UniversalEnglishGrammaticalStructure.java:211-268,304``.
 
-Graph encoding (SURVEY.md §1.1): no object graph — an edge-list column
-``deps: array<struct<sent_idx:int, head:int, dep:int, rel:string>>`` with
-doc-level token indices; the root edge has head = -1. All downstream graph
-ops (OpenIE semgrex-style matching) consume this edge list.
+Graph encoding (SURVEY.md §1.1): no object graph is stored — an edge-list
+column ``deps: array<struct<sent_idx:int, head:int, dep:int, rel:string>>``
+with doc-level token indices; the root edge has head = -1. Every downstream
+graph op (OpenIE, natlog, entailment, Semgrex/KBP, sentiment, protobuf)
+reads that column through ``sentence_graphs``, which groups it by
+``sent_idx`` into one ``SentenceGraph`` adjacency view per sentence inside
+the UDF; this module is the only reader of the edge struct's fields.
 
 Narrow transform: per-doc ``mapInPandas``, zero shuffle.
 """
 
 from __future__ import annotations
 
+from typing import Iterator
+
 DEPS_TYPE = "array<struct<sent_idx:int,head:int,dep:int,rel:string>>"
+
+
+class SentenceGraph:
+    """Adjacency view over one sentence's slice of the ``deps`` edge list.
+
+    ``toks`` are the sentence's token dicts and ``off`` the doc-level index
+    of its first token; nodes are doc-level token indices, as in ``deps``.
+    ``parent`` keeps the last incoming edge of each token, ``parents`` all
+    of them; ``root`` is -1 when the sentence has no root edge. A token
+    without ``lemma``/``pos`` (the tokenize cut, or NULL) reads as its word
+    / "". An empty lemma is kept: the lemmatizer returns one for bare
+    suffix tokens ("s"/NNS, "ed"/VBD), and KBP features read it as is.
+    """
+
+    def __init__(self, toks, edges: list[tuple[int, int, str]], offset: int = 0):
+        self.toks, self.edges, self.off = toks, edges, offset
+        self.words = [t["word"] for t in toks]
+        self.lemmas = [t["word"] if t.get("lemma") is None else t["lemma"]
+                       for t in toks]
+        self.pos = [t.get("pos") or "" for t in toks]
+        self.children: dict[int, list[tuple[int, str]]] = {}
+        self.parents: dict[int, list[tuple[int, str]]] = {}
+        self.parent: dict[int, tuple[int, str]] = {}
+        self.root = -1
+        for h, d, r in edges:
+            if h == -1:
+                self.root = d
+                continue
+            self.children.setdefault(h, []).append((d, r))
+            self.parents.setdefault(d, []).append((h, r))
+            self.parent[d] = (h, r)
+
+    def tok(self, t: int) -> dict:
+        return self.toks[t - self.off]
+
+    def word(self, t: int) -> str:
+        return self.words[t - self.off]
+
+    def lemma(self, t: int) -> str:
+        return self.lemmas[t - self.off]
+
+    def kids(self, t: int, rel_prefix: str | None = None):
+        """(dep, rel) children of ``t``; with ``rel_prefix``, only those
+        whose relation is it or one of its subtypes."""
+        if rel_prefix is None:
+            yield from self.children.get(t, ())
+            return
+        sub = rel_prefix + ":"
+        for d, r in self.children.get(t, ()):
+            if r == rel_prefix or r.startswith(sub):
+                yield d, r
+
+    def first(self, t: int, rel: str) -> int | None:
+        sub = rel + ":"
+        for d, r in self.children.get(t, ()):
+            if r == rel or r.startswith(sub):
+                return d
+        return None
+
+    def gloss(self, tokens) -> str:
+        return " ".join(self.word(t) for t in sorted(tokens))
+
+    def subtree(self, t: int) -> set[int]:
+        out, stack = {t}, [t]
+        while stack:
+            x = stack.pop()
+            for d, _ in self.children.get(x, ()):
+                if d not in out:
+                    out.add(d)
+                    stack.append(d)
+        return out
+
+    def descendants(self, t: int):
+        stack = [t]
+        seen = set()
+        while stack:
+            x = stack.pop()
+            for d, _ in self.children.get(x, ()):
+                if d not in seen:
+                    seen.add(d)
+                    yield d
+                    stack.append(d)
+
+    def ancestors(self, t: int):
+        stack = [t]
+        seen = set()
+        while stack:
+            x = stack.pop()
+            for h, _ in self.parents.get(x, ()):
+                if h not in seen:
+                    seen.add(h)
+                    yield h
+                    stack.append(h)
+
+    def reachable_in(self, t: int, lo: int, hi: int, down: bool) -> set[int]:
+        """Nodes with SOME path of length in [lo, hi] from ``t`` (downward or
+        upward) — LIMITED_GRANDKID/GRANDPARENT semantics."""
+        adj = self.children if down else self.parents
+        frontier = {t}
+        hits: set[int] = set()
+        for depth in range(1, hi + 1):
+            nxt: set[int] = set()
+            for x in frontier:
+                for o, _ in adj.get(x, ()):
+                    nxt.add(o)
+            if depth >= lo:
+                hits |= nxt
+            frontier = nxt
+            if not frontier:
+                break
+        return hits
+
+
+def edges_by_sent(deps) -> dict[int, list[tuple[int, int, str]]]:
+    """deps column entries → per-sentence (head, dep, rel) edge lists."""
+    by_sent: dict[int, list] = {}
+    for e in deps:
+        by_sent.setdefault(e["sent_idx"], []).append((e["head"], e["dep"], e["rel"]))
+    return by_sent
+
+
+def sentence_graphs(tokens, sentences, deps) -> Iterator[tuple[dict, SentenceGraph]]:
+    """One doc's (sentence, graph) pairs in sentence order; a sentence with
+    no edges gets a graph without any. NULL ``tokens`` or ``sentences``
+    yield nothing; NULL ``deps`` reads as no edges."""
+    if tokens is None or sentences is None:
+        return
+    by_sent = edges_by_sent(deps) if deps is not None else {}
+    for s in sentences:
+        a = s["start_tok"]
+        yield s, SentenceGraph(tokens[a:s["end_tok"]], by_sent.get(s["sent_idx"], []), a)
+
 
 _NOMINAL = {"NN", "NNS", "NNP", "NNPS", "PRP", "CD", "WP"}
 _CHUNKABLE = {"DT", "PRP$", "JJ", "JJR", "JJS", "CD", "NN", "NNS", "NNP", "NNPS", "POS"}

@@ -26,7 +26,7 @@ from typing import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from corenlp_spark.operators.openie import _Graph, edges_by_sent
+from corenlp_spark.operators.depparse import SentenceGraph, sentence_graphs
 
 # deletion affinity per relation (NaturalLogicWeights spirit: high = freely
 # deletable modifier, low = meaning-bearing; core arguments never delete)
@@ -49,7 +49,7 @@ def _deletable_rel(rel: str) -> float | None:
     return AFFINITY.get(base)
 
 
-def forward_entail(g: _Graph, max_fragments: int = 32) -> list[tuple[str, float]]:
+def forward_entail(g: SentenceGraph, max_fragments: int = 32) -> list[tuple[str, float]]:
     """Entailed fragments of one sentence: [(gloss, score)], shorter first
     discovery order, deduplicated, full sentence excluded."""
     n = len(g.words)
@@ -60,17 +60,6 @@ def forward_entail(g: _Graph, max_fragments: int = 32) -> list[tuple[str, float]
         for d, r in kids:
             if r in ("advmod", "det", "dep") and g.word(d).lower() in _NEG_WORDS:
                 return []
-
-    def subtree(t: int) -> frozenset:
-        out = {t}
-        stack = [t]
-        while stack:
-            x = stack.pop()
-            for d, _ in g.children.get(x, ()):
-                if d not in out:
-                    out.add(d)
-                    stack.append(d)
-        return frozenset(out)
 
     def candidate_deletions(kept: frozenset):
         """(subtree, affinity) deletions licensed in the CURRENT state."""
@@ -93,7 +82,7 @@ def forward_entail(g: _Graph, max_fragments: int = 32) -> list[tuple[str, float]
                     r == "det" and g.word(d).lower() in _DOWNWARD_DETS
                 ):
                     continue
-                yield subtree(d), aff
+                yield g.subtree(d), aff
 
     def gloss(kept: frozenset) -> str:
         ws = [g.word(t) for t in sorted(kept)
@@ -137,16 +126,9 @@ def entailed_docs(df: DataFrame) -> DataFrame:
             for doc_id, toks, sents, deps in zip(
                 pdf["doc_id"], pdf["tokens"], pdf["sentences"], pdf["deps"]
             ):
-                by_sent = edges_by_sent(deps)
-                for s in sents:
-                    edges = by_sent.get(s["sent_idx"])
-                    if not edges:
+                for s, g in sentence_graphs(toks, sents, deps):
+                    if not g.edges:
                         continue
-                    a, b = s["start_tok"], s["end_tok"]
-                    seg = toks[a:b]
-                    g = _Graph([t["word"] for t in seg],
-                               [t["lemma"] for t in seg], edges, a,
-                               [t["pos"] for t in seg])
                     for fr, sc in forward_entail(g):
                         rows["doc_id"].append(doc_id)
                         rows["sent_idx"].append(s["sent_idx"])

@@ -284,12 +284,22 @@ def kbp_semgrex_relations(annotated: DataFrame) -> DataFrame:
 
     import pandas as pd
 
-    from corenlp_spark.operators.openie import edges_by_sent
-    from corenlp_spark.operators.semgrex import (
-        SentenceGraph, compile_semgrex, match_semgrex,
-    )
+    from corenlp_spark.operators.depparse import sentence_graphs
+    from corenlp_spark.operators.semgrex import compile_semgrex, match_semgrex
 
     compiled = [(compile_semgrex(p), rel) for p, _, _, rel, _ in KBP_SEMGREX]
+
+    def span_text(g, head):
+        # expand over contiguous same-NER run around the head
+        ner = g.tok(head)["ner"]
+        lo = head
+        while lo - 1 >= g.off and g.tok(lo - 1)["ner"] == ner:
+            lo -= 1
+        hi = head
+        while hi + 1 < g.off + len(g.toks) and g.tok(hi + 1)["ner"] == ner:
+            hi += 1
+        return g.gloss(range(lo, hi + 1))
+
     schema = ("doc_id string, sent_idx int, subj string, relation string, "
               "obj string, confidence double")
 
@@ -300,32 +310,16 @@ def kbp_semgrex_relations(annotated: DataFrame) -> DataFrame:
             for doc_id, toks, sents, deps in zip(
                 pdf["doc_id"], pdf["tokens"], pdf["sentences"], pdf["deps"]
             ):
-                by_sent = edges_by_sent(deps)
-                for s in sents:
-                    edges = by_sent.get(s["sent_idx"])
-                    if not edges:
+                for s, g in sentence_graphs(toks, sents, deps):
+                    if not g.edges:
                         continue
-                    a, b = s["start_tok"], s["end_tok"]
-                    g = SentenceGraph([dict(t) for t in toks[a:b]], edges, a)
-
-                    def span_text(head):
-                        # expand over contiguous same-NER run around the head
-                        ner = toks[head]["ner"]
-                        lo = head
-                        while lo - 1 >= a and toks[lo - 1]["ner"] == ner:
-                            lo -= 1
-                        hi = head
-                        while hi + 1 < b and toks[hi + 1]["ner"] == ner:
-                            hi += 1
-                        return " ".join(toks[k]["word"] for k in range(lo, hi + 1))
-
                     for pat, rel in compiled:
                         for m in match_semgrex(pat, g):
                             if "s" in m and "o" in m:
                                 rows["doc_id"].append(doc_id)
                                 rows["sent_idx"].append(s["sent_idx"])
-                                obj_t = span_text(m["o"])
-                                rows["subj"].append(span_text(m["s"]))
+                                obj_t = span_text(g, m["o"])
+                                rows["subj"].append(span_text(g, m["s"]))
                                 rows["relation"].append(
                                     refine_location_relation(rel, obj_t))
                                 rows["obj"].append(obj_t)
@@ -356,11 +350,12 @@ def span_head(parent: dict, s0: int, s1: int) -> int:
 
 
 def dep_path(parent: dict, lemmas: list[str], a: int, b: int,
-             max_steps: int = 64) -> list[str] | None:
+             max_steps: int = 64, offset: int = 0) -> list[str] | None:
     """Alternating [lemma, edge, lemma, …] path between tokens a and b over
     the parent map {dep: (head, rel)} — up-edges render ``<-rel-``,
     down-edges ``-rel->`` (simple/SentenceAlgorithms.dependencyPathBetween:
-    449-512 output shape). Returns None when no tree path exists."""
+    449-512 output shape). ``lemmas[i]`` is token ``i + offset``'s lemma.
+    Returns None when no tree path exists."""
     chain = {a: 0}
     order = [a]
     cur = a
@@ -382,17 +377,17 @@ def dep_path(parent: dict, lemmas: list[str], a: int, b: int,
         cur = e[0]
         seen.add(cur)
     lca = cur
-    path = [lemmas[a]]
+    path = [lemmas[a - offset]]
     cur = a
     while cur != lca:
         h, rel = parent[cur]
         path.append(f"<-{rel}-")
-        path.append(lemmas[h])
+        path.append(lemmas[h - offset])
         cur = h
     for node in reversed(up_b):
         _, rel = parent[node]
         path.append(f"-{rel}->")
-        path.append(lemmas[node])
+        path.append(lemmas[node - offset])
     return path
 _REL_MODEL = None
 
@@ -416,6 +411,8 @@ def kbp_statistical_relations(annotated: DataFrame, threshold: float = 0.5) -> D
 
     import pandas as pd
 
+    from corenlp_spark.operators.depparse import sentence_graphs
+
     schema = ("doc_id string, sent_idx int, subj string, relation string, "
               "obj string, confidence double")
     signatures = {(s, o) for s, objs in RELATION_TAXONOMY.values() for o in objs}
@@ -425,19 +422,12 @@ def kbp_statistical_relations(annotated: DataFrame, threshold: float = 0.5) -> D
         for pdf in batches:
             rows = {k: [] for k in ("doc_id", "sent_idx", "subj", "relation",
                                     "obj", "confidence")}
-            has_deps = "deps" in pdf.columns
-            deps_iter = pdf["deps"] if has_deps else [None] * len(pdf)
+            deps_iter = pdf["deps"] if "deps" in pdf.columns else [None] * len(pdf)
             for doc_id, toks, sents, deps in zip(
                 pdf["doc_id"], pdf["tokens"], pdf["sentences"], deps_iter
             ):
-                # doc-level parent map (indices already doc-level)
-                parent = ({e["dep"]: (e["head"], e["rel"]) for e in deps}
-                          if deps is not None else {})
-                doc_lemmas = [t["lemma"] for t in toks]
-                doc_pos = [t["pos"] for t in toks]
-                for s in sents:
-                    a, b = s["start_tok"], s["end_tok"]
-                    seg = [dict(t) for t in toks[a:b]]
+                for s, g in sentence_graphs(toks, sents, deps):
+                    a, seg, lemmas, parent = g.off, g.toks, g.lemmas, g.parent
                     # mention runs inside the sentence
                     runs = []
                     i = 0
@@ -451,7 +441,6 @@ def kbp_statistical_relations(annotated: DataFrame, threshold: float = 0.5) -> D
                             i = j
                         else:
                             i += 1
-                    lemmas = [t["lemma"] for t in seg]
                     for si, (s0, s1, sner) in enumerate(runs):
                         for oi, (o0, o1, oner) in enumerate(runs):
                             if si == oi or (sner, oner) not in signatures:
@@ -466,12 +455,12 @@ def kbp_statistical_relations(annotated: DataFrame, threshold: float = 0.5) -> D
                             if parent:
                                 sh = span_head(parent, a + s0, a + s1)
                                 oh = span_head(parent, a + o0, a + o1)
-                                path = dep_path(parent, doc_lemmas, sh, oh)
+                                path = dep_path(parent, lemmas, sh, oh, offset=a)
                                 if path:
                                     dep = {"path": path,
-                                           "spos": doc_pos[sh],
-                                           "opos": doc_pos[oh],
-                                           "obj_head": doc_lemmas[oh]}
+                                           "spos": g.pos[sh - a],
+                                           "opos": g.pos[oh - a],
+                                           "obj_head": g.lemma(oh)}
                             rel, conf = model.predict(between, sner, oner, dep)
                             # taxonomy type check (the reference's per-
                             # relation signature validation)
@@ -567,7 +556,7 @@ def kbp_tokensregex_relations(annotated: DataFrame) -> DataFrame:
                 pdf["doc_id"], pdf["tokens"], pdf["sentences"]
             ):
                 for s in sents:
-                    seg = [dict(t) for t in toks[s["start_tok"]:s["end_tok"]]]
+                    seg = toks[s["start_tok"]:s["end_tok"]]
                     lws = {t["word"].lower() for t in seg}
                     for first in lws & by_first.keys():
                         for elems, rel, inv in by_first[first]:

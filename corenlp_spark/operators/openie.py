@@ -28,6 +28,8 @@ from typing import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from corenlp_spark.operators.depparse import SentenceGraph, sentence_graphs
+
 TRIPLES_SCHEMA = (
     "doc_id string, sent_idx int, subj string, pred string, obj string, "
     "confidence double, subj_head int, obj_head int"
@@ -63,108 +65,52 @@ _NP_MODS = {"amod", "compound", "nummod", "nmod:poss", "flat"}
 _DET_LIKE = {"det", "punct", "case", "mark", "cc"}
 
 
-class _Graph:
-    """Per-sentence dependency graph view over the edge list."""
+def np_tokens(g: SentenceGraph, head: int, drop_amod: bool = False, stop=(),
+              keep_amods=None) -> list[int]:
+    """Collect the noun phrase under ``head`` (dets/punct stripped).
 
-    def __init__(self, words, lemmas, edges, offset, pos=None):
-        self.words, self.lemmas, self.off = words, lemmas, offset
-        self.pos = pos or [""] * len(words)
-        self.children: dict[int, list[tuple[int, str]]] = {}
-        self.parent: dict[int, tuple[int, str]] = {}
-        self.root = None
-        for h, d, r in edges:
-            if h == -1:
-                self.root = d
+    ``keep_amods``: when set, retain ONLY those amod children (the
+    single-adjective entailment variants of coordinated modifiers,
+    "44th and current President" ⊢ "44th President")."""
+    out = [head]
+    amods = [d for d, r in g.children.get(head, ()) if r == "amod"]
+    kept_amods = 0
+    for d, r in g.children.get(head, ()):
+        if d in stop or r in _DET_LIKE or r.startswith("nmod") or r in ("conj", "ccomp", "acl", "cop", "nsubj", "expl", "obj", "aux", "aux:pass", "dep", "advmod"):
+            continue
+        if r == "amod":
+            if drop_amod or (keep_amods is not None and d not in keep_amods):
                 continue
-            self.children.setdefault(h, []).append((d, r))
-            self.parent[d] = (h, r)
-
-    def kids(self, t, rel_prefix=None):
-        if rel_prefix is None:
-            yield from self.children.get(t, ())
-            return
-        sub = rel_prefix + ":"
-        for d, r in self.children.get(t, ()):
-            if r == rel_prefix or r.startswith(sub):
-                yield d, r
-
-    def first(self, t, rel):
-        sub = rel + ":"
-        for d, r in self.children.get(t, ()):
-            if r == rel or r.startswith(sub):
-                return d
-        return None
-
-    def word(self, t):
-        return self.words[t - self.off]
-
-    def lemma(self, t):
-        return self.lemmas[t - self.off]
-
-    def np_tokens(self, head, drop_amod=False, stop=(), keep_amods=None):
-        """Collect the noun phrase under ``head`` (dets/punct stripped).
-
-        ``keep_amods``: when set, retain ONLY those amod children (the
-        single-adjective entailment variants of coordinated modifiers,
-        "44th and current President" ⊢ "44th President")."""
-        out = [head]
-        amods = [d for d, r in self.children.get(head, ()) if r == "amod"]
-        kept_amods = 0
-        for d, r in self.children.get(head, ()):
-            if d in stop or r in _DET_LIKE or r.startswith("nmod") or r in ("conj", "ccomp", "acl", "cop", "nsubj", "expl", "obj", "aux", "aux:pass", "dep", "advmod"):
-                continue
-            if r == "amod":
-                if drop_amod or (keep_amods is not None and d not in keep_amods):
-                    continue
-                kept_amods += 1
-            if r in _NP_MODS:
-                out.extend(self.np_tokens(d, drop_amod=drop_amod, stop=stop))
-        # adjective coordination: keep the cc only when every coordinated
-        # amod is retained ("44th AND current President"; dropped otherwise)
-        if len(amods) >= 2 and kept_amods == len(amods):
-            for d, r in self.children.get(head, ()):
-                if r == "cc" and min(amods) < d < max(amods):
-                    out.append(d)
-        return sorted(out)
-
-    def np_variants(self, head) -> list[list[int]]:
-        """Entailment-licensed NP variants: full, amod-dropped, and each
-        single-amod survivor of a coordinated modifier pair."""
-        full = self.np_tokens(head)
-        vs = [full]
-        drop = self.np_tokens(head, drop_amod=True)
-        if drop != full:
-            vs.append(drop)
-        amods = [d for d, r in self.children.get(head, ()) if r == "amod"]
-        if len(amods) >= 2:
-            for a in amods:
-                one = self.np_tokens(head, keep_amods={a})
-                if one not in vs:
-                    vs.append(one)
-        return vs
-
-    def gloss(self, tokens):
-        return " ".join(self.word(t) for t in sorted(tokens))
-
-    def subtree(self, t: int) -> set[int]:
-        out, stack = {t}, [t]
-        while stack:
-            x = stack.pop()
-            for d, _ in self.children.get(x, ()):
-                if d not in out:
-                    out.add(d)
-                    stack.append(d)
-        return out
-
-    def polarity(self, t: int) -> str:
-        """Per-token natlog polarity ("up"/"down"/"flat"), computed lazily
-        once per sentence (``NaturalLogicAnnotator.java:594`` setPolarity)."""
-        if not hasattr(self, "_polarity"):
-            self._polarity = compute_polarity(self)
-        return self._polarity[t - self.off]
+            kept_amods += 1
+        if r in _NP_MODS:
+            out.extend(np_tokens(g, d, drop_amod=drop_amod, stop=stop))
+    # adjective coordination: keep the cc only when every coordinated
+    # amod is retained ("44th AND current President"; dropped otherwise)
+    if len(amods) >= 2 and kept_amods == len(amods):
+        for d, r in g.children.get(head, ()):
+            if r == "cc" and min(amods) < d < max(amods):
+                out.append(d)
+    return sorted(out)
 
 
-def compute_polarity(g: _Graph) -> list[str]:
+def np_variants(g: SentenceGraph, head: int) -> list[list[int]]:
+    """Entailment-licensed NP variants: full, amod-dropped, and each
+    single-amod survivor of a coordinated modifier pair."""
+    full = np_tokens(g, head)
+    vs = [full]
+    drop = np_tokens(g, head, drop_amod=True)
+    if drop != full:
+        vs.append(drop)
+    amods = [d for d, r in g.children.get(head, ()) if r == "amod"]
+    if len(amods) >= 2:
+        for a in amods:
+            one = np_tokens(g, head, keep_amods={a})
+            if one not in vs:
+                vs.append(one)
+    return vs
+
+
+def compute_polarity(g: SentenceGraph) -> list[str]:
     """Compose operator monotonicities into one polarity mark per token.
 
     Mirrors ``naturalli/NaturalLogicAnnotator.java:300-343,594``: each
@@ -233,13 +179,7 @@ def compute_polarity(g: _Graph) -> list[str]:
     return pol
 
 
-def _polarity_blocked(g: _Graph, verb: int) -> bool:
-    """True if ``verb`` sits in a non-upward context per the token's natlog
-    polarity mark — extraction is only sound under upward monotonicity."""
-    return g.polarity(verb) != "up"
-
-
-def _pred_words(g: _Graph, verb: int, extra: list[int]) -> str:
+def _pred_words(g: SentenceGraph, verb: int, extra: list[int]) -> str:
     toks = [verb] + extra
     for d, r in g.children.get(verb, ()):
         if r in ("aux", "aux:pass"):
@@ -247,7 +187,7 @@ def _pred_words(g: _Graph, verb: int, extra: list[int]) -> str:
     return g.gloss(toks)
 
 
-def _negated(g: _Graph, t: int) -> bool:
+def _negated(g: SentenceGraph, t: int) -> bool:
     return any(
         g.word(d).lower() in ("not", "n't", "never", "no")
         for d, r in g.children.get(t, ())
@@ -255,7 +195,7 @@ def _negated(g: _Graph, t: int) -> bool:
     )
 
 
-def extract_sentence(g: _Graph) -> list[tuple[str, str, str, float, int, int]]:
+def extract_sentence(g: SentenceGraph) -> list[tuple[str, str, str, float, int, int]]:
     """All (subj, pred, obj, conf, subj_head, obj_head) triples of one sentence.
 
     Emission policy (matches OpenIEITest golden sets):
@@ -265,23 +205,34 @@ def extract_sentence(g: _Graph) -> list[tuple[str, str, str, float, int, int]]:
       ("is 44th President of" / "is President of").
     """
     out: list[tuple[str, str, str, float, int, int]] = []
+    pol = None
+
+    def polarity_blocked(v: int) -> bool:
+        """True if ``v`` sits in a non-upward context per its natlog
+        polarity mark (``NaturalLogicAnnotator.java:594`` setPolarity) —
+        extraction is only sound under upward monotonicity. The marks are
+        computed once per sentence, on first use."""
+        nonlocal pol
+        if pol is None:
+            pol = compute_polarity(g)
+        return pol[v - g.off] != "up"
 
     def obj_variants(head: int) -> list[tuple[list[int], float]]:
-        full = g.np_tokens(head)
-        vs = [(np, 1.0) for np in g.np_variants(head)]
+        full = np_tokens(g, head)
+        vs = [(np, 1.0) for np in np_variants(g, head)]
         for d, r in g.kids(head):
             if r.startswith("nmod:") and r != "nmod:poss":
                 case_tok = g.first(d, "case")
-                ext = sorted(set(full) | set(g.np_tokens(d)) | ({case_tok} if case_tok is not None else set()))
+                ext = sorted(set(full) | set(np_tokens(g, d)) | ({case_tok} if case_tok is not None else set()))
                 vs.append((ext, 1.0))
             elif r == "appos":
                 # "Honolulu, Hawaii" → the appositive is an alternate object
-                vs.append((g.np_tokens(d), 1.0))
+                vs.append((np_tokens(g, d), 1.0))
         return vs
 
     def emit(s_head: int, pred: str, o_head: int, conf: float, variants=True):
-        s_full = g.np_tokens(s_head)
-        s_drop = g.np_tokens(s_head, drop_amod=True)
+        s_full = np_tokens(g, s_head)
+        s_drop = np_tokens(g, s_head, drop_amod=True)
         # subject variants: forward-entailment amod deletion (upward polarity)
         s_glosses = [(g.gloss(s_full), 1.0)]
         if s_drop != s_full:
@@ -291,7 +242,7 @@ def extract_sentence(g: _Graph) -> list[tuple[str, str, str, float, int, int]]:
                 for toks, cmul in obj_variants(o_head):
                     out.append((s_gloss, pred, g.gloss(toks), conf * cmul * smul, s_head, o_head))
         else:
-            out.append((s_glosses[0][0], pred, g.gloss(g.np_tokens(o_head)), conf, s_head, o_head))
+            out.append((s_glosses[0][0], pred, g.gloss(np_tokens(g, o_head)), conf, s_head, o_head))
 
     # subject map + enhanced++ conj subject propagation
     subj_of: dict[int, int] = {}
@@ -376,15 +327,15 @@ def extract_sentence(g: _Graph) -> list[tuple[str, str, str, float, int, int]]:
 
     for v, s in expanded:
         s = resolve_ref(s)
-        if _polarity_blocked(g, v) or _negated(g, v):
+        if polarity_blocked(v) or _negated(g, v):
             continue
         if g.first(v, "expl") is not None:
             continue  # existential handled above
         cop = g.first(v, "cop")
         if cop is not None:
             cop_w = g.word(cop)
-            pred_vars = g.np_variants(v)
-            s_gloss = g.gloss(g.np_tokens(s))
+            pred_vars = np_variants(g, v)
+            s_gloss = g.gloss(np_tokens(g, s))
             for pv in pred_vars:
                 out.append((s_gloss, cop_w if cop_w in ("is", "are") else cop_w,
                             g.gloss(pv), 1.0, s, v))
@@ -394,7 +345,7 @@ def extract_sentence(g: _Graph) -> list[tuple[str, str, str, float, int, int]]:
                     for pv in pred_vars:
                         out.append(
                             (s_gloss, f"{cop_w} {g.gloss(pv)} {case}",
-                             g.gloss(g.np_tokens(d)), 1.0, s, d)
+                             g.gloss(np_tokens(g, d)), 1.0, s, d)
                         )
             continue
         # plain verb patterns
@@ -433,7 +384,7 @@ def extract_sentence(g: _Graph) -> list[tuple[str, str, str, float, int, int]]:
             for d, r in g.kids(v):
                 if r.startswith("nmod:") and r != "nmod:poss":
                     case = r.split(":", 1)[1]
-                    for onp in g.np_variants(o):
+                    for onp in np_variants(g, o):
                         emit(s, f"{pred} {g.gloss(onp)} {case}", d, 1.0)
         for d, r in g.kids(v):
             if r.startswith("nmod:") and r != "nmod:poss":
@@ -455,10 +406,10 @@ def extract_sentence(g: _Graph) -> list[tuple[str, str, str, float, int, int]]:
         for d, r in g.kids(h):
             if r.startswith("nmod:") and r.split(":", 1)[1] not in ("of", "poss"):
                 case = r.split(":", 1)[1]
-                np = g.np_tokens(h)
+                np = np_tokens(g, h)
                 if np and not _negated(g, h) and g.first(h, "cop") is not None:
                     out.append((g.gloss(np), f"is {case}",
-                                g.gloss(g.np_tokens(d)), 1.0, h, d))
+                                g.gloss(np_tokens(g, d)), 1.0, h, d))
 
     # noun pattern (RelationTripleSegmenter NOUN_DEPENDENCY_PATTERNS,
     # `{tag:/N.*/} >/(nmod|obl):(in|with)/ {}`): ANY noun with an in/with
@@ -467,8 +418,8 @@ def extract_sentence(g: _Graph) -> list[tuple[str, str, str, float, int, int]]:
     def _noun_locative(h: int, d: int, case: str):
         if g.pos[d - g.off] == "CD":
             return  # temporal complements ("in 2000") belong to the verb
-        out.append((g.gloss(g.np_tokens(h)), f"is {case}",
-                    g.gloss(g.np_tokens(d)), 1.0, h, d))
+        out.append((g.gloss(np_tokens(g, h)), f"is {case}",
+                    g.gloss(np_tokens(g, d)), 1.0, h, d))
 
     for h in list(g.children):
         if not g.pos[h - g.off].startswith("N"):
@@ -486,28 +437,20 @@ def extract_sentence(g: _Graph) -> list[tuple[str, str, str, float, int, int]]:
         for d, r in g.kids(v2):
             if r in ("nmod:in", "nmod:with"):
                 case_tok = g.first(d, "case")
-                if case_tok is not None and case_tok == max(g.np_tokens(o2)) + 1:
+                if case_tok is not None and case_tok == max(np_tokens(g, o2)) + 1:
                     _noun_locative(o2, d, r.split(":", 1)[1])
 
     # noun pattern (RelationTripleSegmenter): possessive → (possessor; has; rest)
     for h in list(g.children):
         for d, r in g.children[h]:
             if r == "nmod:poss" and g.lemma(d).lower() not in ("his", "her", "its", "their", "my"):
-                rest = sorted(set(g.np_tokens(h)) - set(g.np_tokens(d)) - {
+                rest = sorted(set(np_tokens(g, h)) - set(np_tokens(g, d)) - {
                     k for k, rr in g.kids(d)
                 })
                 rest = [t for t in rest if g.parent.get(t, (None, ""))[1] != "case"]
                 if rest:
-                    out.append((g.gloss(g.np_tokens(d)), "has", g.gloss(rest), 1.0, d, h))
+                    out.append((g.gloss(np_tokens(g, d)), "has", g.gloss(rest), 1.0, d, h))
     return out
-
-
-def edges_by_sent(deps) -> dict[int, list[tuple[int, int, str]]]:
-    """deps column entries → per-sentence (head, dep, rel) edge lists."""
-    by_sent: dict[int, list] = {}
-    for e in deps:
-        by_sent.setdefault(e["sent_idx"], []).append((e["head"], e["dep"], e["rel"]))
-    return by_sent
 
 
 def openie_docs(df: DataFrame) -> DataFrame:
@@ -546,20 +489,12 @@ def natlog_docs(df: DataFrame) -> DataFrame:
             rows = {k: [] for k in ("doc_id", "sent_idx", "tok_idx", "word", "polarity")}
             ann = _annotate_batch(list(pdf["spans"]), upto="depparse")
             for doc_id, (tokens, sentences, deps, _) in zip(pdf["doc_id"], ann):
-                by_sent = edges_by_sent(deps)
-                for s in sentences:
-                    a, b = s["start_tok"], s["end_tok"]
-                    seg = tokens[a:b]
-                    g = _Graph([t["word"] for t in seg],
-                               [t["lemma"] for t in seg],
-                               by_sent.get(s["sent_idx"], []), a,
-                               [t["pos"] for t in seg])
-                    pol = compute_polarity(g)
-                    for i, (t, p) in enumerate(zip(seg, pol)):
+                for s, g in sentence_graphs(tokens, sentences, deps):
+                    for i, p in enumerate(compute_polarity(g)):
                         rows["doc_id"].append(doc_id)
                         rows["sent_idx"].append(s["sent_idx"])
-                        rows["tok_idx"].append(a + i)
-                        rows["word"].append(t["word"])
+                        rows["tok_idx"].append(g.off + i)
+                        rows["word"].append(g.words[i])
                         rows["polarity"].append(p)
             yield pd.DataFrame(rows)
 

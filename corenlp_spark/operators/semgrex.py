@@ -25,14 +25,17 @@ reference's own SemgrexTest golds (scripts/audit_semgrex.py). Grammar:
   =name                     named node captures
 
 Patterns compile on the driver; matching runs per sentence over the same
-edge-list graphs OpenIE uses (tiny per-sentence graphs ⇒ Python match is
-the right altitude, SURVEY.md §2.3).
+``depparse.SentenceGraph`` views OpenIE uses (tiny per-sentence graphs ⇒
+Python match is the right altitude, SURVEY.md §2.3); node attributes are
+read from the graph's raw token dicts.
 """
 
 from __future__ import annotations
 
 import re
 from dataclasses import dataclass, field
+
+from corenlp_spark.operators.depparse import SentenceGraph
 
 _NODE = re.compile(r"(!?)\{([^}]*)\}(?:=(\w+))?")
 _REL = re.compile(
@@ -188,66 +191,6 @@ def compile_semgrex(pattern: str) -> SemgrexPattern:
     if pattern[pos:].strip():
         raise ValueError(f"trailing input at {pattern[pos:]!r}")
     return pat
-
-
-class SentenceGraph:
-    """Adjacency view over one sentence's edge list (local token dicts)."""
-
-    def __init__(self, toks: list[dict], edges: list[tuple[int, int, str]], offset: int = 0):
-        self.toks = toks
-        self.off = offset
-        self.children: dict[int, list[tuple[int, str]]] = {}
-        self.parents: dict[int, list[tuple[int, str]]] = {}
-        self.root = -1
-        for h, d, r in edges:
-            if h == -1:
-                self.root = d
-            else:
-                self.children.setdefault(h, []).append((d, r))
-                self.parents.setdefault(d, []).append((h, r))
-
-    def tok(self, i: int) -> dict:
-        return self.toks[i - self.off]
-
-    def descendants(self, i: int):
-        stack = [i]
-        seen = set()
-        while stack:
-            t = stack.pop()
-            for d, _ in self.children.get(t, ()):
-                if d not in seen:
-                    seen.add(d)
-                    yield d
-                    stack.append(d)
-
-    def ancestors(self, i: int):
-        stack = [i]
-        seen = set()
-        while stack:
-            t = stack.pop()
-            for h, _ in self.parents.get(t, ()):
-                if h not in seen:
-                    seen.add(h)
-                    yield h
-                    stack.append(h)
-
-    def reachable_in(self, i: int, lo: int, hi: int, down: bool):
-        """Nodes with SOME path of length in [lo, hi] from i (downward or
-        upward) — LIMITED_GRANDKID/GRANDPARENT semantics."""
-        adj = self.children if down else self.parents
-        frontier = {i}
-        hits: set[int] = set()
-        for depth in range(1, hi + 1):
-            nxt: set[int] = set()
-            for t in frontier:
-                for o, _ in adj.get(t, ()):
-                    nxt.add(o)
-            if depth >= lo:
-                hits |= nxt
-            frontier = nxt
-            if not frontier:
-                break
-        return hits
 
 
 def _rel_match(r: str, rel: str) -> bool:

@@ -111,7 +111,8 @@ def sentiment_docs(df: DataFrame) -> DataFrame:
     Computes natlog polarity marks per sentence when a deps column is
     available in the annotation (the fused kernel recomputes them cheaply);
     without deps the lexicon negation-window fallback applies."""
-    from corenlp_spark.operators.openie import _Graph, compute_polarity, edges_by_sent
+    from corenlp_spark.operators.depparse import sentence_graphs
+    from corenlp_spark.operators.openie import compute_polarity
     from corenlp_spark.plans.fused import _annotate_batch
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -119,18 +120,9 @@ def sentiment_docs(df: DataFrame) -> DataFrame:
             rows = {k: [] for k in ("doc_id", "sent_idx", "sentiment", "score")}
             ann = _annotate_batch(list(pdf["spans"]), upto="depparse")
             for doc_id, (tokens, sentences, deps, _) in zip(pdf["doc_id"], ann):
-                by_sent = edges_by_sent(deps)
-                for s in sentences:
-                    a, b = s["start_tok"], s["end_tok"]
-                    seg = tokens[a:b]
-                    words = [t["word"] for t in seg]
-                    pol = None
-                    edges = by_sent.get(s["sent_idx"])
-                    if edges:
-                        g = _Graph(words, [t["lemma"] for t in seg],
-                                   edges, a, [t["pos"] for t in seg])
-                        pol = compute_polarity(g)
-                    sc = round(score_sentence(words, pol), 6)
+                for s, g in sentence_graphs(tokens, sentences, deps):
+                    pol = compute_polarity(g) if g.edges else None
+                    sc = round(score_sentence(g.words, pol), 6)
                     rows["doc_id"].append(doc_id)
                     rows["sent_idx"].append(s["sent_idx"])
                     rows["sentiment"].append(label_of(sc))

@@ -30,8 +30,8 @@ import shlex
 import xml.etree.ElementTree as ET
 from dataclasses import dataclass, field
 
-from corenlp_spark.operators.semgrex import (SentenceGraph, _match_at,
-                                             compile_semgrex)
+from corenlp_spark.operators.depparse import SentenceGraph
+from corenlp_spark.operators.semgrex import _match_at, compile_semgrex
 
 __all__ = ["SsGraph", "Ssurgeon", "SsurgeonPattern"]
 

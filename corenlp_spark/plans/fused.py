@@ -22,11 +22,9 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from corenlp_spark.operators.coref import COREF_TYPE, detect_mentions, run_sieves
-from corenlp_spark.operators.depparse import DEPS_TYPE
+from corenlp_spark.operators.depparse import DEPS_TYPE, sentence_graphs
 from corenlp_spark.operators.ner import NER_TOKENS_TYPE, tag_ner_batch
-from corenlp_spark.operators.openie import (
-    TRIPLE_COLUMNS, TRIPLES_SCHEMA, _Graph, edges_by_sent, extract_sentence,
-)
+from corenlp_spark.operators.openie import TRIPLE_COLUMNS, TRIPLES_SCHEMA, extract_sentence
 from corenlp_spark.operators.tag import TAGGED_TOKENS_TYPE, lemmatize, pos_tag_batch
 from corenlp_spark.operators.tokenize import SENTENCES_TYPE, TOKENS_TYPE, annotate_doc
 
@@ -185,16 +183,10 @@ def doc_triples(tokens, sentences, deps, rep_of: dict[int, str] | None = None
     subj_head, obj_head): ``extract_sentence`` per parsed sentence, subjects
     rewritten through ``rep_of`` (see ``pronoun_reps``), and the most
     confident triple per caseless (subj, pred, obj) within a sentence."""
-    by_sent = edges_by_sent(deps)
     out = []
-    for s in sentences:
-        edges = by_sent.get(s["sent_idx"])
-        if not edges:
+    for s, g in sentence_graphs(tokens, sentences, deps):
+        if not g.edges:
             continue
-        a, b = s["start_tok"], s["end_tok"]
-        seg = tokens[a:b]
-        g = _Graph([t["word"] for t in seg], [t["lemma"] for t in seg], edges, a,
-                   [t["pos"] for t in seg])
         best: dict[tuple, tuple] = {}
         for subj, pred, obj, conf, sh, oh in extract_sentence(g):
             if rep_of:

@@ -31,6 +31,8 @@ from typing import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from corenlp_spark.operators.depparse import SentenceGraph, sentence_graphs
+
 
 # -- wire primitives --------------------------------------------------------
 
@@ -93,55 +95,43 @@ def encode_token(t: dict, polarity: str | None = None) -> bytes:
     return b"".join(out)
 
 
-def encode_sentence(sent: dict, tokens: list[dict],
-                    edges: list[tuple[int, int, str]]) -> bytes:
-    """edges: (head, dep, rel) with SENTENCE-LOCAL 0-based indices,
-    head -1 = root (converted to proto's 1-based indices + root list).
-    When edges exist, each token also carries its natlog polarity mark
-    (proto field 39 polarity_dir — the reference's Polarity annotation)."""
-    sidx = int(sent["sent_idx"])
-    pol = None
-    if edges:
-        from corenlp_spark.operators.openie import _Graph, compute_polarity
+def encode_sentence(sent: dict, g: SentenceGraph) -> bytes:
+    """One sentence from its graph view (doc-level indices, converted to
+    proto's SENTENCE-LOCAL 1-based indices + root list). When edges exist,
+    each token also carries its natlog polarity mark (proto field 39
+    polarity_dir — the reference's Polarity annotation)."""
+    from corenlp_spark.operators.openie import compute_polarity
 
-        g = _Graph([t["word"] for t in tokens],
-                   [t.get("lemma") or t["word"] for t in tokens],
-                   edges, 0, [t.get("pos") or "" for t in tokens])
-        pol = compute_polarity(g)
+    sidx = int(sent["sent_idx"])
+    pol = compute_polarity(g) if g.edges else None
     out = [_msg(1, encode_token(t, pol[i] if pol else None))
-           for i, t in enumerate(tokens)]
+           for i, t in enumerate(g.toks)]
     out.append(_u32(2, int(sent["start_tok"])))
     out.append(_u32(3, int(sent["end_tok"])))
     out.append(_u32(4, sidx))
-    if edges:
-        g = []
-        for i in range(len(tokens)):
-            g.append(_msg(1, _u32(1, sidx) + _u32(2, i + 1)))
+    if g.edges:
+        body = []
+        for i in range(len(g.toks)):
+            body.append(_msg(1, _u32(1, sidx) + _u32(2, i + 1)))
         roots = []
-        for h, d, rel in edges:
+        for h, d, rel in g.edges:
             if h < 0:
-                roots.append(d + 1)
+                roots.append(d - g.off + 1)
             else:
-                g.append(_msg(2, _u32(1, h + 1) + _u32(2, d + 1)
-                              + _str(3, rel)))
+                body.append(_msg(2, _u32(1, h - g.off + 1) + _u32(2, d - g.off + 1)
+                                 + _str(3, rel)))
         if roots:
-            g.append(_packed(3, roots))
-        out.append(_msg(8, b"".join(g)))
+            body.append(_packed(3, roots))
+        out.append(_msg(8, b"".join(body)))
     return b"".join(out)
 
 
 def encode_document(doc_id: str, text: str, tokens: list[dict],
                     sentences: list[dict], deps: list[dict] | None = None,
                     doc_date: str | None = None) -> bytes:
-    from corenlp_spark.operators.openie import edges_by_sent
-
-    by_sent = edges_by_sent(deps or [])
     out = [_str(1, text)]
-    for s in sentences:
-        a, b = int(s["start_tok"]), int(s["end_tok"])
-        loc = [(h - a if h >= 0 else -1, d - a, r)
-               for h, d, r in by_sent.get(s["sent_idx"], [])]
-        out.append(_msg(2, encode_sentence(s, tokens[a:b], loc)))
+    for s, g in sentence_graphs(tokens, sentences, deps):
+        out.append(_msg(2, encode_sentence(s, g)))
     out.append(_str(4, doc_id))
     if doc_date:
         out.append(_str(7, doc_date))
@@ -254,10 +244,8 @@ def to_protobuf(annotated: DataFrame) -> DataFrame:
                     s["text"] for s in row["spans"]
                     if s.get("kind") == "text" and s.get("text"))
                 protos.append(encode_document(
-                    row["doc_id"], text, list(row["tokens"]),
-                    list(row["sentences"]),
-                    list(row["deps"]) if has_deps else None,
-                ))
+                    row["doc_id"], text, row["tokens"], row["sentences"],
+                    row["deps"] if has_deps else None))
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "proto": protos})
 
     return annotated.mapInPandas(run, schema="doc_id string, proto binary")

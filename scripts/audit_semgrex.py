@@ -120,8 +120,8 @@ def extract_cases(src: str):
 
 
 def run_case(pattern, graph_spec):
-    from corenlp_spark.operators.semgrex import (SentenceGraph,
-                                                 _match_at, compile_semgrex)
+    from corenlp_spark.operators.depparse import SentenceGraph
+    from corenlp_spark.operators.semgrex import _match_at, compile_semgrex
 
     if graph_spec is None:
         toks, edges, root = complicated_graph()

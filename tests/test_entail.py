@@ -2,10 +2,9 @@
 (itest/.../naturalli/OpenIEITest.java:106-110) plus monotonicity blocking.
 """
 
-from corenlp_spark.operators.depparse import parse_sentence
+from corenlp_spark.operators.depparse import SentenceGraph, parse_sentence
 from corenlp_spark.operators.entail import entailed_docs, forward_entail
 from corenlp_spark.operators.ner import tag_sentence_ner
-from corenlp_spark.operators.openie import _Graph
 from corenlp_spark.operators.tag import lemmatize, pos_tag
 from corenlp_spark.operators.tokenize import tokenize_text
 
@@ -17,7 +16,8 @@ def fragments(sentence: str) -> dict[str, float]:
     lem = [lemmatize(w, p) for w, p in zip(words, pos)]
     ner, _ = tag_sentence_ner(words, pos)
     edges = parse_sentence(words, pos, lem, ner)
-    g = _Graph(words, lem, edges, 0, pos)
+    g = SentenceGraph([{"word": w, "lemma": l, "pos": p}
+                       for w, l, p in zip(words, lem, pos)], edges)
     return {fr.lower(): sc for fr, sc in forward_entail(g)}
 
 
@@ -73,18 +73,19 @@ def test_natlog_operator_lexicon_widening():
     nothing) flip their clause, downward frequency adverbs (rarely/seldom)
     flip the verb scope, 'any' marks its restrictor downward — and
     extraction is blocked under the flipped scopes."""
-    from corenlp_spark.operators.depparse import parse_sentence
+    from corenlp_spark.operators.depparse import SentenceGraph, parse_sentence
     from corenlp_spark.operators.openie import compute_polarity, extract_sentence
     from corenlp_spark.operators.tag import lemmatize, pos_tag
     from corenlp_spark.operators.tokenize import tokenize_text
-    from corenlp_spark.plans.fused import _Graph
 
     def g_of(s):
         toks = tokenize_text(s)
         words = [t[0] for t in toks]
         pos = pos_tag(words, {0})
         lem = [lemmatize(w, p) for w, p in zip(words, pos)]
-        return words, _Graph(words, lem, parse_sentence(words, pos, lem), 0, pos)
+        return words, SentenceGraph(
+            [{"word": w, "lemma": l, "pos": p} for w, l, p in zip(words, lem, pos)],
+            parse_sentence(words, pos, lem))
 
     words, g = g_of("Nobody likes delays.")
     pol = dict(zip(words, compute_polarity(g)))

@@ -324,11 +324,12 @@ def test_enhanced_rewrites_mwe_quantmod_xsubj():
     quantificational modifiers demote so the true nominal heads the
     subject, and xcomp control feeds an external subject (xsubj) into
     OpenIE extraction."""
-    from corenlp_spark.operators.depparse import enhance_edges, parse_sentence
+    from corenlp_spark.operators.depparse import (
+        SentenceGraph, enhance_edges, parse_sentence,
+    )
     from corenlp_spark.operators.openie import extract_sentence
     from corenlp_spark.operators.tag import lemmatize, pos_tag
     from corenlp_spark.operators.tokenize import tokenize_text
-    from corenlp_spark.plans.fused import _Graph
 
     def parsed(s, model=None):
         toks = tokenize_text(s)
@@ -362,7 +363,8 @@ def test_enhanced_rewrites_mwe_quantmod_xsubj():
     # xsubj through OpenIE: subject control and object control
     def triples(s):
         words, pos, lem, e = parsed(s)
-        g = _Graph(words, lem, e, 0, pos)
+        g = SentenceGraph([{"word": w, "lemma": l, "pos": p}
+                           for w, l, p in zip(words, lem, pos)], e)
         return {(a, b, c) for a, b, c, _, _, _ in extract_sentence(g)}
 
     assert ("Obama", "visit", "Paris") in triples("Obama wants to visit Paris.")

@@ -7,9 +7,9 @@ lines cited per case). Gate: micro-averaged P and R ≥ 0.95 over the suite
 ``assertExtracted``) counted as recall-only.
 """
 
-from corenlp_spark.operators.depparse import parse_sentence
+from corenlp_spark.operators.depparse import SentenceGraph, parse_sentence
 from corenlp_spark.operators.ner import tag_sentence_ner
-from corenlp_spark.operators.openie import _Graph, extract_sentence
+from corenlp_spark.operators.openie import extract_sentence
 from corenlp_spark.operators.tag import lemmatize, pos_tag
 from corenlp_spark.operators.tokenize import tokenize_text
 
@@ -21,7 +21,8 @@ def extract(sentence: str) -> set[tuple[str, str, str]]:
     lem = [lemmatize(w, p) for w, p in zip(words, pos)]
     ner, _ = tag_sentence_ner(words, pos)
     edges = parse_sentence(words, pos, lem, ner)
-    g = _Graph(words, lem, edges, 0, pos)
+    g = SentenceGraph([{"word": w, "lemma": l, "pos": p}
+                       for w, l, p in zip(words, lem, pos)], edges)
     return {(s.lower(), p.lower(), o.lower()) for s, p, o, *_ in extract_sentence(g)}
 
 
@@ -182,7 +183,8 @@ def _polarity(sentence: str) -> dict[str, str]:
     lem = [lemmatize(w, p) for w, p in zip(words, pos)]
     ner, _ = tag_sentence_ner(words, pos)
     edges = parse_sentence(words, pos, lem, ner)
-    g = _Graph(words, lem, edges, 0, pos)
+    g = SentenceGraph([{"word": w, "lemma": l, "pos": p}
+                       for w, l, p in zip(words, lem, pos)], edges)
     return dict(zip(words, compute_polarity(g)))
 
 

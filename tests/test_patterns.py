@@ -1,10 +1,8 @@
 """TokensRegex + Semgrex subset tests (SURVEY.md §2.3 coverage)."""
 
-from corenlp_spark.operators.depparse import parse_sentence
+from corenlp_spark.operators.depparse import SentenceGraph, parse_sentence
 from corenlp_spark.operators.ner import tag_sentence_ner
-from corenlp_spark.operators.semgrex import (
-    SentenceGraph, compile_semgrex, match_semgrex,
-)
+from corenlp_spark.operators.semgrex import compile_semgrex, match_semgrex
 from corenlp_spark.operators.tag import lemmatize, pos_tag
 from corenlp_spark.operators.tokenize import tokenize_text
 from corenlp_spark.operators.tokensregex import compile_pattern, find_all

@@ -66,7 +66,7 @@ def test_entail_scores_bounded(vals):
     """Forward-entailment scores are products of (0,1] affinities."""
     from corenlp_spark.operators.depparse import parse_sentence
     from corenlp_spark.operators.entail import forward_entail
-    from corenlp_spark.operators.openie import _Graph
+    from corenlp_spark.operators.depparse import SentenceGraph
 
     # deterministic sentence derived from the float seed (shape variety)
     words = ["The", "quick" if vals[0] > 0 else "small", "group",
@@ -74,6 +74,7 @@ def test_entail_scores_bounded(vals):
     pos = ["DT", "JJ", "NN", "VBD", "RB", "IN", "NNP", "."]
     edges = parse_sentence(words, pos, [w.lower() for w in words],
                            ["O"] * 6 + ["LOCATION", "O"])
-    g = _Graph(words, [w.lower() for w in words], edges, 0, pos)
+    g = SentenceGraph([{"word": w, "lemma": w.lower(), "pos": p}
+                       for w, p in zip(words, pos)], edges)
     for fr, sc in forward_entail(g):
         assert 0.0 < sc <= 1.0 and fr

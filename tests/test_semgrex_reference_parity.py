@@ -24,7 +24,8 @@ import pytest
 
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "scripts"))
 
-from corenlp_spark.operators.semgrex import (SentenceGraph, _match_at,
+from corenlp_spark.operators.depparse import SentenceGraph
+from corenlp_spark.operators.semgrex import (_match_at,
                                              compile_semgrex, match_semgrex)
 
 JAVA = ("/root/reference/test/src/edu/stanford/nlp/semgraph/semgrex/"
