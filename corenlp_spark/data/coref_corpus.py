@@ -86,24 +86,10 @@ TRAIN_DOCS: list[tuple[str, list[set]]] = [
 
 
 def annotate_text(text: str):
-    """tokenize → pos → lemma → ner over one raw text (driver-side, the
-    same stack coref sees in-pipeline); returns (tokens, sentences)."""
-    from corenlp_spark.operators.ner import tag_sentence_ner
-    from corenlp_spark.operators.tag import lemmatize, pos_tag
-    from corenlp_spark.operators.tokenize import annotate_doc
+    """The fused kernel's tokenize → pos → lemma → ner over one raw text
+    (driver-side, the same stack coref sees in-pipeline); returns
+    (tokens, sentences)."""
+    from corenlp_spark.plans.fused import _annotate_batch
 
     spans = [{"kind": "text", "text": text, "media_ref": None, "offset": 0}]
-    tokens, sentences = annotate_doc(spans)
-    words = [t["word"] for t in tokens]
-    tags = pos_tag(words, {s["start_tok"] for s in sentences})
-    for t, tag in zip(tokens, tags):
-        t["pos"] = tag
-        t["lemma"] = lemmatize(t["word"], tag)
-    for s in sentences:
-        a, b = s["start_tok"], s["end_tok"]
-        seg = tokens[a:b]
-        ner, _ = tag_sentence_ner([t["word"] for t in seg],
-                                  [t["pos"] for t in seg])
-        for t, x in zip(seg, ner):
-            t["ner"] = x
-    return tokens, sentences
+    return _annotate_batch([spans], upto="ner")[0][:2]

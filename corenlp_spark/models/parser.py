@@ -161,7 +161,7 @@ class ArcStandardParser:
     def __init__(self):
         self.weights: dict[str, dict[str, float]] = {}
         self.actions: list[str] = []
-        self._avec = None  # feature → np.ndarray(len(actions)), lazy
+        self._W = None  # decode state, built by _ensure_batch_matrices
 
     def _score(self, feats):
         sc: dict[str, float] = defaultdict(float)
@@ -172,46 +172,16 @@ class ArcStandardParser:
                     sc[a] += wt
         return sc
 
-    def _ensure_action_vectors(self):
-        """Inference-time vectorization (training keeps the mutable dict
-        path): one weight vector per feature over the action axis, actions
-        sorted DESCENDING so np.argmax's first-max rule reproduces the dict
-        path's (score, action-string) max tie-break exactly. Per-action
-        float adds happen in the same feats order as the dict path, so the
-        sums are bitwise identical."""
-        if self._avec is not None:
-            return
-        import numpy as np
-
-        acts = sorted(self.actions, reverse=True)
-        self._acts_desc = acts
-        aidx = {a: i for i, a in enumerate(acts)}
-        A = len(acts)
-        vec = {}
-        for f, by in self.weights.items():
-            arr = np.zeros(A)
-            for a, wt in by.items():
-                i = aidx.get(a)
-                if i is not None:
-                    arr[i] += wt
-            vec[f] = arr
-        self._avec = vec
-        self._zero = np.zeros(A)
-        # additive legality masks: 0 where legal, -inf where not — one add
-        # replaces a boolean where() per step
-        arc = np.array([a[0] in ("L", "R") and a != "S|" for a in acts])
-        shift = np.array([a == "S|" for a in acts])
-        ninf = np.float64("-inf")
-        self._pen_arc_only = np.where(arc, 0.0, ninf)
-        self._pen_all = np.where(arc | shift, 0.0, ninf)
-
     def _ensure_batch_matrices(self):
         """Batched-decode precompute (SURVEY §2.2 depparse row: step all
         non-finished configurations per iteration): one dense (F+1, A)
-        weight matrix whose rows are exactly the per-feature action vectors
-        of ``_ensure_action_vectors`` plus a zero row for unknown features —
-        adding a zero row is bitwise-identical to skipping a missing
-        feature, so parse_batch reproduces parse() exactly.
+        weight matrix over features × actions plus a zero row for unknown
+        features — adding a zero row is bitwise-identical to skipping a
+        missing feature. Actions are sorted DESCENDING so np.argmax's
+        first-max rule reproduces the training-time dict scorer's
+        (score, action-string) max tie-break. Every piece of decode state
+        is derived here; ``train`` clears ``_W`` so the next decode
+        rebuilds it.
 
         Also builds the feature-resolution caches — the analog of the
         reference's precomputed hidden-layer products for frequent features
@@ -219,19 +189,30 @@ class ArcStandardParser:
         are only ever constructed once per distinct value; afterwards the
         row id is recovered from int-keyed memo dicts (POS/label ids) or
         per-sentence per-token arrays, never by rebuilding the string."""
-        if getattr(self, "_W", None) is not None:
+        if self._W is not None:
             return
         import numpy as np
 
-        self._ensure_action_vectors()
-        A = len(self._acts_desc)
-        feats = sorted(self._avec)
+        acts = sorted(self.actions, reverse=True)
+        self._acts_desc = acts
+        aidx = {a: i for i, a in enumerate(acts)}
+        feats = sorted(self.weights)
         self._fid = {f: i for i, f in enumerate(feats)}
-        W = np.zeros((len(feats) + 1, A))
+        W = np.zeros((len(feats) + 1, len(acts)))
         for f, i in self._fid.items():
-            W[i] = self._avec[f]
+            for a, wt in self.weights[f].items():
+                j = aidx.get(a)
+                if j is not None:
+                    W[i, j] += wt
         self._W = W
         self._zrow = len(feats)
+        # additive legality masks: 0 where legal, -inf where not — one add
+        # replaces a boolean where() per step
+        arc = np.array([a[0] in ("L", "R") and a != "S|" for a in acts])
+        shift = np.array([a == "S|" for a in acts])
+        ninf = np.float64("-inf")
+        self._pen_arc_only = np.where(arc, 0.0, ninf)
+        self._pen_all = np.where(arc | shift, 0.0, ninf)
         # lazy id registries (bounded domains: POS tags, dependency labels)
         self._pid: dict[str, int] = {}
         self._pstr: list[str] = []        # pid → pos string
@@ -252,6 +233,7 @@ class ArcStandardParser:
         self._tokrow_cache: dict[tuple[str, str], tuple] = {}
         self._tokrow_cap = 500_000
         self._bias_row = self._fid.get("bias", self._zrow)
+        self._null_tokrow = None  # filled by _tok_rows
 
     def _pos_id(self, p: str) -> int:
         i = self._pid.get(p)
@@ -309,7 +291,7 @@ class ArcStandardParser:
                 if under_cap:
                     cache[key] = rows
             out.append(rows)
-        nul = getattr(self, "_null_tokrow", None)
+        nul = self._null_tokrow
         if nul is None:
             nul = self._null_tokrow = (
                 fget("s1w=<null>", z), fget("s1p=<null>", z),
@@ -458,10 +440,11 @@ class ArcStandardParser:
         numpy arrays indexed by per-sentence base offsets, and the dynamic
         pos/label/valence templates resolve through dense lazy-filled
         tables; only the three word-pair memos and the transition
-        application remain per-configuration Python. Per-configuration
-        results are identical to the one-sentence loop: feature order,
-        float-add order (39 sequential adds, bias last), penalty adds and
-        first-max tie-break are preserved exactly."""
+        application remain per-configuration Python. This is the parser's
+        only inference decoder; a configuration's result does not depend on
+        the other sentences of the batch (feature order, float-add order —
+        39 sequential adds, bias last — penalty adds and first-max
+        tie-break are fixed per configuration)."""
         import numpy as np
 
         self._ensure_batch_matrices()
@@ -869,6 +852,7 @@ class ArcStandardParser:
                 key = (f, a)
                 totals[key] += (step - stamps[key]) * by[a]
                 by[a] = totals[key] / max(step, 1)
+        self._W = None
 
     def to_broadcastable(self):
         return {"weights": {f: dict(t) for f, t in self.weights.items()},

@@ -85,15 +85,15 @@ def _pos_features(words: list[str], i: int, prev_tag: str,
 class AveragedPerceptronTagger:
     """Greedy left-to-right averaged perceptron POS tagger.
 
-    Inference vectorizes per-feature label scores into numpy arrays (built
-    lazily once per process) — the same precompute trick the reference plays
+    Inference scores through one dense feature × tag matrix (built lazily
+    once per process) — the same precompute trick the reference plays
     for frequent-feature hidden products (``parser/nndep/Classifier.java``
     preComputed / ``DependencyParser.java:109,313``)."""
 
     def __init__(self):
         self.weights: dict[str, dict[str, float]] = {}
         self.tags: list[str] = []
-        self._wvec = None  # feature → np.ndarray(len(tags))
+        self._W = None  # decode state, built by _ensure_matrix
 
     def _score(self, feats: list[str]) -> dict[str, float]:
         scores: dict[str, float] = defaultdict(float)
@@ -102,21 +102,6 @@ class AveragedPerceptronTagger:
                 scores[tag] += w
         return scores
 
-    def _ensure_vectors(self):
-        import numpy as np
-
-        if self._wvec is not None:
-            return
-        idx = {t: i for i, t in enumerate(self.tags)}
-        vec = {}
-        for f, by in self.weights.items():
-            a = np.zeros(len(self.tags))
-            for tag, w in by.items():
-                if tag in idx:
-                    a[idx[tag]] = w
-            vec[f] = a
-        self._wvec = vec
-
     # open classes: the only tags an UNKNOWN word may receive — the tag-
     # dictionary discipline of TestSentence.java:335-341 (closed-class tags
     # like RP/MD/DT/IN can only come from known vocabulary)
@@ -124,90 +109,36 @@ class AveragedPerceptronTagger:
                  "VBP", "VBZ", "JJ", "JJR", "JJS", "RB", "RBR", "RBS",
                  "CD", "FW", "UH"}
 
-    def _ensure_open_mask(self):
-        import numpy as np
-
-        if getattr(self, "_open_mask", None) is None:
-            self._open_mask = np.array(
-                [t in self.OPEN_TAGS for t in self.tags])
-
-    def _argmax_tag(self, feats: list[str], open_only: bool = False):
-        """Vectorized score + argmax; ties break to the LARGEST tag (same
-        as max(tags, key=(score, tag)) in the dict path)."""
-        import numpy as np
-
-        acc = None
-        vec = self._wvec
-        for f in feats:
-            a = vec.get(f)
-            if a is not None:
-                acc = a.copy() if acc is None else acc + a
-        if acc is None:
-            return "NN" if "NN" in self.tags else (self.tags[-1] if self.tags else "NN")
-        if open_only:
-            self._ensure_open_mask()
-            if self._open_mask.any():
-                acc = np.where(self._open_mask, acc, -np.inf)
-        best = len(acc) - 1 - int(np.argmax(acc[::-1]))
-        return self.tags[best]
-
-    def _known(self, lw: str) -> bool:
-        return f"w={lw}" in self.weights
-
     def predict(self, words: list[str]) -> list[str]:
-        self._ensure_vectors()
-        out: list[str] = []
-        prev = prev2 = "<s>"
-        for i in range(len(words)):
-            tag = self._argmax_tag(
-                _pos_features(words, i, prev, prev2),
-                open_only=not self._known(words[i].lower()))
-            out.append(tag)
-            prev2, prev = prev, tag
-        return out
-
-    def predict_with_constraints(self, words: list[str], fixed: dict[int, str],
-                                 sent_starts: set[int] | None = None) -> list[str]:
-        """Greedy decode honoring hard per-position constraints (punct tags,
-        CD for numbers, closed-class dictionary) — the analog of the tag
-        dictionary restricting MaxentTagger's search space
-        (``tagger/maxent/TestSentence.java:335-341``). ``sent_starts`` resets
-        the left-context across sentence boundaries."""
-        self._ensure_vectors()
-        out: list[str] = []
-        prev = prev2 = "<s>"
-        starts = sent_starts or set()
-        for i in range(len(words)):
-            if i in starts:
-                prev = prev2 = "<s>"
-            tag = fixed.get(i)
-            if tag is None:
-                tag = self._argmax_tag(
-                    _pos_features(words, i, prev, prev2),
-                    open_only=not self._known(words[i].lower()))
-            out.append(tag)
-            prev2, prev = prev, tag
-        return out
+        return self.predict_with_constraints_batch([(words, {}, None)])[0]
 
     # -- batched decode ----------------------------------------------------
     def _ensure_matrix(self):
         """Dense (F+1, T) weight matrix + feature→row dict for the batched
         decode; row F is all-zero (unknown feature ≡ skip, bitwise). Same
-        precompute discipline as the parser (_ensure_batch_matrices)."""
-        if getattr(self, "_W", None) is not None:
+        precompute discipline as the parser (_ensure_batch_matrices).
+        Every piece of decode state is derived here from ``weights`` and
+        ``tags``; ``train`` clears ``_W`` so the next decode rebuilds it."""
+        if self._W is not None:
             return
         import numpy as np
 
-        self._ensure_vectors()
-        self._ensure_open_mask()
-        feats = sorted(self._wvec)
+        self._open_mask = np.array([t in self.OPEN_TAGS for t in self.tags])
+        idx = {t: i for i, t in enumerate(self.tags)}
+        feats = sorted(self.weights)
         self._fid = {f: i for i, f in enumerate(feats)}
         W = np.zeros((len(feats) + 1, len(self.tags)))
         for f, i in self._fid.items():
-            W[i] = self._wvec[f]
+            for tag, w in self.weights[f].items():
+                j = idx.get(tag)
+                if j is not None:
+                    W[i, j] = w
         self._W = W
         self._zrow = len(feats)
-        self._tid = {t: i for i, t in enumerate(self.tags)}
+        # a row whose features are all unknown has no score to argmax
+        self._nn_fallback = ("NN" if "NN" in self.tags
+                             else (self.tags[-1] if self.tags else "NN"))
+        self._tid = dict(idx)
         self._tid.setdefault("<s>", len(self._tid))
         self._tstr = [None] * len(self._tid)
         for t, i in self._tid.items():
@@ -216,6 +147,7 @@ class AveragedPerceptronTagger:
         # the registry only holds the tagset — so pt2*4096+pt is collision-
         # free).
         self._pmemo5: list[dict] = [dict() for _ in range(5)]
+        self._wordmemo = None  # per-word rows, filled by _pos_static
 
     def _tag_id(self, t: str) -> int:
         """Growable tag registry — fixed (constraint) tags may lie outside
@@ -227,8 +159,6 @@ class AveragedPerceptronTagger:
             self._tid[t] = i
             self._tstr.append(t)
         return i
-        self._nn_fallback = ("NN" if "NN" in self.tags
-                             else (self.tags[-1] if self.tags else "NN"))
 
     def _pos_static(self, words):
         """Per-token template rows with the 5 prev-tag-dependent slots left
@@ -243,7 +173,7 @@ class AveragedPerceptronTagger:
         memo discipline as the dynamic-template _pmemo5)."""
         fget = self._fid.get
         z = self._zrow
-        wmemo = getattr(self, "_wordmemo", None)
+        wmemo = self._wordmemo
         if wmemo is None:
             wmemo = self._wordmemo = {}
             self._sh2memo = {}
@@ -305,11 +235,17 @@ class AveragedPerceptronTagger:
     def predict_with_constraints_batch(
             self, docs: list[tuple[list[str], dict[int, str], set[int]]]
     ) -> list[list[str]]:
-        """Batched greedy decode of many documents: all documents advance
-        one token position per iteration, scored with ONE numpy gather-sum
-        (same cross-row batching as the parser's parse_batch). Per-document
-        results equal predict_with_constraints exactly — template order,
-        float-add order and the largest-tag tie-break are preserved."""
+        """Greedy decode of many documents, the tagger's only inference
+        decoder: all documents advance one token position per iteration,
+        scored with ONE numpy gather-sum (same cross-row batching as the
+        parser's parse_batch). Each doc is ``(words, fixed, sent_starts)``:
+        ``fixed`` pins per-position tags (punct tags, CD for numbers, the
+        closed-class dictionary) — the analog of the tag dictionary
+        restricting MaxentTagger's search space
+        (``tagger/maxent/TestSentence.java:335-341``); ``sent_starts``
+        resets the left context across sentence boundaries. A document's
+        result does not depend on the other documents of the batch; ties
+        break to the largest tag, as in the training-time scorer."""
         import numpy as np
 
         self._ensure_matrix()
@@ -455,7 +391,7 @@ class AveragedPerceptronTagger:
                 key = (f, tag)
                 totals[key] += (step - stamps[key]) * by_tag[tag]
                 by_tag[tag] = totals[key] / max(step, 1)
-        self._wvec = None
+        self._W = None
 
     def to_broadcastable(self) -> dict:
         """Plain-dict snapshot for SparkContext.broadcast."""
@@ -565,7 +501,7 @@ def _ner_sent_features(words: list[str], pos: list[str]) -> list[list[str]]:
 class StructuredPerceptronNER:
     """Linear-chain structured perceptron over BIO labels.
 
-    decode() is exact Viterbi (same DP as ``ExactBestSequenceFinder``);
+    decode_batch() is exact Viterbi (same DP as ``ExactBestSequenceFinder``);
     training updates emission features and transition weights where the
     Viterbi path diverges from gold. Averaging for stability."""
 
@@ -574,77 +510,10 @@ class StructuredPerceptronNER:
         self.trans: dict[str, float] = {}  # "A>B" → weight
         self.labels = list(NER_LABELS)
         self._L = {lab: i for i, lab in enumerate(self.labels)}
-        self._wvec = None  # feature → np.ndarray(k), built lazily
-        self._T = None     # cached k×k transition matrix (np)
-
-    def _invalidate(self):
-        self._wvec = None
-        self._T = None
-
-    def _ensure_vectors(self):
-        import numpy as np
-
-        if self._wvec is not None:
-            return
-        k = len(self.labels)
-        vec = {}
-        for f, by in self.weights.items():
-            a = np.zeros(k)
-            for lab, wt in by.items():
-                a[self._L[lab]] += wt
-            vec[f] = a
-        self._wvec = vec
-        T = np.zeros((k, k))
-        for i, a in enumerate(self.labels):
-            for j, b in enumerate(self.labels):
-                if b.startswith("I-") and a not in (f"B-{b[2:]}", f"I-{b[2:]}"):
-                    T[i, j] = _NEG  # BIO structural constraint
-                else:
-                    T[i, j] = self.trans.get(f"{a}>{b}", 0.0)
-        self._T = T
-
-    # -- scoring -----------------------------------------------------------
-    def _emissions(self, feats_per_tok: list[list[str]]):
-        import numpy as np
-
-        self._ensure_vectors()
-        k = len(self.labels)
-        em = np.zeros((len(feats_per_tok), k))
-        vec = self._wvec
-        for i, feats in enumerate(feats_per_tok):
-            row = em[i]
-            for f in feats:
-                a = vec.get(f)
-                if a is not None:
-                    row += a
-        return em
-
-    def _trans_matrix(self):
-        self._ensure_vectors()
-        return self._T
-
-    def _viterbi(self, em, trans) -> list[int]:
-        """Vectorized linear-chain Viterbi (numpy over the label axis; same
-        DP as ``sequences/ExactBestSequenceFinder.java:37-110``)."""
-        import numpy as np
-
-        n, k = em.shape
-        dp = em[0].copy()
-        for j in range(k):
-            if self.labels[j].startswith("I-"):
-                dp[j] += _NEG
-        back = np.zeros((n, k), dtype=np.int32)
-        for t in range(1, n):
-            scores = dp[:, None] + trans
-            back[t] = np.argmax(scores, axis=0)
-            dp = scores[back[t], np.arange(k)] + em[t]
-        path = [int(np.argmax(dp))]
-        for t in range(n - 1, 0, -1):
-            path.append(int(back[t, path[-1]]))
-        return path[::-1]
+        self._Wm = None  # decode state, built by _ensure_matrix
 
     # dict-path twins used DURING TRAINING (weights mutate every update, so
-    # the cached numpy vectors cannot be used there)
+    # the cached numpy matrices cannot be used there)
     def _emissions_train(self, feats_per_tok: list[list[str]]) -> list[list[float]]:
         k = len(self.labels)
         out = []
@@ -699,33 +568,37 @@ class StructuredPerceptronNER:
                force_o: set[int] | None = None) -> list[str]:
         """BIO labels for one sentence; ``force_o`` positions are pinned to O
         (punct/number/calendar tokens owned by the numeric/temporal pass)."""
-        if not words:
-            return []
-        feats = _ner_sent_features(words, pos)
-        em = self._emissions(feats)
-        if force_o:
-            for i in force_o:
-                em[i, 1:] += _NEG
-        path = self._viterbi(em, self._trans_matrix())
-        return [self.labels[i] for i in path]
+        return self.decode_batch([(words, pos, force_o)])[0]
 
     # -- batched decode ----------------------------------------------------
     def _ensure_matrix(self):
         """Dense (F+1, k) emission weight matrix (zero row F = unknown
-        feature) for batched emission scoring — same discipline as the
-        parser/POS batch matrices."""
-        if getattr(self, "_Wm", None) is not None:
+        feature) for batched emission scoring, plus the k×k transition
+        matrix with the BIO structural constraint — same discipline as the
+        parser/POS batch matrices. Every piece of decode state is derived
+        here; ``train`` clears ``_Wm`` so the next decode rebuilds it."""
+        if self._Wm is not None:
             return
         import numpy as np
 
-        self._ensure_vectors()
-        feats = sorted(self._wvec)
+        k = len(self.labels)
+        feats = sorted(self.weights)
         self._fid = {f: i for i, f in enumerate(feats)}
-        W = np.zeros((len(feats) + 1, len(self.labels)))
+        W = np.zeros((len(feats) + 1, k))
         for f, i in self._fid.items():
-            W[i] = self._wvec[f]
+            for lab, wt in self.weights[f].items():
+                W[i, self._L[lab]] += wt
         self._Wm = W
         self._zrow = len(feats)
+        T = np.zeros((k, k))
+        for i, a in enumerate(self.labels):
+            for j, b in enumerate(self.labels):
+                if b.startswith("I-") and a not in (f"B-{b[2:]}", f"I-{b[2:]}"):
+                    T[i, j] = _NEG  # BIO structural constraint
+                else:
+                    T[i, j] = self.trans.get(f"{a}>{b}", 0.0)
+        self._T = T
+        self._idmemo = None  # value-keyed id memos, filled by _ner_row_ids
 
     def _ner_row_ids(self, words: list[str], pos: list[str]
                      ) -> list[list[int]]:
@@ -737,7 +610,7 @@ class StructuredPerceptronNER:
         the POS _pos_static word memo)."""
         fget = self._fid.get
         z = self._zrow
-        m = getattr(self, "_idmemo", None)
+        m = self._idmemo
         if m is None:
             consts = {c: fget(c, z) for c in
                       ("bias", "first", "abbr", "orgsuf", "orgsuf+1",
@@ -813,18 +686,19 @@ class StructuredPerceptronNER:
     def decode_batch(self, sents: list[tuple[list[str], list[str],
                                              set[int] | None]]
                      ) -> list[list[str]]:
-        """Batched Viterbi over many sentences: emissions for ALL tokens of
-        the batch in one numpy gather-sum, then a single padded DP advancing
-        every sentence one position per iteration (finished rows frozen).
-        Per-sentence results equal decode() exactly — add order, the BIO
-        structural mask, and first-max argmax are preserved."""
+        """Viterbi over many sentences, the model's only inference decoder
+        (vectorized over the label axis and across sentences; same DP as
+        ``sequences/ExactBestSequenceFinder.java:37-110``): emissions for
+        ALL tokens of the batch in one numpy gather-sum, then a single
+        padded DP advancing every sentence one position per iteration
+        (finished rows frozen). A sentence's labels do not depend on the
+        other sentences of the batch."""
         import numpy as np
 
         self._ensure_matrix()
         W, k = self._Wm, len(self.labels)
         z = self._zrow
-        fget = self._fid.get
-        T = self._trans_matrix()
+        T = self._T
         out: list[list[str] | None] = [[] if not s[0] else None for s in sents]
         live = [(i, words, pos, force_o)
                 for i, (words, pos, force_o) in enumerate(sents) if words]
@@ -927,7 +801,7 @@ class StructuredPerceptronNER:
         for key in list(self.trans):
             t_totals[key] += (step - t_stamps[key]) * self.trans[key]
             self.trans[key] = t_totals[key] / max(step, 1)
-        self._invalidate()
+        self._Wm = None
 
     def to_broadcastable(self) -> dict:
         return {"weights": {f: dict(t) for f, t in self.weights.items()},
@@ -1206,14 +1080,12 @@ def tag_with_model(df, blob: dict):
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         model = AveragedPerceptronTagger.from_broadcastable(b.value)
         for pdf in batches:
-            new_tokens = []
-            for toks in pdf["tokens"]:
-                toks = [dict(t) for t in toks]
-                words = [t["word"] for t in toks]
-                preds = model.predict(words)
-                for t, p in zip(toks, preds):
+            new_tokens = [[dict(t) for t in toks] for toks in pdf["tokens"]]
+            preds = model.predict_with_constraints_batch(
+                [([t["word"] for t in toks], {}, None) for toks in new_tokens])
+            for toks, tags in zip(new_tokens, preds):
+                for t, p in zip(toks, tags):
                     t["ppos"] = p
-                new_tokens.append(toks)
             pdf = pdf.copy()
             pdf["tokens"] = new_tokens
             yield pdf

@@ -639,27 +639,17 @@ def _ner_force_o(words: list[str]) -> set[int]:
 
 
 def tag_sentence_ner(words: list[str], pos: list[str]) -> tuple[list[str], list[str]]:
-    # trigger fast path: entities require a capitalized alphabetic token —
-    # all-lowercase sentences skip the Viterbi DP entirely and go straight
-    # to the numeric pass
-    if any(w[:1].isupper() for w in words):
-        bio = _get_ner_model().decode(words, pos, _ner_force_o(words))
-        ner = [b.split("-", 1)[-1] if b != "O" else "O" for b in bio]
-        _gazetteer_overwrite(words, ner)
-    else:
-        ner = ["O"] * len(words)
-    nner = [""] * len(words)
-    numeric_pass(words, ner, nner)
-    return ner, nner
+    return tag_ner_batch([(words, pos)])[0]
 
 
 def tag_ner_batch(sents: list[tuple[list[str], list[str]]]
                   ) -> list[tuple[list[str], list[str]]]:
-    """Batched tag_sentence_ner over many sentences: the model-eligible
-    sentences (any capitalized token) share ONE batched Viterbi
-    (StructuredPerceptronNER.decode_batch); the gazetteer overwrite and the
-    deterministic numeric pass stay per-sentence. Results equal the
-    per-sentence path exactly."""
+    """(ner, nner) per sentence. Trigger fast path: entities require a
+    capitalized alphabetic token, so only those sentences enter the model;
+    they share ONE batched Viterbi (StructuredPerceptronNER.decode_batch).
+    All-lowercase sentences skip the DP and start all-O. The gazetteer
+    overwrite and the deterministic numeric pass stay per-sentence, so a
+    sentence's result does not depend on the rest of the batch."""
     results: list[tuple[list[str], list[str]] | None] = [None] * len(sents)
     idxs: list[int] = []
     model_in = []

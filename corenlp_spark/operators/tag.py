@@ -131,8 +131,7 @@ def _pos_constraints(words: list[str]) -> dict[int, str]:
 def pos_tag(words: list[str], sent_starts: set[int]) -> list[str]:
     """Tag one document's token words with the trained averaged perceptron.
     ``sent_starts``: indices starting a sentence (left context resets)."""
-    return _get_pos_model().predict_with_constraints(
-        words, _pos_constraints(words), sent_starts)
+    return pos_tag_batch([(words, sent_starts)])[0]
 
 
 def pos_tag_batch(docs: list[tuple[list[str], set[int]]]) -> list[list[str]]:

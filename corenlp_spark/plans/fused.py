@@ -9,8 +9,9 @@ with its single mutable Annotation tree
 fusion inside one narrow Spark stage, which is what whole-stage codegen does
 for JVM operators and we do manually for the Python kernels.
 
-The model kernels decode BATCHED across all docs of the Arrow batch;
-``tests/test_batched_kernels.py`` pins batch == per-sentence decoding.
+The model kernels decode BATCHED across all docs of the Arrow batch, with
+each model's one decoder; ``tests/test_batched_kernels.py`` pins it to the
+per-sentence reference decoders and to batch order and size.
 """
 
 from __future__ import annotations

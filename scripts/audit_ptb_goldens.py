@@ -7,10 +7,12 @@ reference file stays the single source of truth for the remaining tranche.
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 JAVA = "/root/reference/test/src/edu/stanford/nlp/process/PTBTokenizerTest.java"
 

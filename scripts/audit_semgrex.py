@@ -9,11 +9,13 @@ SemgrexTest.java:412-453). Expected = the sequence of matched-node words
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/scripts")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+sys.path.insert(0, os.path.join(REPO, "scripts"))
 
 JAVA = ("/root/reference/test/src/edu/stanford/nlp/semgraph/semgrex/"
         "SemgrexTest.java")

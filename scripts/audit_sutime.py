@@ -9,10 +9,12 @@ standalone gates live in tests/test_aux.py.
 from __future__ import annotations
 
 import datetime
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 JAVA = "/root/reference/itest/src/edu/stanford/nlp/time/SUTimeITest.java"
 
@@ -124,7 +126,7 @@ def our_spans(text: str, docdate: datetime.date):
 
 def main():
     only = sys.argv[1:] or None
-    sys.path.insert(0, "/root/repo/scripts")
+    sys.path.insert(0, os.path.join(REPO, "scripts"))
     from audit_ptb_goldens import _strip_comments
 
     src = _strip_comments(open(JAVA, encoding="utf-8").read())

@@ -7,11 +7,13 @@ getMatch().toString() must equal the expected strings in order.
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/scripts")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+sys.path.insert(0, os.path.join(REPO, "scripts"))
 
 JAVA = "/root/reference/test/src/edu/stanford/nlp/trees/tregex/TregexTest.java"
 

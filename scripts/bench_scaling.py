@@ -8,12 +8,14 @@ Run: python scripts/bench_scaling.py [n_docs]  → one JSON line.
 from __future__ import annotations
 
 import json
+import os
 import subprocess
 import sys
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 CHILD = r"""
 import json, os, sys, time
-sys.path.insert(0, "/root/repo")
 from corenlp_spark.session import get_spark
 from corenlp_spark.data.synth import synth_docs
 from corenlp_spark.operators.graph import dedup_triples
@@ -59,7 +61,7 @@ def _docs_path(n_docs: int) -> str:
     cache carried 3.2x the triples/doc and tanked every throughput number).
     Same keying policy as bench.py."""
     import hashlib
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, REPO)
     from corenlp_spark.data.synth import GOLDEN_SENTENCES
     key = hashlib.md5("".join(GOLDEN_SENTENCES).encode()).hexdigest()[:8]
     return f"/tmp/scaling_docs_{n_docs}_{key}"
@@ -75,11 +77,9 @@ def run(cores: int, n_docs: int, iso_freq: bool = True) -> dict:
     4N gate models) adds nodes at constant clock. Spinners hold the package
     at its all-core frequency for both measurements.
     """
-    import os
-
     total = os.cpu_count() or cores
     env = dict(os.environ, OMP_NUM_THREADS="1", OPENBLAS_NUM_THREADS="1",
-               PYTHONPATH="/root/repo")
+               PYTHONPATH=REPO)
     spinners = []
     if iso_freq and cores < total:
         for c in range(cores, total):
@@ -103,10 +103,8 @@ def run_concurrent(cores: int, copies: int, n_docs: int) -> list[dict]:
     """``copies`` simultaneous jobs on disjoint core sets — the box is fully
     loaded exactly as in the 4N run, so clock and memory bandwidth are
     identical on both sides of the comparison."""
-    import os
-
     env = dict(os.environ, OMP_NUM_THREADS="1", OPENBLAS_NUM_THREADS="1",
-               PYTHONPATH="/root/repo")
+               PYTHONPATH=REPO)
     docs_path = _docs_path(n_docs)
     procs = []
     for c in range(copies):
@@ -131,12 +129,11 @@ def main():
     # both levels equally; take per-level best throughput (min interference)
     # materialize the docs cache ONCE before spawning concurrent children —
     # four simultaneous writers to a fresh path race on _SUCCESS
-    import os as _os
     import subprocess as _sp
-    if not _os.path.exists(_os.path.join(_docs_path(n_docs), "_SUCCESS")):
+    if not os.path.exists(os.path.join(_docs_path(n_docs), "_SUCCESS")):
         _sp.run([sys.executable, "-c", CHILD, "8", str(n_docs),
                  _docs_path(n_docs)],
-                env=dict(_os.environ, PYTHONPATH="/root/repo"),
+                env=dict(os.environ, PYTHONPATH=REPO),
                 stdout=_sp.DEVNULL, stderr=_sp.DEVNULL, timeout=1800)
     lo, hi = [], []
     for _ in range(trials):

@@ -5,11 +5,13 @@ row count, column names, and an order-insensitive value hash."""
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 import __spark_entry__ as entry_mod  # noqa: E402
 from corenlp_spark.session import get_spark  # noqa: E402
 

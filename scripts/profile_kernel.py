@@ -10,11 +10,13 @@ extraction with pronoun canonicalization (doc_triples).
 from __future__ import annotations
 
 import cProfile
+import os
 import pstats
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from corenlp_spark.data.synth import _doc_spans  # noqa: E402
 from corenlp_spark.plans import fused  # noqa: E402

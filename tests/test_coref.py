@@ -1,26 +1,12 @@
 """Coref sieve goldens (FIXTURES.md §6; sieve semantics from
 ``dcoref/Constants.java:56`` + ``dcoref/Rules.java:123-316``)."""
 
+from corenlp_spark.data.coref_corpus import annotate_text
 from corenlp_spark.operators.coref import detect_mentions, run_sieves
-from corenlp_spark.operators.tokenize import annotate_doc
-from corenlp_spark.operators.tag import pos_tag, lemmatize
-from corenlp_spark.operators.ner import tag_sentence_ner
 
 
 def chains(text: str) -> list[set[str]]:
-    spans = [{"kind": "text", "text": text, "media_ref": None, "offset": 0}]
-    toks, sents = annotate_doc(spans)
-    words = [t["word"] for t in toks]
-    starts = {s["start_tok"] for s in sents}
-    tags = pos_tag(words, starts)
-    for t, tag in zip(toks, tags):
-        t["pos"] = tag
-        t["lemma"] = lemmatize(t["word"], tag)
-    for s in sents:
-        seg = toks[s["start_tok"]:s["end_tok"]]
-        ner, nner = tag_sentence_ner([t["word"] for t in seg], [t["pos"] for t in seg])
-        for t, a, b in zip(seg, ner, nner):
-            t["ner"], t["nner"] = a, b
+    toks, sents = annotate_text(text)
     ms = detect_mentions(toks, sents)
     run_sieves(ms, toks)
     out: dict[int, set[str]] = {}
@@ -153,9 +139,6 @@ def test_ranker_decisions():
     definite NPs, object-pronoun recency, and plural pronouns over plural
     nominals — and keeps discourse-new definite NPs unlinked."""
     from collections import defaultdict
-
-    from corenlp_spark.data.coref_corpus import annotate_text
-    from corenlp_spark.operators.coref import detect_mentions, run_sieves
 
     def chains(text):
         tokens, sents = annotate_text(text)

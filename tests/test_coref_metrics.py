@@ -7,11 +7,9 @@ surface as a score drop, not just changed chain shapes."""
 
 from collections import defaultdict
 
+from corenlp_spark.data.coref_corpus import annotate_text
 from corenlp_spark.models.coref_eval import b_cubed, ceaf_e, conll_f1, muc
 from corenlp_spark.operators.coref import detect_mentions, run_sieves
-from corenlp_spark.operators.ner import tag_sentence_ner
-from corenlp_spark.operators.tag import lemmatize, pos_tag
-from corenlp_spark.operators.tokenize import annotate_doc
 
 # (text, gold chains as sets of (sent_idx, mention text)) — true coreference,
 # including links the current sieves are known to miss (the score < 1.0 is
@@ -98,20 +96,7 @@ EVAL_DOCS = [
 
 
 def _predict(text):
-    spans = [{"kind": "text", "text": text, "media_ref": None, "offset": 0}]
-    tokens, sentences = annotate_doc(spans)
-    words = [t["word"] for t in tokens]
-    tags = pos_tag(words, {s["start_tok"] for s in sentences})
-    for t, tag in zip(tokens, tags):
-        t["pos"] = tag
-        t["lemma"] = lemmatize(t["word"], tag)
-    for s in sentences:
-        a, b = s["start_tok"], s["end_tok"]
-        seg = tokens[a:b]
-        ner, _ = tag_sentence_ner([t["word"] for t in seg],
-                                  [t["pos"] for t in seg])
-        for t, x in zip(seg, ner):
-            t["ner"] = x
+    tokens, sentences = annotate_text(text)
     ms = detect_mentions(tokens, sentences)
     run_sieves(ms, tokens)
     return ms
