@@ -2,21 +2,24 @@
 
 Four strategies over the ``documents`` table (doc_id, text, …):
   - exact:        md5 fingerprint group-by (engine-portable hashing)
-  - minhash LSH:  shingle → per-band min(md5(shingle ∥ band)) → band-bucket
-                  join; near-dup pairs verified by exact shingle Jaccard
-  - simhash:      64-bit sign-sum of per-token md5 bits; hamming-ball match
+  - minhash LSH:  shingle → per-band min(md5(shingle ∥ band)) → (band, mh)
+                  buckets; pairs verified inside each bucket by exact
+                  shingle Jaccard
+  - simhash:      60-bit sign-sum of per-token md5 bits; hamming-ball match
   - n-gram jaccard: exact Jaccard on word n-gram sets for candidate pairs
 
 Column-level logic is built-in ``pyspark.sql.functions`` (JVM-side,
 codegen'd) except for three row- or bucket-local Arrow kernels
 (``mapInPandas``): shingling + minhash signatures (``_shingle_mhs_kernel``),
-the bucket-local Jaccard verify of ``minhash_dup_pairs``, and the simhash
-sign sum. Each is value-identical to its SQL form. Hashes are md5-hex so a
-DuckDB oracle can reproduce every value bit-for-bit.
+the Jaccard verify of ``minhash_dup_pairs`` (run by
+``similarity.bucket_pairs``, the one in-bucket verifier, shared with the
+LSH and IVF pair searches), and the simhash sign sum. Each is
+value-identical to its SQL form. Hashes are md5-hex so a DuckDB oracle can
+reproduce every value bit-for-bit.
 
-Scale notes: minhash bands bound the join fan-out (no O(n²) compare); the
-band-bucket join is an equi-join AQE can split on skewed buckets; simhash
-prefix buckets (16-bit) bound the hamming search the same way.
+Scale notes: minhash bands bound the verify fan-out (no O(n²) compare);
+the simhash blocks (4 × 15 bits) bound the hamming search the same way,
+and hot simhash buckets are split into triangular chunk pairs.
 """
 
 from __future__ import annotations
@@ -72,8 +75,8 @@ def paragraph_dup_stats(docs: DataFrame, min_docs: int = 2) -> DataFrame:
     )
 
 
-#: (n_bands → gram → [band-salted md5 hexes]) — see _shingle_mhs_kernel
-_MD5_BAND_CACHE: dict[int, dict[str, list[str]]] = {}
+#: (n_bands → gram → [band-salted md5 digests]) — see _shingle_mhs_kernel
+_MD5_BAND_CACHE: dict[int, dict[str, list[bytes]]] = {}
 #: token → truncated md5 int — see simhash()
 _MD5_TOKEN_CACHE: dict[str, int] = {}
 
@@ -97,6 +100,9 @@ def _shingle_mhs_kernel(n_bands: int, k: int, with_sh: bool, id_type: str):
     # (Zipf), so per-gram band digests are cached across docs AND tasks
     # (module-level, reused Python workers). Capped so a pathological
     # vocabulary degrades to the plain path; values identical by purity.
+    # Raw 16-byte digests take ~30% less memory than 32-char hex; fixed-
+    # width lowercase hex sorts like its bytes, so only each band's
+    # minimum is hexed.
     cache = _MD5_BAND_CACHE.setdefault(n_bands, {})
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -115,15 +121,14 @@ def _shingle_mhs_kernel(n_bands: int, k: int, with_sh: bool, id_type: str):
                     out["sh"].append(grams)
                 rows = []
                 for g in grams:
-                    hx = cache.get(g)
-                    if hx is None:
+                    dg = cache.get(g)
+                    if dg is None:
                         e = g.encode()
-                        hx = [md5(e + suf).hexdigest() for suf in suffixes]
+                        dg = [md5(e + suf).digest() for suf in suffixes]
                         if len(cache) < 200_000:
-                            cache[g] = hx
-                    rows.append(hx)
-                out["mhs"].append(
-                    [min(r[b] for r in rows) for b in range(n_bands)])
+                            cache[g] = dg
+                    rows.append(dg)
+                out["mhs"].append([min(b).hex() for b in zip(*rows)])
             yield pd.DataFrame(out)
 
     cols = f"doc_id {id_type}, "
@@ -150,22 +155,18 @@ def minhash_dup_pairs(
     """Near-duplicate pairs: LSH band-bucket candidates verified by exact
     shingle Jaccard ≥ threshold. Returns (doc_a, doc_b, jaccard), doc_a<doc_b.
 
-    r6 shape (guide §8: decide with small co-located data, never shuffle
-    the payload per-pair): the old plan joined every candidate PAIR back to
-    the shingle-array table twice — at sf1.0 that carried 4.2M candidate
-    rows × ~1 KB of shingles per side (~8 GB of exchange) to keep 2.5k
-    pairs, after a .distinct() exchange over all candidates. Now each doc's
-    shingle set travels ONCE per band into its (band, mh) bucket
-    (n_bands × corpus bytes, the minimum any bucket-verify needs), and an
-    Arrow-batched kernel verifies all pairs inside the bucket. Cross-band
-    duplicate candidates are dropped map-side by the first-collision rule
-    (emit a pair only in the LOWEST band whose minhashes agree — each doc
-    carries its full mh vector, so no dedup exchange is needed).
-    Jaccard/rounding arithmetic is bit-identical (int set sizes, double
-    division, HALF_UP 1e-6 — the same formula the similarity kernels use).
-    Per-bucket work is quadratic in bucket size exactly as the join output
-    was; a bucket is one task either way (same single join key)."""
-    import pandas as pd
+    Each doc's shingle set travels ONCE per band into its (band, mh)
+    bucket (n_bands × corpus bytes, the minimum any bucket verify needs)
+    and ``similarity.bucket_pairs`` verifies the pairs inside the bucket,
+    keeping a pair only in the LOWEST band whose minhashes agree (each doc
+    carries its full mh vector): no candidate-pair join, no dedup exchange.
+    Jaccard is int set sizes and a double division, rounded like
+    ``F.round(x, 6)`` (``textstats._round6_like_spark``). Per-bucket work
+    is quadratic in bucket size."""
+    import numpy as np
+
+    from corenlp_spark.functions.similarity import bucket_pairs
+    from corenlp_spark.functions.textstats import _round6_like_spark_array
 
     id_type = docs.schema["doc_id"].dataType.simpleString()
     kernel, schema = _shingle_mhs_kernel(n_bands, k, with_sh=True,
@@ -176,48 +177,20 @@ def minhash_dup_pairs(
                 F.posexplode("mhs").alias("band", "mh"))
     )
 
-    def verify(pdf: pd.DataFrame, out_a, out_b, out_j) -> None:
-        m = len(pdf)
-        if m >= 2:
-            band = int(pdf["band"].iloc[0])
-            order = sorted(range(m), key=lambda i: pdf["doc_id"].iloc[i])
-            ids = [pdf["doc_id"].iloc[i] for i in order]
-            sets = [frozenset(pdf["sh"].iloc[i]) for i in order]
-            vecs = [list(pdf["mhs"].iloc[i][:band]) for i in order]
-            for i in range(m):
-                si, vi = sets[i], vecs[i]
-                for j in range(i + 1, m):
-                    # first-collision: skip pairs already met in a lower band
-                    if any(a == b for a, b in zip(vi, vecs[j])):
-                        continue
-                    inter = len(si & sets[j])
-                    union = len(si) + len(sets[j]) - inter
-                    jac = inter / union
-                    if jac >= threshold:
-                        # HALF_UP to 6dp (F.round semantics; jac >= 0)
-                        out_a.append(ids[i])
-                        out_b.append(ids[j])
-                        out_j.append(int(jac * 1e6 + 0.5) / 1e6)
+    def verify(part):
+        sets = [frozenset(s) for s in part["sh"]]
+        size = np.array([len(s) for s in sets], dtype=np.int64)
 
-    def partition_verify(batches):
-        # r6 (same restructure as similarity.lsh_ann_pairs): one pandas
-        # concat + groupby per PARTITION instead of one Arrow/pandas
-        # dispatch per bucket — with many small (band, mh) buckets the
-        # per-group dispatch dominates the set math; the hash repartition
-        # below co-locates every bucket's rows in one partition, so the
-        # per-bucket pair sets (and values) are unchanged
-        chunks = list(batches)
-        if chunks:
-            pdf = pd.concat(chunks, ignore_index=True)
-            out_a, out_b, out_j = [], [], []
-            for _, g in pdf.groupby(["band", "mh"], sort=False):
-                verify(g, out_a, out_b, out_j)
-            yield pd.DataFrame({"doc_a": out_a, "doc_b": out_b,
-                                "jaccard": out_j})
+        def score(pa, pb):
+            inter = np.array([len(sets[a] & sets[b]) for a, b in
+                              zip(pa.tolist(), pb.tolist())], dtype=np.int64)
+            jac = inter / (size[pa] + size[pb] - inter)
+            return jac >= threshold, _round6_like_spark_array(jac)
 
-    return posted.repartition("band", "mh").mapInPandas(
-        partition_verify,
-        schema=f"doc_a {id_type}, doc_b {id_type}, jaccard double")
+        return score
+
+    return bucket_pairs(posted, ("band", "mh"), verify, "doc_id",
+                        out=("doc_a", "doc_b", "jaccard"), band_keys="mhs")
 
 
 def simhash(docs: DataFrame, bits: int = 64) -> DataFrame:

@@ -1,14 +1,21 @@
 """Similarity search over embedding columns (``array<float>``).
 
-  - brute-force cosine top-k: exact baseline, pure ``F.aggregate``/``zip_with``
-    arithmetic (JVM-side, codegen'd — no Python in the hot path);
-  - LSH-bucketed ANN: random-hyperplane signs (deterministic seeded planes)
-    bucket the vectors; candidates meet in an equi-join on (band, sig) and
-    are re-scored exactly. The scale path: bucket join replaces the O(n²)
-    cross product; per-bucket skew is AQE-splittable.
+  - brute-force cosine top-k (``brute_force_topk``, ``pairwise_topk``):
+    exact baselines, pure ``F.aggregate``/``zip_with`` arithmetic
+    (JVM-side, codegen'd — no Python in the hot path);
+  - k-means (``train_centroids``, ``kmeans_cluster_summary``): distributed
+    Lloyd iterations over the Arrow nearest-centroid kernel
+    ``_assign_kernel``;
+  - ANN near-duplicate pairs, each posting vectors to buckets and verifying
+    pairs exactly inside them through ``bucket_pairs``, the one in-bucket
+    verifier (shared with ``dedup.minhash_dup_pairs``): ``ivf_ann_pairs``
+    buckets by nearest centroid (one cell per vector), ``lsh_ann_pairs`` by
+    random-hyperplane signatures (deterministic seeded planes, one bucket
+    per band). No O(n²) cross product and no candidate-pair join.
 
 Design for 100 TB: the query side is tiny (broadcast); the corpus side
-streams. Scores are rounded to 1e-6 for engine-portable comparison.
+streams. Scores are rounded to 1e-6 like ``F.round(x, 6)`` for
+engine-portable comparison.
 """
 
 from __future__ import annotations
@@ -158,56 +165,135 @@ def train_centroids(
     return cents
 
 
+def bucket_pairs(
+    posted: DataFrame, keys: tuple[str, ...], verify, id_col: str,
+    out: tuple[str, str, str] = ("id_a", "id_b", "score"),
+    band_keys: str | None = None,
+) -> DataFrame:
+    """The one in-bucket pair verifier behind ``ivf_ann_pairs``,
+    ``lsh_ann_pairs`` and ``dedup.minhash_dup_pairs``, which differ only in
+    how rows are posted to buckets (named by ``keys``) and in ``verify``.
+
+    A hash repartition on ``keys`` co-locates each bucket; one Arrow kernel
+    per partition groups the partition by ``keys`` (one pandas groupby,
+    not one dispatch per bucket), sorts each bucket by ``id_col`` and walks
+    its upper triangle in row blocks of at most 2^20 cells, so each pair
+    comes out once with id_a ≤ id_b. With ``band_keys`` (multi-band LSH),
+    ``keys[0]`` is the band and ``band_keys`` the array of the row's keys
+    in every band: the first-collision rule drops a pair when any lower
+    band's key agrees, so no dedup exchange exists.
+
+    ``verify(part)`` prepares the partition once and returns
+    ``score(pa, pb) -> (keep, score)`` over candidate pairs given as row
+    positions, called on batches of ~2^20 pairs across buckets. Output
+    columns are ``out``, with ``posted``'s id type. Peak task memory
+    follows the partition, not the bucket (ROADMAP item 4)."""
+    from typing import Iterator
+
+    import numpy as np
+    import pandas as pd
+
+    id_type = posted.schema[id_col].dataType.simpleString()
+    cap = 1 << 20
+
+    def candidates(pdf, ids):
+        K = np.array([list(v) for v in pdf[band_keys]]) if band_keys else None
+        pa, pb, n = [], [], 0
+        for key, rows in pdf.groupby(list(keys), sort=False).indices.items():
+            rows = rows[np.argsort(ids[rows], kind="stable")]
+            step = max(1, cap // len(rows))
+            for i0 in range(0, len(rows) - 1, step):
+                # block row r is bucket row i0 + r, column c is i0 + 1 + c
+                top, rest = rows[i0:i0 + step], rows[i0 + 1:]
+                cand = np.arange(len(top))[:, None] <= np.arange(len(rest))
+                for b in range(key[0] if band_keys else 0):
+                    cand &= K[top, b][:, None] != K[rest, b]
+                ii, jj = np.nonzero(cand)
+                pa.append(top[ii])
+                pb.append(rest[jj])
+                n += len(ii)
+                if n >= cap:
+                    yield np.concatenate(pa), np.concatenate(pb)
+                    pa, pb, n = [], [], 0
+        if pa:
+            yield np.concatenate(pa), np.concatenate(pb)
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        chunks = list(batches)
+        if not chunks:
+            return
+        pdf = pd.concat(chunks, ignore_index=True)
+        # a single-row bucket holds no pair
+        pdf = pdf[pdf.duplicated(list(keys), keep=False)].reset_index(drop=True)
+        if not len(pdf):
+            return
+        ids = pdf[id_col].values
+        score = verify(pdf)
+        for a, b in candidates(pdf, ids):
+            keep, s = score(a, b)
+            yield pd.DataFrame({out[0]: ids[a[keep]], out[1]: ids[b[keep]],
+                                out[2]: s[keep]})
+
+    return posted.repartition(*keys).mapInPandas(
+        run, schema=f"{out[0]} {id_type}, {out[1]} {id_type}, {out[2]} double")
+
+
+def _cosine_verify(vec_col: str, threshold: float):
+    """``bucket_pairs`` verify: exact cosine, rounded like
+    ``F.round(x, 6)``, kept when ≥ ``threshold``. Dot products and norms
+    are vectorized over pairs but accumulated SEQUENTIALLY over the
+    dimension axis in float64 — bit-identical to the left-to-right
+    ``F.aggregate`` fold of ``cosine`` (and DuckDB's ``list_dot_product``),
+    so the DuckDB oracles' scores hash-match."""
+    import numpy as np
+
+    from corenlp_spark.functions.textstats import _round6_like_spark_array
+
+    def verify(part):
+        # (dim, n): one contiguous row per dimension, gathered per pair
+        VT = np.stack([np.asarray(v, dtype=np.float64)
+                       for v in part[vec_col]], axis=1)
+        nrm = np.zeros(VT.shape[1])
+        for x in VT:
+            nrm = nrm + x * x
+        nrm = np.sqrt(nrm)
+
+        def score(pa, pb):
+            acc = np.zeros(len(pa))
+            for x in VT:
+                acc = acc + x[pa] * x[pb]
+            s = _round6_like_spark_array(acc / (nrm[pa] * nrm[pb]))
+            return s >= threshold, s
+
+        return score
+
+    return verify
+
+
 def ivf_ann_pairs(
     emb: DataFrame, dim: int, n_cells: int = 16, threshold: float = 0.7,
     id_col: str = "vec_id", vec_col: str = "embedding",
     centroids: list[list[float]] | None = None,
 ) -> DataFrame:
     """IVF-style ANN: assign each vector to its nearest centroid (coarse
-    quantizer), generate candidates within a cell, verify exactly. Default
-    centroids are seeded unit vectors; pass ``centroids=train_centroids(…)``
-    for the Lloyd-trained quantizer. Scale path: the per-cell equi-join
-    replaces the O(n²) cross product; cell skew is AQE-splittable."""
-    # deterministic seeded centroids by default; a train_centroids() table
-    # drops in via the ``centroids`` parameter (same broadcast literal path)
+    quantizer), then verify every pair inside its cell exactly:
+    (id_a, id_b, score), id_a < id_b. Default centroids are seeded unit
+    vectors; pass ``centroids=train_centroids(…)`` for the Lloyd-trained
+    quantizer.
+
+    The assignment kernel posts each vector once, with its id, to its cell
+    and ``bucket_pairs`` verifies the cell with ``_cosine_verify``: the
+    only exchange carries each vector once, and there is no candidate-pair
+    join. A cell is one bucket, so a task holds its whole partition of
+    cells — memory is partition-bounded, as for the LSH and minhash
+    verifies (ROADMAP item 4)."""
     cents = centroids if centroids is not None else _planes(dim, n_cells)
     id_type = emb.schema[id_col].dataType.simpleString()
-    # ids-only shuffle discipline (same as lsh_ann_pairs, VERDICT r3 #9):
-    # the quadratic-fan-out cell join carries (id, cell) only; vectors
-    # re-join by id once for the surviving candidate pairs
-    ids = emb.select(id_col, vec_col).mapInPandas(
-        _assign_kernel(cents, vec_col, carry=(id_col,)),
-        schema=f"cell int, {id_col} {id_type}",
-    ).select(F.col(id_col).alias("id"), "cell")
-    cand = (
-        ids.select(F.col("id").alias("id_a"), "cell")
-        .join(ids.select(F.col("id").alias("id_b"), "cell"), "cell")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-    )
-    vecs = emb.select(id_col, vec_col)
-    return (
-        cand
-        .join(vecs.select(F.col(id_col).alias("id_a"),
-                          F.col(vec_col).alias("v_a")), "id_a")
-        .join(vecs.select(F.col(id_col).alias("id_b"),
-                          F.col(vec_col).alias("v_b")), "id_b")
-        .select("id_a", "id_b", F.round(cosine("v_a", "v_b"), 6).alias("score"))
-        .filter(F.col("score") >= threshold)
-    )
-
-
-def _seq_dot(A, B):
-    """Dot products vectorized over ROWS but accumulated SEQUENTIALLY over
-    the dimension axis — bit-identical to the left-to-right ``F.aggregate``
-    fold (and to DuckDB's ``list_dot_product``), so the DuckDB oracle's
-    scores hash-match while numpy does the heavy lifting."""
-    import numpy as np
-
-    acc = np.zeros(A.shape[0])
-    for k in range(A.shape[1]):
-        acc = acc + A[:, k] * B[:, k]
-    return acc
+    posted = emb.select(id_col, vec_col).mapInPandas(
+        _assign_kernel(cents, vec_col, carry=(id_col, vec_col)),
+        schema=f"cell int, {id_col} {id_type}, {vec_col} array<float>")
+    return bucket_pairs(posted, ("cell",), _cosine_verify(vec_col, threshold),
+                        id_col)
 
 
 def lsh_ann_pairs(
@@ -217,26 +303,15 @@ def lsh_ann_pairs(
     """ANN near-neighbor pairs: random-hyperplane LSH bucketing + exact
     cosine verification. (id_a, id_b, score), id_a < id_b.
 
-    Signatures and verification run as Arrow-batched numpy kernels
-    (sequential-order accumulation — see _seq_dot) instead of interpreted
-    per-element higher-order functions: ~20× faster at equal bit-exactness.
-
-    r6 shape (guide §8 — decide where the data already is): each vector is
-    posted ONCE per band into its (band, sig) bucket, carrying its norm
-    and its full per-band signature vector; an Arrow-batched kernel then
-    verifies every pair INSIDE the bucket with a chunked gram-matrix
-    sweep. The old plan built an (id_a, id_b) candidate join + distinct
-    and then re-attached both vectors to every surviving pair through two
-    more joins — at 20k vectors that exchanged ~6M pair rows (two of the
-    exchanges carrying full vector payloads) to keep a handful; the new
-    plan's only exchange is n_bands × corpus vectors (the minimum any
-    bucket verify needs). Cross-band duplicate candidates are dropped
-    map-side by the first-collision rule (a pair is verified only in the
-    LOWEST band whose signatures agree), so no dedup exchange exists.
-    Scores accumulate in the same sequential dimension order, so results
-    are bit-identical. Per-bucket work is quadratic in bucket size exactly
-    as the join output was (same single join key either way); the kernel
-    chunks its row blocks to bound memory on hot buckets."""
+    An Arrow-batched kernel computes the signatures (plane dots folded
+    sequentially over the dimension, like ``cosine``) and posts each
+    vector ONCE per band into its (band, sig) bucket, carrying its full
+    per-band signature vector; ``bucket_pairs`` then verifies every pair
+    inside the bucket with ``_cosine_verify``, dropping a pair in all
+    but the LOWEST band whose signatures agree. The plan's only exchange
+    is n_bands × corpus vectors (the minimum any bucket verify needs): no
+    candidate-pair join, no dedup exchange, no per-pair vector re-attach.
+    Per-bucket work is quadratic in bucket size."""
     from typing import Iterator
 
     import numpy as np
@@ -260,68 +335,19 @@ def lsh_ann_pairs(
                 bits[:, b * band_bits:(b + 1) * band_bits] @ pow2
                 for b in range(n_bands)
             ], axis=1)  # (n, n_bands)
-            nrm = np.sqrt(_seq_dot(V, V))
-            frames = []
-            for band in range(n_bands):
-                frames.append(pd.DataFrame({
-                    id_col: pdf[id_col].values, "band": band,
-                    "sig": sigs[:, band], "sigs": list(sigs),
-                    "nrm": nrm, vec_col: pdf[vec_col].values,
-                }))
-            yield pd.concat(frames, ignore_index=True)
+            yield pd.concat([pd.DataFrame({
+                id_col: pdf[id_col].values, "band": band,
+                "sig": sigs[:, band], "sigs": list(sigs),
+                vec_col: pdf[vec_col].values,
+            }) for band in range(n_bands)], ignore_index=True)
 
+    id_type = emb.schema[id_col].dataType.simpleString()
     posted = emb.select(id_col, vec_col).mapInPandas(
-        post, schema=(f"{id_col} long, band int, sig long, sigs array<long>, "
-                      f"nrm double, {vec_col} array<float>"))
-
-    def bucket_verify(pdf: pd.DataFrame, out_a, out_b, out_s) -> None:
-        m = len(pdf)
-        if m < 2:
-            return
-        band = int(pdf["band"].iloc[0])
-        pdf = pdf.sort_values(id_col, kind="mergesort")
-        ids = pdf[id_col].values
-        V = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-        nrm = pdf["nrm"].values
-        sigs = np.stack(pdf["sigs"].values)  # (m, n_bands)
-        block = 2048
-        for i0 in range(0, m - 1, block):
-            i1 = min(i0 + block, m)
-            acc = np.zeros((i1 - i0, m))
-            for k in range(V.shape[1]):
-                acc = acc + V[i0:i1, k, None] * V[None, :, k]
-            raw = acc / (nrm[i0:i1, None] * nrm[None, :])
-            # HALF_UP to 6dp (F.round / DuckDB semantics; np.round is
-            # half-even and would diverge at exact ties)
-            score = np.sign(raw) * np.floor(np.abs(raw) * 1e6 + 0.5) / 1e6
-            keep = score >= threshold
-            # upper triangle only (ids sorted → id_a < id_b)
-            keep &= np.arange(i0, i1)[:, None] < np.arange(m)[None, :]
-            # first-collision: drop pairs already verified in a lower band
-            for b2 in range(band):
-                keep &= sigs[i0:i1, b2, None] != sigs[None, :, b2]
-            ii, jj = np.nonzero(keep)
-            out_a.extend(ids[ii + i0])
-            out_b.extend(ids[jj])
-            out_s.extend(score[ii, jj])
-
-    def partition_verify(batches):
-        # one pandas concat + groupby per PARTITION rather than one
-        # function dispatch per bucket: with thousands of small buckets the
-        # per-group Arrow/pandas dispatch overhead dominates the math
-        # (observed at the smaller sf) — the hash repartition below already
-        # co-locates every bucket's rows in one partition
-        chunks = list(batches)
-        if chunks:
-            pdf = pd.concat(chunks, ignore_index=True)
-            out_a, out_b, out_s = [], [], []
-            for _, g in pdf.groupby(["band", "sig"], sort=False):
-                bucket_verify(g, out_a, out_b, out_s)
-            yield pd.DataFrame({"id_a": out_a, "id_b": out_b,
-                                "score": out_s})
-
-    return posted.repartition("band", "sig").mapInPandas(
-        partition_verify, schema="id_a long, id_b long, score double")
+        post, schema=(f"{id_col} {id_type}, band int, sig long, "
+                      f"sigs array<long>, {vec_col} array<float>"))
+    return bucket_pairs(posted, ("band", "sig"),
+                        _cosine_verify(vec_col, threshold), id_col,
+                        band_keys="sigs")
 
 
 def kmeans_cluster_summary(

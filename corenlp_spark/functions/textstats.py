@@ -216,11 +216,35 @@ def _round6_like_spark(x: float) -> float:
     repr() is the same shortest round-trip string, so Decimal(repr(x))
     quantized HALF_UP is bit-identical — including the 10-smooth-
     denominator tie cases where the common floor(x·1e6 + 0.5) shortcut
-    disagrees with BigDecimal."""
+    disagrees with BigDecimal. NaN, ±inf and doubles ≥ 2^52 (already
+    integers) pass through unchanged, and a zero result is +0.0 (a
+    BigDecimal has no negative zero)."""
     import decimal
+    import math
 
+    if not math.isfinite(x) or abs(x) >= 2.0 ** 52:
+        return x
     return float(decimal.Decimal(repr(x)).quantize(
-        decimal.Decimal("0.000001"), rounding=decimal.ROUND_HALF_UP))
+        decimal.Decimal("0.000001"), rounding=decimal.ROUND_HALF_UP)) + 0.0
+
+
+def _round6_like_spark_array(x):
+    """``_round6_like_spark`` over a float64 array. The floor(|x|·1e6 + 0.5)
+    shortcut is exact whenever the scaled value is not near a .5 tie (the
+    division by the exact 1e6 is correctly rounded, like ``float`` of the
+    quantized decimal); the few entries within 1e-6 of a tie — far wider
+    than the shortcut's error below |x| = 1000 — and the larger or
+    non-finite ones are re-rounded by the exact scalar."""
+    import numpy as np
+
+    x = np.asarray(x, dtype=np.float64)
+    t = np.abs(x) * 1e6
+    out = np.sign(x) * np.floor(t + 0.5) / 1e6 + 0.0
+    with np.errstate(invalid="ignore"):  # inf - inf: routed to the scalar
+        exact = ~(np.abs(t - np.floor(t) - 0.5) > 1e-6) | ~(t < 1e9)
+    for i in np.flatnonzero(exact):
+        out.flat[i] = _round6_like_spark(float(x.flat[i]))
+    return out
 
 
 def gopher_repetition(df, text_col: str = "text", id_col: str = "doc_id"):

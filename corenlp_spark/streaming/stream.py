@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from corenlp_spark.data.synth import DOCS_SCHEMA
+from corenlp_spark.operators.mentions import mention_rows
 from corenlp_spark.plans.fused import annotate, extract_triples_fused
 
 
@@ -51,29 +52,12 @@ def streaming_entity_counts(docs_stream: DataFrame):
     State per entity surface: (total mentions, docs seen). Update mode;
     emits one row per entity per micro-batch with the running totals.
     """
-    from typing import Iterator
-
-    import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    ann = annotate(docs_stream, upto="ner")
-
-    # doc-local mention chunking — same kernel as the batch fused path
-    # (operators/mentions.chunk_mentions); the SQL-window variant is
-    # batch-only (streaming forbids non-time windows)
-    from corenlp_spark.operators.mentions import chunk_mentions
-
-    def chunk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {"surface": [], "doc_id": [], "ner": []}
-            for doc_id, toks in zip(pdf["doc_id"], pdf["tokens"]):
-                for m in chunk_mentions(list(toks)):
-                    rows["surface"].append(m["text"].lower())
-                    rows["doc_id"].append(doc_id)
-                    rows["ner"].append(m["ner"])
-            yield pd.DataFrame(rows)
-
-    keyed = ann.mapInPandas(chunk, schema="surface string, doc_id string, ner string")
+    # doc-local mention chunking (the SQL-window twin is batch-only:
+    # streaming forbids non-time windows)
+    keyed = mention_rows(annotate(docs_stream, upto="ner")).select(
+        F.lower("text").alias("surface"), "doc_id", "ner")
 
     def update(key, pdfs, state: GroupState):
         import pandas as pd
@@ -136,37 +120,13 @@ def streaming_canonical_entities(docs_stream: DataFrame, aliases: DataFrame):
     result (tests assert equality). The wikidict resolution itself is the
     same broadcast join (stream-compatible: broadcast joins add no state).
     """
-    from typing import Iterator
-
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     from corenlp_spark.operators.entitylink import link_mentions
-    from corenlp_spark.operators.mentions import chunk_mentions
 
-    ann = annotate(docs_stream, upto="ner")
-
-    def chunk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {"doc_id": [], "sent_idx": [], "start_tok": [],
-                    "end_tok": [], "text": [], "ner": [], "nner": []}
-            for doc_id, toks in zip(pdf["doc_id"], pdf["tokens"]):
-                for m in chunk_mentions(list(toks)):
-                    rows["doc_id"].append(doc_id)
-                    rows["sent_idx"].append(m["sent_idx"])
-                    rows["start_tok"].append(m["start_tok"])
-                    rows["end_tok"].append(m["end_tok"])
-                    rows["text"].append(m["text"])
-                    rows["ner"].append(m["ner"])
-                    rows["nner"].append(m["nner"])
-            yield pd.DataFrame(rows)
-
-    mentions = ann.mapInPandas(
-        chunk,
-        schema=("doc_id string, sent_idx int, start_tok int, end_tok int, "
-                "text string, ner string, nner string"),
-    )
-    linked = link_mentions(mentions, aliases)
+    linked = link_mentions(
+        mention_rows(annotate(docs_stream, upto="ner")), aliases)
     keyed = linked.withColumn(
         "entity_key", F.coalesce(F.col("link"), F.lower(F.col("text")))
     )

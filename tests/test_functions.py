@@ -75,6 +75,117 @@ def test_lsh_ann_agrees_with_exact_on_clear_pairs(spark):
     assert exact_lt <= ann
 
 
+def test_lsh_ann_pairs_string_ids(spark):
+    """The id type comes from the input schema: string ids give the same
+    pairs as the long ids they spell (zero-padded, so both sort alike)."""
+    rows = [(i, [1.0 if j == i % 4 else 0.05 * (i % 3) for j in range(16)])
+            for i in range(40)]
+    num = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    txt = spark.createDataFrame([(f"v{i:02d}", v) for i, v in rows],
+                                "vec_id string, embedding array<float>")
+    want = sorted((f"v{r.id_a:02d}", f"v{r.id_b:02d}", r.score)
+                  for r in lsh_ann_pairs(num, dim=16, threshold=0.5).collect())
+    got = lsh_ann_pairs(txt, dim=16, threshold=0.5)
+    assert [f.dataType.simpleString() for f in got.schema.fields[:2]] \
+        == ["string", "string"]
+    assert want and sorted(map(tuple, got.collect())) == want
+
+
+def test_minhash_jaccard_rounds_like_spark_on_ties(spark):
+    """|A∩B| = 323, |A∪B| = 640: Jaccard 0.5046875 is a 7th-digit tie that
+    F.round(x, 6) takes HALF_UP on the decimal, to 0.504688 (the floor
+    (x·1e6 + 0.5) shortcut gives 0.504687)."""
+    common = [f"c{i}" for i in range(323)]
+    a = " ".join(common + [f"a{i}" for i in range(158)])
+    b = " ".join(common + [f"b{i}" for i in range(159)])
+    docs = spark.createDataFrame([(1, a), (2, b)], "doc_id long, text string")
+    got = minhash_dup_pairs(docs, n_bands=8, k=1, threshold=0.5).collect()
+    assert [tuple(r) for r in got] == [(1, 2, 0.504688)]
+
+
+def test_round6_helpers_equal_spark_round(spark):
+    """The scalar and array rounding helpers equal Spark's F.round(x, 6)
+    bit for bit, over decimal ties, signs, zeros, non-finite and huge
+    values, and a seeded sample of random doubles."""
+    import math
+    import random
+    import struct
+
+    import numpy as np
+
+    from corenlp_spark.functions.textstats import (
+        _round6_like_spark, _round6_like_spark_array,
+    )
+
+    rng = random.Random(7)
+    xs = [k / 640 for k in range(641)] + [(i + 0.5) / 1e6 for i in range(2000)]
+    xs += [rng.uniform(-1, 1) for _ in range(2000)]
+    xs += [rng.uniform(-1, 1) * 10.0 ** rng.randint(-9, 12) for _ in range(2000)]
+    xs += [-x for x in xs[:2641]]
+    xs += [0.0, -0.0, -1e-9, 4e-7, -4e-7, 0.1234565, 1.0000005, 2.0 ** 52 + 1,
+           1e300, -1e300, float("nan"), float("inf"), float("-inf")]
+    df = spark.createDataFrame(list(enumerate(xs)), "i int, x double")
+    want = [r.r for r in df.select("i", F.round("x", 6).alias("r"))
+            .orderBy("i").collect()]
+
+    def bits(v):
+        return "nan" if math.isnan(v) else struct.pack("<d", v)
+
+    arr = _round6_like_spark_array(np.array(xs))
+    for x, w, v in zip(xs, want, arr):
+        assert bits(_round6_like_spark(x)) == bits(w), x
+        assert bits(float(v)) == bits(w), x
+
+
+def _ivf_ann_pairs_sql(emb, dim, n_cells=16, threshold=0.7,
+                       id_col="vec_id", vec_col="embedding", centroids=None):
+    """Parity reference: the cell self-join form ``ivf_ann_pairs`` had
+    before it moved onto ``bucket_pairs`` — an (id, cell) equi-join for
+    candidates, both vectors re-joined by id, the SQL ``cosine`` fold."""
+    from corenlp_spark.functions.similarity import _assign_kernel, _planes, cosine
+
+    cents = centroids if centroids is not None else _planes(dim, n_cells)
+    id_type = emb.schema[id_col].dataType.simpleString()
+    ids = emb.select(id_col, vec_col).mapInPandas(
+        _assign_kernel(cents, vec_col, carry=(id_col,)),
+        schema=f"cell int, {id_col} {id_type}",
+    ).select(F.col(id_col).alias("id"), "cell")
+    cand = (
+        ids.select(F.col("id").alias("id_a"), "cell")
+        .join(ids.select(F.col("id").alias("id_b"), "cell"), "cell")
+        .filter(F.col("id_a") < F.col("id_b"))
+        .select("id_a", "id_b")
+    )
+    vecs = emb.select(id_col, vec_col)
+    return (
+        cand
+        .join(vecs.select(F.col(id_col).alias("id_a"),
+                          F.col(vec_col).alias("v_a")), "id_a")
+        .join(vecs.select(F.col(id_col).alias("id_b"),
+                          F.col(vec_col).alias("v_b")), "id_b")
+        .select("id_a", "id_b", F.round(cosine("v_a", "v_b"), 6).alias("score"))
+        .filter(F.col("score") >= threshold)
+    )
+
+
+def test_ivf_equals_cell_join_reference(spark):
+    """``ivf_ann_pairs`` (in-bucket verify) returns exactly the rows of
+    the cell-join reference on the sf0.01 embeddings, for default and
+    trained centroids, at a keep-everything and a real threshold."""
+    from corenlp_spark.functions.similarity import ivf_ann_pairs, train_centroids
+    from tests.test_plans import SF
+
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
+    trained = train_centroids(emb, 64, k=16)
+    for cents in (None, trained):
+        for thr in (-2.0, 0.2):
+            got = sorted(map(tuple, ivf_ann_pairs(
+                emb, dim=64, threshold=thr, centroids=cents).collect()))
+            want = sorted(map(tuple, _ivf_ann_pairs_sql(
+                emb, dim=64, threshold=thr, centroids=cents).collect()))
+            assert got and got == want, (cents is None, thr)
+
+
 def test_textstats(spark):
     d = _docs(spark).select(
         "doc_id",
@@ -538,3 +649,19 @@ def test_source_quota_sample(spark):
     assert ids1 == ids2
     rep = source_mix_report(kept).collect()
     assert abs(sum(r.frac for r in rep) - 1.0) < 1e-6
+
+
+def test_ivf_multi_block_bucket_equals_reference(spark):
+    """One 1500-vector cell: the verifier splits the bucket into several
+    row blocks and flushes candidate batches mid-bucket; the rows still
+    equal the cell-join reference."""
+    from corenlp_spark.functions.similarity import ivf_ann_pairs
+
+    rows = [(i, [float((i * 7919 + j * 104729) % 1009) / 1009.0 - 0.5
+                 for j in range(8)]) for i in range(1500)]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    got = sorted(map(tuple, ivf_ann_pairs(
+        emb, dim=8, n_cells=1, threshold=0.9).collect()))
+    want = sorted(map(tuple, _ivf_ann_pairs_sql(
+        emb, dim=8, n_cells=1, threshold=0.9).collect()))
+    assert len(got) > 1000 and got == want

@@ -75,22 +75,19 @@ def test_embedding_dups_has_no_nested_loop_join(spark):
     assert p.count("Exchange hashpartitioning") == 1, p
 
 
-def test_ivf_cell_join_carries_ids_only(spark):
-    """The IVF candidate exchange (cell equi-join) must carry (id, cell)
-    only — vectors re-join by id after candidate generation, matching the
-    LSH path's shuffle-payload discipline (VERDICT r3 #9)."""
-    import re
-
+def test_ivf_verify_is_bucket_local(spark):
+    """IVF verifies each cell inside one partition kernel
+    (``similarity.bucket_pairs``), like the LSH and minhash paths: no
+    candidate-pair join, no vector re-join, and exactly one exchange — the
+    cell repartition, which carries each vector once."""
     from corenlp_spark.functions.similarity import ivf_ann_pairs
 
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
     p = plan_of(ivf_ann_pairs(emb, dim=64, n_cells=8, threshold=0.5))
     assert "BroadcastNestedLoopJoin" not in p and "CartesianProduct" not in p
-    # the quadratic fan-out happens at the join on `cell` …
-    assert re.search(r"Join \[cell#\d+", p), p
-    # … and its output is an ids-only projection: the embedding payload
-    # never rides the candidate stream (it re-joins by id afterwards)
-    assert re.search(r"Project \[id_a#\d+L, id_b#\d+L\]", p), p
+    assert "MapInPandas" in p
+    assert "Join" not in p
+    assert p.count("Exchange hashpartitioning") == 1, p
 
 
 def test_scaled_dict_link_shuffle_path(spark):
