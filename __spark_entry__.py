@@ -770,20 +770,18 @@ def q_kg_mentions_oracle(spark, sf_dir):
     (operators/mentions.chunk_mentions) while DuckDB replays
     LabeledChunkIdentifier as window SQL over the same bytes — both must
     aggregate identically."""
-    import os
-
     from corenlp_spark.operators.mentions import mention_rows
     from corenlp_spark.plans.fused import annotate
 
-    path = _ann_tokens_path()
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+    def build():
         ann = annotate(_golden_docs(spark))
-        flat = ann.select("doc_id", F.explode("tokens").alias("t")).select(
+        return ann.select("doc_id", F.explode("tokens").alias("t")).select(
             "doc_id", F.col("t.idx").alias("idx"), F.col("t.sent").alias("sent"),
             F.col("t.word").alias("word"), F.col("t.ner").alias("ner"),
             F.coalesce(F.col("t.nner"), F.lit("")).alias("nner"),
         )
-        flat.write.mode("overwrite").parquet(path)
+
+    path = _ensure_snapshot("", build)
     docs = (
         spark.read.parquet(path)
         .groupBy("doc_id")
@@ -808,15 +806,11 @@ def q_kg_triples_oracle(spark, sf_dir):
     fused pipeline are materialized to parquet; Spark runs the engine's
     dedup_triples operator, DuckDB replays its groupBy semantics over the
     same bytes."""
-    import os
-
     from corenlp_spark.operators.graph import dedup_triples
     from corenlp_spark.plans.fused import extract_triples_fused
 
-    path = _ann_tokens_path() + "_triples"
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        t = extract_triples_fused(_golden_docs(spark))
-        t.write.mode("overwrite").parquet(path)
+    path = _ensure_snapshot(
+        "_triples", lambda: extract_triples_fused(_golden_docs(spark)))
     raw = spark.read.parquet(path)
     return (
         dedup_triples(raw)
@@ -923,17 +917,13 @@ def q_kg_coref_oracle(spark, sf_dir):
     CorefChain representative semantics) aggregated by Spark must equal
     DuckDB RECOMPUTING the selection from scratch via window ranking over
     the same materialized chains."""
-    import os
+    from corenlp_spark.operators.graph import coref_chains_rows
+    from corenlp_spark.plans.fused import annotate
 
-    path = _ann_tokens_path() + "_coref"
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        from corenlp_spark.operators.graph import coref_chains_rows
-        from corenlp_spark.plans.fused import annotate
-
-        ch = coref_chains_rows(annotate(_golden_docs(spark))).select(
-            "doc_id", "cluster_id", "sent_idx", "start_tok", "text",
-            "kind", "representative")
-        ch.write.mode("overwrite").parquet(path)
+    path = _ensure_snapshot("_coref", lambda: coref_chains_rows(
+        annotate(_golden_docs(spark))).select(
+        "doc_id", "cluster_id", "sent_idx", "start_tok", "text",
+        "kind", "representative"))
     ch = spark.read.parquet(path)
     per = ch.groupBy("doc_id", "cluster_id").agg(
         F.count("*").alias("n_mentions"),
@@ -1209,21 +1199,12 @@ def q_kg_kbp_ensemble(spark, sf_dir):
 
 
 def _kg_quote_docs(spark):
-    import pandas as pd
-
-    from corenlp_spark.data.synth import DOCS_SCHEMA
+    from corenlp_spark.data.synth import text_docs
 
     texts = ['"Stop right there," Jane said.',
              '"We will win," said John McCain.',
              'The sign "no entry" hung there.'] * 20
-    return spark.createDataFrame(
-        pd.DataFrame({
-            "doc_id": [f"q{i}" for i in range(len(texts))],
-            "spans": [[{"kind": "text", "text": t, "media_ref": None, "offset": 0}]
-                      for t in texts],
-        }),
-        schema=DOCS_SCHEMA,
-    )
+    return text_docs(spark, [f"q{i}" for i in range(len(texts))], texts)
 
 
 def _build_qdual(spark):
@@ -1309,18 +1290,9 @@ _QUOTE_POOL = [
 
 
 def _quote_pool_docs(spark):
-    import pandas as pd
+    from corenlp_spark.data.synth import text_docs
 
-    from corenlp_spark.data.synth import DOCS_SCHEMA
-
-    return spark.createDataFrame(
-        pd.DataFrame({
-            "doc_id": [f"qq{i}" for i in range(len(_QUOTE_POOL))],
-            "spans": [[{"kind": "text", "text": t, "media_ref": None, "offset": 0}]
-                      for t in _QUOTE_POOL],
-        }),
-        schema=DOCS_SCHEMA,
-    )
+    return text_docs(spark, [f"qq{i}" for i in range(len(_QUOTE_POOL))], _QUOTE_POOL)
 
 
 def q_kg_quotes_oracle(spark, sf_dir):
@@ -1332,26 +1304,18 @@ def q_kg_quotes_oracle(spark, sf_dir):
     DuckDB independently replays the span gloss (string_agg over interior
     tokens) and the attribution rule (speech-verb-gated nearest PERSON in
     the ±5-token edge windows) over the same bytes."""
-    import os
-
     from corenlp_spark.operators.aux_annotators import quote_docs
     from corenlp_spark.plans.fused import annotate
 
-    tpath = _ann_tokens_path() + "_qtoks"
-    spath = _ann_tokens_path() + "_qspans"
-    if not (os.path.exists(os.path.join(tpath, "_SUCCESS"))
-            and os.path.exists(os.path.join(spath, "_SUCCESS"))):
-        ann = annotate(_quote_pool_docs(spark), upto="ner")
-        flat = ann.select("doc_id", F.explode("tokens").alias("t")).select(
-            "doc_id", F.col("t.idx").alias("idx"), F.col("t.word").alias("word"),
-            F.col("t.lemma").alias("lemma"), F.col("t.ner").alias("ner"),
-        )
-        flat.write.mode("overwrite").parquet(tpath)
-        spans = quote_docs(ann).select(
-            "doc_id", F.explode("quotes").alias("q")
-        ).select("doc_id", F.col("q.start_tok").alias("start_tok"),
-                 F.col("q.end_tok").alias("end_tok"))
-        spans.write.mode("overwrite").parquet(spath)
+    ann = annotate(_quote_pool_docs(spark), upto="ner")
+    tpath = _ensure_snapshot("_qtoks", lambda: ann.select(
+        "doc_id", F.explode("tokens").alias("t")).select(
+        "doc_id", F.col("t.idx").alias("idx"), F.col("t.word").alias("word"),
+        F.col("t.lemma").alias("lemma"), F.col("t.ner").alias("ner")))
+    spath = _ensure_snapshot("_qspans", lambda: quote_docs(ann).select(
+        "doc_id", F.explode("quotes").alias("q")).select(
+        "doc_id", F.col("q.start_tok").alias("start_tok"),
+        F.col("q.end_tok").alias("end_tok")))
     docs = (
         spark.read.parquet(tpath)
         .groupBy("doc_id")
@@ -1418,25 +1382,13 @@ def q_kg_sentiment_oracle(spark, sf_dir):
     intensifier scaling, polarity/negation-window flip, threshold labels —
     over the same bytes. Any tokenizer/polarity drift vs the snapshot
     surfaces as a hash mismatch."""
-    import os
-
-    import pandas as pd
-
-    from corenlp_spark.data.synth import DOCS_SCHEMA
+    from corenlp_spark.data.synth import text_docs
     from corenlp_spark.operators.openie import natlog_docs
     from corenlp_spark.operators.sentiment import sentiment_docs
 
-    docs = spark.createDataFrame(
-        pd.DataFrame({
-            "doc_id": [f"sn{i:03d}" for i in range(len(_SENTIMENT_POOL))],
-            "spans": [[{"kind": "text", "text": t, "media_ref": None,
-                        "offset": 0}] for t in _SENTIMENT_POOL],
-        }),
-        schema=DOCS_SCHEMA,
-    )
-    path = _ann_tokens_path() + "_senttoks"
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        natlog_docs(docs).write.mode("overwrite").parquet(path)
+    docs = text_docs(spark, [f"sn{i:03d}" for i in range(len(_SENTIMENT_POOL))],
+                     _SENTIMENT_POOL)
+    _ensure_snapshot("_senttoks", lambda: natlog_docs(docs))
     return (
         sentiment_docs(docs)
         .select("doc_id", "sent_idx", "sentiment",

@@ -199,17 +199,8 @@ def annotate_text(spark, text: str,
     path above is the scale path)."""
     import json
 
-    import pandas as pd
+    from corenlp_spark.data.synth import text_docs
 
-    from corenlp_spark.data.synth import DOCS_SCHEMA
-
-    docs = spark.createDataFrame(
-        pd.DataFrame({
-            "doc_id": ["doc"],
-            "spans": [[{"kind": "text", "text": text,
-                        "media_ref": None, "offset": 0}]],
-        }),
-        schema=DOCS_SCHEMA,
-    )
+    docs = text_docs(spark, ["doc"], [text])
     pipe = Pipeline(annotators + ",depparse,coref")
     return json.loads(pipe.json(docs).first().json)

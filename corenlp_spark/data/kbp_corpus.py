@@ -15,10 +15,9 @@ supervised training set (``ie/KBPStatisticalExtractor.java:190-664``).
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
-from corenlp_spark.data.synth import DOCS_SCHEMA
+from corenlp_spark.data.synth import text_docs
 
 # (sentence, (subj, relation, obj)) — the gold file
 KBP_GOLD: list[tuple[str, tuple[str, str, str]]] = [
@@ -149,12 +148,7 @@ KBP_DISTRACTORS: list[str] = [
 def kbp_docs(spark: SparkSession, n_docs: int = 0) -> DataFrame:
     """One doc per gold/distractor sentence (deterministic)."""
     texts = [s for s, _ in KBP_GOLD] + KBP_DISTRACTORS
-    rows = pd.DataFrame({
-        "doc_id": [f"kbp-{i:04d}" for i in range(len(texts))],
-        "spans": [[{"kind": "text", "text": t, "media_ref": None, "offset": 0}]
-                  for t in texts],
-    })
-    return spark.createDataFrame(rows, schema=DOCS_SCHEMA)
+    return text_docs(spark, [f"kbp-{i:04d}" for i in range(len(texts))], texts)
 
 
 # ---------------------------------------------------------------------------

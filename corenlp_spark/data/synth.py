@@ -132,6 +132,18 @@ def _doc_spans(doc_id: str, skew_surface: bool) -> list[dict]:
     return spans
 
 
+def text_docs(spark: SparkSession, doc_ids, texts) -> DataFrame:
+    """One doc per (doc_id, text), each text a single text span."""
+    return spark.createDataFrame(
+        pd.DataFrame({
+            "doc_id": doc_ids,
+            "spans": [[{"kind": "text", "text": t, "media_ref": None, "offset": 0}]
+                      for t in texts],
+        }),
+        schema=DOCS_SCHEMA,
+    )
+
+
 def synth_docs(
     spark: SparkSession, n_docs: int, skew_surface: bool = True, parts: int | None = None
 ) -> DataFrame:

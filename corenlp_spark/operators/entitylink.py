@@ -6,7 +6,8 @@ Behavioral reference (re-expressed):
     117-144`` (timex value passthrough ``:125-133``, ordinal → numeric value).
   - At 10^12-doc scale the dictionary join is the canonical skew point
     (north rule): the dictionary side is **broadcast** (WikidictAnnotator
-    loads 21M entries in-JVM — the same idea), and the cross-doc
+    loads 21M entries in-JVM — the same idea) up to ``BROADCAST_MAX_ROWS``
+    rows and shuffle-hash-joined above it, and the cross-doc
     canonicalization group-by uses **two-phase salted aggregation** for head
     surface forms ("Obama" in 30% of docs in the synthetic skew fixture).
   - fuzzy candidate generation (our extension, north-star requirement):
@@ -58,6 +59,8 @@ DEFAULT_ALIASES: list[tuple[str, str, float]] = [
 ]
 
 SCORE_THRESHOLD = 0.5
+#: dictionaries up to this many rows are broadcast; larger ones shuffle
+BROADCAST_MAX_ROWS = 5_000_000
 
 
 def alias_dict(spark: SparkSession, aliases=None) -> DataFrame:
@@ -71,55 +74,32 @@ def link_mentions(mentions: DataFrame, aliases: DataFrame) -> DataFrame:
     → + link column.
 
     DATE/TIME → normalized timex value; ORDINAL/NUMBER/MONEY → normalized
-    value; else broadcast caseless dictionary join gated by score threshold
+    value; else caseless dictionary join gated by score threshold
     (WikidictAnnotator.java:117-144 decision order).
-    """
-    dict_ok = aliases.filter(F.col("score") >= SCORE_THRESHOLD)
-    out = (
-        mentions.withColumn("surface", F.lower("text"))
-        .join(F.broadcast(dict_ok), "surface", "left")
-        .withColumn(
-            "link",
-            F.when(F.col("ner").isin("DATE", "TIME", "NUMBER", "ORDINAL", "MONEY"),
-                   F.col("nner"))
-            .otherwise(F.col("link")),
-        )
-        .drop("surface", "score")
-    )
-    return out
 
+    The join is picked from the dictionary's size. The reference loads its
+    full 21M-entry wikidict in-JVM (``WikidictAnnotator.java:31-58``) — the
+    single-node analog of a broadcast — which stops working once the
+    dictionary outgrows executor memory (the real wikidict TSV is ~2 GB; a
+    multilingual or entity-embedding dict is 10-100×). So:
 
-def link_mentions_scaled(mentions: DataFrame, aliases: DataFrame,
-                         strategy: str = "auto",
-                         broadcast_max_rows: int = 5_000_000) -> DataFrame:
-    """``link_mentions`` with a size-aware join strategy for wikidict-scale
-    dictionaries.
-
-    The reference loads its full 21M-entry wikidict in-JVM
-    (``WikidictAnnotator.java:31-58``) — the single-node analog of a
-    broadcast. That stops working once the dictionary outgrows executor
-    memory (the real wikidict TSV is ~2 GB; a multilingual or
-    entity-embedding dict is 10-100×). Strategy:
-
-    - ``broadcast``: dict fans out to every executor — zero shuffle on the
-      (huge) mentions side. Right below ~a few hundred MB.
-    - ``shuffle``: SHUFFLE_HASH-hinted equi-join on the surface key — the
+    - up to ``BROADCAST_MAX_ROWS`` rows the dictionary is broadcast-hinted:
+      it fans out to every executor, zero shuffle on the (huge) mentions
+      side. The hint is needed: a ``createDataFrame`` dictionary carries no
+      size estimate, and without it Spark plans a sort-merge join;
+    - above it, a SHUFFLE_HASH-hinted equi-join on the surface key: the
       mentions side shuffles once on ``surface``, the dict side builds the
-      per-partition hash map. No sort (vs sort-merge), no driver collect;
-      this is the 100 TB path. Skewed head surfaces ("obama") hit AQE skew
-      split; the downstream salted canonicalization absorbs the rest.
-    - ``auto``: dict row count ≤ ``broadcast_max_rows`` → broadcast, else
-      shuffle. The count is one cheap column-pruned scan of the dict.
+      per-partition hash map. No sort, no driver collect; this is the
+      100 TB path. Skewed head surfaces ("obama") hit AQE skew split; the
+      downstream salted canonicalization absorbs the rest.
 
-    Identical output to ``link_mentions`` by construction (tests assert it).
+    The row count is one cheap column-pruned, limit-bounded scan of the
+    dictionary. Both joins give the same rows (tests assert it).
     """
-    if strategy == "auto":
-        strategy = ("broadcast"
-                    if aliases.select("surface").limit(broadcast_max_rows + 1)
-                    .count() <= broadcast_max_rows else "shuffle")
-    if strategy == "broadcast":
-        return link_mentions(mentions, aliases)
-    dict_ok = aliases.filter(F.col("score") >= SCORE_THRESHOLD).hint("shuffle_hash")
+    small = (aliases.select("surface").limit(BROADCAST_MAX_ROWS + 1).count()
+             <= BROADCAST_MAX_ROWS)
+    dict_ok = aliases.filter(F.col("score") >= SCORE_THRESHOLD)
+    dict_ok = F.broadcast(dict_ok) if small else dict_ok.hint("shuffle_hash")
     return (
         mentions.withColumn("surface", F.lower("text"))
         .join(dict_ok, "surface", "left")

@@ -1,19 +1,19 @@
-"""Graph materialization: canonicalized triples + entities tables.
+"""Graph materialization: the serving-layer views over extracted triples.
 
 Behavioral reference (re-expressed):
-  - coref canonicalization of triple arguments (replace pronoun subjects with
-    the representative mention of their chain): ``naturalli/OpenIE.java:393-437,
-    510-553``;
   - triple dedup keeps the max-confidence distinct triple
     (``naturalli/OpenIE.annotate`` semantics, SURVEY.md §2.4);
   - output tables = the engine's serving layer (the analog of the protobuf
     sink ``pipeline/ProtobufAnnotationSerializer.java``): ``triples`` and
     ``entities``.
 
-Spark shape: one join against the exploded coref chains (doc-partitioned,
-narrow-ish — same key as the docs partitioning), then a global
-``groupBy(subj, pred, obj)`` dedup, the pipeline's only unavoidable wide
-shuffle; AQE coalesces/splits it.
+Pronoun subjects arrive already canonicalized (``naturalli/OpenIE.java:393-437,
+510-553``): both triple paths rewrite them in-process
+(``fused.pronoun_reps``), so no join against the coref chains is planned.
+``coref_chains_rows`` explodes the chains for the coref oracles.
+
+Spark shape: one global ``groupBy(subj, pred, obj)`` dedup, the pipeline's
+only unavoidable wide shuffle; AQE coalesces/splits it.
 """
 
 from __future__ import annotations
@@ -34,45 +34,6 @@ def coref_chains_rows(df: DataFrame) -> DataFrame:
         F.col("m.kind").alias("kind"),
         F.col("m.representative").alias("representative"),
     )
-
-
-def canonicalize_triples(triples: DataFrame, chains: DataFrame) -> DataFrame:
-    """Replace pronoun subjects with their chain's representative mention."""
-    pron = chains.filter(F.col("kind") == "pronoun").select(
-        F.col("doc_id").alias("p_doc"), F.col("cluster_id").alias("p_cluster"),
-        F.col("sent_idx").alias("p_sent"),
-        F.col("start_tok").alias("p_start"), F.col("end_tok").alias("p_end"),
-    )
-    rep = chains.filter(F.col("representative")).select(
-        F.col("doc_id").alias("r_doc"), F.col("cluster_id").alias("r_cluster"),
-        F.col("text").alias("rep_text"), F.col("kind").alias("rep_kind"),
-    )
-    joined = (
-        triples.join(
-            pron,
-            (triples.doc_id == pron.p_doc) & (triples.sent_idx == pron.p_sent)
-            & (triples.subj_head >= pron.p_start) & (triples.subj_head < pron.p_end),
-            "left",
-        )
-        .join(
-            rep,
-            (F.col("p_doc") == rep.r_doc) & (F.col("p_cluster") == rep.r_cluster),
-            "left",
-        )
-        .withColumn(
-            "subj_canonical",
-            F.when(
-                F.col("rep_text").isNotNull() & (F.col("rep_kind") != "pronoun"),
-                F.col("rep_text"),
-            ).otherwise(F.col("subj")),
-        )
-        .select(
-            "doc_id", "sent_idx",
-            F.col("subj_canonical").alias("subj"),
-            "pred", "obj", "confidence", "subj_head", "obj_head",
-        )
-    )
-    return joined
 
 
 def dedup_triples(triples: DataFrame) -> DataFrame:

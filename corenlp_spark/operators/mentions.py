@@ -3,22 +3,18 @@
 Behavioral reference: ``pipeline/EntityMentionsAnnotator.java:257-352`` via
 ``pipeline/LabeledChunkIdentifier.java`` (BIO-style run chunking).
 
-Two implementations with identical semantics (tests assert equality):
-
-  - ``mention_rows`` (DEFAULT): chunk inside the same Arrow pass that holds
-    the tokens — narrow, ZERO shuffle. Chunking is doc-local, so exploding
-    every token and windowing over (doc_id, sent) would be the largest
-    shuffle in the system at 100 TB for no reason (VERDICT r1 #5).
-  - ``mention_rows_sql``: the pure-SQL window variant (posexplode + lag →
-    run ids → groupBy), kept as the engine-independent oracle twin — DuckDB
-    replays the same algebra over materialized annotations
-    (``kg_mentions_oracle`` in __spark_entry__.py).
+``mention_rows`` chunks inside the same Arrow pass that holds the tokens —
+narrow, ZERO shuffle. Chunking is doc-local, so exploding every token and
+windowing over (doc_id, sent) would be the largest shuffle in the system at
+100 TB for no reason (VERDICT r1 #5). The window form of the same algebra
+lives on as references outside the package: DuckDB replays it over
+materialized annotations (``kg_mentions_oracle`` in __spark_entry__.py), and
+``tests/test_plans.py`` pins ``mention_rows`` to a Spark SQL copy.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 MENTIONS_SCHEMA = ("doc_id string, sent_idx int, ner string, start_tok int, "
                    "end_tok int, nner string, text string")
@@ -70,40 +66,3 @@ def mention_rows(df: DataFrame) -> DataFrame:
             yield pd.DataFrame(rows)
 
     return df.mapInPandas(run, schema=MENTIONS_SCHEMA)
-
-
-def mention_rows_sql(df: DataFrame) -> DataFrame:
-    """SQL-window twin of ``mention_rows`` (oracle/verification path)."""
-    tok = (
-        df.select("doc_id", F.posexplode("tokens").alias("p", "t"))
-        .select(
-            "doc_id",
-            F.col("t.idx").alias("idx"),
-            F.col("t.sent").alias("sent_idx"),
-            F.col("t.word").alias("word"),
-            F.col("t.ner").alias("ner"),
-            F.col("t.nner").alias("nner"),
-        )
-    )
-    w = Window.partitionBy("doc_id", "sent_idx").orderBy("idx")
-    runs = (
-        tok.withColumn("prev_ner", F.lag("ner").over(w))
-        .withColumn(
-            "chg",
-            (F.col("prev_ner").isNull() | (F.col("prev_ner") != F.col("ner"))).cast("int"),
-        )
-        .withColumn("run_id", F.sum("chg").over(w.rowsBetween(Window.unboundedPreceding, 0)))
-    )
-    return (
-        runs.filter(F.col("ner") != "O")
-        .groupBy("doc_id", "sent_idx", "run_id", "ner")
-        .agg(
-            F.min("idx").alias("start_tok"),
-            (F.max("idx") + 1).alias("end_tok"),
-            # collect_list has no intra-group order guarantee → sort by idx
-            F.array_sort(F.collect_list(F.struct("idx", "word"))).alias("_ws"),
-            F.max("nner").alias("nner"),
-        )
-        .withColumn("text", F.concat_ws(" ", F.transform("_ws", lambda s: s["word"])))
-        .drop("run_id", "_ws")
-    )

@@ -454,20 +454,31 @@ def extract_sentence(g: SentenceGraph) -> list[tuple[str, str, str, float, int, 
 
 
 def openie_docs(df: DataFrame) -> DataFrame:
-    """annotated docs(+tokens, sentences, deps) → triples table (exploded),
-    without pronoun canonicalization."""
-    from corenlp_spark.plans.fused import doc_triples
+    """annotated docs(doc_id, tokens, sentences, deps[, coref]) → triples
+    table (exploded). When the frame carries a ``coref`` column, pronoun
+    subjects are rewritten to their chain's representative in the same pass
+    (``fused.pronoun_reps``, as in ``extract_triples_fused``); a doc whose
+    coref is NULL keeps its triples as extracted. Only the columns read
+    cross Arrow."""
+    from corenlp_spark.plans.fused import doc_triples, pronoun_reps
+
+    cols = ["doc_id", "tokens", "sentences", "deps"]
+    if "coref" in df.columns:
+        cols.append("coref")
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
-            for doc_id, toks, sents, deps in zip(
-                pdf["doc_id"], pdf["tokens"], pdf["sentences"], pdf["deps"]
+            corefs = pdf["coref"] if "coref" in pdf else [None] * len(pdf)
+            for doc_id, toks, sents, deps, coref in zip(
+                pdf["doc_id"], pdf["tokens"], pdf["sentences"], pdf["deps"], corefs
             ):
-                rows.extend((doc_id, *t) for t in doc_triples(toks, sents, deps))
+                rep_of = pronoun_reps(coref) if coref is not None else None
+                rows.extend((doc_id, *t)
+                            for t in doc_triples(toks, sents, deps, rep_of))
             yield pd.DataFrame(rows, columns=TRIPLE_COLUMNS)
 
-    return df.mapInPandas(run, schema=TRIPLES_SCHEMA)
+    return df.select(*cols).mapInPandas(run, schema=TRIPLES_SCHEMA)
 
 
 POLARITY_SCHEMA = "doc_id string, sent_idx int, tok_idx int, word string, polarity string"

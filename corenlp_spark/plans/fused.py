@@ -203,9 +203,9 @@ def extract_triples_fused(df: DataFrame, canonicalize: bool = True) -> DataFrame
     """docs → triples in ONE pass: no nested columns ever cross Arrow.
 
     With ``canonicalize``, pronoun subjects are rewritten to their coref
-    representative in-process, so the output equals the
-    ``canonicalize_triples(openie, coref)`` join, minus the shuffle; without
-    it the coref kernel is skipped."""
+    representative in-process, so the output equals ``openie_docs`` over
+    ``annotate(df)`` without the nested columns crossing Arrow; without it
+    the coref kernel is skipped."""
     upto = "coref" if canonicalize else "depparse"
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

@@ -5,7 +5,8 @@ metrics per checkpoint.
 Behavioral reference (re-expressed):
   - serialization checkpoints: ``pipeline/ProtobufAnnotationSerializer.java``
     — here table writes (parquet) of the fused annotation output and of the
-    raw triples, which make the pipeline resumable;
+    per-sentence triples (pronoun subjects already canonicalized by
+    ``openie_docs``), which make the pipeline resumable;
   - per-stage timing/metrics: ``pipeline/AnnotationPipeline.java:66-83`` —
     here a lineage table of per-partition row counts per checkpoint.
 
@@ -67,11 +68,12 @@ class CheckpointedPipeline:
         return out
 
     def run(self, docs: DataFrame) -> DataFrame:
-        """docs → annotated docs → triples, checkpointing both; resumes from
-        the furthest complete checkpoint. The checkpoint name is
-        'triples_raw' so downstream jobs can write their deduped or
-        canonicalized KG to '<root>/triples' without colliding with the
-        checkpoint they are lazily reading from."""
+        """docs → annotated docs → canonical triples, checkpointing both;
+        resumes from the furthest complete checkpoint. The triples are
+        pronoun-canonicalized but not deduped; the checkpoint name is
+        'triples_raw' so downstream jobs can write their deduped KG to
+        '<root>/triples' without colliding with the checkpoint they are
+        lazily reading from."""
         if self._done("triples_raw"):
             return self.spark.read.parquet(self._path("triples_raw"))
         if self._done("annotated"):

@@ -31,19 +31,10 @@ _FORMATS = ("json", "conll", "conllu", "tsv", "text", "xml")
 
 def _render(spark, text: str, annotators: str, fmt: str) -> tuple[str, str]:
     """Annotate one text and render it → (content_type, body)."""
-    import pandas as pd
-
     from corenlp_spark.api import Pipeline
-    from corenlp_spark.data.synth import DOCS_SCHEMA
+    from corenlp_spark.data.synth import text_docs
 
-    docs = spark.createDataFrame(
-        pd.DataFrame({
-            "doc_id": ["doc"],
-            "spans": [[{"kind": "text", "text": text,
-                        "media_ref": None, "offset": 0}]],
-        }),
-        schema=DOCS_SCHEMA,
-    )
+    docs = text_docs(spark, ["doc"], [text])
     pipe = Pipeline(annotators + ",depparse,coref")
     if fmt == "json":
         return "application/json", pipe.json(docs).first().json

@@ -43,9 +43,7 @@ def main() -> None:
     from corenlp_spark.operators.entitylink import (
         alias_dict, canonical_entities, link_mentions,
     )
-    from corenlp_spark.operators.graph import (
-        canonicalize_triples, coref_chains_rows, dedup_triples, partition_metrics,
-    )
+    from corenlp_spark.operators.graph import dedup_triples, partition_metrics
     from corenlp_spark.operators.mentions import mention_rows
     from corenlp_spark.operators.openie import openie_docs
     from corenlp_spark.plans.fused import annotate
@@ -66,7 +64,8 @@ def main() -> None:
         docs = docs.repartition(args.partitions, "doc_id")
 
     os.makedirs(args.output, exist_ok=True)
-    # one annotation pass feeds both the triple and the entity path
+    # one annotation pass feeds both the triple and the entity path;
+    # openie_docs canonicalizes pronoun subjects from the annotated coref
     if args.checkpointed:
         pipe = CheckpointedPipeline(spark, args.output, partitions=args.partitions)
         triples = pipe.run(docs)
@@ -75,7 +74,6 @@ def main() -> None:
         annotate(docs).write.mode("overwrite").parquet(f"{args.output}/annotated")
         ann = spark.read.parquet(f"{args.output}/annotated")
         triples = openie_docs(ann)
-    triples = canonicalize_triples(triples, coref_chains_rows(ann))
 
     kg = dedup_triples(triples)
     kg.write.mode("overwrite").parquet(f"{args.output}/triples")

@@ -1,32 +1,20 @@
-"""The fused triples pass must equal OpenIE over the annotated docs plus the
-SQL pronoun canonicalization join, and stay one narrow stage."""
+"""The fused triples pass must equal OpenIE over the annotated docs (which
+canonicalizes pronoun subjects from the coref column), and stay one narrow
+stage."""
 
-from pyspark.sql import functions as F
+from collections import Counter
 
+from corenlp_spark.data.kbp_corpus import kbp_docs
 from corenlp_spark.data.synth import synth_docs
-from corenlp_spark.operators.graph import (
-    canonicalize_triples, coref_chains_rows,
-)
 from corenlp_spark.operators.openie import openie_docs
 from corenlp_spark.plans.fused import annotate, extract_triples_fused
 
 
-def _keys(df):
-    return {
-        r[0]
-        for r in df.select(
-            F.concat_ws("|", "doc_id", F.col("sent_idx").cast("string"),
-                        F.lower("subj"), F.lower("pred"), F.lower("obj"))
-        ).collect()
-    }
-
-
 def test_fused_triples_equal_staged(spark):
-    docs = synth_docs(spark, 100)
-    ann = annotate(docs)
-    staged = canonicalize_triples(openie_docs(ann), coref_chains_rows(ann))
-    fused = extract_triples_fused(docs)
-    assert _keys(staged) == _keys(fused)
+    docs = synth_docs(spark, 200).unionByName(kbp_docs(spark))
+    staged = Counter(tuple(r) for r in openie_docs(annotate(docs)).collect())
+    fused = Counter(tuple(r) for r in extract_triples_fused(docs).collect())
+    assert staged == fused
 
 
 def test_fused_is_single_narrow_stage(spark):

@@ -5,17 +5,15 @@ import os
 
 from pyspark.sql import functions as F
 
-from corenlp_spark.data.synth import synth_docs
+from corenlp_spark.data.synth import synth_docs, text_docs
 from corenlp_spark.operators.entitylink import (
     alias_dict, canonical_entities, link_mentions, minhash_candidates,
 )
-from corenlp_spark.operators.graph import (
-    canonicalize_triples, coref_chains_rows, dedup_triples,
-)
+from corenlp_spark.operators.graph import dedup_triples
 from corenlp_spark.operators.kbp import kbp_tokensregex_relations
 from corenlp_spark.operators.mentions import mention_rows
 from corenlp_spark.operators.openie import openie_docs
-from corenlp_spark.plans.fused import annotate
+from corenlp_spark.plans.fused import annotate, pronoun_reps
 from corenlp_spark.plans.pipeline import CheckpointedPipeline
 
 N = 80
@@ -78,9 +76,8 @@ def test_kbp_relations(spark):
 
 def test_pronoun_canonicalization(spark):
     ann = annotate(synth_docs(spark, N), upto="coref")
-    t = openie_docs(ann)
-    chains = coref_chains_rows(ann)
-    canon = canonicalize_triples(t, chains)
+    t = openie_docs(ann.drop("coref"))
+    canon = openie_docs(ann)
     # "He was president." after "Barack Obama was born in Hawaii." must
     # produce a (Barack Obama, was, president)-style canonical subject:
     # strictly fewer pronoun-subject rows after canonicalization
@@ -92,24 +89,50 @@ def test_pronoun_canonicalization(spark):
 
 
 def test_pronoun_canonicalization_single_doc(spark):
-    import pandas as pd
-
-    from corenlp_spark.data.synth import DOCS_SCHEMA
-
-    docs = spark.createDataFrame(
-        pd.DataFrame({
-            "doc_id": ["d1"],
-            "spans": [[{"kind": "text",
-                        "text": "Barack Obama was born in Hawaii. He was president.",
-                        "media_ref": None, "offset": 0}]],
-        }),
-        schema=DOCS_SCHEMA,
-    )
+    docs = text_docs(spark, ["d1"],
+                     ["Barack Obama was born in Hawaii. He was president."])
     ann = annotate(docs, upto="coref")
-    canon = canonicalize_triples(openie_docs(ann), coref_chains_rows(ann))
-    got = {(r.subj, r.pred, r.obj) for r in canon.collect()}
+    got = {(r.subj, r.pred, r.obj) for r in openie_docs(ann).collect()}
     assert ("Barack Obama", "was", "president") in got
     assert ("Barack Obama", "was born in", "Hawaii") in got
+
+
+def test_pronoun_canonicalization_null_coref(spark):
+    """A NULL coref value means no rewrite for that doc: its triples are the
+    uncanonicalized ones, and every other doc's rows are unchanged."""
+    texts = ["Barack Obama was born in Hawaii. He was president.",
+             "Marie Curie was born in Paris. She won the Nobel Prize.",
+             "IBM is headquartered in Armonk."]
+    ann = annotate(text_docs(spark, ["d0", "d1", "d2"], texts)).cache()
+    null_doc = "d0"
+    # the NULL-coref doc is one the rewrite would change
+    assert pronoun_reps(ann.filter(F.col("doc_id") == null_doc).first()["coref"])
+    broken = ann.withColumn(
+        "coref", F.when(F.col("doc_id") == null_doc, F.lit(None))
+        .otherwise(F.col("coref")))
+    rows = lambda df, keep: sorted(tuple(r) for r in df.collect() if keep(r[0]))
+    got = openie_docs(broken)
+    assert rows(got, lambda d: d == null_doc) \
+        == rows(openie_docs(ann.drop("coref")), lambda d: d == null_doc)
+    assert rows(got, lambda d: d != null_doc) \
+        == rows(openie_docs(ann), lambda d: d != null_doc)
+    assert ("He", "was", "president") in \
+        {(r.subj, r.pred, r.obj) for r in got.filter(F.col("doc_id") == null_doc).collect()}
+    ann.unpersist()
+
+
+def test_openie_docs_plans_no_join_or_exchange(spark, tmp_path):
+    """Canonicalization happens inside the OpenIE pass: over a read-back
+    annotated table the plan has no join and no shuffle, and the scan reads
+    only the columns the pass uses (no spans)."""
+    path = str(tmp_path / "annotated")
+    annotate(synth_docs(spark, 5)).write.parquet(path)
+    p = openie_docs(spark.read.parquet(path))._jdf.queryExecution() \
+        .executedPlan().toString()
+    assert "Join" not in p and "Exchange" not in p
+    scanned = {c.split("#")[0]
+               for c in p.split("FileScan parquet [")[1].split("]")[0].split(",")}
+    assert scanned == {"doc_id", "tokens", "sentences", "deps", "coref"}, p
 
 
 def test_dedup_triples(spark):

@@ -47,12 +47,51 @@ def test_kg_pipeline_is_shuffle_free(spark):
     assert "Exchange" not in plan_of(extract_triples_fused(synth_docs(spark, 5)))
 
 
+def mention_rows_sql(df):
+    """SQL-window reference for ``mention_rows``: posexplode + lag → run ids
+    → groupBy (LabeledChunkIdentifier as window algebra)."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    tok = (
+        df.select("doc_id", F.posexplode("tokens").alias("p", "t"))
+        .select(
+            "doc_id",
+            F.col("t.idx").alias("idx"),
+            F.col("t.sent").alias("sent_idx"),
+            F.col("t.word").alias("word"),
+            F.col("t.ner").alias("ner"),
+            F.col("t.nner").alias("nner"),
+        )
+    )
+    w = Window.partitionBy("doc_id", "sent_idx").orderBy("idx")
+    runs = (
+        tok.withColumn("prev_ner", F.lag("ner").over(w))
+        .withColumn(
+            "chg",
+            (F.col("prev_ner").isNull() | (F.col("prev_ner") != F.col("ner"))).cast("int"),
+        )
+        .withColumn("run_id", F.sum("chg").over(w.rowsBetween(Window.unboundedPreceding, 0)))
+    )
+    return (
+        runs.filter(F.col("ner") != "O")
+        .groupBy("doc_id", "sent_idx", "run_id", "ner")
+        .agg(
+            F.min("idx").alias("start_tok"),
+            (F.max("idx") + 1).alias("end_tok"),
+            # collect_list has no intra-group order guarantee → sort by idx
+            F.array_sort(F.collect_list(F.struct("idx", "word"))).alias("_ws"),
+            F.max("nner").alias("nner"),
+        )
+        .withColumn("text", F.concat_ws(" ", F.transform("_ws", lambda s: s["word"])))
+        .drop("run_id", "_ws")
+    )
+
+
 def test_mention_rows_is_shuffle_free_and_matches_sql_twin(spark):
     """Mention chunking is doc-local: the default path must not explode +
-    window-shuffle the token table (VERDICT r1 #5). The SQL twin stays as
-    the oracle and must agree row-for-row."""
-    from corenlp_spark.operators.mentions import mention_rows, mention_rows_sql
-
+    window-shuffle the token table (VERDICT r1 #5). The SQL window
+    reference above must agree row-for-row."""
     ann = annotate(synth_docs(spark, 30))
     fused = mention_rows(ann)
     assert "Exchange" not in plan_of(fused)
@@ -90,15 +129,13 @@ def test_ivf_verify_is_bucket_local(spark):
     assert p.count("Exchange hashpartitioning") == 1, p
 
 
-def test_scaled_dict_link_shuffle_path(spark):
-    """wikidict-scale linking: the shuffle path must (a) produce the exact
-    broadcast-path output and (b) plan a ShuffledHashJoin, never a
-    broadcast of the dictionary."""
+def test_scaled_dict_link_shuffle_path(spark, monkeypatch):
+    """wikidict-scale linking: above ``BROADCAST_MAX_ROWS`` the dictionary
+    join must (a) produce the exact broadcast-path output and (b) plan a
+    ShuffledHashJoin, never a broadcast of the dictionary."""
     from pyspark.sql import functions as F
 
-    from corenlp_spark.operators.entitylink import (
-        DEFAULT_ALIASES, link_mentions_scaled,
-    )
+    from corenlp_spark.operators import entitylink
 
     # synthetic 120k-surface dictionary + the real aliases
     big = spark.range(120_000).select(
@@ -108,16 +145,14 @@ def test_scaled_dict_link_shuffle_path(spark):
     ).unionByName(alias_dict(spark))
     m = mention_rows(annotate(synth_docs(spark, 60), upto="ner"))
 
-    shuf = link_mentions_scaled(m, big, strategy="shuffle")
-    p = plan_of(shuf)
-    assert "ShuffledHashJoin" in p
     bcast = link_mentions(m, big)
+    assert "BroadcastHashJoin" in plan_of(bcast)
+    monkeypatch.setattr(entitylink, "BROADCAST_MAX_ROWS", 1000)
+    shuf = link_mentions(m, big)
+    p = plan_of(shuf)
+    assert "ShuffledHashJoin" in p and "BroadcastHashJoin" not in p
     key = lambda r: (r.doc_id, r.sent_idx, r.start_tok, r.end_tok, r.link)
     assert sorted(map(key, shuf.collect())) == sorted(map(key, bcast.collect()))
-
-    # auto picks shuffle above the row threshold
-    auto = link_mentions_scaled(m, big, strategy="auto", broadcast_max_rows=1000)
-    assert "ShuffledHashJoin" in plan_of(auto)
 
 
 def test_bucketed_join_is_exchange_free(spark, tmp_path):
