@@ -3,11 +3,12 @@
 ``entry(spark)`` — flagship KG-construction run at sf0.001.
 ``queries()`` — one entry per implemented operator (SURVEY.md §2 + the
 training-data ops); each callable takes (spark, sf_dir).
-``oracle_sql()`` — DuckDB-equivalent SQL for every SQL-expressible query
+``oracle_sql()`` — DuckDB-equivalent SQL for every query, same keys
 (md5-based hashing + explicit rounding keep both engines bit-identical).
-KG-pipeline queries (tokenize→…→openie) are genuinely non-SQL-expressible
-and carry rows-only checks; their correctness gate is the golden-fixture
-pytest suite (tests/test_openie_golden.py, P/R ≥ 0.95).
+The KG-pipeline engine (tokenize→…→openie) is not SQL-expressible, so a KG
+query's oracle replays the downstream algebra over a snapshot of the
+engine's output (see _ensure_snapshot); extraction quality itself is gated
+by the golden-fixture suite (tests/test_openie_golden.py, P/R ≥ 0.95).
 """
 
 from __future__ import annotations
@@ -562,9 +563,10 @@ def q_dedup_simhash(spark, sf_dir):
     )
 
 
-def _simhash_oracle() -> str:
-    """DuckDB twin of functions/dedup.simhash: 60 per-bit majority votes
-    over md5-derived token hashes, generated as literal SQL."""
+def _simhash_ctes(source: str) -> str:
+    """The t/h/bits/sim CTEs: DuckDB twin of functions/dedup.simhash over
+    ``source``'s (doc_id, text) rows — 60 per-bit majority votes over
+    md5-derived token hashes, generated as literal SQL."""
     bit_sums = ", ".join(
         f"sum(CASE WHEN (h >> {b}) & 1 = 1 THEN 1 ELSE -1 END) AS b{b}"
         for b in range(60)
@@ -573,16 +575,21 @@ def _simhash_oracle() -> str:
         f"(CASE WHEN b{b} > 0 THEN CAST({2 ** b} AS BIGINT) ELSE 0 END)"
         for b in range(60)
     )
-    return f"""
-        WITH t AS (
+    return f"""t AS (
           SELECT doc_id, unnest(list_distinct({_TOKENS})) AS tok
-          FROM documents),
+          FROM {source}),
         h AS (
           SELECT doc_id,
                  CAST(('0x' || substr(md5(tok), 1, 15)) AS BIGINT) AS h
           FROM t),
         bits AS (SELECT doc_id, {bit_sums} FROM h GROUP BY doc_id),
-        sim AS (SELECT doc_id, {sim} AS simhash FROM bits),
+        sim AS (SELECT doc_id, {sim} AS simhash FROM bits)"""
+
+
+def _simhash_oracle() -> str:
+    """Per-16-bit-prefix bucket stats over the documents' simhashes."""
+    return f"""
+        WITH {_simhash_ctes("documents")},
         b AS (SELECT doc_id, simhash, simhash >> 44 AS bucket FROM sim)
         SELECT bucket, count(*) AS n_docs,
                count(DISTINCT simhash) AS n_distinct
@@ -628,28 +635,12 @@ def q_dedup_simhash_pairs(spark, sf_dir):
 def _simhash_pairs_oracle() -> str:
     """All-pairs hamming-≤3 oracle over the same simhash signatures: the
     ground truth the multi-table bucketing must fully recall."""
-    bit_sums = ", ".join(
-        f"sum(CASE WHEN (h >> {b}) & 1 = 1 THEN 1 ELSE -1 END) AS b{b}"
-        for b in range(60)
-    )
-    sim = " + ".join(
-        f"(CASE WHEN b{b} > 0 THEN CAST({2 ** b} AS BIGINT) ELSE 0 END)"
-        for b in range(60)
-    )
     probes = ", ".join(f"('{i}', '{t}')" for i, t in _NEAR_DUP_PROBES)
     return f"""
         WITH input AS (
           SELECT CAST(doc_id AS VARCHAR) AS doc_id, text FROM documents
           UNION ALL SELECT * FROM (VALUES {probes}) v(doc_id, text)),
-        t AS (
-          SELECT doc_id, unnest(list_distinct({_TOKENS})) AS tok
-          FROM input),
-        h AS (
-          SELECT doc_id,
-                 CAST(('0x' || substr(md5(tok), 1, 15)) AS BIGINT) AS h
-          FROM t),
-        bits AS (SELECT doc_id, {bit_sums} FROM h GROUP BY doc_id),
-        sim AS (SELECT doc_id, {sim} AS simhash FROM bits)
+        {_simhash_ctes("input")}
         SELECT x.doc_id AS doc_a, y.doc_id AS doc_b,
                bit_count(xor(x.simhash, y.simhash)) AS hamming
         FROM sim x JOIN sim y ON x.doc_id < y.doc_id
@@ -666,443 +657,6 @@ def q_dedup_ngram_jaccard(spark, sf_dir):
         F.col("doc_id").cast("long").alias("doc_id"), "text"
     )
     return ngram_jaccard_pairs(d, k=5, threshold=0.8).orderBy("doc_a", "doc_b")
-
-
-# --------------------------------------------------------------------------
-# queries — KG pipeline (non-SQL-expressible → rows-only driver check;
-# value-level correctness gated by tests/test_openie_golden.py)
-# --------------------------------------------------------------------------
-
-def _golden_docs(spark, n=300):
-    from corenlp_spark.data.synth import synth_docs
-
-    return synth_docs(spark, n)
-
-
-def _ensure_snapshot(suffix: str, build) -> str:
-    """Materialize ``build()`` once under the weights-keyed snapshot path
-    (see _ann_tokens_path) and return the parquet path. This is the
-    materialized-annotation oracle pattern (VERDICT r3 #2): the engine's
-    output is snapshotted once; the LIVE Spark query re-runs the engine
-    from raw docs while DuckDB replays the downstream algebra over the
-    snapshot bytes — a hash mismatch means either cross-run
-    non-determinism or an algebra divergence."""
-    import os
-
-    path = _ann_tokens_path() + suffix
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        build().write.mode("overwrite").parquet(path)
-    return path
-
-
-def q_kg_triples(spark, sf_dir):
-    """LIVE end-to-end extraction (no coref canonicalization) + the dedup
-    serving algebra, hash-checked against a DuckDB replay of the dedup over
-    the snapshotted raw triples (materialized-oracle pattern)."""
-    from corenlp_spark.operators.graph import dedup_triples
-    from corenlp_spark.plans.fused import extract_triples_fused
-
-    _ensure_snapshot("_triples_nc", lambda: extract_triples_fused(
-        _golden_docs(spark), canonicalize=False))
-    t = extract_triples_fused(_golden_docs(spark), canonicalize=False)
-    return (
-        dedup_triples(t)
-        .select("subj", "pred", "obj",
-                F.round("confidence", 6).alias("confidence"),
-                F.col("support").cast("long").alias("support"),
-                F.col("n_docs").cast("long").alias("n_docs"))
-        .orderBy("subj", "pred", "obj")
-    )
-
-
-def _build_mention_snapshot(spark):
-    from corenlp_spark.operators.mentions import mention_rows
-    from corenlp_spark.plans.fused import annotate
-
-    return mention_rows(annotate(_golden_docs(spark))).select(
-        "doc_id", "sent_idx", "ner",
-        F.coalesce(F.col("nner"), F.lit("")).alias("nner"), "text")
-
-
-def q_kg_mentions(spark, sf_dir):
-    """LIVE NER + mention chunking (the kernel cut at NER), hash-checked
-    against a DuckDB aggregation over the snapshotted mention rows (a cut
-    skips only later kernels, so the live run must reproduce the
-    full-annotation snapshot exactly)."""
-    from corenlp_spark.operators.mentions import mention_rows
-    from corenlp_spark.plans.fused import annotate
-
-    _ensure_snapshot("_mentions", lambda: _build_mention_snapshot(spark))
-    m = mention_rows(annotate(_golden_docs(spark), upto="ner"))
-    return (
-        m.groupBy("ner", "text").agg(F.count("*").alias("n"))
-        .orderBy("ner", "text")
-    )
-
-
-def _ann_tokens_path() -> str:
-    """Deterministic path for materialized golden-doc annotations, keyed on
-    the golden pool AND the trained model weights (new weights → new path)."""
-    import hashlib
-
-    from corenlp_spark.data.synth import GOLDEN_SENTENCES
-    from corenlp_spark.models.perceptron import WEIGHTS_DIR
-
-    # bump on annotation-semantics changes so a stale /tmp parquet from an
-    # older code version is regenerated (both engines always read the same
-    # bytes either way — this only keeps the snapshot current)
-    h = hashlib.md5(("ann-v45" + "".join(GOLDEN_SENTENCES)).encode())
-    import os
-
-    for name in ("pos.json.gz", "ner.json.gz", "parser.json.gz",
-                 "kbp.json.gz", "coref.json.gz"):
-        p = os.path.join(WEIGHTS_DIR, name)
-        if os.path.exists(p):
-            with open(p, "rb") as f:
-                h.update(f.read())
-    return f"/tmp/corenlp_spark_ann_tokens_{h.hexdigest()[:10]}"
-
-
-def q_kg_mentions_oracle(spark, sf_dir):
-    """The REAL NER path under a DuckDB oracle (VERDICT r1 #6/#7): the fused
-    pipeline's annotated tokens are materialized to parquet; Spark rebuilds
-    per-doc token arrays and runs the ENGINE's chunker
-    (operators/mentions.chunk_mentions) while DuckDB replays
-    LabeledChunkIdentifier as window SQL over the same bytes — both must
-    aggregate identically."""
-    from corenlp_spark.operators.mentions import mention_rows
-    from corenlp_spark.plans.fused import annotate
-
-    def build():
-        ann = annotate(_golden_docs(spark))
-        return ann.select("doc_id", F.explode("tokens").alias("t")).select(
-            "doc_id", F.col("t.idx").alias("idx"), F.col("t.sent").alias("sent"),
-            F.col("t.word").alias("word"), F.col("t.ner").alias("ner"),
-            F.coalesce(F.col("t.nner"), F.lit("")).alias("nner"),
-        )
-
-    path = _ensure_snapshot("", build)
-    docs = (
-        spark.read.parquet(path)
-        .groupBy("doc_id")
-        .agg(F.array_sort(F.collect_list(
-            F.struct("idx", "sent", "word", "ner", "nner"))).alias("tokens"))
-    )
-    m = mention_rows(docs)
-    ln = F.col("end_tok") - F.col("start_tok")
-    return (
-        m.groupBy("ner")
-        .agg(F.count("*").alias("n_mentions"),
-             F.sum(ln).cast("long").alias("n_tokens"),
-             F.max(ln).cast("long").alias("max_len"),
-             F.countDistinct("text").alias("n_texts"))
-        .orderBy("ner")
-    )
-
-
-def q_kg_triples_oracle(spark, sf_dir):
-    """The dedup/aggregation algebra of the KG serving layer under a DuckDB
-    oracle over REAL extraction output: raw (pre-dedup) triples from the
-    fused pipeline are materialized to parquet; Spark runs the engine's
-    dedup_triples operator, DuckDB replays its groupBy semantics over the
-    same bytes."""
-    from corenlp_spark.operators.graph import dedup_triples
-    from corenlp_spark.plans.fused import extract_triples_fused
-
-    path = _ensure_snapshot(
-        "_triples", lambda: extract_triples_fused(_golden_docs(spark)))
-    raw = spark.read.parquet(path)
-    return (
-        dedup_triples(raw)
-        .select("subj", "pred", "obj",
-                F.round("confidence", 6).alias("confidence"),
-                F.col("support").cast("long").alias("support"),
-                F.col("n_docs").cast("long").alias("n_docs"))
-        .orderBy("subj", "pred", "obj")
-    )
-
-
-def q_kg_entity_link_oracle(spark, sf_dir):
-    """The REAL linking path under a DuckDB oracle: engine mentions
-    materialized to parquet; Spark runs link_mentions (broadcast caseless
-    dict + timex/numeric special cases, WikidictAnnotator.java:117-144) +
-    the salted canonical aggregation; DuckDB replays the identical decision
-    order and an unsalted window-ranked canonicalization over the same
-    bytes — the salting must be semantically invisible."""
-    from corenlp_spark.operators.entitylink import (
-        alias_dict, canonical_entities, link_mentions,
-    )
-
-    path = _ensure_snapshot("_mentions", lambda: _build_mention_snapshot(spark))
-    m = spark.read.parquet(path)
-    linked = link_mentions(m, alias_dict(spark))
-    return (
-        canonical_entities(linked)
-        .select("entity_key", F.col("n_mentions").cast("long").alias("n_mentions"),
-                "canonical_text", "ner")
-        .orderBy(F.desc("n_mentions"), "entity_key")
-    )
-
-
-def _entity_link_oracle() -> str:
-    from corenlp_spark.operators.entitylink import DEFAULT_ALIASES
-
-    dict_rows = ", ".join(f"('{s}', '{l}', {sc})" for s, l, sc in DEFAULT_ALIASES)
-    return f"""
-        WITH m AS (
-          SELECT * FROM read_parquet('{_ann_tokens_path()}_mentions/*.parquet')),
-        dict(surface, link, score) AS (VALUES {dict_rows}),
-        linked AS (
-          SELECT m.text, m.ner,
-                 CASE WHEN m.ner IN ('DATE','TIME','NUMBER','ORDINAL','MONEY')
-                      THEN m.nner ELSE d.link END AS link
-          FROM m LEFT JOIN dict d
-            ON lower(m.text) = d.surface AND d.score >= 0.5),
-        keyed AS (
-          SELECT coalesce(link, lower(text)) AS entity_key, text, ner
-          FROM linked),
-        ranked AS (
-          SELECT entity_key, text,
-                 row_number() OVER (PARTITION BY entity_key
-                   ORDER BY length(text) DESC, text DESC) AS rk
-          FROM keyed)
-        SELECT k.entity_key, count(*) AS n_mentions,
-               max(r.text) AS canonical_text, max(k.ner) AS ner
-        FROM keyed k JOIN (SELECT entity_key, text FROM ranked WHERE rk = 1) r
-          USING (entity_key)
-        GROUP BY k.entity_key
-        ORDER BY n_mentions DESC, k.entity_key
-    """
-
-
-def _build_sutime_tokens(spark):
-    from corenlp_spark.operators.sutime import with_docdate
-    from corenlp_spark.plans.fused import annotate
-
-    docs = with_docdate(_golden_docs(spark), fixed="2013-02-21")
-    ann = annotate(docs, upto="ner", sutime=True)
-    return ann.select("doc_id", F.explode("tokens").alias("t")).select(
-        "doc_id", F.col("t.idx").alias("idx"), F.col("t.sent").alias("sent"),
-        F.col("t.word").alias("word"), F.col("t.ner").alias("ner"),
-        F.coalesce(F.col("t.nner"), F.lit("")).alias("nner"),
-    )
-
-
-def q_kg_sutime_oracle(spark, sf_dir):
-    """The temporal path (numeric pass + SUTime resolution) under a DuckDB
-    oracle: sutime-annotated tokens materialized to parquet; the engine's
-    chunker aggregates timex mentions on Spark, DuckDB replays the chunking
-    as window SQL over the same bytes."""
-    from corenlp_spark.operators.mentions import mention_rows
-
-    path = _ensure_snapshot("_sutime", lambda: _build_sutime_tokens(spark))
-    docs = (
-        spark.read.parquet(path)
-        .groupBy("doc_id")
-        .agg(F.array_sort(F.collect_list(
-            F.struct("idx", "sent", "word", "ner", "nner"))).alias("tokens"))
-    )
-    m = mention_rows(docs)
-    return (
-        m.filter(F.col("ner").isin("DATE", "TIME", "DURATION", "SET"))
-        .groupBy("ner", F.col("nner").alias("timex"))
-        .agg(F.count("*").alias("n"))
-        .orderBy("ner", "timex")
-    )
-
-
-def q_kg_coref_oracle(spark, sf_dir):
-    """Representative-mention selection under a DuckDB oracle: the engine's
-    representative FLAGS (longest non-pronoun mention, earliest on ties —
-    CorefChain representative semantics) aggregated by Spark must equal
-    DuckDB RECOMPUTING the selection from scratch via window ranking over
-    the same materialized chains."""
-    from corenlp_spark.operators.graph import coref_chains_rows
-    from corenlp_spark.plans.fused import annotate
-
-    path = _ensure_snapshot("_coref", lambda: coref_chains_rows(
-        annotate(_golden_docs(spark))).select(
-        "doc_id", "cluster_id", "sent_idx", "start_tok", "text",
-        "kind", "representative"))
-    ch = spark.read.parquet(path)
-    per = ch.groupBy("doc_id", "cluster_id").agg(
-        F.count("*").alias("n_mentions"),
-        F.max(F.when(F.col("representative"), F.col("text"))).alias("rep"),
-    )
-    return (
-        per.groupBy("rep")
-        .agg(F.count("*").alias("n_chains"),
-             F.sum("n_mentions").cast("long").alias("n_mentions"))
-        .orderBy(F.desc("n_chains"), "rep")
-    )
-
-
-def _build_kbp_arms(spark):
-    from corenlp_spark.data.kbp_corpus import kbp_docs
-    from corenlp_spark.operators.kbp import (
-        kbp_semgrex_relations, kbp_statistical_relations,
-        kbp_tokensregex_relations,
-    )
-    from corenlp_spark.plans.fused import annotate
-
-    ann = annotate(_golden_docs(spark).unionByName(kbp_docs(spark)))
-    cols = ["doc_id", "sent_idx", "subj", "relation", "obj", "confidence"]
-    return (kbp_tokensregex_relations(ann).select(*cols)
-            .unionByName(kbp_semgrex_relations(ann).select(*cols))
-            .unionByName(kbp_statistical_relations(ann).select(*cols)))
-
-
-def q_kg_kbp_ensemble_oracle(spark, sf_dir):
-    """The KBP ensemble vote under a DuckDB oracle over REAL arm outputs
-    (VERDICT r2 #4): the three arms (tokensregex / semgrex / statistical)
-    run once and their union is materialized to parquet; Spark replays the
-    engine's kbp_ensemble (max-(confidence, relation) per mention pair +
-    vote count) while DuckDB replays the same coalesce semantics as window
-    SQL over the same bytes."""
-    from corenlp_spark.operators.kbp import kbp_ensemble
-
-    path = _ensure_snapshot("_kbparms", lambda: _build_kbp_arms(spark))
-    ens = kbp_ensemble(spark.read.parquet(path))
-    return (
-        ens.groupBy("subj", "relation", "obj")
-        .agg(F.count("*").alias("support"), F.max("n_votes").alias("max_votes"))
-        .orderBy("relation", "subj", "obj")
-    )
-
-
-def q_kg_coref_chains_oracle(spark, sf_dir):
-    """The chain-aggregation algebra under a DuckDB oracle over REAL coref
-    output: the sieve-resolved chain rows are materialized to parquet; both
-    engines replay the representative-selection + chain-count aggregation
-    over the same bytes."""
-    path = _ensure_snapshot("_chains", lambda: _build_chains(spark))
-    ch = spark.read.parquet(path)
-    return (
-        ch.groupBy("doc_id", "cluster_id")
-        .agg(F.count("*").alias("n_mentions"),
-             F.max(F.when(F.col("representative"), F.col("text"))).alias("representative"))
-        .filter(F.col("n_mentions") > 1)
-        .groupBy("representative")
-        .agg(F.count("*").alias("n_chains"),
-             F.sum("n_mentions").cast("long").alias("n_mentions"))
-        .orderBy(F.desc("n_chains"), "representative")
-    )
-
-
-def q_kg_entailed_oracle(spark, sf_dir):
-    """Fragment dedup/max-score algebra under a DuckDB oracle over REAL
-    forward-entailer output (deletion-BFS fragments materialized once); the
-    (n DESC, fragment) order is a unique total order, so the LIMIT 50
-    cutoff is engine-independent."""
-    path = _ensure_snapshot("_entfrags", lambda: _build_entfrags(spark))
-    fr = spark.read.parquet(path)
-    return (
-        fr.groupBy("fragment")
-        .agg(F.count("*").alias("n"), F.round(F.max("score"), 6).alias("max_score"))
-        .orderBy(F.desc("n"), "fragment")
-        .limit(50)
-    )
-
-
-def _build_entfrags(spark):
-    from corenlp_spark.operators.entail import entailed_docs
-    from corenlp_spark.plans.fused import annotate
-
-    return entailed_docs(annotate(_golden_docs(spark))).select(
-        "fragment", "score")
-
-
-def q_kg_entailed(spark, sf_dir):
-    """LIVE forward entailer (deletion-BFS over natural-logic-licensed
-    edges, naturalli/ForwardEntailerSearchProblem.java:119-220 re-expressed)
-    hash-checked against the DuckDB replay over snapshotted fragments."""
-    from corenlp_spark.operators.entail import entailed_docs
-    from corenlp_spark.plans.fused import annotate
-
-    _ensure_snapshot("_entfrags", lambda: _build_entfrags(spark))
-    fr = entailed_docs(annotate(_golden_docs(spark)))
-    return (
-        fr.groupBy("fragment")
-        .agg(F.count("*").alias("n"), F.round(F.max("score"), 6).alias("max_score"))
-        .orderBy(F.desc("n"), "fragment")
-        .limit(50)
-    )
-
-
-def _build_chains(spark):
-    from corenlp_spark.operators.graph import coref_chains_rows
-    from corenlp_spark.plans.fused import annotate
-
-    return coref_chains_rows(annotate(_golden_docs(spark), upto="coref"))
-
-
-def q_kg_coref_chains(spark, sf_dir):
-    """LIVE multi-sieve coref + chain aggregation, hash-checked against the
-    DuckDB replay over snapshotted chain rows."""
-    from corenlp_spark.operators.graph import coref_chains_rows
-    from corenlp_spark.plans.fused import annotate
-
-    _ensure_snapshot("_chains", lambda: _build_chains(spark))
-    ch = coref_chains_rows(annotate(_golden_docs(spark), upto="coref"))
-    return (
-        ch.groupBy("doc_id", "cluster_id")
-        .agg(F.count("*").alias("n_mentions"),
-             F.max(F.when(F.col("representative"), F.col("text"))).alias("representative"))
-        .filter(F.col("n_mentions") > 1)
-        .groupBy("representative")
-        .agg(F.count("*").alias("n_chains"),
-             F.sum("n_mentions").cast("long").alias("n_mentions"))
-        .orderBy(F.desc("n_chains"), "representative")
-    )
-
-
-def q_kg_entity_link(spark, sf_dir):
-    """LIVE linking (broadcast caseless dict + salted canonical
-    aggregation), hash-checked against the DuckDB dictionary-replay over
-    the snapshotted mention rows (same SQL as the _oracle twin — the live
-    run must reproduce the snapshot exactly)."""
-    from corenlp_spark.operators.entitylink import (
-        alias_dict, canonical_entities, link_mentions,
-    )
-    from corenlp_spark.operators.mentions import mention_rows
-    from corenlp_spark.plans.fused import annotate
-
-    _ensure_snapshot("_mentions", lambda: _build_mention_snapshot(spark))
-    m = mention_rows(annotate(_golden_docs(spark), upto="ner"))
-    linked = link_mentions(m, alias_dict(spark))
-    return (
-        canonical_entities(linked)
-        .select("entity_key",
-                F.col("n_mentions").cast("long").alias("n_mentions"),
-                "canonical_text", "ner")
-        .orderBy(F.desc("n_mentions"), "entity_key")
-    )
-
-
-def _build_kbparm1(spark):
-    from corenlp_spark.operators.kbp import kbp_tokensregex_relations
-    from corenlp_spark.plans.fused import annotate
-
-    ann = annotate(_golden_docs(spark), upto="coref")
-    return kbp_tokensregex_relations(ann).select(
-        "doc_id", "sent_idx", "subj", "relation", "obj", "confidence")
-
-
-def q_kg_kbp(spark, sf_dir):
-    """LIVE tokensregex KBP arm alone (trigger-indexed token-sequence
-    patterns), hash-checked against the DuckDB aggregation replay over the
-    snapshotted arm output."""
-    from corenlp_spark.operators.kbp import kbp_tokensregex_relations
-    from corenlp_spark.plans.fused import annotate
-
-    _ensure_snapshot("_kbparm1", lambda: _build_kbparm1(spark))
-    ann = annotate(_golden_docs(spark), upto="coref")
-    rels = kbp_tokensregex_relations(ann)
-    return (
-        rels.groupBy("subj", "relation", "obj")
-        .agg(F.count("*").alias("support"))
-        .orderBy("relation", "subj", "obj")
-    )
 
 
 def q_events_asof(spark, sf_dir):
@@ -1173,29 +727,421 @@ def q_events_funnel(spark, sf_dir):
     )
 
 
+# --------------------------------------------------------------------------
+# queries — KG pipeline. The engine's output is non-SQL-expressible, so
+# each query is hash-checked against DuckDB replaying the downstream
+# algebra over a weights-keyed snapshot of that output. A LIVE query
+# re-runs the engine from raw docs (``tail(build(spark))``); its ``_oracle``
+# replay reads the snapshot back (``tail(snapshot)``). Extraction quality
+# itself is gated by tests/test_openie_golden.py.
+# --------------------------------------------------------------------------
+
+def _golden_docs(spark, n=300):
+    from corenlp_spark.data.synth import synth_docs
+
+    return synth_docs(spark, n)
+
+
+def _ann_tokens_path() -> str:
+    """Deterministic path for materialized golden-doc annotations, keyed on
+    the golden pool AND the trained model weights (new weights → new path)."""
+    import hashlib
+
+    from corenlp_spark.data.synth import GOLDEN_SENTENCES
+    from corenlp_spark.models.perceptron import WEIGHTS_DIR
+
+    # bump on annotation-semantics changes so a stale /tmp parquet from an
+    # older code version is regenerated (both engines always read the same
+    # bytes either way — this only keeps the snapshot current)
+    h = hashlib.md5(("ann-v45" + "".join(GOLDEN_SENTENCES)).encode())
+    import os
+
+    for name in ("pos.json.gz", "ner.json.gz", "parser.json.gz",
+                 "kbp.json.gz", "coref.json.gz"):
+        p = os.path.join(WEIGHTS_DIR, name)
+        if os.path.exists(p):
+            with open(p, "rb") as f:
+                h.update(f.read())
+    return f"/tmp/corenlp_spark_ann_tokens_{h.hexdigest()[:10]}"
+
+
+def _ensure_snapshot(spark, suffix: str, build) -> DataFrame:
+    """Materialize ``build(spark)`` once under the weights-keyed snapshot
+    path (see _ann_tokens_path) and return the snapshot read back. This is
+    the materialized-annotation oracle pattern (VERDICT r3 #2): the engine's
+    output is snapshotted once; the LIVE Spark query re-runs the engine
+    from raw docs while DuckDB replays the downstream algebra over the
+    snapshot bytes — a hash mismatch means either cross-run
+    non-determinism or an algebra divergence."""
+    import os
+
+    path = _ann_tokens_path() + suffix
+    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+        build(spark).write.mode("overwrite").parquet(path)
+    return spark.read.parquet(path)
+
+
+def _token_rows(ann: DataFrame) -> DataFrame:
+    """One row per annotated token: (doc_id, idx, sent, word, ner, nner),
+    a NULL nner written as ''."""
+    return ann.select("doc_id", F.explode("tokens").alias("t")).select(
+        "doc_id", F.col("t.idx").alias("idx"), F.col("t.sent").alias("sent"),
+        F.col("t.word").alias("word"), F.col("t.ner").alias("ner"),
+        F.coalesce(F.col("t.nner"), F.lit("")).alias("nner"),
+    )
+
+
+def _token_docs(rows: DataFrame) -> DataFrame:
+    """Regroup snapshotted token rows into per-doc ``tokens`` arrays, in idx
+    order, of structs over every column after doc_id."""
+    return rows.groupBy("doc_id").agg(F.array_sort(F.collect_list(
+        F.struct(*rows.columns[1:]))).alias("tokens"))
+
+
+def _build_triples(spark):
+    from corenlp_spark.plans.fused import extract_triples_fused
+
+    return extract_triples_fused(_golden_docs(spark))
+
+
+def _build_triples_nc(spark):
+    from corenlp_spark.plans.fused import extract_triples_fused
+
+    return extract_triples_fused(_golden_docs(spark), canonicalize=False)
+
+
+def _triples_tail(raw: DataFrame) -> DataFrame:
+    """The KG serving layer's dedup algebra (operators/graph.dedup_triples)
+    over raw triples, confidence rounded for the cross-engine hash."""
+    from corenlp_spark.operators.graph import dedup_triples
+
+    return (
+        dedup_triples(raw)
+        .select("subj", "pred", "obj",
+                F.round("confidence", 6).alias("confidence"),
+                F.col("support").cast("long").alias("support"),
+                F.col("n_docs").cast("long").alias("n_docs"))
+        .orderBy("subj", "pred", "obj")
+    )
+
+
+def q_kg_triples(spark, sf_dir):
+    """LIVE end-to-end extraction (no coref canonicalization) + the dedup
+    serving algebra, hash-checked against a DuckDB replay of the dedup over
+    the snapshotted raw triples (materialized-oracle pattern)."""
+    _ensure_snapshot(spark, "_triples_nc", _build_triples_nc)
+    return _triples_tail(_build_triples_nc(spark))
+
+
+def q_kg_triples_oracle(spark, sf_dir):
+    """The dedup/aggregation algebra of the KG serving layer under a DuckDB
+    oracle over REAL extraction output: raw (pre-dedup) triples from the
+    fused pipeline are materialized to parquet; Spark runs the engine's
+    dedup_triples operator, DuckDB replays its groupBy semantics over the
+    same bytes."""
+    return _triples_tail(_ensure_snapshot(spark, "_triples", _build_triples))
+
+
+def _ner_mentions(spark):
+    """Mention rows of the kernel cut at NER. A cut skips only later
+    kernels, so the live run must reproduce the full-annotation snapshot
+    (``_build_mentions``) exactly."""
+    from corenlp_spark.operators.mentions import mention_rows
+    from corenlp_spark.plans.fused import annotate
+
+    return mention_rows(annotate(_golden_docs(spark), upto="ner"))
+
+
+def _build_mentions(spark):
+    from corenlp_spark.operators.mentions import mention_rows
+    from corenlp_spark.plans.fused import annotate
+
+    return mention_rows(annotate(_golden_docs(spark))).select(
+        "doc_id", "sent_idx", "ner",
+        F.coalesce(F.col("nner"), F.lit("")).alias("nner"), "text")
+
+
+def q_kg_mentions(spark, sf_dir):
+    """LIVE NER + mention chunking (the kernel cut at NER), hash-checked
+    against a DuckDB aggregation over the snapshotted mention rows."""
+    _ensure_snapshot(spark, "_mentions", _build_mentions)
+    return (
+        _ner_mentions(spark).groupBy("ner", "text").agg(F.count("*").alias("n"))
+        .orderBy("ner", "text")
+    )
+
+
+def _build_ann_tokens(spark):
+    from corenlp_spark.plans.fused import annotate
+
+    return _token_rows(annotate(_golden_docs(spark)))
+
+
+def q_kg_mentions_oracle(spark, sf_dir):
+    """The REAL NER path under a DuckDB oracle (VERDICT r1 #6/#7): the fused
+    pipeline's annotated tokens are materialized to parquet; Spark rebuilds
+    per-doc token arrays and runs the ENGINE's chunker
+    (operators/mentions.chunk_mentions) while DuckDB replays
+    LabeledChunkIdentifier as window SQL over the same bytes — both must
+    aggregate identically."""
+    from corenlp_spark.operators.mentions import mention_rows
+
+    m = mention_rows(_token_docs(_ensure_snapshot(spark, "", _build_ann_tokens)))
+    ln = F.col("end_tok") - F.col("start_tok")
+    return (
+        m.groupBy("ner")
+        .agg(F.count("*").alias("n_mentions"),
+             F.sum(ln).cast("long").alias("n_tokens"),
+             F.max(ln).cast("long").alias("max_len"),
+             F.countDistinct("text").alias("n_texts"))
+        .orderBy("ner")
+    )
+
+
+def _link_tail(m: DataFrame) -> DataFrame:
+    """link_mentions (broadcast caseless dict + timex/numeric special cases,
+    WikidictAnnotator.java:117-144) + the salted canonical aggregation."""
+    from corenlp_spark.operators.entitylink import (
+        alias_dict, canonical_entities, link_mentions,
+    )
+
+    linked = link_mentions(m, alias_dict(m.sparkSession))
+    return (
+        canonical_entities(linked)
+        .select("entity_key",
+                F.col("n_mentions").cast("long").alias("n_mentions"),
+                "canonical_text", "ner")
+        .orderBy(F.desc("n_mentions"), "entity_key")
+    )
+
+
+def q_kg_entity_link(spark, sf_dir):
+    """LIVE linking over the NER-cut mentions, hash-checked against the
+    DuckDB dictionary-replay over the snapshotted mention rows (same SQL as
+    the _oracle twin — the live run must reproduce the snapshot exactly)."""
+    _ensure_snapshot(spark, "_mentions", _build_mentions)
+    return _link_tail(_ner_mentions(spark))
+
+
+def q_kg_entity_link_oracle(spark, sf_dir):
+    """The REAL linking path under a DuckDB oracle: engine mentions
+    materialized to parquet; Spark runs the engine's linking + canonical
+    aggregation, DuckDB replays the identical decision order and an
+    unsalted window-ranked canonicalization over the same bytes — the
+    salting must be semantically invisible."""
+    return _link_tail(_ensure_snapshot(spark, "_mentions", _build_mentions))
+
+
+def _sutime_annotated(spark):
+    from corenlp_spark.operators.sutime import with_docdate
+    from corenlp_spark.plans.fused import annotate
+
+    docs = with_docdate(_golden_docs(spark), fixed="2013-02-21")
+    return annotate(docs, upto="ner", sutime=True)
+
+
+def _build_sutime_tokens(spark):
+    return _token_rows(_sutime_annotated(spark))
+
+
+# the timex classes of kg_sutime; kg_sutime_oracle adds SET
+_TIMEX_CLASSES = ("DATE", "TIME", "DURATION")
+
+
+def _timex_tail(m: DataFrame, classes) -> DataFrame:
+    return (
+        m.filter(F.col("ner").isin(*classes))
+        .groupBy("ner", F.col("nner").alias("timex"))
+        .agg(F.count("*").alias("n"))
+        .orderBy("ner", "timex")
+    )
+
+
+def q_kg_sutime(spark, sf_dir):
+    """LIVE numeric + SUTime temporal pass, hash-checked against the DuckDB
+    window-SQL chunking replay over the snapshotted sutime tokens (same
+    bytes as kg_sutime_oracle, DATE/TIME/DURATION classes)."""
+    from corenlp_spark.operators.mentions import mention_rows
+
+    _ensure_snapshot(spark, "_sutime", _build_sutime_tokens)
+    return _timex_tail(mention_rows(_sutime_annotated(spark)), _TIMEX_CLASSES)
+
+
+def q_kg_sutime_oracle(spark, sf_dir):
+    """The temporal path (numeric pass + SUTime resolution) under a DuckDB
+    oracle: sutime-annotated tokens materialized to parquet; the engine's
+    chunker aggregates timex mentions on Spark, DuckDB replays the chunking
+    as window SQL over the same bytes."""
+    from corenlp_spark.operators.mentions import mention_rows
+
+    toks = _ensure_snapshot(spark, "_sutime", _build_sutime_tokens)
+    return _timex_tail(mention_rows(_token_docs(toks)),
+                       _TIMEX_CLASSES + ("SET",))
+
+
+def _build_coref(spark):
+    from corenlp_spark.operators.graph import coref_chains_rows
+    from corenlp_spark.plans.fused import annotate
+
+    return coref_chains_rows(annotate(_golden_docs(spark))).select(
+        "doc_id", "cluster_id", "sent_idx", "start_tok", "text",
+        "kind", "representative")
+
+
+def q_kg_coref_oracle(spark, sf_dir):
+    """Representative-mention selection under a DuckDB oracle: the engine's
+    representative FLAGS (longest non-pronoun mention, earliest on ties —
+    CorefChain representative semantics) aggregated by Spark must equal
+    DuckDB RECOMPUTING the selection from scratch via window ranking over
+    the same materialized chains."""
+    ch = _ensure_snapshot(spark, "_coref", _build_coref)
+    per = ch.groupBy("doc_id", "cluster_id").agg(
+        F.count("*").alias("n_mentions"),
+        F.max(F.when(F.col("representative"), F.col("text"))).alias("rep"),
+    )
+    return (
+        per.groupBy("rep")
+        .agg(F.count("*").alias("n_chains"),
+             F.sum("n_mentions").cast("long").alias("n_mentions"))
+        .orderBy(F.desc("n_chains"), "rep")
+    )
+
+
+def _build_chains(spark):
+    from corenlp_spark.operators.graph import coref_chains_rows
+    from corenlp_spark.plans.fused import annotate
+
+    return coref_chains_rows(annotate(_golden_docs(spark), upto="coref"))
+
+
+def _chains_tail(ch: DataFrame) -> DataFrame:
+    """Representative + mention count per multi-mention chain, then chains
+    per representative."""
+    return (
+        ch.groupBy("doc_id", "cluster_id")
+        .agg(F.count("*").alias("n_mentions"),
+             F.max(F.when(F.col("representative"), F.col("text"))).alias("representative"))
+        .filter(F.col("n_mentions") > 1)
+        .groupBy("representative")
+        .agg(F.count("*").alias("n_chains"),
+             F.sum("n_mentions").cast("long").alias("n_mentions"))
+        .orderBy(F.desc("n_chains"), "representative")
+    )
+
+
+def q_kg_coref_chains(spark, sf_dir):
+    """LIVE multi-sieve coref + chain aggregation, hash-checked against the
+    DuckDB replay over snapshotted chain rows."""
+    _ensure_snapshot(spark, "_chains", _build_chains)
+    return _chains_tail(_build_chains(spark))
+
+
+def q_kg_coref_chains_oracle(spark, sf_dir):
+    """The chain-aggregation algebra under a DuckDB oracle over REAL coref
+    output: the sieve-resolved chain rows are materialized to parquet; both
+    engines replay the representative-selection + chain-count aggregation
+    over the same bytes."""
+    return _chains_tail(_ensure_snapshot(spark, "_chains", _build_chains))
+
+
+def _build_kbp_arms(spark):
+    from corenlp_spark.data.kbp_corpus import kbp_docs
+    from corenlp_spark.operators.kbp import (
+        kbp_semgrex_relations, kbp_statistical_relations,
+        kbp_tokensregex_relations,
+    )
+    from corenlp_spark.plans.fused import annotate
+
+    ann = annotate(_golden_docs(spark).unionByName(kbp_docs(spark)))
+    cols = ["doc_id", "sent_idx", "subj", "relation", "obj", "confidence"]
+    return (kbp_tokensregex_relations(ann).select(*cols)
+            .unionByName(kbp_semgrex_relations(ann).select(*cols))
+            .unionByName(kbp_statistical_relations(ann).select(*cols)))
+
+
+def _ensemble_tail(arms: DataFrame) -> DataFrame:
+    """The engine's kbp_ensemble (max-(confidence, relation) per mention
+    pair + vote count) over the union of the arms, then support per
+    relation triple."""
+    from corenlp_spark.operators.kbp import kbp_ensemble
+
+    return (
+        kbp_ensemble(arms).groupBy("subj", "relation", "obj")
+        .agg(F.count("*").alias("support"), F.max("n_votes").alias("max_votes"))
+        .orderBy("relation", "subj", "obj")
+    )
+
+
 def q_kg_kbp_ensemble(spark, sf_dir):
     """LIVE 3-arm KBP ensemble over the golden pool PLUS the widened KBP
     pool (data/kbp_corpus.py; taxonomy ie/KBPRelationExtractor.java:119-168),
     hash-checked against the DuckDB ensemble-coalesce replay over the
     snapshotted arm outputs."""
-    from corenlp_spark.data.kbp_corpus import kbp_docs
-    from corenlp_spark.operators.kbp import (
-        kbp_ensemble, kbp_semgrex_relations, kbp_statistical_relations,
-        kbp_tokensregex_relations,
-    )
+    _ensure_snapshot(spark, "_kbparms", _build_kbp_arms)
+    return _ensemble_tail(_build_kbp_arms(spark))
+
+
+def q_kg_kbp_ensemble_oracle(spark, sf_dir):
+    """The KBP ensemble vote under a DuckDB oracle over REAL arm outputs
+    (VERDICT r2 #4): the three arms (tokensregex / semgrex / statistical)
+    run once and their union is materialized to parquet; Spark replays the
+    engine's ensemble while DuckDB replays the same coalesce semantics as
+    window SQL over the same bytes."""
+    return _ensemble_tail(_ensure_snapshot(spark, "_kbparms", _build_kbp_arms))
+
+
+def _build_kbparm1(spark):
+    from corenlp_spark.operators.kbp import kbp_tokensregex_relations
     from corenlp_spark.plans.fused import annotate
 
-    _ensure_snapshot("_kbparms", lambda: _build_kbp_arms(spark))
-    ann = annotate(_golden_docs(spark).unionByName(kbp_docs(spark)))
-    arm1 = kbp_tokensregex_relations(ann)
-    arm2 = kbp_semgrex_relations(ann)
-    arm3 = kbp_statistical_relations(ann)
-    ens = kbp_ensemble(arm1, arm2, arm3)
+    ann = annotate(_golden_docs(spark), upto="coref")
+    return kbp_tokensregex_relations(ann).select(
+        "doc_id", "sent_idx", "subj", "relation", "obj", "confidence")
+
+
+def q_kg_kbp(spark, sf_dir):
+    """LIVE tokensregex KBP arm alone (trigger-indexed token-sequence
+    patterns), hash-checked against the DuckDB aggregation replay over the
+    snapshotted arm output."""
+    _ensure_snapshot(spark, "_kbparm1", _build_kbparm1)
     return (
-        ens.groupBy("subj", "relation", "obj")
-        .agg(F.count("*").alias("support"), F.max("n_votes").alias("max_votes"))
+        _build_kbparm1(spark).groupBy("subj", "relation", "obj")
+        .agg(F.count("*").alias("support"))
         .orderBy("relation", "subj", "obj")
     )
+
+
+def _build_entfrags(spark):
+    from corenlp_spark.operators.entail import entailed_docs
+    from corenlp_spark.plans.fused import annotate
+
+    return entailed_docs(annotate(_golden_docs(spark))).select(
+        "fragment", "score")
+
+
+def _entailed_tail(fr: DataFrame) -> DataFrame:
+    return (
+        fr.groupBy("fragment")
+        .agg(F.count("*").alias("n"), F.round(F.max("score"), 6).alias("max_score"))
+        .orderBy(F.desc("n"), "fragment")
+        .limit(50)
+    )
+
+
+def q_kg_entailed(spark, sf_dir):
+    """LIVE forward entailer (deletion-BFS over natural-logic-licensed
+    edges, naturalli/ForwardEntailerSearchProblem.java:119-220 re-expressed)
+    hash-checked against the DuckDB replay over snapshotted fragments."""
+    _ensure_snapshot(spark, "_entfrags", _build_entfrags)
+    return _entailed_tail(_build_entfrags(spark))
+
+
+def q_kg_entailed_oracle(spark, sf_dir):
+    """Fragment dedup/max-score algebra under a DuckDB oracle over REAL
+    forward-entailer output (deletion-BFS fragments materialized once); the
+    (n DESC, fragment) order is a unique total order, so the LIMIT 50
+    cutoff is engine-independent."""
+    return _entailed_tail(_ensure_snapshot(spark, "_entfrags", _build_entfrags))
 
 
 def _kg_quote_docs(spark):
@@ -1222,54 +1168,11 @@ def q_kg_quotes(spark, sf_dir):
     against the DuckDB aggregation replay over the snapshotted quote rows
     (the attribution ALGEBRA itself is independently replayed in
     kg_quotes_oracle)."""
-    from corenlp_spark.operators.aux_annotators import quote_docs
-    from corenlp_spark.plans.fused import annotate
-
-    _ensure_snapshot("_qdual", lambda: _build_qdual(spark))
-    q = quote_docs(annotate(_kg_quote_docs(spark), upto="ner"))
+    _ensure_snapshot(spark, "_qdual", _build_qdual)
     return (
-        q.select(F.explode("quotes").alias("q"))
-        .groupBy(F.col("q.text").alias("quote"),
-                 F.coalesce(F.col("q.speaker"), F.lit("")).alias("speaker"))
+        _build_qdual(spark).groupBy("quote", "speaker")
         .agg(F.count("*").alias("n"))
         .orderBy("quote")
-    )
-
-
-def q_kg_sutime(spark, sf_dir):
-    """LIVE numeric + SUTime temporal pass, hash-checked against the DuckDB
-    window-SQL chunking replay over the snapshotted sutime tokens (same
-    bytes as kg_sutime_oracle, DATE/TIME/DURATION classes)."""
-    from corenlp_spark.operators.mentions import mention_rows
-    from corenlp_spark.operators.sutime import with_docdate
-    from corenlp_spark.plans.fused import annotate
-
-    _ensure_snapshot("_sutime", lambda: _build_sutime_tokens(spark))
-    docs = with_docdate(_golden_docs(spark), fixed="2013-02-21")
-    ann = annotate(docs, upto="ner", sutime=True)
-    m = mention_rows(ann)
-    return (
-        m.filter(F.col("ner").isin("DATE", "TIME", "DURATION"))
-        .groupBy("ner", F.col("nner").alias("timex"))
-        .agg(F.count("*").alias("n"))
-        .orderBy("ner", "timex")
-    )
-
-
-def q_media_features(spark, sf_dir):
-    """LIVE media metadata decode (Arrow-batched kernel from raw golden
-    docs), hash-checked against the DuckDB decode-arithmetic replay over
-    the snapshotted payload bytes (same bytes as media_features_oracle)."""
-    from corenlp_spark.functions.multimodal import decode_metadata, media_table
-
-    _ensure_snapshot("_media", lambda: media_table(_golden_docs(spark)))
-    media = decode_metadata(media_table(_golden_docs(spark)))
-    return (
-        media.groupBy("media_type")
-        .agg(F.count("*").alias("n"),
-             F.max("meta.width").alias("max_width"),
-             F.max("meta.duration_ms").alias("max_duration_ms"))
-        .orderBy("media_type")
     )
 
 
@@ -1308,21 +1211,15 @@ def q_kg_quotes_oracle(spark, sf_dir):
     from corenlp_spark.plans.fused import annotate
 
     ann = annotate(_quote_pool_docs(spark), upto="ner")
-    tpath = _ensure_snapshot("_qtoks", lambda: ann.select(
+    toks = _ensure_snapshot(spark, "_qtoks", lambda _: ann.select(
         "doc_id", F.explode("tokens").alias("t")).select(
         "doc_id", F.col("t.idx").alias("idx"), F.col("t.word").alias("word"),
         F.col("t.lemma").alias("lemma"), F.col("t.ner").alias("ner")))
-    spath = _ensure_snapshot("_qspans", lambda: quote_docs(ann).select(
+    _ensure_snapshot(spark, "_qspans", lambda _: quote_docs(ann).select(
         "doc_id", F.explode("quotes").alias("q")).select(
         "doc_id", F.col("q.start_tok").alias("start_tok"),
         F.col("q.end_tok").alias("end_tok")))
-    docs = (
-        spark.read.parquet(tpath)
-        .groupBy("doc_id")
-        .agg(F.array_sort(F.collect_list(
-            F.struct("idx", "word", "lemma", "ner"))).alias("tokens"))
-    )
-    q = quote_docs(docs)
+    q = quote_docs(_token_docs(toks))
     return (
         q.select("doc_id", F.explode("quotes").alias("q"))
         .select("doc_id",
@@ -1331,6 +1228,29 @@ def q_kg_quotes_oracle(spark, sf_dir):
                 F.col("q.text").alias("quote"),
                 F.coalesce(F.col("q.speaker"), F.lit("")).alias("speaker"))
         .orderBy("doc_id", "start_tok", "end_tok")
+    )
+
+
+def _build_media(spark):
+    from corenlp_spark.functions.multimodal import media_table
+
+    return media_table(_golden_docs(spark))
+
+
+def q_media_features(spark, sf_dir):
+    """LIVE media metadata decode (Arrow-batched kernel from raw golden
+    docs), hash-checked against the DuckDB decode-arithmetic replay over
+    the snapshotted payload bytes (same bytes as media_features_oracle)."""
+    from corenlp_spark.functions.multimodal import decode_metadata
+
+    _ensure_snapshot(spark, "_media", _build_media)
+    media = decode_metadata(_build_media(spark))
+    return (
+        media.groupBy("media_type")
+        .agg(F.count("*").alias("n"),
+             F.max("meta.width").alias("max_width"),
+             F.max("meta.duration_ms").alias("max_duration_ms"))
+        .orderBy("media_type")
     )
 
 
@@ -1343,10 +1263,9 @@ def q_media_features_oracle(spark, sf_dir):
     kernel is the documented deterministic stand-in for a codec — the check
     certifies the Spark plumbing (explode, batch decode, aggregation), not
     image decoding."""
-    from corenlp_spark.functions.multimodal import decode_metadata, media_table
+    from corenlp_spark.functions.multimodal import decode_metadata
 
-    path = _ensure_snapshot("_media", lambda: media_table(_golden_docs(spark)))
-    media = spark.read.parquet(path)
+    media = _ensure_snapshot(spark, "_media", _build_media)
     return (
         decode_metadata(media)
         .groupBy("media_type")
@@ -1388,7 +1307,7 @@ def q_kg_sentiment_oracle(spark, sf_dir):
 
     docs = text_docs(spark, [f"sn{i:03d}" for i in range(len(_SENTIMENT_POOL))],
                      _SENTIMENT_POOL)
-    _ensure_snapshot("_senttoks", lambda: natlog_docs(docs))
+    _ensure_snapshot(spark, "_senttoks", lambda _: natlog_docs(docs))
     return (
         sentiment_docs(docs)
         .select("doc_id", "sent_idx", "sentiment",
@@ -1526,6 +1445,22 @@ def _speech_verbs_sql() -> str:
 
 
 _SPEECH_VERBS_SQL = _speech_verbs_sql()
+
+# the toks/sh/sig CTEs of functions/dedup.minhash_signatures (word
+# 3-shingles, one md5 minhash per band, 4 bands): the dedup_minhash and
+# dedup_components oracles both start from them
+_MINHASH_CTES = f"""toks AS (
+              SELECT doc_id, {_TOKENS} AS tk FROM documents),
+            sh AS (
+              SELECT doc_id, list_distinct(list_transform(
+                       range(0, greatest(len(tk) - 3, 0) + 1),
+                       i -> array_to_string(tk[i+1:i+3], ' '))) AS shingles
+              FROM toks),
+            sig AS (
+              SELECT doc_id, b.band,
+                     list_min(list_transform(shingles,
+                       s -> md5(s || '#' || b.band))) AS mh
+              FROM sh, (SELECT unnest(range(0, 4)) AS band) b)"""
 
 
 def _lsh_dups_oracle(dim=64, n_bands=8, band_bits=8, threshold=0.2) -> str:
@@ -1781,6 +1716,126 @@ def _decontam_oracle() -> str:
         FROM cg JOIN bg USING (gram)
         GROUP BY doc_id, bench_id
         ORDER BY doc_id, bench_id
+    """
+
+
+def _entity_link_oracle() -> str:
+    from corenlp_spark.operators.entitylink import DEFAULT_ALIASES
+
+    dict_rows = ", ".join(f"('{s}', '{l}', {sc})" for s, l, sc in DEFAULT_ALIASES)
+    return f"""
+        WITH m AS (
+          SELECT * FROM read_parquet('{_ann_tokens_path()}_mentions/*.parquet')),
+        dict(surface, link, score) AS (VALUES {dict_rows}),
+        linked AS (
+          SELECT m.text, m.ner,
+                 CASE WHEN m.ner IN ('DATE','TIME','NUMBER','ORDINAL','MONEY')
+                      THEN m.nner ELSE d.link END AS link
+          FROM m LEFT JOIN dict d
+            ON lower(m.text) = d.surface AND d.score >= 0.5),
+        keyed AS (
+          SELECT coalesce(link, lower(text)) AS entity_key, text, ner
+          FROM linked),
+        ranked AS (
+          SELECT entity_key, text,
+                 row_number() OVER (PARTITION BY entity_key
+                   ORDER BY length(text) DESC, text DESC) AS rk
+          FROM keyed)
+        SELECT k.entity_key, count(*) AS n_mentions,
+               max(r.text) AS canonical_text, max(k.ner) AS ner
+        FROM keyed k JOIN (SELECT entity_key, text FROM ranked WHERE rk = 1) r
+          USING (entity_key)
+        GROUP BY k.entity_key
+        ORDER BY n_mentions DESC, k.entity_key
+    """
+
+
+def _dedup_triples_sql(suffix: str) -> str:
+    """operators/graph.dedup_triples' groupBy semantics replayed over a
+    raw-triples snapshot."""
+    return f"""
+        SELECT lower(subj) AS subj, lower(pred) AS pred,
+               lower(obj) AS obj,
+               round(max(confidence), 6) AS confidence,
+               count(*) AS support,
+               count(DISTINCT doc_id) AS n_docs
+        FROM read_parquet('{_ann_tokens_path()}{suffix}/*.parquet')
+        GROUP BY 1, 2, 3 ORDER BY 1, 2, 3
+    """
+
+
+def _timex_sql(classes) -> str:
+    """The temporal path: timex mention chunking replayed as window SQL
+    over the sutime-token snapshot, kept for the given NER classes."""
+    keep = ", ".join(f"'{c}'" for c in classes)
+    return f"""
+        WITH tok AS (
+          SELECT doc_id, idx, sent, ner, nner
+          FROM read_parquet('{_ann_tokens_path()}_sutime/*.parquet')),
+        runs AS (
+          SELECT doc_id, idx, sent, ner, nner,
+                 CASE WHEN lag(ner) OVER w IS NULL
+                      OR lag(ner) OVER w <> ner THEN 1 ELSE 0 END AS chg
+          FROM tok WINDOW w AS (PARTITION BY doc_id, sent ORDER BY idx)),
+        rid AS (
+          SELECT doc_id, idx, sent, ner, nner,
+                 sum(chg) OVER (PARTITION BY doc_id, sent ORDER BY idx) AS run_id
+          FROM runs),
+        chunks AS (
+          SELECT doc_id, sent, run_id, ner, max(nner) AS timex
+          FROM rid WHERE ner <> 'O' AND ner <> ''
+          GROUP BY doc_id, sent, run_id, ner)
+        SELECT ner, timex, count(*) AS n
+        FROM chunks WHERE ner IN ({keep})
+        GROUP BY ner, timex ORDER BY ner, timex
+    """
+
+
+def _kbp_ensemble_sql() -> str:
+    """KBPEnsembleExtractor coalesce semantics replayed as window SQL over
+    the materialized arm outputs: max-(confidence, relation) per (doc,
+    sent, subj, obj) + vote count, then support aggregation."""
+    return f"""
+        WITH arms AS (
+          SELECT * FROM read_parquet('{_ann_tokens_path()}_kbparms/*.parquet')),
+        ranked AS (
+          SELECT doc_id, sent_idx, subj, relation, obj,
+                 row_number() OVER (
+                   PARTITION BY doc_id, sent_idx, subj, obj
+                   ORDER BY confidence DESC, relation DESC) AS rk,
+                 count(*) OVER (
+                   PARTITION BY doc_id, sent_idx, subj, obj) AS n_votes
+          FROM arms),
+        ens AS (
+          SELECT subj, relation, obj, n_votes FROM ranked WHERE rk = 1)
+        SELECT subj, relation, obj, count(*) AS support,
+               CAST(max(n_votes) AS BIGINT) AS max_votes
+        FROM ens GROUP BY 1, 2, 3 ORDER BY relation, subj, obj
+    """
+
+
+def _coref_chains_sql() -> str:
+    """Chain aggregation over the materialized sieve-resolved chains."""
+    return f"""
+        WITH ch AS (
+          SELECT * FROM read_parquet('{_ann_tokens_path()}_chains/*.parquet')),
+        per AS (
+          SELECT doc_id, cluster_id, count(*) AS n_mentions,
+                 max(CASE WHEN representative THEN text END) AS representative
+          FROM ch GROUP BY 1, 2),
+        f AS (SELECT * FROM per WHERE n_mentions > 1)
+        SELECT representative, count(*) AS n_chains,
+               CAST(sum(n_mentions) AS BIGINT) AS n_mentions
+        FROM f GROUP BY 1 ORDER BY n_chains DESC, representative
+    """
+
+
+def _entailed_sql() -> str:
+    """Fragment dedup/max-score algebra over materialized entailer output."""
+    return f"""
+        SELECT fragment, count(*) AS n, round(max(score), 6) AS max_score
+        FROM read_parquet('{_ann_tokens_path()}_entfrags/*.parquet')
+        GROUP BY 1 ORDER BY n DESC, fragment LIMIT 50
     """
 
 
@@ -2072,18 +2127,7 @@ def oracle_sql() -> dict[str, str]:
             GROUP BY 1, 2 ORDER BY 1
         """,
         "dedup_minhash": f"""
-            WITH toks AS (
-              SELECT doc_id, {_TOKENS} AS tk FROM documents),
-            sh AS (
-              SELECT doc_id, list_distinct(list_transform(
-                       range(0, greatest(len(tk) - 3, 0) + 1),
-                       i -> array_to_string(tk[i+1:i+3], ' '))) AS shingles
-              FROM toks),
-            sig AS (
-              SELECT doc_id, b.band,
-                     list_min(list_transform(shingles,
-                       s -> md5(s || '#' || b.band))) AS mh
-              FROM sh, (SELECT unnest(range(0, 4)) AS band) b),
+            WITH {_MINHASH_CTES},
             buckets AS (
               SELECT band, mh, count(*) AS bucket_size
               FROM sig GROUP BY band, mh HAVING count(*) > 1)
@@ -2110,18 +2154,7 @@ def oracle_sql() -> dict[str, str]:
             FROM firsts
         """,
         "dedup_components": f"""
-            WITH toks AS (
-              SELECT doc_id, {_TOKENS} AS tk FROM documents),
-            sh AS (
-              SELECT doc_id, list_distinct(list_transform(
-                       range(0, greatest(len(tk) - 3, 0) + 1),
-                       i -> array_to_string(tk[i+1:i+3], ' '))) AS shingles
-              FROM toks),
-            sig AS (
-              SELECT doc_id, b.band,
-                     list_min(list_transform(shingles,
-                       s -> md5(s || '#' || b.band))) AS mh
-              FROM sh, (SELECT unnest(range(0, 4)) AS band) b),
+            WITH {_MINHASH_CTES},
             cand AS (
               SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
               FROM sig x JOIN sig y
@@ -2198,40 +2231,9 @@ def oracle_sql() -> dict[str, str]:
                    count(DISTINCT text) AS n_texts
             FROM chunks GROUP BY ner ORDER BY ner
         """,
-        # the serving-layer dedup algebra over real extraction output
-        # (operators/graph.dedup_triples semantics replayed in SQL)
-        "kg_triples_oracle": f"""
-            SELECT lower(subj) AS subj, lower(pred) AS pred,
-                   lower(obj) AS obj,
-                   round(max(confidence), 6) AS confidence,
-                   count(*) AS support,
-                   count(DISTINCT doc_id) AS n_docs
-            FROM read_parquet('{_ann_tokens_path()}_triples/*.parquet')
-            GROUP BY 1, 2, 3 ORDER BY 1, 2, 3
-        """,
+        "kg_triples_oracle": _dedup_triples_sql("_triples"),
         "kg_entity_link_oracle": _entity_link_oracle(),
-        # the temporal path: timex mention chunking replayed as window SQL
-        "kg_sutime_oracle": f"""
-            WITH tok AS (
-              SELECT doc_id, idx, sent, ner, nner
-              FROM read_parquet('{_ann_tokens_path()}_sutime/*.parquet')),
-            runs AS (
-              SELECT doc_id, idx, sent, ner, nner,
-                     CASE WHEN lag(ner) OVER w IS NULL
-                          OR lag(ner) OVER w <> ner THEN 1 ELSE 0 END AS chg
-              FROM tok WINDOW w AS (PARTITION BY doc_id, sent ORDER BY idx)),
-            rid AS (
-              SELECT doc_id, idx, sent, ner, nner,
-                     sum(chg) OVER (PARTITION BY doc_id, sent ORDER BY idx) AS run_id
-              FROM runs),
-            chunks AS (
-              SELECT doc_id, sent, run_id, ner, max(nner) AS timex
-              FROM rid WHERE ner <> 'O' AND ner <> ''
-              GROUP BY doc_id, sent, run_id, ner)
-            SELECT ner, timex, count(*) AS n
-            FROM chunks WHERE ner IN ('DATE', 'TIME', 'DURATION', 'SET')
-            GROUP BY ner, timex ORDER BY ner, timex
-        """,
+        "kg_sutime_oracle": _timex_sql(_TIMEX_CLASSES + ("SET",)),
         # representative-mention selection recomputed from scratch in SQL
         # (window ranking) — must equal the engine's in-kernel choice
         "kg_coref_oracle": f"""
@@ -2254,45 +2256,9 @@ def oracle_sql() -> dict[str, str]:
             FROM per JOIN rep USING (doc_id, cluster_id)
             GROUP BY rep ORDER BY n_chains DESC, rep
         """,
-        # KBPEnsembleExtractor coalesce semantics replayed as window SQL
-        # over the materialized arm outputs: max-(confidence, relation)
-        # per (doc, sent, subj, obj) + vote count, then support aggregation
-        "kg_kbp_ensemble_oracle": f"""
-            WITH arms AS (
-              SELECT * FROM read_parquet('{_ann_tokens_path()}_kbparms/*.parquet')),
-            ranked AS (
-              SELECT doc_id, sent_idx, subj, relation, obj,
-                     row_number() OVER (
-                       PARTITION BY doc_id, sent_idx, subj, obj
-                       ORDER BY confidence DESC, relation DESC) AS rk,
-                     count(*) OVER (
-                       PARTITION BY doc_id, sent_idx, subj, obj) AS n_votes
-              FROM arms),
-            ens AS (
-              SELECT subj, relation, obj, n_votes FROM ranked WHERE rk = 1)
-            SELECT subj, relation, obj, count(*) AS support,
-                   CAST(max(n_votes) AS BIGINT) AS max_votes
-            FROM ens GROUP BY 1, 2, 3 ORDER BY relation, subj, obj
-        """,
-        # chain aggregation over the materialized sieve-resolved chains
-        "kg_coref_chains_oracle": f"""
-            WITH ch AS (
-              SELECT * FROM read_parquet('{_ann_tokens_path()}_chains/*.parquet')),
-            per AS (
-              SELECT doc_id, cluster_id, count(*) AS n_mentions,
-                     max(CASE WHEN representative THEN text END) AS representative
-              FROM ch GROUP BY 1, 2),
-            f AS (SELECT * FROM per WHERE n_mentions > 1)
-            SELECT representative, count(*) AS n_chains,
-                   CAST(sum(n_mentions) AS BIGINT) AS n_mentions
-            FROM f GROUP BY 1 ORDER BY n_chains DESC, representative
-        """,
-        # fragment dedup/max-score algebra over materialized entailer output
-        "kg_entailed_oracle": f"""
-            SELECT fragment, count(*) AS n, round(max(score), 6) AS max_score
-            FROM read_parquet('{_ann_tokens_path()}_entfrags/*.parquet')
-            GROUP BY 1 ORDER BY n DESC, fragment LIMIT 50
-        """,
+        "kg_kbp_ensemble_oracle": _kbp_ensemble_sql(),
+        "kg_coref_chains_oracle": _coref_chains_sql(),
+        "kg_entailed_oracle": _entailed_sql(),
         # quote gloss + attribution replayed over materialized tokens/spans
         "kg_quotes_oracle": f"""
             WITH toks AS (
@@ -2411,86 +2377,27 @@ def oracle_sql() -> dict[str, str]:
         # snapshot of the same engine's output — certifying cross-run
         # determinism AND the aggregation algebra. The *_oracle twins
         # additionally replay the upstream algebra itself.
-        "kg_triples": f"""
-            SELECT lower(subj) AS subj, lower(pred) AS pred,
-                   lower(obj) AS obj,
-                   round(max(confidence), 6) AS confidence,
-                   count(*) AS support,
-                   count(DISTINCT doc_id) AS n_docs
-            FROM read_parquet('{_ann_tokens_path()}_triples_nc/*.parquet')
-            GROUP BY 1, 2, 3 ORDER BY 1, 2, 3
-        """,
+        "kg_triples": _dedup_triples_sql("_triples_nc"),
         "kg_mentions": f"""
             SELECT ner, text, count(*) AS n
             FROM read_parquet('{_ann_tokens_path()}_mentions/*.parquet')
             GROUP BY 1, 2 ORDER BY ner, text
         """,
-        "kg_entailed": f"""
-            SELECT fragment, count(*) AS n, round(max(score), 6) AS max_score
-            FROM read_parquet('{_ann_tokens_path()}_entfrags/*.parquet')
-            GROUP BY 1 ORDER BY n DESC, fragment LIMIT 50
-        """,
-        "kg_coref_chains": f"""
-            WITH ch AS (
-              SELECT * FROM read_parquet('{_ann_tokens_path()}_chains/*.parquet')),
-            per AS (
-              SELECT doc_id, cluster_id, count(*) AS n_mentions,
-                     max(CASE WHEN representative THEN text END) AS representative
-              FROM ch GROUP BY 1, 2),
-            f AS (SELECT * FROM per WHERE n_mentions > 1)
-            SELECT representative, count(*) AS n_chains,
-                   CAST(sum(n_mentions) AS BIGINT) AS n_mentions
-            FROM f GROUP BY 1 ORDER BY n_chains DESC, representative
-        """,
+        "kg_entailed": _entailed_sql(),
+        "kg_coref_chains": _coref_chains_sql(),
         "kg_entity_link": _entity_link_oracle(),
         "kg_kbp": f"""
             SELECT subj, relation, obj, count(*) AS support
             FROM read_parquet('{_ann_tokens_path()}_kbparm1/*.parquet')
             GROUP BY 1, 2, 3 ORDER BY relation, subj, obj
         """,
-        "kg_kbp_ensemble": f"""
-            WITH arms AS (
-              SELECT * FROM read_parquet('{_ann_tokens_path()}_kbparms/*.parquet')),
-            ranked AS (
-              SELECT doc_id, sent_idx, subj, relation, obj,
-                     row_number() OVER (
-                       PARTITION BY doc_id, sent_idx, subj, obj
-                       ORDER BY confidence DESC, relation DESC) AS rk,
-                     count(*) OVER (
-                       PARTITION BY doc_id, sent_idx, subj, obj) AS n_votes
-              FROM arms),
-            ens AS (
-              SELECT subj, relation, obj, n_votes FROM ranked WHERE rk = 1)
-            SELECT subj, relation, obj, count(*) AS support,
-                   CAST(max(n_votes) AS BIGINT) AS max_votes
-            FROM ens GROUP BY 1, 2, 3 ORDER BY relation, subj, obj
-        """,
+        "kg_kbp_ensemble": _kbp_ensemble_sql(),
         "kg_quotes": f"""
             SELECT quote, speaker, count(*) AS n
             FROM read_parquet('{_ann_tokens_path()}_qdual/*.parquet')
             GROUP BY 1, 2 ORDER BY quote
         """,
-        "kg_sutime": f"""
-            WITH tok AS (
-              SELECT doc_id, idx, sent, ner, nner
-              FROM read_parquet('{_ann_tokens_path()}_sutime/*.parquet')),
-            runs AS (
-              SELECT doc_id, idx, sent, ner, nner,
-                     CASE WHEN lag(ner) OVER w IS NULL
-                          OR lag(ner) OVER w <> ner THEN 1 ELSE 0 END AS chg
-              FROM tok WINDOW w AS (PARTITION BY doc_id, sent ORDER BY idx)),
-            rid AS (
-              SELECT doc_id, idx, sent, ner, nner,
-                     sum(chg) OVER (PARTITION BY doc_id, sent ORDER BY idx) AS run_id
-              FROM runs),
-            chunks AS (
-              SELECT doc_id, sent, run_id, ner, max(nner) AS timex
-              FROM rid WHERE ner <> 'O' AND ner <> ''
-              GROUP BY doc_id, sent, run_id, ner)
-            SELECT ner, timex, count(*) AS n
-            FROM chunks WHERE ner IN ('DATE', 'TIME', 'DURATION')
-            GROUP BY ner, timex ORDER BY ner, timex
-        """,
+        "kg_sutime": _timex_sql(_TIMEX_CLASSES),
         "media_features": f"""
             WITH b AS (
               SELECT media_type,

@@ -407,7 +407,6 @@ def ngram_jaccard_pairs(
 
 
 def dup_components(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b",
-                   max_iter: int = 15,
                    driver_cutoff: int = 500_000) -> DataFrame:
     """Connected components over a duplicate-pair table → (id, component)
     with component = min id reachable — the step that turns pair output
@@ -416,10 +415,10 @@ def dup_components(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b",
     Iterative min-label propagation in pure DataFrame ops: each round is
     one join + aggregation (shuffle on id), and the loop exits as soon as
     no label changes — the standard large-graph components recipe when a
-    graph library isn't part of the stack. Near-dup graphs are
+    graph library isn't part of the stack. Labels only decrease, so the
+    loop ends within diameter + 1 rounds; near-dup graphs are
     shallow-diameter (duplicates of a page form cliques through the
-    banding), so convergence is a handful of rounds; ``max_iter`` bounds
-    adversarial chains. Deterministic."""
+    banding), so that is a handful of rounds. Deterministic."""
     from pyspark.sql import functions as F
 
     # materialize the DIRECTED pairs first (r6): the symmetrization union
@@ -478,7 +477,7 @@ def dup_components(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b",
         .distinct()
         .withColumn("component", F.col("id"))
     )
-    for _ in range(max_iter):
+    while True:
         neighbor_min = (
             edges.join(labels, edges.src == labels.id)
             .groupBy(F.col("dst").alias("id2"))
@@ -499,5 +498,4 @@ def dup_components(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b",
         n_changed = updated.filter(F.col("_changed")).count()
         labels = updated.drop("_changed")
         if n_changed == 0:
-            break
-    return labels
+            return labels

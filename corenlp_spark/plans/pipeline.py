@@ -32,9 +32,8 @@ class CheckpointedPipeline:
     a rerun resumes from the last complete checkpoint (kill-and-resume
     semantics)."""
 
-    def __init__(self, spark: SparkSession, root: str, partitions: int | None = None):
+    def __init__(self, spark: SparkSession, root: str):
         self.spark, self.root = spark, root
-        self.partitions = partitions
         os.makedirs(root, exist_ok=True)
 
     def _path(self, stage: str) -> str:
@@ -51,17 +50,14 @@ class CheckpointedPipeline:
         # lineage: per-partition counts + wall time, persisted alongside output
         from corenlp_spark.operators.graph import partition_metrics
 
+        # one pass over the stage output yields the per-partition metrics
+        # (a row per partition); the stage row count is their sum, so there
+        # is no second pass over the stage output (VERDICT r1 #7)
         pm = partition_metrics(out, stage)
-        mpath = os.path.join(self.root, f"_metrics_{stage}")
-        pm.write.mode("overwrite").parquet(mpath)
-        # derive the stage row count from the just-written per-partition
-        # metrics (tiny table) instead of a second full pass over the stage
-        # output (VERDICT r1 #7)
-        from pyspark.sql import functions as F
-
-        n_rows = self.spark.read.parquet(mpath).agg(
-            F.sum("rows")).first()[0] or 0
-        meta = {"stage": stage, "rows": int(n_rows),
+        rows = pm.collect()
+        self.spark.createDataFrame(rows, pm.schema).write.mode(
+            "overwrite").parquet(os.path.join(self.root, f"_metrics_{stage}"))
+        meta = {"stage": stage, "rows": sum(r["rows"] for r in rows),
                 "wall_s": round(time.time() - t0, 3)}
         with open(os.path.join(self.root, f"_lineage_{stage}.json"), "w") as f:
             json.dump(meta, f)
@@ -79,7 +75,5 @@ class CheckpointedPipeline:
         if self._done("annotated"):
             ann = self.spark.read.parquet(self._path("annotated"))
         else:
-            if self.partitions:
-                docs = docs.repartition(self.partitions, "doc_id")
             ann = self._write(annotate(docs), "annotated")
         return self._write(openie_docs(ann), "triples_raw")

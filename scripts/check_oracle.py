@@ -65,7 +65,8 @@ def main():
             bad += 1
             continue
         if sql is None:
-            print(f"~ {name}: rows-only ({len(s_rows)} rows, cols={s_cols})")
+            print(f"✗ {name}: no oracle_sql() entry")
+            bad += 1
             continue
         try:
             rel = con.sql(sql)

@@ -67,7 +67,7 @@ def main() -> None:
     # one annotation pass feeds both the triple and the entity path;
     # openie_docs canonicalizes pronoun subjects from the annotated coref
     if args.checkpointed:
-        pipe = CheckpointedPipeline(spark, args.output, partitions=args.partitions)
+        pipe = CheckpointedPipeline(spark, args.output)
         triples = pipe.run(docs)
         ann = spark.read.parquet(f"{args.output}/annotated")
     else:

@@ -1,0 +1,54 @@
+"""The driver contract in ``__spark_entry__``: every query has a DuckDB
+oracle, and the queries that share a Spark tail, a snapshot builder or a
+DuckDB body with a twin agree with their oracle on the shared session
+(the same check ``scripts/check_oracle.py`` runs, on sf0.01)."""
+
+import importlib.util
+import os
+
+import duckdb
+import pytest
+
+import __spark_entry__ as em
+
+SF = "/root/testdata/sf0.01"
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+# each KG query and its snapshot twin, plus the suite queries whose
+# oracles share CTEs (minhash signatures, simhash signatures)
+SHARED = sorted(n for n in em.queries() if n.startswith(("kg_", "media_"))) + [
+    "dedup_minhash", "dedup_components", "dedup_simhash", "dedup_simhash_pairs",
+]
+
+
+def _value_hash():
+    spec = importlib.util.spec_from_file_location(
+        "check_oracle", os.path.join(_REPO, "scripts", "check_oracle.py"))
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod.value_hash
+
+
+@pytest.fixture(scope="module")
+def oracle():
+    con = duckdb.connect()
+    for t in em.TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF}/{t}.parquet'")
+    yield con, em.oracle_sql(), _value_hash()
+    con.close()
+
+
+def test_every_query_has_an_oracle():
+    assert set(em.queries()) == set(em.oracle_sql())
+    assert len(em.queries()) == 51
+
+
+@pytest.mark.parametrize("name", SHARED)
+def test_shared_query_matches_oracle(spark, oracle, name):
+    con, sqls, value_hash = oracle
+    df = em.queries()[name](spark, SF)
+    rows, cols = [tuple(r) for r in df.collect()], df.columns
+    rel = con.sql(sqls[name])
+    want, want_cols = rel.fetchall(), rel.columns
+    assert sorted(cols) == sorted(want_cols)
+    assert len(rows) == len(want) > 0
+    assert value_hash(rows, cols) == value_hash(want, want_cols)

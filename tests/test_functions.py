@@ -459,6 +459,20 @@ def test_dup_components_hybrid_paths_agree(spark):
                     (31, 30)]
 
 
+def test_dup_components_long_path_converges(spark):
+    """A 40-node path needs 40 min-label rounds (one hop per round, plus
+    the round that sees no change). The distributed loop runs until no
+    label changes, so it labels the whole path as one component, as the
+    driver union-find does."""
+    from corenlp_spark.functions.dedup import dup_components
+
+    pairs = spark.createDataFrame([(i, i + 1) for i in range(39)],
+                                  "id_a long, id_b long")
+    dist = sorted(tuple(r) for r in
+                  dup_components(pairs, driver_cutoff=0).collect())
+    assert dist == [(i, 0) for i in range(40)]
+
+
 def test_simhash_multitable_finds_prefix_blind_pair(spark):
     """Guaranteed hamming-≤3 recall (Charikar multi-table bucketing): a pair
     whose differing bits ALL fall in the old single 16-bit prefix (bits

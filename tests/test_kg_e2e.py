@@ -146,8 +146,8 @@ def test_dedup_triples(spark):
 
 def test_checkpoint_resume(spark, tmp_path):
     root = str(tmp_path / "ckpt")
-    pipe = CheckpointedPipeline(spark, root, partitions=4)
-    t1 = pipe.run(synth_docs(spark, 30))
+    docs = synth_docs(spark, 30).repartition(4, "doc_id")
+    t1 = CheckpointedPipeline(spark, root).run(docs)
     n1 = t1.count()
     assert n1 > 0
     # simulate kill after annotation: delete the triples checkpoint, resume
@@ -155,8 +155,7 @@ def test_checkpoint_resume(spark, tmp_path):
     import shutil
 
     shutil.rmtree(os.path.join(root, "triples_raw"))
-    pipe2 = CheckpointedPipeline(spark, root, partitions=4)
-    t2 = pipe2.run(synth_docs(spark, 30))
+    t2 = CheckpointedPipeline(spark, root).run(docs)
     assert t2.count() == n1
     # lineage metrics persisted per checkpoint
     assert os.path.exists(os.path.join(root, "_lineage_annotated.json"))
