@@ -602,7 +602,7 @@ _ND_BASE = ("the quick brown fox jumps over a lazy dog while rain falls on "
             "green hills and rivers flow toward distant silver mountains "
             "under bright morning skies with soft wind and quiet song")
 # one-word variants empirically at simhash hamming 1 from _ND_BASE — they
-# exercise the pair join with guaranteed-recall bucketing
+# exercise the pair verify with guaranteed-recall bucketing
 _NEAR_DUP_PROBES = [
     ("__nd_base", _ND_BASE),
     ("__nd_grove", _ND_BASE.replace("quick", "grove")),
@@ -623,10 +623,10 @@ def q_dedup_simhash_pairs(spark, sf_dir):
                                    "doc_id string, text string")
     pairs = simhash_dup_pairs(d.unionByName(probes), max_hamming=3)
     # hash-repartition before the declared global sort (r6): the sort's
-    # range-boundary sampling otherwise re-executes the whole pair join a
+    # range-boundary sampling otherwise re-executes the whole pair verify a
     # second time; behind an AQE-materialized shuffle stage the sampling
     # reads shuffle files instead. Result rows and their final order are
-    # unchanged — this only deduplicates the join execution.
+    # unchanged — this only deduplicates the verify execution.
     pairs = pairs.repartition(
         spark.sparkContext.defaultParallelism * 2, "doc_a", "doc_b")
     return pairs.orderBy("doc_a", "doc_b")

@@ -5,21 +5,22 @@ Four strategies over the ``documents`` table (doc_id, text, …):
   - minhash LSH:  shingle → per-band min(md5(shingle ∥ band)) → (band, mh)
                   buckets; pairs verified inside each bucket by exact
                   shingle Jaccard
-  - simhash:      60-bit sign-sum of per-token md5 bits; hamming-ball match
+  - simhash:      60-bit sign-sum of per-token md5 bits → 4 × 15-bit block
+                  buckets; pairs verified inside each bucket by exact
+                  hamming distance
   - n-gram jaccard: exact Jaccard on word n-gram sets for candidate pairs
 
 Column-level logic is built-in ``pyspark.sql.functions`` (JVM-side,
-codegen'd) except for three row- or bucket-local Arrow kernels
+codegen'd) except for row- or bucket-local Arrow kernels
 (``mapInPandas``): shingling + minhash signatures (``_shingle_mhs_kernel``),
-the Jaccard verify of ``minhash_dup_pairs`` (run by
+the simhash sign sum, and the in-bucket verifies of ``minhash_dup_pairs``
+(Jaccard) and ``simhash_pairs_from_sigs`` (hamming), both run by
 ``similarity.bucket_pairs``, the one in-bucket verifier, shared with the
-LSH and IVF pair searches), and the simhash sign sum. Each is
-value-identical to its SQL form. Hashes are md5-hex so a DuckDB oracle can
-reproduce every value bit-for-bit.
+LSH and IVF pair searches. Each is value-identical to its SQL form. Hashes
+are md5-hex so a DuckDB oracle can reproduce every value bit-for-bit.
 
 Scale notes: minhash bands bound the verify fan-out (no O(n²) compare);
-the simhash blocks (4 × 15 bits) bound the hamming search the same way,
-and hot simhash buckets are split into triangular chunk pairs.
+the simhash blocks (4 × 15 bits) bound the hamming search the same way.
 """
 
 from __future__ import annotations
@@ -262,101 +263,53 @@ _SIMHASH_BLOCKS = 4
 _SIMHASH_BLOCK_BITS = 15
 
 
-def simhash_pairs_from_sigs(sigs: DataFrame, max_hamming: int = 3,
-                            chunk: int = 1024) -> DataFrame:
-    """Near-dup pairs from a (doc_id, simhash) signature table.
+def simhash_pairs_from_sigs(sigs: DataFrame, max_hamming: int = 3) -> DataFrame:
+    """Near-dup pairs from a (doc_id, simhash) signature table:
+    (doc_a, doc_b, hamming), doc_a < doc_b.
 
-    Multi-table LSH: each signature is posted under 4 (block_id, block_key)
-    buckets; candidates meet in an equi-join per bucket and are verified by
-    exact hamming map-side. Guaranteed recall for hamming ≤ 3 with 60-bit
-    hashes; no all-pairs compare.
+    Multi-table LSH: each signature is posted under its 4 (tbl, key)
+    blocks, carrying all 4 keys, and ``similarity.bucket_pairs`` verifies
+    exact hamming (XOR + popcount) inside each bucket, keeping a pair only
+    in the LOWEST table whose blocks agree: exactly one row per pair, no
+    self-join, no dedup exchange. Guaranteed recall for hamming ≤ 3 with
+    60-bit hashes; per-bucket work is quadratic in bucket size."""
+    import numpy as np
 
-    Two r6 restructurings (guide §2.4 / §2.5):
+    from corenlp_spark.functions.similarity import bucket_pairs
 
-    * First-collision dedup replaces the old ``.distinct()``: a pair
-      colliding in several tables used to be deduped by an exchange over
-      EVERY verified pair (quadratic in near-dup cluster sizes). Both
-      simhashes ride the join row, so table membership is recomputable
-      map-side — emit the pair only from the LOWEST table whose blocks
-      agree (every earlier table's block must differ). Exactly one row per
-      qualifying pair, zero dedup shuffle.
-
-    * Triangular chunk-split fixes same-key skew AQE cannot touch: a mass-
-      duplicate corpus concentrates thousands of docs on ONE (tbl, key)
-      value (observed 15.7k docs → 123M comparisons in a single task).
-      Each bucket member gets a deterministic chunk id
-      ``pmod(xxhash64(doc_id), ceil(n/chunk))``; the self-join runs on
-      (tbl, key, i, j) chunk pairs with i ≤ j, so a hot bucket becomes
-      nc·(nc+1)/2 independent join groups of ~chunk² comparisons each.
-      Bucket sizes come from one small aggregation (≤ tables·2^15 rows,
-      bounded by the key width — always broadcastable)."""
     mask = (1 << _SIMHASH_BLOCK_BITS) - 1
+    blocks = F.array(*[
+        F.shiftright("simhash", t * _SIMHASH_BLOCK_BITS).bitwiseAND(F.lit(mask))
+        for t in range(_SIMHASH_BLOCKS)])
+    posted = sigs.select("doc_id", "simhash", blocks.alias("keys")).select(
+        "doc_id", "simhash", "keys", F.posexplode("keys").alias("tbl", "key"))
+    m1, m2, m4, h01 = (np.uint64(c) for c in (
+        0x5555555555555555, 0x3333333333333333, 0x0F0F0F0F0F0F0F0F,
+        0x0101010101010101))
 
-    def _block(sim, t):
-        return F.shiftright(sim, t * _SIMHASH_BLOCK_BITS).bitwiseAND(F.lit(mask))
+    def verify(part):
+        sim = part["simhash"].to_numpy(dtype=np.int64).view(np.uint64)
 
-    posted = sigs.select(
-        "doc_id", "simhash",
-        F.explode(F.array(*[
-            F.struct(F.lit(t).alias("tbl"), _block(F.col("simhash"), t).alias("key"))
-            for t in range(_SIMHASH_BLOCKS)
-        ])).alias("b"),
-    ).select("doc_id", "simhash", "b.tbl", "b.key")
-    sizes = posted.groupBy("tbl", "key").agg(F.count("*").alias("_n"))
-    chunked = (
-        posted.join(F.broadcast(sizes), ["tbl", "key"])
-        .withColumn("nc", F.ceil(F.col("_n") / chunk).cast("int"))
-        .withColumn("ci", F.pmod(F.xxhash64("doc_id"), F.col("nc")).cast("int"))
-        .drop("_n")
-    )
-    x = chunked.select(
-        F.col("doc_id").alias("da"), F.col("simhash").alias("sa"),
-        "tbl", "key", F.col("ci").alias("i"),
-        F.explode(F.sequence(F.col("ci"), F.col("nc") - 1)).alias("j"),
-    )
-    y = chunked.select(
-        F.col("doc_id").alias("db"), F.col("simhash").alias("sb"),
-        "tbl", "key", F.col("ci").alias("j"),
-        F.explode(F.sequence(F.lit(0), F.col("ci"))).alias("i"),
-    )
-    first_collision = F.lit(True)
-    for t in range(_SIMHASH_BLOCKS - 1):
-        first_collision = first_collision & (
-            (F.col("tbl") <= t)
-            | (_block(F.col("sa"), t) != _block(F.col("sb"), t))
-        )
-    ham = F.bit_count(F.col("sa").bitwiseXOR(F.col("sb")))
-    pairs = (
-        x.join(y, ["tbl", "key", "i", "j"])
-        # same-chunk groups see both orientations — keep one; cross-chunk
-        # groups see exactly one orientation (chunk ids fix the sides)
-        .filter((F.col("i") < F.col("j")) | (F.col("da") < F.col("db")))
-        .filter(ham <= max_hamming)
-        .filter(first_collision)
-        .select(
-            F.least("da", "db").alias("doc_a"),
-            F.greatest("da", "db").alias("doc_b"),
-            ham.alias("hamming"),
-        )
-    )
-    return pairs
+        def score(pa, pb):
+            # popcount(a ^ b), SWAR bit-count (numpy 1.x has no bitwise_count)
+            x = sim[pa] ^ sim[pb]
+            x = x - ((x >> np.uint64(1)) & m1)
+            x = (x & m2) + ((x >> np.uint64(2)) & m2)
+            x = (x + (x >> np.uint64(4))) & m4
+            ham = (x * h01) >> np.uint64(56)
+            return ham <= max_hamming, ham.astype(np.float64)
+
+        return score
+
+    pairs = bucket_pairs(posted, ("tbl", "key"), verify, "doc_id",
+                         out=("doc_a", "doc_b", "hamming"), band_keys="keys")
+    return pairs.withColumn("hamming", F.col("hamming").cast("int"))
 
 
 def simhash_dup_pairs(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
     """Near-dup pairs by simhash hamming distance, multi-table-bucketed so
-    the self-join never goes cartesian AND every hamming-≤3 pair is found.
-
-    The signature table is persisted before the self-join: it feeds both
-    join sides and the bucket-size aggregate, and without the cache the
-    final adaptive plan runs the Arrow signature kernel three times per
-    action (checked at sf0.01: AQE reuses the raw-doc exchange below the
-    kernel and the size broadcast above it, never the kernel itself).
-    Signatures are ~16 bytes/doc — roughly 1000× smaller than the text they
-    summarize — so MEMORY_AND_DISK is cheap at any scale."""
-    from pyspark import StorageLevel
-
-    sigs = simhash(docs).persist(StorageLevel.MEMORY_AND_DISK)
-    return simhash_pairs_from_sigs(sigs, max_hamming)
+    the verify never goes cartesian AND every hamming-≤3 pair is found."""
+    return simhash_pairs_from_sigs(simhash(docs), max_hamming)
 
 
 def ngram_jaccard_pairs(

@@ -8,7 +8,8 @@
     ``_assign_kernel``;
   - ANN near-duplicate pairs, each posting vectors to buckets and verifying
     pairs exactly inside them through ``bucket_pairs``, the one in-bucket
-    verifier (shared with ``dedup.minhash_dup_pairs``): ``ivf_ann_pairs``
+    verifier (shared with ``dedup.minhash_dup_pairs``'s Jaccard verify and
+    ``dedup.simhash_pairs_from_sigs``' hamming verify): ``ivf_ann_pairs``
     buckets by nearest centroid (one cell per vector), ``lsh_ann_pairs`` by
     random-hyperplane signatures (deterministic seeded planes, one bucket
     per band). No O(n²) cross product and no candidate-pair join.
@@ -171,23 +172,26 @@ def bucket_pairs(
     band_keys: str | None = None,
 ) -> DataFrame:
     """The one in-bucket pair verifier behind ``ivf_ann_pairs``,
-    ``lsh_ann_pairs`` and ``dedup.minhash_dup_pairs``, which differ only in
-    how rows are posted to buckets (named by ``keys``) and in ``verify``.
+    ``lsh_ann_pairs`` (cosine), ``dedup.minhash_dup_pairs`` (Jaccard) and
+    ``dedup.simhash_pairs_from_sigs`` (hamming), which differ only in how
+    rows are posted to buckets (named by ``keys``) and in ``verify``.
 
     A hash repartition on ``keys`` co-locates each bucket; one Arrow kernel
     per partition groups the partition by ``keys`` (one pandas groupby,
     not one dispatch per bucket), sorts each bucket by ``id_col`` and walks
     its upper triangle in row blocks of at most 2^20 cells, so each pair
-    comes out once with id_a ≤ id_b. With ``band_keys`` (multi-band LSH),
-    ``keys[0]`` is the band and ``band_keys`` the array of the row's keys
-    in every band: the first-collision rule drops a pair when any lower
-    band's key agrees, so no dedup exchange exists.
+    comes out once with id_a < id_b (two rows sharing an id never pair).
+    With ``band_keys`` (multi-band LSH), ``keys[0]`` is the band and
+    ``band_keys`` the array of the row's keys in every band: the
+    first-collision rule drops a pair when any lower band's key agrees, so
+    no dedup exchange exists.
 
     ``verify(part)`` prepares the partition once and returns
     ``score(pa, pb) -> (keep, score)`` over candidate pairs given as row
     positions, called on batches of ~2^20 pairs across buckets. Output
-    columns are ``out``, with ``posted``'s id type. Peak task memory
-    follows the partition, not the bucket (ROADMAP item 4)."""
+    columns are ``out``, with ``posted``'s id type and a double score.
+    Peak task memory follows the partition, not the bucket (ROADMAP
+    item 2)."""
     from typing import Iterator
 
     import numpy as np
@@ -228,9 +232,12 @@ def bucket_pairs(
         if not len(pdf):
             return
         ids = pdf[id_col].values
+        # integer codes: comparing string ids pair by pair costs ~7× more
+        id_code = pd.factorize(ids)[0]
         score = verify(pdf)
         for a, b in candidates(pdf, ids):
             keep, s = score(a, b)
+            keep &= id_code[a] != id_code[b]
             yield pd.DataFrame({out[0]: ids[a[keep]], out[1]: ids[b[keep]],
                                 out[2]: s[keep]})
 
@@ -285,8 +292,8 @@ def ivf_ann_pairs(
     and ``bucket_pairs`` verifies the cell with ``_cosine_verify``: the
     only exchange carries each vector once, and there is no candidate-pair
     join. A cell is one bucket, so a task holds its whole partition of
-    cells — memory is partition-bounded, as for the LSH and minhash
-    verifies (ROADMAP item 4)."""
+    cells — memory is partition-bounded, as for the LSH, minhash and
+    simhash verifies (ROADMAP item 2)."""
     cents = centroids if centroids is not None else _planes(dim, n_cells)
     id_type = emb.schema[id_col].dataType.simpleString()
     posted = emb.select(id_col, vec_col).mapInPandas(

@@ -477,19 +477,56 @@ def test_simhash_multitable_finds_prefix_blind_pair(spark):
     """Guaranteed hamming-≤3 recall (Charikar multi-table bucketing): a pair
     whose differing bits ALL fall in the old single 16-bit prefix (bits
     59/58/57) collides in none of the old buckets but MUST surface from the
-    4×15-bit block tables — any ≤3 differing bits leave ≥1 block equal."""
+    4×15-bit block tables — any ≤3 differing bits leave ≥1 block equal.
+    Exact duplicates (all 4 tables collide), pairs colliding in 2 or 3
+    tables and a 5-member cluster must each come out exactly once: the
+    output equals an all-pairs popcount(a ^ b) ≤ 3 over the same rows."""
     from corenlp_spark.functions.dedup import simhash_pairs_from_sigs
 
     base = 0x0ABCDEF12345678  # 60-bit signature
     flipped = base ^ (0b111 << 57)  # 3 diffs, all inside simhash >> 44
     far = base ^ 0x00000F0F0F0F0F0  # many diffs — must NOT pair
-    sigs = spark.createDataFrame(
-        [("a", base), ("b", flipped), ("c", far)], "doc_id string, simhash long")
+    dup = 0x0123456789ABCDE
+    hub = 0x0FEDCBA98765432
+    rows = [
+        ("a", base), ("b", flipped), ("c", far),
+        # hamming 0: collide in all 4 tables
+        ("d", dup), ("e", dup),
+        # 1 diff in block 0: collides with d/e in tables 1-3
+        ("f", dup ^ (1 << 3)),
+        # diffs in blocks 0 and 1: collides with d/e in tables 2-3
+        ("g", dup ^ (1 << 5) ^ (1 << 20)),
+        # a 5-member cluster: hub plus one-bit variants in different blocks
+        ("h0", hub), ("h1", hub ^ (1 << 1)), ("h2", hub ^ (1 << 16)),
+        ("h3", hub ^ (1 << 31)), ("h4", hub ^ (1 << 46) ^ (1 << 2)),
+    ]
+    sigs = spark.createDataFrame(rows, "doc_id string, simhash long")
     # old bucketing misses it:
     assert (base >> 44) != (flipped >> 44)
-    got = {(r.doc_a, r.doc_b): r.hamming
-           for r in simhash_pairs_from_sigs(sigs, max_hamming=3).collect()}
-    assert got == {("a", "b"): 3}
+    got = sorted(tuple(r) for r in
+                 simhash_pairs_from_sigs(sigs, max_hamming=3).collect())
+    want = sorted(
+        (min(x, y), max(x, y), bin(sx ^ sy).count("1"))
+        for i, (x, sx) in enumerate(rows) for y, sy in rows[i + 1:]
+        if bin(sx ^ sy).count("1") <= 3)
+    assert ("a", "b", 3) in want and ("d", "e", 0) in want
+    assert sum(p[0].startswith("h") for p in want) == 10
+    assert got == want
+
+
+def test_duplicated_id_never_pairs_with_itself(spark):
+    """Two rows sharing an id yield no (id, id) pair — like the DuckDB
+    oracles' strict ``x.id < y.id`` join — but each still pairs with the
+    other ids it matches."""
+    text = "the quick brown fox jumps over the lazy dog"
+    docs = spark.createDataFrame(
+        [(1, text), (1, text), (2, text),
+         (3, "completely different words entirely unrelated content here")],
+        "doc_id long, text string")
+    assert sorted(tuple(r) for r in minhash_dup_pairs(docs).collect()) == \
+        [(1, 2, 1.0), (1, 2, 1.0)]
+    assert sorted(tuple(r) for r in simhash_dup_pairs(docs).collect()) == \
+        [(1, 2, 0), (1, 2, 0)]
 
 
 def test_gopher_repetition_signals(spark):

@@ -3,6 +3,8 @@ matter at 100 TB — filter pushdown to the parquet scan, column pruning,
 broadcast joins for dimension/dict tables, TakeOrdered for top-k, and
 shuffle-free narrow annotation stages."""
 
+import pytest
+
 import __spark_entry__ as em
 from corenlp_spark.data.synth import synth_docs
 from corenlp_spark.operators.entitylink import alias_dict, link_mentions
@@ -227,18 +229,27 @@ def test_source_quota_single_partition_window(spark):
     assert "source" in p.split("Exchange hashpartitioning", 1)[1][:80]
 
 
-def test_minhash_verify_is_bucket_local_grouped(spark):
-    """r6: minhash pair verification runs as ONE partition-grouped Arrow
-    kernel behind a (band, mh) hash repartition — no per-bucket
-    FlatMapGroupsInPandas dispatch, no candidate-pair joins, no distinct
-    exchange. Shingle payloads cross the wire exactly once per band."""
-    from corenlp_spark.functions.dedup import minhash_dup_pairs
+@pytest.mark.parametrize("search", ["minhash", "simhash"])
+def test_minhash_verify_is_bucket_local_grouped(spark, search):
+    """r6: minhash and simhash pair verification run as ONE
+    partition-grouped Arrow kernel (``similarity.bucket_pairs``) behind a
+    (band, key) hash repartition — no per-bucket FlatMapGroupsInPandas
+    dispatch, no candidate-pair joins, no distinct exchange, no cached
+    signature table. Payloads cross the wire exactly once per band."""
+    from corenlp_spark.functions.dedup import (
+        minhash_dup_pairs, simhash_dup_pairs,
+    )
     from pyspark.sql import functions as F
 
     d = spark.read.parquet(f"{SF}/documents.parquet").select(
         F.col("doc_id").cast("long").alias("doc_id"), "text")
-    p = plan_of(minhash_dup_pairs(d, n_bands=4, k=3, threshold=0.5))
+    if search == "minhash":
+        pairs = minhash_dup_pairs(d, n_bands=4, k=3, threshold=0.5)
+    else:
+        pairs = simhash_dup_pairs(d, max_hamming=3)
+    p = plan_of(pairs)
     assert "MapInPandas" in p
     assert "FlatMapGroupsInPandas" not in p
     assert "Join" not in p
     assert p.count("Exchange hashpartitioning") == 1, p
+    assert "InMemoryRelation" not in p
