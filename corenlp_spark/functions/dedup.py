@@ -25,6 +25,7 @@ the simhash blocks (4 × 15 bits) bound the hamming search the same way.
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -338,8 +339,6 @@ def ngram_jaccard_pairs(
     # persist BEFORE the hot census was tried and measured slower at both
     # sfs — the per-consumer anti-join replay costs more than the one
     # extra kernel pass it saves.)
-    from pyspark import StorageLevel
-
     sh = (sh.join(F.broadcast(hot), "s", "left_anti")
           .persist(StorageLevel.MEMORY_AND_DISK))
     cand = (
@@ -359,51 +358,40 @@ def ngram_jaccard_pairs(
     )
 
 
-def dup_components(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b",
-                   driver_cutoff: int = 500_000) -> DataFrame:
+# above this many directed pairs dup_components leaves the driver
+# union-find for the distributed min-label loop. Below it the graph is a few
+# MB of ids and union-find answers in milliseconds, where each min-label
+# round pays scheduler latency (observed 0.3-2 s/round under host jitter).
+# 250k pairs are the 500k symmetric edges the gate used to count.
+DRIVER_MAX_PAIRS = 250_000
+
+
+def dup_components(pairs: DataFrame, id_a: str = "id_a",
+                   id_b: str = "id_b") -> DataFrame:
     """Connected components over a duplicate-pair table → (id, component)
     with component = min id reachable — the step that turns pair output
     into actual dedup decisions (keep one representative per component).
 
-    Iterative min-label propagation in pure DataFrame ops: each round is
-    one join + aggregation (shuffle on id), and the loop exits as soon as
-    no label changes — the standard large-graph components recipe when a
-    graph library isn't part of the stack. Labels only decrease, so the
-    loop ends within diameter + 1 rounds; near-dup graphs are
-    shallow-diameter (duplicates of a page form cliques through the
-    banding), so that is a handful of rounds. Deterministic."""
-    from pyspark.sql import functions as F
-
-    # materialize the DIRECTED pairs first (r6): the symmetrization union
-    # references the pair pipeline twice, and Catalyst plans the two
-    # branches as independent subtrees — without this checkpoint the whole
-    # upstream pair computation (LSH bucketing + verification) ran twice
-    # per action before the union's distinct. Checkpointing fwd runs it
-    # once; the union/distinct then operates on the (small) edge list.
-    fwd = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-    fwd = fwd.localCheckpoint(eager=True)
-    edges = fwd.unionByName(
-        fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).distinct()
-    # materialize ONCE more: every iteration (and the driver path) reuses
-    # the deduped symmetric edge list
-    edges = edges.localCheckpoint(eager=True)
-    # size-gated hybrid (the GraphFrames/connected-components recipe):
-    # below the cutoff the whole graph is a few MB — union-find on the
-    # driver answers in milliseconds, where the iterative loop would pay
-    # per-round scheduler latency (observed 0.3-2 s/round under host
-    # jitter) on a milliseconds-sized problem. Above the cutoff (the
-    # actual at-scale case: billions of pair edges) the distributed
-    # min-label loop below is the path — same labels either way
-    # (component = min reachable id), same DuckDB oracle.
-    n_edges = edges.count()
-    if n_edges <= driver_cutoff:
-        # fetch via Arrow toPandas: ONE job and a columnar transfer
-        # (toLocalIterator ran a sequential job per partition — ~2 s of
-        # scheduler latency for a milliseconds-sized fetch); ≤500k edges
-        # ≈ a few MB of int64 columns on the driver
-        pdf = edges.toPandas()
-        rows = list(zip(pdf["src"].tolist(), pdf["dst"].tolist()))
+    The common path is union-find on the driver: the directed pairs are
+    persisted once and at most ``DRIVER_MAX_PAIRS + 1`` of them are fetched
+    in one Arrow ``toPandas`` job. Union-find needs neither both directions
+    nor distinct rows, and the persist is released before returning. Only
+    above the cap (the at-scale case: billions of pair edges) does the
+    graph stay distributed: iterative min-label propagation in pure
+    DataFrame ops over the symmetric edge list, each round one join +
+    aggregation (shuffle on id), exiting as soon as no label changes.
+    Labels only decrease, so the loop ends within diameter + 1 rounds;
+    near-dup graphs are shallow-diameter (duplicates of a page form cliques
+    through the banding). Both paths give the same labels and are
+    deterministic."""
+    # persisted so the pair pipeline (LSH bucketing + verification) runs
+    # once: above the cap the fetch and both sides of the symmetrization
+    # union read it again
+    fwd = (pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
+           .persist(StorageLevel.MEMORY_AND_DISK))
+    pdf = fwd.limit(DRIVER_MAX_PAIRS + 1).toPandas()
+    if len(pdf) <= DRIVER_MAX_PAIRS:
+        fwd.unpersist()
         parent: dict = {}
 
         def find(x):
@@ -414,17 +402,22 @@ def dup_components(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b",
                 parent[x], x = root, parent[x]
             return root
 
-        for src, dst in rows:
+        srcs, dsts = pdf["src"].tolist(), pdf["dst"].tolist()
+        for src, dst in zip(srcs, dsts):
             ra, rb = find(src), find(dst)
             if ra != rb:
                 # union by MIN id so the representative is deterministic
                 lo, hi = (ra, rb) if ra < rb else (rb, ra)
                 parent[hi] = lo
-        ids = sorted({src for src, _ in rows})
-        out = [(i, find(i)) for i in ids]
-        id_type = edges.schema["src"].dataType.simpleString()
-        return edges.sparkSession.createDataFrame(
+        out = [(i, find(i)) for i in sorted(set(srcs) | set(dsts))]
+        id_type = fwd.schema["src"].dataType.simpleString()
+        return fwd.sparkSession.createDataFrame(
             out, schema=f"id {id_type}, component {id_type}")
+    # every round reuses the deduped symmetric edge list
+    edges = fwd.unionByName(
+        fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    ).distinct().localCheckpoint(eager=True)
+    fwd.unpersist()
     labels = (
         edges.select(F.col("src").alias("id"))
         .distinct()

@@ -2,8 +2,13 @@
 
 Local testing uses ``local[N]``; on a real cluster the same configs apply
 (AQE, Arrow, adaptive skew-join). ``spark.sql.shuffle.partitions`` is sized to
-cores locally; at 100 TB you would set it to ~2-3x total executor cores or
-rely on AQE coalescing, which is enabled here.
+cores locally (override it through ``extra_conf``); at 100 TB you would set it
+to ~2-3x total executor cores or rely on AQE coalescing, which is enabled here.
+
+The driver heap is a deployment setting, ``SPARK_DRIVER_MEM``; unset, Spark's
+own 1g default applies, and the test suite passes there. A large local run,
+where this one JVM hosts every task slot, sets it: sf1.0 on 32 cores ran at
+48g (≈1.5g per slot).
 """
 
 from __future__ import annotations
@@ -16,15 +21,13 @@ from pyspark.sql import SparkSession
 def get_spark(
     app_name: str = "corenlp_spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     master = master or f"local[{cpus}]"
-    if shuffle_partitions is None:
-        # local[N] → N; keeps every shuffle stage fully parallel w/o tiny tasks
-        n = master[master.find("[") + 1 : master.find("]")] if "[" in master else "32"
-        shuffle_partitions = cpus if n == "*" else int(n)
+    # local[N] → N; keeps every shuffle stage fully parallel w/o tiny tasks
+    n = master[master.find("[") + 1 : master.find("]")] if "[" in master else "32"
+    shuffle_partitions = cpus if n == "*" else int(n)
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)
@@ -35,23 +38,14 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
-        # local-mode sizing: this ONE JVM hosts every executor task slot
-        # (32 concurrent tasks here) plus all cached storage, and the
-        # unified memory manager protects storageFraction from execution
-        # borrowing — at 16g a wide sort got ~0.3g/task once intermediate
-        # caches accumulated (observed: the 27M-row pair sort oscillating
-        # 2-4× run-to-run). 48g ≈ 1.5g/slot on this 128 GiB host; on a real
-        # cluster the analogous knob is per-executor memory and this env
-        # override applies unchanged.
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
         # long-running drivers accumulate unreferenced shuffle/broadcast
         # state between ContextCleaner GCs (default trigger: 30 min) —
-        # measured here as a monotonic 11→32 s degradation of the 27M-row
-        # pair query across consecutive runs that reset to 8 s once a GC
-        # let the cleaner drain. A 1-minute periodic GC keeps the state
+        # measured in r6 at sf1.0 as a monotonic 11→32 s degradation of the
+        # 27M-row pair query across consecutive runs that reset to 8 s once
+        # a GC let the cleaner drain. A 1-minute periodic GC keeps the state
         # trimmed for pennies (one collection/min on a mostly-idle heap).
-        .config("spark.cleaner.periodicGC.interval",
-                os.environ.get("SPARK_PERIODIC_GC", "1min"))
+        # Kept without a re-measurement: it needs sf1.0 data.
+        .config("spark.cleaner.periodicGC.interval", "1min")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # InferFiltersFromGenerate turns every explode(<array expr>) into a
@@ -76,6 +70,10 @@ def get_spark(
         # after the daemon starts, so executors keep pyspark's own daemon.
         builder = builder.config("spark.python.daemon.module",
                                  "corenlp_spark.worker_daemon")
+    if "SPARK_DRIVER_MEM" in os.environ:
+        # read at JVM launch: only a session's first builder can set it
+        builder = builder.config("spark.driver.memory",
+                                 os.environ["SPARK_DRIVER_MEM"])
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

@@ -52,3 +52,19 @@ def test_shared_query_matches_oracle(spark, oracle, name):
     assert sorted(cols) == sorted(want_cols)
     assert len(rows) == len(want) > 0
     assert value_hash(rows, cols) == value_hash(want, want_cols)
+
+
+def test_repeated_suite_queries_do_not_grow_session_state(spark):
+    """A second pass of the persisting suite queries adds no persistent RDD
+    to those of the first: dedup_components and quality_lm release what
+    they materialize, and dedup_ngram_jaccard's one cache entry is reused
+    by the repeat, not duplicated. Ids are read after every query, since
+    the ContextCleaner drops unreferenced RDDs at its own pace."""
+    passes = []
+    for _ in range(2):
+        seen = set()
+        for name in ("dedup_components", "quality_lm", "dedup_ngram_jaccard"):
+            em.queries()[name](spark, "/root/testdata/sf0.001").collect()
+            seen |= set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+        passes.append(seen)
+    assert passes[1] <= passes[0], passes[1] - passes[0]

@@ -436,13 +436,13 @@ def test_real_png_resize_roundtrip(spark):
     assert bytes(out["img://junk"].resized_payload) == b"junk"
 
 
-def test_dup_components_hybrid_paths_agree(spark):
+def test_dup_components_hybrid_paths_agree(spark, monkeypatch):
     """The size-gated driver union-find and the distributed min-label loop
     must produce identical (id, component) labels — the at-scale path stays
-    exercised by forcing driver_cutoff=0."""
+    exercised by forcing DRIVER_MAX_PAIRS to 0."""
     import pandas as pd
 
-    from corenlp_spark.functions.dedup import dup_components
+    from corenlp_spark.functions import dedup
 
     pairs = spark.createDataFrame(pd.DataFrame({
         # two chains + a clique + a singleton pair: worst shapes for
@@ -450,26 +450,26 @@ def test_dup_components_hybrid_paths_agree(spark):
         "id_a": [1, 2, 3, 10, 11, 20, 20, 21, 30],
         "id_b": [2, 3, 4, 11, 12, 21, 22, 22, 31],
     }))
-    fast = sorted(tuple(r) for r in dup_components(pairs).collect())
-    dist = sorted(tuple(r) for r in
-                  dup_components(pairs, driver_cutoff=0).collect())
+    fast = sorted(tuple(r) for r in dedup.dup_components(pairs).collect())
+    monkeypatch.setattr(dedup, "DRIVER_MAX_PAIRS", 0)
+    dist = sorted(tuple(r) for r in dedup.dup_components(pairs).collect())
     assert fast == dist
     assert fast == [(1, 1), (2, 1), (3, 1), (4, 1), (10, 10), (11, 10),
                     (12, 10), (20, 20), (21, 20), (22, 20), (30, 30),
                     (31, 30)]
 
 
-def test_dup_components_long_path_converges(spark):
+def test_dup_components_long_path_converges(spark, monkeypatch):
     """A 40-node path needs 40 min-label rounds (one hop per round, plus
     the round that sees no change). The distributed loop runs until no
     label changes, so it labels the whole path as one component, as the
     driver union-find does."""
-    from corenlp_spark.functions.dedup import dup_components
+    from corenlp_spark.functions import dedup
 
+    monkeypatch.setattr(dedup, "DRIVER_MAX_PAIRS", 0)
     pairs = spark.createDataFrame([(i, i + 1) for i in range(39)],
                                   "id_a long, id_b long")
-    dist = sorted(tuple(r) for r in
-                  dup_components(pairs, driver_cutoff=0).collect())
+    dist = sorted(tuple(r) for r in dedup.dup_components(pairs).collect())
     assert dist == [(i, 0) for i in range(40)]
 
 
@@ -654,6 +654,27 @@ def test_unigram_lm_scores(spark):
     assert out[1]["n_toks"] == 3
     assert abs(out[2]["avg_logprob"] - round((lp_the + lp_rare) / 2, 6)) < 1e-6
     assert out[1]["avg_logprob"] > out[2]["avg_logprob"]
+
+
+def test_components_and_lm_scores_leave_no_session_state(spark):
+    """dup_components on its driver path and unigram_lm_scores release
+    whatever they materialize: after collecting both, the CacheManager is
+    empty and no persistent RDD is left behind."""
+    from corenlp_spark.functions.dedup import dup_components
+    from corenlp_spark.functions.textstats import unigram_lm_scores
+
+    spark.catalog.clearCache()
+    # ids, not a count: the ContextCleaner may drop older RDDs meanwhile
+    before = set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+    pairs = spark.createDataFrame([(1, 2), (2, 3), (5, 6)],
+                                  "id_a long, id_b long")
+    assert len(dup_components(pairs).collect()) == 5
+    docs = spark.createDataFrame([(1, "the the cat"), (2, "the dog")],
+                                 "doc_id long, text string")
+    assert len(unigram_lm_scores(docs).collect()) == 2
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    after = set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+    assert after <= before, after - before
 
 
 def test_kmeans_cluster_summary(spark):

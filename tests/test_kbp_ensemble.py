@@ -72,8 +72,11 @@ def test_tokensregex_arm_rejects_substring_false_positive(spark):
         "Anna Keller is worth 30 million dollars.",
         "Anna Keller is 34.",
     ])).cache()
-    got = {(r.subj, r.relation, r.obj)
-           for r in kbp_tokensregex_relations(ann).collect()}
+    try:
+        got = {(r.subj, r.relation, r.obj)
+               for r in kbp_tokensregex_relations(ann).collect()}
+    finally:
+        ann.unpersist()
     assert ("Anna Keller", "per:age", "34") in got
     assert not any(rel == "per:age" and "30" in obj for _, rel, obj in got), got
 

@@ -28,12 +28,15 @@ def test_taxonomy_covers_reference_inventory():
 
 def test_kbp_benchmark_f1(spark):
     ann = annotate(kbp_docs(spark)).cache()
-    ens = kbp_ensemble(
-        kbp_tokensregex_relations(ann),
-        kbp_semgrex_relations(ann),
-        kbp_statistical_relations(ann),
-    )
-    got = {(r.subj, r.relation, r.obj) for r in ens.collect()}
+    try:
+        ens = kbp_ensemble(
+            kbp_tokensregex_relations(ann),
+            kbp_semgrex_relations(ann),
+            kbp_statistical_relations(ann),
+        )
+        got = {(r.subj, r.relation, r.obj) for r in ens.collect()}
+    finally:
+        ann.unpersist()
     gold = {g for _, g in KBP_GOLD}
     tp, fp, fn = len(got & gold), len(got - gold), len(gold - got)
     prec = tp / max(tp + fp, 1)
