@@ -362,7 +362,6 @@ def ngram_jaccard_pairs(
 # union-find for the distributed min-label loop. Below it the graph is a few
 # MB of ids and union-find answers in milliseconds, where each min-label
 # round pays scheduler latency (observed 0.3-2 s/round under host jitter).
-# 250k pairs are the 500k symmetric edges the gate used to count.
 DRIVER_MAX_PAIRS = 250_000
 
 
@@ -386,12 +385,20 @@ def dup_components(pairs: DataFrame, id_a: str = "id_a",
     deterministic."""
     # persisted so the pair pipeline (LSH bucketing + verification) runs
     # once: above the cap the fetch and both sides of the symmetrization
-    # union read it again
+    # union read it again. Released on every exit, a failed fetch included.
     fwd = (pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
            .persist(StorageLevel.MEMORY_AND_DISK))
-    pdf = fwd.limit(DRIVER_MAX_PAIRS + 1).toPandas()
-    if len(pdf) <= DRIVER_MAX_PAIRS:
+    try:
+        pdf = fwd.limit(DRIVER_MAX_PAIRS + 1).toPandas()
+        if len(pdf) > DRIVER_MAX_PAIRS:
+            # every round reuses the deduped symmetric edge list
+            edges = fwd.unionByName(
+                fwd.select(F.col("dst").alias("src"),
+                           F.col("src").alias("dst"))
+            ).distinct().localCheckpoint(eager=True)
+    finally:
         fwd.unpersist()
+    if len(pdf) <= DRIVER_MAX_PAIRS:
         parent: dict = {}
 
         def find(x):
@@ -413,11 +420,6 @@ def dup_components(pairs: DataFrame, id_a: str = "id_a",
         id_type = fwd.schema["src"].dataType.simpleString()
         return fwd.sparkSession.createDataFrame(
             out, schema=f"id {id_type}, component {id_type}")
-    # every round reuses the deduped symmetric edge list
-    edges = fwd.unionByName(
-        fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).distinct().localCheckpoint(eager=True)
-    fwd.unpersist()
     labels = (
         edges.select(F.col("src").alias("id"))
         .distinct()

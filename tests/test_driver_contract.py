@@ -54,17 +54,34 @@ def test_shared_query_matches_oracle(spark, oracle, name):
     assert value_hash(rows, cols) == value_hash(want, want_cols)
 
 
+def _cache_entries(spark):
+    """Number of plans in the session's CacheManager (it exposes only
+    isEmpty(), so the count is read from its cachedData field)."""
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    field = cm.getClass().getDeclaredField("cachedData")
+    field.setAccessible(True)
+    return field.get(cm).size()
+
+
 def test_repeated_suite_queries_do_not_grow_session_state(spark):
     """A second pass of the persisting suite queries adds no persistent RDD
     to those of the first: dedup_components and quality_lm release what
     they materialize, and dedup_ngram_jaccard's one cache entry is reused
     by the repeat, not duplicated. Ids are read after every query, since
-    the ContextCleaner drops unreferenced RDDs at its own pace."""
+    the ContextCleaner drops unreferenced RDDs at its own pace; the
+    CacheManager holds at most that one entry after each pass."""
+    spark.catalog.clearCache()
     passes = []
-    for _ in range(2):
-        seen = set()
-        for name in ("dedup_components", "quality_lm", "dedup_ngram_jaccard"):
-            em.queries()[name](spark, "/root/testdata/sf0.001").collect()
-            seen |= set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
-        passes.append(seen)
+    try:
+        for _ in range(2):
+            seen = set()
+            for name in ("dedup_components", "quality_lm",
+                         "dedup_ngram_jaccard"):
+                em.queries()[name](spark, "/root/testdata/sf0.001").collect()
+                seen |= set(
+                    spark.sparkContext._jsc.getPersistentRDDs().keySet())
+            assert _cache_entries(spark) <= 1
+            passes.append(seen)
+    finally:
+        spark.catalog.clearCache()
     assert passes[1] <= passes[0], passes[1] - passes[0]

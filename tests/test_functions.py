@@ -1,5 +1,6 @@
 """Training-data function tests: dedup, similarity, textstats, multimodal."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from corenlp_spark.data.synth import synth_docs
@@ -675,6 +676,24 @@ def test_components_and_lm_scores_leave_no_session_state(spark):
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
     after = set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
     assert after <= before, after - before
+
+
+def test_dup_components_releases_pairs_when_fetch_fails(spark):
+    """A pair pipeline that raises during dup_components' fetch leaves no
+    cache entry behind."""
+    from pyspark.errors import PythonException
+
+    from corenlp_spark.functions.dedup import dup_components
+
+    @F.udf("long")
+    def boom(x):
+        raise ValueError("pair verifier failed")
+
+    spark.catalog.clearCache()
+    pairs = spark.createDataFrame([(1, 2)], "id_a long, id_b long")
+    with pytest.raises(PythonException, match="pair verifier failed"):
+        dup_components(pairs.withColumn("id_b", boom("id_b")))
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_kmeans_cluster_summary(spark):
