@@ -341,8 +341,9 @@ def q_kmeans_clusters(spark, sf_dir):
 def q_dedup_components(spark, sf_dir):
     """Near-dup CONNECTED COMPONENTS over the minhash pair graph — the
     operation that turns pair output into dedup decisions (one
-    representative per component). Spark runs iterative min-label
-    propagation (functions/dedup.dup_components); DuckDB replays it as a
+    representative per component). functions/dedup.dup_components runs
+    union-find on the driver below ``DRIVER_MAX_PAIRS`` pairs (this query's
+    case) and Spark min-label propagation above it; DuckDB replays it as a
     recursive CTE reachability min — exact agreement required."""
     from corenlp_spark.functions.dedup import dup_components, minhash_dup_pairs
 
@@ -381,9 +382,10 @@ def q_ann_topk(spark, sf_dir):
 
 def q_embedding_dups(spark, sf_dir):
     """Embedding-cosine near-duplicate pairs via the SCALE path: deterministic
-    random-hyperplane LSH buckets candidates in an equi-join on (band, sig),
-    then exact cosine verifies. No O(n²) nested-loop join — the plan is
-    asserted BroadcastNestedLoopJoin-free in tests/test_plans.py. The DuckDB
+    random-hyperplane LSH posts each vector once per band into its (band,
+    sig) bucket and ``similarity.bucket_pairs`` verifies exact cosine inside
+    each bucket. No candidate-pair join and no O(n²) nested-loop join — the
+    plan is asserted join-free in tests/test_plans.py. The DuckDB
     oracle inlines the identical LCG planes as literal arrays, so both engines
     compute the same candidate set and the same verified pairs."""
     from corenlp_spark.functions.similarity import lsh_ann_pairs
@@ -545,8 +547,9 @@ def q_dedup_minhash(spark, sf_dir):
 
 
 def q_dedup_simhash(spark, sf_dir):
-    """SimHash near-dup signatures: per-16-bit-prefix bucket stats (the
-    bucketing that bounds the pair join at scale). The DuckDB oracle
+    """SimHash near-dup signatures: per-16-bit-prefix bucket stats, a
+    census of signature spread (the pair search itself buckets on 4 × 15-bit
+    blocks, functions/dedup.simhash_pairs_from_sigs). The DuckDB oracle
     reproduces every md5-derived bit (portable hashing)."""
     from corenlp_spark.functions.dedup import simhash
 
@@ -1046,23 +1049,18 @@ def q_kg_coref_chains_oracle(spark, sf_dir):
 
 def _build_kbp_arms(spark):
     from corenlp_spark.data.kbp_corpus import kbp_docs
-    from corenlp_spark.operators.kbp import (
-        kbp_semgrex_relations, kbp_statistical_relations,
-        kbp_tokensregex_relations,
-    )
+    from corenlp_spark.operators.kbp import kbp_arm_rows
     from corenlp_spark.plans.fused import annotate
 
     ann = annotate(_golden_docs(spark).unionByName(kbp_docs(spark)))
-    cols = ["doc_id", "sent_idx", "subj", "relation", "obj", "confidence"]
-    return (kbp_tokensregex_relations(ann).select(*cols)
-            .unionByName(kbp_semgrex_relations(ann).select(*cols))
-            .unionByName(kbp_statistical_relations(ann).select(*cols)))
+    return kbp_arm_rows(ann).select(
+        "doc_id", "sent_idx", "subj", "relation", "obj", "confidence")
 
 
 def _ensemble_tail(arms: DataFrame) -> DataFrame:
     """The engine's kbp_ensemble (max-(confidence, relation) per mention
-    pair + vote count) over the union of the arms, then support per
-    relation triple."""
+    pair + vote count) over the arm rows, then support per relation
+    triple."""
     from corenlp_spark.operators.kbp import kbp_ensemble
 
     return (
@@ -1084,25 +1082,25 @@ def q_kg_kbp_ensemble(spark, sf_dir):
 def q_kg_kbp_ensemble_oracle(spark, sf_dir):
     """The KBP ensemble vote under a DuckDB oracle over REAL arm outputs
     (VERDICT r2 #4): the three arms (tokensregex / semgrex / statistical)
-    run once and their union is materialized to parquet; Spark replays the
-    engine's ensemble while DuckDB replays the same coalesce semantics as
-    window SQL over the same bytes."""
+    run in one pass and their rows are materialized to parquet; Spark
+    replays the engine's ensemble while DuckDB replays the same coalesce
+    semantics as window SQL over the same bytes."""
     return _ensemble_tail(_ensure_snapshot(spark, "_kbparms", _build_kbp_arms))
 
 
 def _build_kbparm1(spark):
-    from corenlp_spark.operators.kbp import kbp_tokensregex_relations
+    from corenlp_spark.operators.kbp import kbp_arm_rows
     from corenlp_spark.plans.fused import annotate
 
     ann = annotate(_golden_docs(spark), upto="coref")
-    return kbp_tokensregex_relations(ann).select(
+    return kbp_arm_rows(ann).filter(F.col("arm") == "tokensregex").select(
         "doc_id", "sent_idx", "subj", "relation", "obj", "confidence")
 
 
 def q_kg_kbp(spark, sf_dir):
-    """LIVE tokensregex KBP arm alone (trigger-indexed token-sequence
-    patterns), hash-checked against the DuckDB aggregation replay over the
-    snapshotted arm output."""
+    """LIVE tokensregex KBP arm (trigger-indexed token-sequence patterns;
+    the one-pass arm rows filtered to that arm), hash-checked against the
+    DuckDB aggregation replay over the snapshotted arm output."""
     _ensure_snapshot(spark, "_kbparm1", _build_kbparm1)
     return (
         _build_kbparm1(spark).groupBy("subj", "relation", "obj")

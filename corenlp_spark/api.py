@@ -167,17 +167,10 @@ class Pipeline:
         """docs → KBP relations via the 3-arm max-confidence ensemble."""
         if "kbp" not in self.annotators:
             raise ValueError("pipeline was not configured with 'kbp'")
-        from corenlp_spark.operators.kbp import (
-            kbp_ensemble, kbp_semgrex_relations, kbp_statistical_relations,
-            kbp_tokensregex_relations,
-        )
+        from corenlp_spark.operators.kbp import kbp_arm_rows, kbp_ensemble
         from corenlp_spark.plans.fused import annotate
 
-        ann = annotate(docs)
-        arm1 = kbp_tokensregex_relations(ann)
-        arm2 = kbp_semgrex_relations(ann)
-        arm3 = kbp_statistical_relations(ann)
-        return kbp_ensemble(arm1, arm2, arm3)
+        return kbp_ensemble(kbp_arm_rows(annotate(docs)))
 
     def sentiments(self, docs: DataFrame) -> DataFrame:
         """Per-sentence 5-class sentiment rows (SentimentAnnotator analog)."""

@@ -1058,36 +1058,3 @@ class RelationClassifier:
         m.weights = blob["weights"]
         m.classes = blob["classes"]
         return m
-
-
-def tag_with_model(df, blob: dict):
-    """Batched inference shape: broadcast weights → Arrow-batched predict.
-
-    df: docs with ``tokens``; returns df with a ``ppos`` field added per
-    token (kept separate from the rule tagger's ``pos`` for comparison)."""
-    from typing import Iterator
-
-    import pandas as pd
-
-    out_schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields)
-    out_schema = out_schema.replace(
-        "pos:string", "pos:string,ppos:string"
-    ) if "ppos" not in out_schema else out_schema
-
-    sc = df.sparkSession.sparkContext
-    b = sc.broadcast(blob)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        model = AveragedPerceptronTagger.from_broadcastable(b.value)
-        for pdf in batches:
-            new_tokens = [[dict(t) for t in toks] for toks in pdf["tokens"]]
-            preds = model.predict_with_constraints_batch(
-                [([t["word"] for t in toks], {}, None) for toks in new_tokens])
-            for toks, tags in zip(new_tokens, preds):
-                for t, p in zip(toks, tags):
-                    t["ppos"] = p
-            pdf = pdf.copy()
-            pdf["tokens"] = new_tokens
-            yield pdf
-
-    return df.mapInPandas(run, schema=out_schema)

@@ -1,28 +1,34 @@
-"""KBP slot-filling relations over entity-mention pairs.
+"""KBP slot-filling relations: the reference's ``kbp`` annotator, one
+ensemble of three extractors.
 
 Behavioral reference (re-expressed):
   - relation taxonomy + type signatures ``ie/KBPRelationExtractor.java:114-160``
     (``per:*`` require PERSON subject, ``org:*`` ORGANIZATION subject; object
     NER gated per relation);
   - candidate generation = subject × object mentions within a sentence
-    (``pipeline/KBPAnnotator.java:460+``) — realized as the relational
-    self-join SURVEY.md §2.4 describes;
-  - pattern ensemble (``ie/KBPTokensregexExtractor.java`` /
-    ``KBPSemgrexExtractor.java``) — realized by matching the already-extracted
-    OpenIE predicates against a broadcast pattern table and taking the
-    highest-confidence hit (``ie/KBPEnsembleExtractor.java`` coalesce
-    semantics).
+    (``pipeline/KBPAnnotator.java:460+``);
+  - the three extractors: token-sequence patterns
+    (``ie/KBPTokensregexExtractor.java``), dependency-graph patterns
+    (``ie/KBPSemgrexExtractor.java``) and the trained statistical classifier
+    (``ie/KBPStatisticalExtractor.java``), combined by taking the
+    highest-confidence hit per mention pair (``ie/KBPEnsembleExtractor.java``
+    coalesce semantics).
 
-Spark shape: triples ⋈ mentions (subject head) ⋈ mentions (object head) with
-a broadcast pattern/type-signature table. The mention join keys are
-(doc_id, sent_idx) + span containment — an equi-join plus predicate, never a
-cartesian product.
+Spark shape: ``kbp_arm_rows`` is one ``mapInPandas`` over the annotated docs
+that runs the three per-sentence arm functions on each sentence and tags
+every row with its arm; ``kbp_ensemble`` is one groupBy over those rows.
+Candidate pairs never leave their sentence, so there is no join, and the
+ensemble's groupBy is the only shuffle.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from corenlp_spark.operators.depparse import sentence_graphs
+from corenlp_spark.operators.semgrex import compile_semgrex, match_semgrex
+from corenlp_spark.operators.tokensregex import compile_pattern, find_all
 
 # ---------------------------------------------------------------------------
 # Relation taxonomy: the reference's 2013 shared-task inventory
@@ -85,8 +91,8 @@ RELATION_TAXONOMY: dict[str, tuple[str, tuple[str, ...]]] = {
 # Location-subtype refinement: the reference distinguishes CITY / COUNTRY /
 # STATE_OR_PROVINCE objects via fine-grained NER classes
 # (``ie/KBPRelationExtractor.java`` NERTag); this engine keeps coarse
-# LOCATION and refines the relation AFTER a match against broadcast
-# country/state tables — same observable relation labels.
+# LOCATION and refines the relation AFTER a match against the country/state
+# tables below — same observable relation labels.
 # ---------------------------------------------------------------------------
 _COUNTRIES = {
     "france", "germany", "spain", "portugal", "canada", "japan", "china",
@@ -133,8 +139,9 @@ def _expand(patterns: list[tuple[str, str]]) -> list[tuple[str, str, str, str]]:
     return rows
 
 
-# (pred_lemma_pattern, relation) — expanded against the taxonomy signatures
-# into the broadcast pattern table (KBPTokensregexExtractor arm)
+# (trigger, relation) — expanded against the taxonomy signatures into one
+# token-sequence pattern per (trigger, subj NER, obj NER) row (the
+# KBPTokensregexExtractor arm, see ``_trx_pattern``)
 KBP_PATTERNS: list[tuple[str, str, str, str]] = _expand([
     ("born in", "per:city_of_birth"),
     ("works for", "per:employee_of"),
@@ -274,61 +281,6 @@ KBP_SEMGREX: list[tuple[str, str, str, str, str]] = [
 ]
 
 
-def kbp_semgrex_relations(annotated: DataFrame) -> DataFrame:
-    """Semgrex-extractor arm of the KBP ensemble: run the broadcast semgrex
-    rule set over each sentence's dependency graph (KBPSemgrexExtractor
-    semantics, ``ie/KBPSemgrexExtractor.java``). Returns the same shape as
-    ``kbp_tokensregex_relations`` with confidence 0.9 (patterns beat the statistical arm,
-    lose to tokensregex — KBPEnsembleExtractor priority)."""
-    from typing import Iterator
-
-    import pandas as pd
-
-    from corenlp_spark.operators.depparse import sentence_graphs
-    from corenlp_spark.operators.semgrex import compile_semgrex, match_semgrex
-
-    compiled = [(compile_semgrex(p), rel) for p, _, _, rel, _ in KBP_SEMGREX]
-
-    def span_text(g, head):
-        # expand over contiguous same-NER run around the head
-        ner = g.tok(head)["ner"]
-        lo = head
-        while lo - 1 >= g.off and g.tok(lo - 1)["ner"] == ner:
-            lo -= 1
-        hi = head
-        while hi + 1 < g.off + len(g.toks) and g.tok(hi + 1)["ner"] == ner:
-            hi += 1
-        return g.gloss(range(lo, hi + 1))
-
-    schema = ("doc_id string, sent_idx int, subj string, relation string, "
-              "obj string, confidence double")
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in ("doc_id", "sent_idx", "subj", "relation",
-                                    "obj", "confidence")}
-            for doc_id, toks, sents, deps in zip(
-                pdf["doc_id"], pdf["tokens"], pdf["sentences"], pdf["deps"]
-            ):
-                for s, g in sentence_graphs(toks, sents, deps):
-                    if not g.edges:
-                        continue
-                    for pat, rel in compiled:
-                        for m in match_semgrex(pat, g):
-                            if "s" in m and "o" in m:
-                                rows["doc_id"].append(doc_id)
-                                rows["sent_idx"].append(s["sent_idx"])
-                                obj_t = span_text(g, m["o"])
-                                rows["subj"].append(span_text(g, m["s"]))
-                                rows["relation"].append(
-                                    refine_location_relation(rel, obj_t))
-                                rows["obj"].append(obj_t)
-                                rows["confidence"].append(0.9)
-            yield pd.DataFrame(rows)
-
-    return annotated.mapInPandas(run, schema=schema)
-
-
 # statistical arm: TRAINED multiclass relation classifier over between-
 # mention lemma + type-signature features PLUS dependency-path features
 # (``ie/KBPStatisticalExtractor.java:190-437`` re-expressed: surface frames
@@ -389,6 +341,8 @@ def dep_path(parent: dict, lemmas: list[str], a: int, b: int,
         path.append(f"-{rel}->")
         path.append(lemmas[node - offset])
     return path
+
+
 _REL_MODEL = None
 
 
@@ -400,104 +354,6 @@ def _get_rel_model():
         )
         _REL_MODEL = RelationClassifier.from_broadcastable(load_weights("kbp"))
     return _REL_MODEL
-
-
-def kbp_statistical_relations(annotated: DataFrame, threshold: float = 0.5) -> DataFrame:
-    """Statistical arm: classify each within-sentence mention pair whose NER
-    signature appears in the taxonomy; emit non-NONE predictions above the
-    threshold (confidence capped at 0.85 — the ensemble prefers the pattern
-    arms, KBPEnsembleExtractor priority)."""
-    from typing import Iterator
-
-    import pandas as pd
-
-    from corenlp_spark.operators.depparse import sentence_graphs
-
-    schema = ("doc_id string, sent_idx int, subj string, relation string, "
-              "obj string, confidence double")
-    signatures = {(s, o) for s, objs in RELATION_TAXONOMY.values() for o in objs}
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        model = _get_rel_model()
-        for pdf in batches:
-            rows = {k: [] for k in ("doc_id", "sent_idx", "subj", "relation",
-                                    "obj", "confidence")}
-            deps_iter = pdf["deps"] if "deps" in pdf.columns else [None] * len(pdf)
-            for doc_id, toks, sents, deps in zip(
-                pdf["doc_id"], pdf["tokens"], pdf["sentences"], deps_iter
-            ):
-                for s, g in sentence_graphs(toks, sents, deps):
-                    a, seg, lemmas, parent = g.off, g.toks, g.lemmas, g.parent
-                    # mention runs inside the sentence
-                    runs = []
-                    i = 0
-                    while i < len(seg):
-                        ner = seg[i]["ner"]
-                        if ner not in ("O", "", "ORDINAL", "MONEY", "TIME"):
-                            j = i
-                            while j < len(seg) and seg[j]["ner"] == ner:
-                                j += 1
-                            runs.append((i, j, ner))
-                            i = j
-                        else:
-                            i += 1
-                    for si, (s0, s1, sner) in enumerate(runs):
-                        for oi, (o0, o1, oner) in enumerate(runs):
-                            if si == oi or (sner, oner) not in signatures:
-                                continue
-                            # features = lemmas BETWEEN the pair (+ inversion
-                            # marker when the object precedes the subject)
-                            if s1 <= o0:
-                                between = lemmas[s1:o0]
-                            else:
-                                between = lemmas[o1:s0] + ["inv"]
-                            dep = None
-                            if parent:
-                                sh = span_head(parent, a + s0, a + s1)
-                                oh = span_head(parent, a + o0, a + o1)
-                                path = dep_path(parent, lemmas, sh, oh, offset=a)
-                                if path:
-                                    dep = {"path": path,
-                                           "spos": g.pos[sh - a],
-                                           "opos": g.pos[oh - a],
-                                           "obj_head": g.lemma(oh)}
-                            rel, conf = model.predict(between, sner, oner, dep)
-                            # taxonomy type check (the reference's per-
-                            # relation signature validation)
-                            sig = RELATION_TAXONOMY.get(rel)
-                            if sig is not None and (sner != sig[0] or oner not in sig[1]):
-                                continue
-                            if rel != model.NONE and conf >= threshold:
-                                obj_t = " ".join(t["word"] for t in seg[o0:o1])
-                                rows["doc_id"].append(doc_id)
-                                rows["sent_idx"].append(s["sent_idx"])
-                                rows["subj"].append(" ".join(t["word"] for t in seg[s0:s1]))
-                                rows["relation"].append(
-                                    refine_location_relation(rel, obj_t))
-                                rows["obj"].append(obj_t)
-                                rows["confidence"].append(conf)
-            yield pd.DataFrame(rows)
-
-    return annotated.mapInPandas(run, schema=schema)
-
-
-def kbp_ensemble(*arms: DataFrame) -> DataFrame:
-    """Ensemble vote: per (doc, sent, subj, obj) keep the highest-confidence
-    relation across arms (KBPEnsembleExtractor coalesce semantics; arm
-    priority is encoded in confidence ranges: tokensregex/triple 1.0 >
-    semgrex 0.9 > statistical ≤0.85)."""
-    cols = ["doc_id", "sent_idx", "subj", "relation", "obj", "confidence"]
-    both = arms[0].select(*cols)
-    for arm in arms[1:]:
-        both = both.unionByName(arm.select(*cols))
-    return (
-        both.groupBy("doc_id", "sent_idx", "subj", "obj")
-        .agg(F.max(F.struct("confidence", "relation")).alias("best"),
-             F.count("*").alias("n_votes"))
-        .select("doc_id", "sent_idx", "subj",
-                F.col("best.relation").alias("relation"), "obj",
-                F.col("best.confidence").alias("confidence"), "n_votes")
-    )
 
 
 def _trx_pattern(trigger: str, s_ner: str, o_ner: str) -> str:
@@ -518,66 +374,180 @@ def _trx_pattern(trigger: str, s_ner: str, o_ner: str) -> str:
             f"(?$object [ner:{o_ner}]+)")
 
 
-def kbp_tokensregex_relations(annotated: DataFrame) -> DataFrame:
-    """TokensRegex-extractor arm of the KBP ensemble: run the compiled
-    token-sequence patterns (one per KBP_PATTERNS row) over each sentence's
-    token attributes. Same output shape as the other arms; confidence 1.0
-    (tokensregex outranks semgrex and the statistical arm —
-    KBPEnsembleExtractor priority, ``ie/KBPEnsembleExtractor.java``).
+# ---------------------------------------------------------------------------
+# The three arms, one sentence at a time. Each returns (subj, relation, obj,
+# confidence) hits; arm priority is encoded in the confidence ranges
+# (KBPEnsembleExtractor priority): tokensregex 1.0 > semgrex 0.9 >
+# statistical ≤ 0.85.
+# ---------------------------------------------------------------------------
 
-    Patterns compile once on the driver; a first-trigger-word index gates
-    which patterns run per sentence (CoreMapNodePatternTrigger.java trick),
-    so the per-sentence cost is proportional to trigger hits, not to the
-    full pattern inventory."""
+# NER classes the statistical arm never pairs as mentions
+_NON_MENTION = ("O", "", "ORDINAL", "MONEY", "TIME")
+_SIGNATURES = {(s, o) for s, objs in RELATION_TAXONOMY.values() for o in objs}
+STAT_THRESHOLD = 0.5
+
+
+def _ner_runs(seg) -> list[tuple[int, int, str]]:
+    """Maximal same-NER runs (start, end, ner) over a sentence's tokens,
+    sentence-relative; ``O`` runs included."""
+    runs = []
+    i = 0
+    while i < len(seg):
+        ner = seg[i]["ner"]
+        j = i + 1
+        while j < len(seg) and seg[j]["ner"] == ner:
+            j += 1
+        runs.append((i, j, ner))
+        i = j
+    return runs
+
+
+def tokensregex_sentence(seg, by_first: dict) -> list[tuple]:
+    """TokensRegex arm (``ie/KBPTokensregexExtractor.java``): run the
+    compiled token-sequence patterns over the sentence's token attributes.
+    ``by_first`` maps a trigger's first word to its (elems, relation,
+    inverse?) rows, so only patterns whose trigger word occurs are run
+    (CoreMapNodePatternTrigger.java trick). Hits are distinct: two patterns
+    matching the same span pair with the same relation yield one row."""
+    hits = set()
+    for first in {t["word"].lower() for t in seg} & by_first.keys():
+        for elems, rel, inv in by_first[first]:
+            for _, _, groups in find_all(elems, seg):
+                if "subject" not in groups or "object" not in groups:
+                    continue
+                sa, sb = groups["subject"]
+                oa, ob = groups["object"]
+                subj_t = " ".join(t["word"] for t in seg[sa:sb])
+                obj_t = " ".join(t["word"] for t in seg[oa:ob])
+                if inv:
+                    subj_t, obj_t = obj_t, subj_t
+                hits.add((subj_t, refine_location_relation(rel, obj_t), obj_t, 1.0))
+    return list(hits)
+
+
+def semgrex_sentence(g, runs, compiled) -> list[tuple]:
+    """Semgrex arm (``ie/KBPSemgrexExtractor.java``): match the compiled
+    rules over the sentence's dependency graph; each capture expands to
+    the same-NER run around it."""
+    if not g.edges:
+        return []
+    run_of = [r for r, (lo, hi, _ner) in enumerate(runs) for _ in range(lo, hi)]
+
+    def span_text(head):
+        a, b, _ = runs[run_of[head - g.off]]
+        return " ".join(g.words[a:b])
+
+    hits = []
+    for pat, rel in compiled:
+        for m in match_semgrex(pat, g):
+            if "s" in m and "o" in m:
+                obj_t = span_text(m["o"])
+                hits.append((span_text(m["s"]), refine_location_relation(rel, obj_t),
+                             obj_t, 0.9))
+    return hits
+
+
+def statistical_sentence(g, runs, model) -> list[tuple]:
+    """Statistical arm: classify each ordered pair of mention runs whose NER
+    signature appears in the taxonomy; keep non-NONE predictions at or
+    above ``STAT_THRESHOLD`` that pass the predicted relation's type check
+    (confidence capped at 0.85 by the model)."""
+    a, lemmas, parent = g.off, g.lemmas, g.parent
+    mentions = [r for r in runs if r[2] not in _NON_MENTION]
+    hits = []
+    for si, (s0, s1, sner) in enumerate(mentions):
+        for oi, (o0, o1, oner) in enumerate(mentions):
+            if si == oi or (sner, oner) not in _SIGNATURES:
+                continue
+            # features = lemmas BETWEEN the pair (+ inversion marker when
+            # the object precedes the subject)
+            if s1 <= o0:
+                between = lemmas[s1:o0]
+            else:
+                between = lemmas[o1:s0] + ["inv"]
+            dep = None
+            if parent:
+                sh = span_head(parent, a + s0, a + s1)
+                oh = span_head(parent, a + o0, a + o1)
+                path = dep_path(parent, lemmas, sh, oh, offset=a)
+                if path:
+                    dep = {"path": path, "spos": g.pos[sh - a],
+                           "opos": g.pos[oh - a], "obj_head": g.lemma(oh)}
+            rel, conf = model.predict(between, sner, oner, dep)
+            # taxonomy type check (the reference's per-relation signature
+            # validation)
+            sig = RELATION_TAXONOMY.get(rel)
+            if sig is not None and (sner != sig[0] or oner not in sig[1]):
+                continue
+            if rel != model.NONE and conf >= STAT_THRESHOLD:
+                obj_t = " ".join(g.words[o0:o1])
+                hits.append((" ".join(g.words[s0:s1]),
+                             refine_location_relation(rel, obj_t), obj_t, conf))
+    return hits
+
+
+def kbp_arm_rows(annotated: DataFrame) -> DataFrame:
+    """All three KBP extractors in one pass over the annotated docs: one
+    ``mapInPandas`` reads ``doc_id, tokens, sentences`` (plus ``deps`` when
+    the frame has it; a missing or NULL ``deps`` means no edges, so the
+    semgrex arm yields nothing and the statistical arm has no path
+    features) and yields ``(doc_id, sent_idx, subj, relation, obj,
+    confidence, arm)`` with ``arm`` in tokensregex / semgrex / statistical.
+
+    Patterns compile once on the driver. The tokensregex arm's hits are
+    distinct per sentence; that equals a ``dropDuplicates`` on (doc_id,
+    sent_idx, subj, relation, obj) as long as each doc_id names one input
+    row, which holds for every caller in the package (a doc_id repeated
+    across input rows keeps one copy of its rows per input row)."""
     from typing import Iterator
 
     import pandas as pd
 
-    from corenlp_spark.operators.tokensregex import compile_pattern, find_all
-
-    compiled = []  # (first_trigger_word, elems, relation, inverse?)
-    for trigger, s_ner, o_ner, rel in KBP_PATTERNS:
-        inv = rel.startswith("~")
-        elems = compile_pattern(_trx_pattern(trigger, s_ner, o_ner))
-        compiled.append((trigger.split()[0].lower(), elems,
-                         rel.lstrip("~"), inv))
     by_first: dict[str, list] = {}
-    for first, elems, rel, inv in compiled:
-        by_first.setdefault(first, []).append((elems, rel, inv))
+    for trigger, s_ner, o_ner, rel in KBP_PATTERNS:
+        elems = compile_pattern(_trx_pattern(trigger, s_ner, o_ner))
+        by_first.setdefault(trigger.split()[0].lower(), []).append(
+            (elems, rel.lstrip("~"), rel.startswith("~")))
+    semgrex = [(compile_semgrex(p), rel) for p, _, _, rel, _ in KBP_SEMGREX]
 
+    names = ["doc_id", "sent_idx", "subj", "relation", "obj", "confidence", "arm"]
     schema = ("doc_id string, sent_idx int, subj string, relation string, "
-              "obj string, confidence double")
+              "obj string, confidence double, arm string")
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        model = _get_rel_model()
         for pdf in batches:
-            rows = {k: [] for k in ("doc_id", "sent_idx", "subj", "relation",
-                                    "obj", "confidence")}
-            for doc_id, toks, sents in zip(
-                pdf["doc_id"], pdf["tokens"], pdf["sentences"]
+            rows = []
+            deps_col = pdf["deps"] if "deps" in pdf.columns else [None] * len(pdf)
+            for doc_id, toks, sents, deps in zip(
+                pdf["doc_id"], pdf["tokens"], pdf["sentences"], deps_col
             ):
-                for s in sents:
-                    seg = toks[s["start_tok"]:s["end_tok"]]
-                    lws = {t["word"].lower() for t in seg}
-                    for first in lws & by_first.keys():
-                        for elems, rel, inv in by_first[first]:
-                            for _, _, groups in find_all(elems, seg):
-                                if "subject" not in groups or "object" not in groups:
-                                    continue
-                                sa, sb = groups["subject"]
-                                oa, ob = groups["object"]
-                                rows["doc_id"].append(doc_id)
-                                rows["sent_idx"].append(s["sent_idx"])
-                                subj_t = " ".join(t["word"] for t in seg[sa:sb])
-                                obj_t = " ".join(t["word"] for t in seg[oa:ob])
-                                if inv:
-                                    subj_t, obj_t = obj_t, subj_t
-                                rows["subj"].append(subj_t)
-                                rows["relation"].append(
-                                    refine_location_relation(rel, obj_t))
-                                rows["obj"].append(obj_t)
-                                rows["confidence"].append(1.0)
-            yield pd.DataFrame(rows)
+                for s, g in sentence_graphs(toks, sents, deps):
+                    runs = _ner_runs(g.toks)
+                    for arm, hits in (
+                        ("tokensregex", tokensregex_sentence(g.toks, by_first)),
+                        ("semgrex", semgrex_sentence(g, runs, semgrex)),
+                        ("statistical", statistical_sentence(g, runs, model)),
+                    ):
+                        rows.extend((doc_id, s["sent_idx"], *h, arm) for h in hits)
+            yield pd.DataFrame(rows, columns=names)
 
-    cols = annotated.select("doc_id", "tokens", "sentences")
-    return cols.mapInPandas(run, schema=schema).dropDuplicates(
-        ["doc_id", "sent_idx", "subj", "relation", "obj"])
+    cols = ["doc_id", "tokens", "sentences"] + (
+        ["deps"] if "deps" in annotated.columns else [])
+    return annotated.select(*cols).mapInPandas(run, schema=schema)
+
+
+def kbp_ensemble(rows: DataFrame) -> DataFrame:
+    """Ensemble vote over ``kbp_arm_rows``: per (doc, sent, subj, obj) keep
+    the highest-confidence relation across arms (KBPEnsembleExtractor
+    coalesce semantics; arm priority is encoded in confidence ranges:
+    tokensregex 1.0 > semgrex 0.9 > statistical ≤0.85) and count the
+    votes."""
+    return (
+        rows.groupBy("doc_id", "sent_idx", "subj", "obj")
+        .agg(F.max(F.struct("confidence", "relation")).alias("best"),
+             F.count("*").alias("n_votes"))
+        .select("doc_id", "sent_idx", "subj",
+                F.col("best.relation").alias("relation"), "obj",
+                F.col("best.confidence").alias("confidence"), "n_votes")
+    )

@@ -1,13 +1,10 @@
-"""KBP 3-arm ensemble tests (tokensregex/triple + semgrex + statistical)."""
+"""KBP 3-arm ensemble tests (tokensregex + semgrex + statistical)."""
 
 import pandas as pd
+from pyspark.sql import functions as F
 
 from corenlp_spark.data.synth import DOCS_SCHEMA
-from corenlp_spark.operators.kbp import (
-    kbp_ensemble, kbp_semgrex_relations,
-    kbp_statistical_relations, kbp_tokensregex_relations,
-)
-from corenlp_spark.operators.mentions import mention_rows
+from corenlp_spark.operators.kbp import kbp_arm_rows, kbp_ensemble
 from corenlp_spark.plans.fused import annotate
 
 
@@ -22,6 +19,10 @@ def _docs(spark, texts):
     )
 
 
+def _arm(ann, name):
+    return kbp_arm_rows(ann).filter(F.col("arm") == name)
+
+
 TEXTS = [
     "Barack Obama was born in Hawaii.",
     "Chris Manning works for Stanford University.",
@@ -32,7 +33,7 @@ TEXTS = [
 
 def test_semgrex_arm(spark):
     ann = annotate(_docs(spark, TEXTS))
-    got = {(r.subj, r.relation, r.obj) for r in kbp_semgrex_relations(ann).collect()}
+    got = {(r.subj, r.relation, r.obj) for r in _arm(ann, "semgrex").collect()}
     assert ("Barack Obama", "per:city_of_birth", "Hawaii") in got
     assert ("Chris Manning", "per:employee_of", "Stanford University") in got
     assert ("IBM", "org:city_of_headquarters", "Armonk") in got
@@ -40,25 +41,22 @@ def test_semgrex_arm(spark):
 
 def test_statistical_arm_scores_and_thresholds(spark):
     ann = annotate(_docs(spark, TEXTS))
-    rows = kbp_statistical_relations(ann).collect()
+    rows = _arm(ann, "statistical").collect()
     got = {(r.subj, r.relation, r.obj): r.confidence for r in rows}
     assert ("Barack Obama", "per:city_of_birth", "Hawaii") in got
     assert all(0.5 <= c <= 0.85 for c in got.values())
     # negative: "Obama visited Paris" has no birth/employ lemma → no relation
     ann2 = annotate(_docs(spark, ["Obama visited Paris."]))
-    assert kbp_statistical_relations(ann2).count() == 0
+    assert _arm(ann2, "statistical").count() == 0
 
 
 def test_ensemble_prefers_pattern_arm(spark):
     ann = annotate(_docs(spark, TEXTS))
-    arm1 = kbp_tokensregex_relations(ann)
-    arm2 = kbp_semgrex_relations(ann)
-    arm3 = kbp_statistical_relations(ann)
-    ens = kbp_ensemble(arm1, arm2, arm3).collect()
+    ens = kbp_ensemble(kbp_arm_rows(ann)).collect()
     by = {(r.subj, r.obj): r for r in ens}
     r = by[("Barack Obama", "Hawaii")]
     assert r.relation == "per:city_of_birth"
-    assert r.confidence == 1.0      # triple-pattern arm outranks the others
+    assert r.confidence == 1.0      # tokensregex arm outranks the others
     assert r.n_votes >= 2           # multiple arms agreed
 
 
@@ -71,12 +69,8 @@ def test_tokensregex_arm_rejects_substring_false_positive(spark):
     ann = annotate(_docs(spark, [
         "Anna Keller is worth 30 million dollars.",
         "Anna Keller is 34.",
-    ])).cache()
-    try:
-        got = {(r.subj, r.relation, r.obj)
-               for r in kbp_tokensregex_relations(ann).collect()}
-    finally:
-        ann.unpersist()
+    ]))
+    got = {(r.subj, r.relation, r.obj) for r in _arm(ann, "tokensregex").collect()}
     assert ("Anna Keller", "per:age", "34") in got
     assert not any(rel == "per:age" and "30" in obj for _, rel, obj in got), got
 
@@ -128,5 +122,5 @@ def test_statistical_arm_long_range_via_dep_path(spark):
         "Dana Whitfield , who had recently visited Bruges , works for Atlas Dynamics .",
     ]))
     got = {(r.subj, r.relation, r.obj)
-           for r in kbp_statistical_relations(ann).collect()}
+           for r in _arm(ann, "statistical").collect()}
     assert ("Dana Whitfield", "per:employee_of", "Atlas Dynamics") in got

@@ -6,15 +6,13 @@ Mirrors the reference's KBP benchmark harness
 F1 ≥ 0.455 (``KBPAnnotatorEnglishBenchmarkSlowITest.java:18``); this
 synthetic pool is in-distribution for the trained arm, so the gate here is
 far stricter. Every sentence routes through the REAL pipeline (trained
-POS/NER → depparse → OpenIE → 3-arm ensemble), not a shortcut.
+POS/NER → depparse → one-pass 3-arm ensemble), not a shortcut.
 """
 
 from corenlp_spark.data.kbp_corpus import KBP_GOLD, kbp_docs
 from corenlp_spark.operators.kbp import (
-    RELATION_TAXONOMY, kbp_ensemble, kbp_semgrex_relations,
-    kbp_statistical_relations, kbp_tokensregex_relations,
+    RELATION_TAXONOMY, kbp_arm_rows, kbp_ensemble,
 )
-from corenlp_spark.operators.mentions import mention_rows
 from corenlp_spark.plans.fused import annotate
 
 
@@ -27,16 +25,8 @@ def test_taxonomy_covers_reference_inventory():
 
 
 def test_kbp_benchmark_f1(spark):
-    ann = annotate(kbp_docs(spark)).cache()
-    try:
-        ens = kbp_ensemble(
-            kbp_tokensregex_relations(ann),
-            kbp_semgrex_relations(ann),
-            kbp_statistical_relations(ann),
-        )
-        got = {(r.subj, r.relation, r.obj) for r in ens.collect()}
-    finally:
-        ann.unpersist()
+    ens = kbp_ensemble(kbp_arm_rows(annotate(kbp_docs(spark))))
+    got = {(r.subj, r.relation, r.obj) for r in ens.collect()}
     gold = {g for _, g in KBP_GOLD}
     tp, fp, fn = len(got & gold), len(got - gold), len(gold - got)
     prec = tp / max(tp + fp, 1)

@@ -10,7 +10,7 @@ from corenlp_spark.operators.entitylink import (
     alias_dict, canonical_entities, link_mentions, minhash_candidates,
 )
 from corenlp_spark.operators.graph import dedup_triples
-from corenlp_spark.operators.kbp import kbp_tokensregex_relations
+from corenlp_spark.operators.kbp import kbp_arm_rows
 from corenlp_spark.operators.mentions import mention_rows
 from corenlp_spark.operators.openie import openie_docs
 from corenlp_spark.plans.fused import annotate, pronoun_reps
@@ -65,7 +65,7 @@ def test_canonical_entities_salted(spark):
 
 def test_kbp_relations(spark):
     ann = annotate(synth_docs(spark, N), upto="coref")
-    rels = kbp_tokensregex_relations(ann)
+    rels = kbp_arm_rows(ann).filter(F.col("arm") == "tokensregex")
     got = {(r.subj, r.relation, r.obj) for r in rels.collect()}
     assert ("Barack Obama", "per:city_of_birth", "Hawaii") in got
     assert ("Chris Manning", "per:employee_of", "Stanford University") in got
@@ -104,21 +104,23 @@ def test_pronoun_canonicalization_null_coref(spark):
              "Marie Curie was born in Paris. She won the Nobel Prize.",
              "IBM is headquartered in Armonk."]
     ann = annotate(text_docs(spark, ["d0", "d1", "d2"], texts)).cache()
-    null_doc = "d0"
-    # the NULL-coref doc is one the rewrite would change
-    assert pronoun_reps(ann.filter(F.col("doc_id") == null_doc).first()["coref"])
-    broken = ann.withColumn(
-        "coref", F.when(F.col("doc_id") == null_doc, F.lit(None))
-        .otherwise(F.col("coref")))
-    rows = lambda df, keep: sorted(tuple(r) for r in df.collect() if keep(r[0]))
-    got = openie_docs(broken)
-    assert rows(got, lambda d: d == null_doc) \
-        == rows(openie_docs(ann.drop("coref")), lambda d: d == null_doc)
-    assert rows(got, lambda d: d != null_doc) \
-        == rows(openie_docs(ann), lambda d: d != null_doc)
-    assert ("He", "was", "president") in \
-        {(r.subj, r.pred, r.obj) for r in got.filter(F.col("doc_id") == null_doc).collect()}
-    ann.unpersist()
+    try:
+        null_doc = "d0"
+        # the NULL-coref doc is one the rewrite would change
+        assert pronoun_reps(ann.filter(F.col("doc_id") == null_doc).first()["coref"])
+        broken = ann.withColumn(
+            "coref", F.when(F.col("doc_id") == null_doc, F.lit(None))
+            .otherwise(F.col("coref")))
+        rows = lambda df, keep: sorted(tuple(r) for r in df.collect() if keep(r[0]))
+        got = openie_docs(broken)
+        assert rows(got, lambda d: d == null_doc) \
+            == rows(openie_docs(ann.drop("coref")), lambda d: d == null_doc)
+        assert rows(got, lambda d: d != null_doc) \
+            == rows(openie_docs(ann), lambda d: d != null_doc)
+        assert ("He", "was", "president") in \
+            {(r.subj, r.pred, r.obj) for r in got.filter(F.col("doc_id") == null_doc).collect()}
+    finally:
+        ann.unpersist()
 
 
 def test_openie_docs_plans_no_join_or_exchange(spark, tmp_path):

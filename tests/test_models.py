@@ -17,7 +17,6 @@ from corenlp_spark.data.train_corpus import (
 from corenlp_spark.data.synth import synth_docs
 from corenlp_spark.models.perceptron import (
     AveragedPerceptronTagger, StructuredPerceptronNER, load_weights,
-    tag_with_model,
 )
 from corenlp_spark.operators.ner import tag_sentence_ner
 from corenlp_spark.operators.tag import CLOSED_CLASS, pos_tag
@@ -297,24 +296,6 @@ def test_distributed_parameter_mixing_training(spark):
         right += sum(p == g for p, g in zip(pred, gold))
         total += len(gold)
     assert right / total >= 0.85, f"mixed-model held-out {right/total:.3f}"
-
-
-def test_broadcast_inference_on_spark(spark):
-    """Explicit broadcast-variable inference shape still works (the cluster
-    deployment alternative to package-file weights)."""
-    from corenlp_spark.plans.fused import annotate
-
-    ann = annotate(synth_docs(spark, 20), upto="tag")
-    out = tag_with_model(ann, load_weights("pos"))
-    rows = out.collect()
-    n = agree = 0
-    for r in rows:
-        for t in r["tokens"]:
-            n += 1
-            # the tagger pins closed-class/punct; raw model predict may differ
-            # there — agreement is over the open-class decisions
-            agree += t["ppos"] == t["pos"]
-    assert n > 0 and agree / n >= 0.90, f"model/pipeline agreement {agree/n:.3f}"
 
 
 def test_enhanced_rewrites_mwe_quantmod_xsubj():

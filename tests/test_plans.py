@@ -131,6 +131,20 @@ def test_ivf_verify_is_bucket_local(spark):
     assert p.count("Exchange hashpartitioning") == 1, p
 
 
+def test_kbp_arms_are_one_pass(spark, tmp_path):
+    """The three KBP arms run in one kernel over one scan of the annotated
+    docs (``kbp.kbp_arm_rows``): the ensemble plans exactly one FileScan,
+    one MapInPandas and one exchange — the ensemble's groupBy."""
+    from corenlp_spark.operators.kbp import kbp_arm_rows, kbp_ensemble
+
+    path = str(tmp_path / "annotated")
+    annotate(synth_docs(spark, 5)).write.parquet(path)
+    p = plan_of(kbp_ensemble(kbp_arm_rows(spark.read.parquet(path))))
+    assert p.count("FileScan") == 1, p
+    assert p.count("MapInPandas") == 1, p
+    assert p.count("Exchange hashpartitioning") == 1, p
+
+
 def test_scaled_dict_link_shuffle_path(spark, monkeypatch):
     """wikidict-scale linking: above ``BROADCAST_MAX_ROWS`` the dictionary
     join must (a) produce the exact broadcast-path output and (b) plan a

@@ -8,7 +8,7 @@ from corenlp_spark.data.kbp_corpus import KBP_DISTRACTORS, KBP_GOLD
 from corenlp_spark.data.synth import DOCS_SCHEMA, _doc_spans
 from corenlp_spark.operators.depparse import SentenceGraph, sentence_graphs
 from corenlp_spark.operators.entail import entailed_docs
-from corenlp_spark.operators.kbp import kbp_semgrex_relations, kbp_statistical_relations
+from corenlp_spark.operators.kbp import kbp_arm_rows
 from corenlp_spark.operators.openie import openie_docs
 from corenlp_spark.plans.fused import CUTS, _annotate_batch, annotate
 
@@ -67,28 +67,38 @@ def test_graph_fallbacks_never_fire_on_fused_output():
 
 def test_null_deps_and_sentences_rows_yield_nothing(spark):
     """One NULL-deps doc and one NULL-sentences doc go through the graph
-    consumers without failing the task; the other docs' rows are unchanged."""
+    consumers without failing the task; the other docs' rows are unchanged.
+    Each KBP arm is checked on its own rows of the one-pass kernel."""
     docs = spark.createDataFrame(pd.DataFrame({
         "doc_id": [f"d{i}" for i in range(len(TEXTS))],
         "spans": [_text_spans(t) for t in TEXTS],
     }), schema=DOCS_SCHEMA)
     ann = annotate(docs).cache()
-    null_deps, null_sents = "d0", "d1"
-    broken = ann.select(
-        "doc_id", "tokens",
-        F.when(F.col("doc_id") == null_sents, F.lit(None))
-        .otherwise(F.col("sentences")).alias("sentences"),
-        F.when(F.col("doc_id") == null_deps, F.lit(None))
-        .otherwise(F.col("deps")).alias("deps"),
-    )
-    for op in (openie_docs, entailed_docs, kbp_semgrex_relations,
-               kbp_statistical_relations):
-        clean = sorted(tuple(r) for r in op(ann).collect())
-        got = sorted(tuple(r) for r in op(broken).collect())
-        assert {r[0] for r in clean} >= {null_deps, null_sents}, op.__name__
-        assert [r for r in got if r[0] not in (null_deps, null_sents)] == \
-            [r for r in clean if r[0] not in (null_deps, null_sents)], op.__name__
-        assert null_sents not in {r[0] for r in got}, op.__name__
-        if op is not kbp_statistical_relations:  # NULL deps = no path features
-            assert null_deps not in {r[0] for r in got}, op.__name__
-    ann.unpersist()
+    try:
+        null_deps, null_sents = "d0", "d1"
+        broken = ann.select(
+            "doc_id", "tokens",
+            F.when(F.col("doc_id") == null_sents, F.lit(None))
+            .otherwise(F.col("sentences")).alias("sentences"),
+            F.when(F.col("doc_id") == null_deps, F.lit(None))
+            .otherwise(F.col("deps")).alias("deps"),
+        )
+        ops = {"openie": openie_docs, "entail": entailed_docs}
+        for arm in ("tokensregex", "semgrex", "statistical"):
+            ops[arm] = lambda df, a=arm: kbp_arm_rows(df).filter(F.col("arm") == a)
+        for name, op in ops.items():
+            clean = sorted(tuple(r) for r in op(ann).collect())
+            got = sorted(tuple(r) for r in op(broken).collect())
+            assert {r[0] for r in clean} >= {null_deps, null_sents}, name
+            assert [r for r in got if r[0] not in (null_deps, null_sents)] == \
+                [r for r in clean if r[0] not in (null_deps, null_sents)], name
+            assert null_sents not in {r[0] for r in got}, name
+            # tokensregex reads no deps; statistical only loses its path
+            # features (and with them d0's one hit); the graph consumers see
+            # an edgeless sentence
+            if name == "tokensregex":
+                assert null_deps in {r[0] for r in got}, name
+            elif name != "statistical":
+                assert null_deps not in {r[0] for r in got}, name
+    finally:
+        ann.unpersist()
