@@ -130,7 +130,8 @@ class Pipeline:
         from corenlp_spark.plans.fused import extract_triples_fused
 
         return extract_triples_fused(
-            docs, canonicalize="coref" in self.annotators)
+            docs, canonicalize="coref" in self.annotators,
+            options=self.props.get("tokenize.options"))
 
     def mentions(self, docs: DataFrame) -> DataFrame:
         from corenlp_spark.operators.mentions import mention_rows
@@ -168,15 +169,14 @@ class Pipeline:
         if "kbp" not in self.annotators:
             raise ValueError("pipeline was not configured with 'kbp'")
         from corenlp_spark.operators.kbp import kbp_arm_rows, kbp_ensemble
-        from corenlp_spark.plans.fused import annotate
 
-        return kbp_ensemble(kbp_arm_rows(annotate(docs)))
+        return kbp_ensemble(kbp_arm_rows(self(docs)))
 
     def sentiments(self, docs: DataFrame) -> DataFrame:
         """Per-sentence 5-class sentiment rows (SentimentAnnotator analog)."""
         from corenlp_spark.operators.sentiment import sentiment_docs
 
-        return sentiment_docs(docs)
+        return sentiment_docs(docs, self.props.get("tokenize.options"))
 
     def json(self, docs: DataFrame) -> DataFrame:
         """CoreNLP-JSON outputter over the annotated docs."""

@@ -13,21 +13,24 @@ contamination incidence, not corpus size).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from corenlp_spark.functions.textstats import tokens
 
+def _grams(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
+    """(doc_id, gram): each row's distinct word ``n``-grams, built by the
+    row-local Arrow shingle kernel. The kernel emits one all-tokens gram
+    for a text shorter than ``n`` tokens; the filter drops it."""
+    from corenlp_spark.functions.dedup import _shingle_mhs_kernel
 
-def _ngrams(col, n: int) -> Column:
-    toks = tokens(col)
-    return F.when(
-        F.size(toks) >= n,
-        F.transform(
-            F.sequence(F.lit(1), F.size(toks) - n + 1),
-            lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    kernel, schema = _shingle_mhs_kernel(
+        0, n, with_sh=True, id_type=df.schema[id_col].dataType.simpleString())
+    return (
+        df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
+        .mapInPandas(kernel, schema=schema)
+        .select("doc_id", F.explode("sh").alias("gram"))
+        .filter((F.size(F.split("gram", " ")) == n) & (F.col("gram") != ""))
+    )
 
 
 def contaminated_docs(docs: DataFrame, benchmark: DataFrame, n: int = 8,
@@ -39,29 +42,8 @@ def contaminated_docs(docs: DataFrame, benchmark: DataFrame, n: int = 8,
 
     ``benchmark`` is (bench_id, text); its distinct n-grams are broadcast.
     """
-    from corenlp_spark.functions.dedup import _shingle_mhs_kernel
-
-    bench = benchmark.select(
-        F.col("bench_id"),
-        F.explode(F.array_distinct(_ngrams(F.col("text"), n))).alias("gram"),
-    )
-    # corpus-side n-grams via the row-local Arrow kernel (r6 — same
-    # distinct n-gram set and tokenization as the column expression, built
-    # in one pass instead of the interpreted transform/concat_ws tree);
-    # NOTE the kernel emits the all-tokens gram for docs shorter than n
-    # (concat_ws-skips-missing semantics) while _ngrams emits none — the
-    # join result is identical because the benchmark side only carries
-    # full n-grams, but we filter short docs' grams to keep the exploded
-    # row set itself identical to the expression form.
-    kernel, schema = _shingle_mhs_kernel(
-        0, n, with_sh=True,
-        id_type=docs.schema[id_col].dataType.simpleString())
-    corpus = (
-        docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
-        .mapInPandas(kernel, schema=schema)
-        .select("doc_id", F.explode("sh").alias("gram"))
-        .filter(F.size(F.split("gram", " ")) == n)
-    )
+    bench = _grams(benchmark, "bench_id", "text", n).withColumnRenamed("doc_id", "bench_id")
+    corpus = _grams(docs, id_col, text_col, n)
     return (
         corpus.join(F.broadcast(bench), "gram")
         .groupBy("doc_id", "bench_id")

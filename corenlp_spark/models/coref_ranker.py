@@ -130,15 +130,6 @@ class CorefRanker:
         return m
 
 
-def ranker_weights() -> dict | None:
-    from corenlp_spark.models.perceptron import load_weights
-
-    try:
-        return load_weights("coref")
-    except Exception:  # artifact absent (fresh clone pre-training)
-        return None
-
-
 def training_examples():
     """Build ranking examples from data/coref_corpus.TRAIN_DOCS through the
     REAL annotation stack + the SHARED candidate generators."""

@@ -71,7 +71,7 @@ TRUECASE = _build_truecase()
 
 
 def quote_docs(df: DataFrame) -> DataFrame:
-    """+ quotes column with speaker attribution."""
+    """+ quotes column with speaker attribution (empty for NULL tokens)."""
     out_schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields)
     out_schema += f", quotes {QUOTES_TYPE}"
 
@@ -79,8 +79,11 @@ def quote_docs(df: DataFrame) -> DataFrame:
         for pdf in batches:
             quotes_col = []
             for toks in pdf["tokens"]:
+                quotes = []  # filled in place below
+                quotes_col.append(quotes)
+                if toks is None:
+                    continue
                 toks = list(toks)
-                quotes = []
 
                 def _is_verb(t):
                     return (t["lemma"] in _SPEECH_VERBS
@@ -177,7 +180,6 @@ def quote_docs(df: DataFrame) -> DataFrame:
                         and q["start_tok"] - prev["end_tok"] <= 3 else None)
                 for q in quotes:
                     del q["_own2"], q["_voc"]
-                quotes_col.append(quotes)
             pdf = pdf.copy()
             pdf["quotes"] = quotes_col
             yield pdf
@@ -186,13 +188,17 @@ def quote_docs(df: DataFrame) -> DataFrame:
 
 
 def truecase_docs(df: DataFrame) -> DataFrame:
-    """+ truecase field per token (canonical casing; identity when unknown)."""
+    """+ truecase field per token (canonical casing; identity when unknown;
+    NULL tokens stay NULL)."""
     out_schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             new_tokens = []
             for toks in pdf["tokens"]:
+                if toks is None:
+                    new_tokens.append(None)
+                    continue
                 out = []
                 for t in toks:
                     t = dict(t)

@@ -254,24 +254,16 @@ def defnp_candidates(mentions: list, i: int) -> list[int]:
 
 
 _RANKER = None
-_RANKER_LOADED = False
 
 
 def _get_ranker():
-    """Lazy once-per-process load of the trained mention ranker (None when
-    the weights artifact is absent — the rule cascade then stands alone)."""
-    global _RANKER, _RANKER_LOADED
-    if not _RANKER_LOADED:
-        _RANKER_LOADED = True
-        try:
-            from corenlp_spark.models.coref_ranker import (
-                CorefRanker, ranker_weights,
-            )
-            blob = ranker_weights()
-            if blob is not None:
-                _RANKER = CorefRanker.from_broadcastable(blob)
-        except Exception:
-            _RANKER = None
+    """Lazy once-per-process load of the trained mention ranker."""
+    global _RANKER
+    if _RANKER is None:
+        from corenlp_spark.models.coref_ranker import CorefRanker
+        from corenlp_spark.models.perceptron import load_weights
+
+        _RANKER = CorefRanker.from_broadcastable(load_weights("coref"))
     return _RANKER
 
 
@@ -483,23 +475,22 @@ def run_sieves(mentions: list[Mention], tokens: list[dict] | None = None) -> Non
                 if mi.kind == "pronoun" and mi.text.lower() in _FIRST_PERSON \
                         and qs < mi.start < qe:
                     union(i, speaker_j)
-    # Sieve 5: pronoun match (agreement-gated; nearest compatible antecedent
-    # within 2 sentences, or the TRAINED ranker's argmax when weights are
-    # shipped); first person is the speaker sieve's job ONLY.
+    # Sieve 5: pronoun match (agreement-gated candidates within 2 sentences,
+    # the TRAINED ranker's argmax among them); first person is the speaker
+    # sieve's job ONLY.
     # Sieve 4e (statistical ranker, anaphoric definite NPs): "the company"
     # ← ORG entity — no string overlap exists for the deterministic sieves,
     # so the trained ranker (StatisticalCorefAlgorithm.java:35 re-expressed)
     # scores hypernym-typed candidates incl. the no-antecedent option
     ranker = _get_ranker()
-    if ranker is not None:
-        for i in range(n):
-            if find(i) != i:
-                continue  # already resolved by an earlier sieve
-            cands = defnp_candidates(mentions, i)
-            if cands:
-                hit = ranker.choose(mentions, i, cands)
-                if hit is not None:
-                    union(i, hit)
+    for i in range(n):
+        if find(i) != i:
+            continue  # already resolved by an earlier sieve
+        cands = defnp_candidates(mentions, i)
+        if cands:
+            hit = ranker.choose(mentions, i, cands)
+            if hit is not None:
+                union(i, hit)
     for i in range(n):
         mi = mentions[i]
         if mi.kind != "pronoun" or mi.text.lower() in _FIRST_PERSON:
@@ -521,15 +512,9 @@ def run_sieves(mentions: list[Mention], tokens: list[dict] | None = None) -> Non
         cands = pronoun_candidates(mentions, i)
         if not cands:
             continue
-        if ranker is not None:
-            # trained selection (incl. the no-antecedent option): subject
-            # salience, recency, binding clashes are learned, not coded
-            hit = ranker.choose(mentions, i, cands)
-        else:
-            # untrained fallback: typed entity mentions outrank bare
-            # nominals at equal reach, then nearest-first (the pre-r5 rule)
-            hit = next((j for j in cands
-                        if mentions[j].ner not in ("O", "")), cands[0])
+        # trained selection (incl. the no-antecedent option): subject
+        # salience, recency, binding clashes are learned, not coded
+        hit = ranker.choose(mentions, i, cands)
         if hit is not None:
             union(i, hit)
 

@@ -21,9 +21,6 @@ tests/test_entail.py port ``OpenIEITest.testBasicEntailments`` (:106-110).
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from corenlp_spark.operators.depparse import SentenceGraph, sentence_graphs
@@ -116,24 +113,18 @@ def forward_entail(g: SentenceGraph, max_fragments: int = 32) -> list[tuple[str,
     return sorted(best.items(), key=lambda kv: (-kv[1], kv[0]))
 
 
+def _fragment_rows(tokens, sentences, deps, coref):
+    """One doc's (sent_idx, fragment, score) rows over its parsed sentences."""
+    for s, g in sentence_graphs(tokens, sentences, deps):
+        if g.edges:
+            for fr, sc in forward_entail(g):
+                yield s["sent_idx"], fr, sc
+
+
 def entailed_docs(df: DataFrame) -> DataFrame:
     """docs(+tokens,+sentences,+deps) → exploded entailed-fragments table
     (the EntailedSentencesAnnotation analog). Narrow, zero shuffle."""
+    from corenlp_spark.plans.fused import doc_rows
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in ("doc_id", "sent_idx", "fragment", "score")}
-            for doc_id, toks, sents, deps in zip(
-                pdf["doc_id"], pdf["tokens"], pdf["sentences"], pdf["deps"]
-            ):
-                for s, g in sentence_graphs(toks, sents, deps):
-                    if not g.edges:
-                        continue
-                    for fr, sc in forward_entail(g):
-                        rows["doc_id"].append(doc_id)
-                        rows["sent_idx"].append(s["sent_idx"])
-                        rows["fragment"].append(fr)
-                        rows["score"].append(sc)
-            yield pd.DataFrame(rows)
-
-    return df.mapInPandas(run, schema=FRAGMENTS_SCHEMA)
+    return doc_rows(df, _fragment_rows, FRAGMENTS_SCHEMA,
+                    reads=("tokens", "sentences", "deps"))

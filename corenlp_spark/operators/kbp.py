@@ -14,11 +14,11 @@ Behavioral reference (re-expressed):
     highest-confidence hit per mention pair (``ie/KBPEnsembleExtractor.java``
     coalesce semantics).
 
-Spark shape: ``kbp_arm_rows`` is one ``mapInPandas`` over the annotated docs
-that runs the three per-sentence arm functions on each sentence and tags
-every row with its arm; ``kbp_ensemble`` is one groupBy over those rows.
-Candidate pairs never leave their sentence, so there is no join, and the
-ensemble's groupBy is the only shuffle.
+Spark shape: ``kbp_arm_rows`` is one pass of ``fused.doc_rows`` over the
+annotated docs that runs the three per-sentence arm functions on each
+sentence and tags every row with its arm; ``kbp_ensemble`` is one groupBy
+over those rows. Candidate pairs never leave their sentence, so there is no
+join, and the ensemble's groupBy is the only shuffle.
 """
 
 from __future__ import annotations
@@ -487,11 +487,11 @@ def statistical_sentence(g, runs, model) -> list[tuple]:
 
 
 def kbp_arm_rows(annotated: DataFrame) -> DataFrame:
-    """All three KBP extractors in one pass over the annotated docs: one
-    ``mapInPandas`` reads ``doc_id, tokens, sentences`` (plus ``deps`` when
-    the frame has it; a missing or NULL ``deps`` means no edges, so the
-    semgrex arm yields nothing and the statistical arm has no path
-    features) and yields ``(doc_id, sent_idx, subj, relation, obj,
+    """All three KBP extractors in one pass over the annotated docs
+    (``fused.doc_rows``): it reads ``doc_id, tokens, sentences`` (plus
+    ``deps`` when the frame has it; a missing or NULL ``deps`` means no
+    edges, so the semgrex arm yields nothing and the statistical arm has no
+    path features) and yields ``(doc_id, sent_idx, subj, relation, obj,
     confidence, arm)`` with ``arm`` in tokensregex / semgrex / statistical.
 
     Patterns compile once on the driver. The tokensregex arm's hits are
@@ -499,9 +499,7 @@ def kbp_arm_rows(annotated: DataFrame) -> DataFrame:
     sent_idx, subj, relation, obj) as long as each doc_id names one input
     row, which holds for every caller in the package (a doc_id repeated
     across input rows keeps one copy of its rows per input row)."""
-    from typing import Iterator
-
-    import pandas as pd
+    from corenlp_spark.plans.fused import doc_rows
 
     by_first: dict[str, list] = {}
     for trigger, s_ner, o_ner, rel in KBP_PATTERNS:
@@ -510,31 +508,22 @@ def kbp_arm_rows(annotated: DataFrame) -> DataFrame:
             (elems, rel.lstrip("~"), rel.startswith("~")))
     semgrex = [(compile_semgrex(p), rel) for p, _, _, rel, _ in KBP_SEMGREX]
 
-    names = ["doc_id", "sent_idx", "subj", "relation", "obj", "confidence", "arm"]
-    schema = ("doc_id string, sent_idx int, subj string, relation string, "
-              "obj string, confidence double, arm string")
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def per_doc(tokens, sentences, deps, coref):
         model = _get_rel_model()
-        for pdf in batches:
-            rows = []
-            deps_col = pdf["deps"] if "deps" in pdf.columns else [None] * len(pdf)
-            for doc_id, toks, sents, deps in zip(
-                pdf["doc_id"], pdf["tokens"], pdf["sentences"], deps_col
+        for s, g in sentence_graphs(tokens, sentences, deps):
+            runs = _ner_runs(g.toks)
+            for arm, hits in (
+                ("tokensregex", tokensregex_sentence(g.toks, by_first)),
+                ("semgrex", semgrex_sentence(g, runs, semgrex)),
+                ("statistical", statistical_sentence(g, runs, model)),
             ):
-                for s, g in sentence_graphs(toks, sents, deps):
-                    runs = _ner_runs(g.toks)
-                    for arm, hits in (
-                        ("tokensregex", tokensregex_sentence(g.toks, by_first)),
-                        ("semgrex", semgrex_sentence(g, runs, semgrex)),
-                        ("statistical", statistical_sentence(g, runs, model)),
-                    ):
-                        rows.extend((doc_id, s["sent_idx"], *h, arm) for h in hits)
-            yield pd.DataFrame(rows, columns=names)
+                for h in hits:
+                    yield (s["sent_idx"], *h, arm)
 
-    cols = ["doc_id", "tokens", "sentences"] + (
-        ["deps"] if "deps" in annotated.columns else [])
-    return annotated.select(*cols).mapInPandas(run, schema=schema)
+    return doc_rows(annotated, per_doc,
+                    "doc_id string, sent_idx int, subj string, relation string, "
+                    "obj string, confidence double, arm string",
+                    reads=("tokens", "sentences", "deps"))
 
 
 def kbp_ensemble(rows: DataFrame) -> DataFrame:

@@ -21,8 +21,8 @@ MENTIONS_SCHEMA = ("doc_id string, sent_idx int, ner string, start_tok int, "
 
 
 def chunk_mentions(tokens) -> list[dict]:
-    """LabeledChunkIdentifier over one doc's token list (pure function,
-    shared by the fused batch path and the streaming path)."""
+    """LabeledChunkIdentifier over one doc's token list: one dict per
+    mention, its keys in ``MENTIONS_SCHEMA`` order after doc_id."""
     out: list[dict] = []
     i, n = 0, len(tokens)
     while i < n:
@@ -50,19 +50,9 @@ def chunk_mentions(tokens) -> list[dict]:
 def mention_rows(df: DataFrame) -> DataFrame:
     """docs(doc_id, tokens, ...) → mentions(doc_id, sent_idx, ner, start_tok,
     end_tok, nner, text) — chunked in-pass, zero shuffle."""
-    from typing import Iterator
+    from corenlp_spark.plans.fused import doc_rows
 
-    import pandas as pd
+    def per_doc(tokens, *_):
+        return [tuple(m.values()) for m in chunk_mentions(tokens)]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in ("doc_id", "sent_idx", "ner", "start_tok",
-                                    "end_tok", "nner", "text")}
-            for doc_id, toks in zip(pdf["doc_id"], pdf["tokens"]):
-                for m in chunk_mentions(list(toks)):
-                    rows["doc_id"].append(doc_id)
-                    for k, v in m.items():
-                        rows[k].append(v)
-            yield pd.DataFrame(rows)
-
-    return df.mapInPandas(run, schema=MENTIONS_SCHEMA)
+    return doc_rows(df, per_doc, MENTIONS_SCHEMA, reads=("tokens",))

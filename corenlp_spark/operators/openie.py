@@ -23,9 +23,6 @@ Narrow transform per doc; the triple table inherits the docs partitioning.
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from corenlp_spark.operators.depparse import SentenceGraph, sentence_graphs
@@ -34,8 +31,6 @@ TRIPLES_SCHEMA = (
     "doc_id string, sent_idx int, subj string, pred string, obj string, "
     "confidence double, subj_head int, obj_head int"
 )
-TRIPLE_COLUMNS = ("doc_id", "sent_idx", "subj", "pred", "obj", "confidence",
-                  "subj_head", "obj_head")
 
 # downward-monotone clause governors (NaturalLogicAnnotator operator lexicon)
 _DOWNWARD_GOVERNORS = {"doubt", "deny", "refuse", "fail", "reject", "doubtful"}
@@ -457,31 +452,22 @@ def openie_docs(df: DataFrame) -> DataFrame:
     """annotated docs(doc_id, tokens, sentences, deps[, coref]) → triples
     table (exploded). When the frame carries a ``coref`` column, pronoun
     subjects are rewritten to their chain's representative in the same pass
-    (``fused.pronoun_reps``, as in ``extract_triples_fused``); a doc whose
+    (``fused.doc_triples``, as in ``extract_triples_fused``); a doc whose
     coref is NULL keeps its triples as extracted. Only the columns read
     cross Arrow."""
-    from corenlp_spark.plans.fused import doc_triples, pronoun_reps
+    from corenlp_spark.plans.fused import doc_rows, doc_triples
 
-    cols = ["doc_id", "tokens", "sentences", "deps"]
-    if "coref" in df.columns:
-        cols.append("coref")
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            corefs = pdf["coref"] if "coref" in pdf else [None] * len(pdf)
-            for doc_id, toks, sents, deps, coref in zip(
-                pdf["doc_id"], pdf["tokens"], pdf["sentences"], pdf["deps"], corefs
-            ):
-                rep_of = pronoun_reps(coref) if coref is not None else None
-                rows.extend((doc_id, *t)
-                            for t in doc_triples(toks, sents, deps, rep_of))
-            yield pd.DataFrame(rows, columns=TRIPLE_COLUMNS)
-
-    return df.select(*cols).mapInPandas(run, schema=TRIPLES_SCHEMA)
+    return doc_rows(df, doc_triples, TRIPLES_SCHEMA)
 
 
 POLARITY_SCHEMA = "doc_id string, sent_idx int, tok_idx int, word string, polarity string"
+
+
+def _polarity_rows(tokens, sentences, deps, coref):
+    """One doc's (sent_idx, tok_idx, word, polarity) rows."""
+    for s, g in sentence_graphs(tokens, sentences, deps):
+        for i, p in enumerate(compute_polarity(g)):
+            yield s["sent_idx"], g.off + i, g.words[i], p
 
 
 def natlog_docs(df: DataFrame) -> DataFrame:
@@ -490,23 +476,10 @@ def natlog_docs(df: DataFrame) -> DataFrame:
     The tokens-field analog of the reference's per-token Polarity
     annotation (``naturalli/NaturalLogicAnnotator.java:594``): downstream
     consumers (extraction gating, monotonicity-aware rewriting) read the
-    mark instead of re-walking the tree. Narrow per-doc transform — output
-    inherits the docs partitioning, no shuffle.
+    mark instead of re-walking the tree. Annotated to the parse in the same
+    narrow pass (``fused.doc_rows``) — output inherits the docs
+    partitioning, no shuffle.
     """
-    from corenlp_spark.plans.fused import _annotate_batch
+    from corenlp_spark.plans.fused import doc_rows
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in ("doc_id", "sent_idx", "tok_idx", "word", "polarity")}
-            ann = _annotate_batch(list(pdf["spans"]), upto="depparse")
-            for doc_id, (tokens, sentences, deps, _) in zip(pdf["doc_id"], ann):
-                for s, g in sentence_graphs(tokens, sentences, deps):
-                    for i, p in enumerate(compute_polarity(g)):
-                        rows["doc_id"].append(doc_id)
-                        rows["sent_idx"].append(s["sent_idx"])
-                        rows["tok_idx"].append(g.off + i)
-                        rows["word"].append(g.words[i])
-                        rows["polarity"].append(p)
-            yield pd.DataFrame(rows)
-
-    return df.mapInPandas(run, schema=POLARITY_SCHEMA)
+    return doc_rows(df, _polarity_rows, POLARITY_SCHEMA, upto="depparse")

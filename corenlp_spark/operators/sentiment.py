@@ -13,15 +13,15 @@ compositional effects the RNTN learns (negation flip, intensification)
 applied through the dependency-side machinery this engine does have. Same
 output surface and label inventory; weaker on subtle compositionality.
 
-Narrow per-doc transform (mapInPandas); no shuffle.
+Narrow per-doc transform (``fused.doc_rows``); no shuffle.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from corenlp_spark.operators.depparse import sentence_graphs
+from corenlp_spark.operators.openie import compute_polarity
 
 SENTIMENT_SCHEMA = (
     "doc_id string, sent_idx int, sentiment string, score double"
@@ -105,28 +105,21 @@ def label_of(score: float) -> str:
     return LABELS[4]
 
 
-def sentiment_docs(df: DataFrame) -> DataFrame:
+def _sentiment_rows(tokens, sentences, deps, coref):
+    """One doc's (sent_idx, label, score) rows: natlog polarity marks for a
+    parsed sentence, the lexicon negation window for an edgeless one."""
+    for s, g in sentence_graphs(tokens, sentences, deps):
+        sc = round(score_sentence(g.words, compute_polarity(g) if g.edges else None), 6)
+        yield s["sent_idx"], label_of(sc), sc
+
+
+def sentiment_docs(df: DataFrame, options: dict | None = None) -> DataFrame:
     """docs → one row per sentence with (sentiment label, raw score).
 
-    Computes natlog polarity marks per sentence when a deps column is
-    available in the annotation (the fused kernel recomputes them cheaply);
-    without deps the lexicon negation-window fallback applies."""
-    from corenlp_spark.operators.depparse import sentence_graphs
-    from corenlp_spark.operators.openie import compute_polarity
-    from corenlp_spark.plans.fused import _annotate_batch
+    Annotates to the parse in the same pass (``fused.doc_rows``; ``options``
+    are the tokenizer options) and scores each sentence with its natlog
+    polarity marks."""
+    from corenlp_spark.plans.fused import doc_rows
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in ("doc_id", "sent_idx", "sentiment", "score")}
-            ann = _annotate_batch(list(pdf["spans"]), upto="depparse")
-            for doc_id, (tokens, sentences, deps, _) in zip(pdf["doc_id"], ann):
-                for s, g in sentence_graphs(tokens, sentences, deps):
-                    pol = compute_polarity(g) if g.edges else None
-                    sc = round(score_sentence(g.words, pol), 6)
-                    rows["doc_id"].append(doc_id)
-                    rows["sent_idx"].append(s["sent_idx"])
-                    rows["sentiment"].append(label_of(sc))
-                    rows["score"].append(sc)
-            yield pd.DataFrame(rows)
-
-    return df.mapInPandas(run, schema=SENTIMENT_SCHEMA)
+    return doc_rows(df, _sentiment_rows, SENTIMENT_SCHEMA, upto="depparse",
+                    options=options)

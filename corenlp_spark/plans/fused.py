@@ -2,12 +2,16 @@
 
 The kernels (tokenize → POS+lemma → NER → depparse → coref, and OpenIE on
 top) compose in-process and cross Arrow exactly once per batch, emitting
-either the annotated doc row (``annotate``) or the small triples rows
-directly (``extract_triples_fused``). This is the trick the reference plays
-with its single mutable Annotation tree
-(``pipeline/AnnotationPipeline.java:66-83``) — re-expressed as operator
-fusion inside one narrow Spark stage, which is what whole-stage codegen does
-for JVM operators and we do manually for the Python kernels.
+either the annotated doc row (``annotate``) or, through ``doc_rows``, the
+small rows of a per-doc extractor directly (``extract_triples_fused``).
+This is the trick the reference plays with its single mutable Annotation
+tree (``pipeline/AnnotationPipeline.java:66-83``) — re-expressed as
+operator fusion inside one narrow Spark stage, which is what whole-stage
+codegen does for JVM operators and we do manually for the Python kernels.
+
+``doc_rows`` is also the one extraction loop for annotated frames: every
+extractor (triples, natlog, sentiment, entailment, the KBP arms, mentions)
+is a per-doc function it runs.
 
 The model kernels decode BATCHED across all docs of the Arrow batch, with
 each model's one decoder; ``tests/test_batched_kernels.py`` pins it to the
@@ -25,7 +29,7 @@ from pyspark.sql import DataFrame
 from corenlp_spark.operators.coref import COREF_TYPE, detect_mentions, run_sieves
 from corenlp_spark.operators.depparse import DEPS_TYPE, sentence_graphs
 from corenlp_spark.operators.ner import NER_TOKENS_TYPE, tag_ner_batch
-from corenlp_spark.operators.openie import TRIPLE_COLUMNS, TRIPLES_SCHEMA, extract_sentence
+from corenlp_spark.operators.openie import TRIPLES_SCHEMA, extract_sentence
 from corenlp_spark.operators.tag import TAGGED_TOKENS_TYPE, lemmatize, pos_tag_batch
 from corenlp_spark.operators.tokenize import SENTENCES_TYPE, TOKENS_TYPE, annotate_doc
 
@@ -178,12 +182,13 @@ def pronoun_reps(coref) -> dict[int, str]:
             for t in range(m["start_tok"], m["end_tok"])}
 
 
-def doc_triples(tokens, sentences, deps, rep_of: dict[int, str] | None = None
-                ) -> list[tuple]:
+def doc_triples(tokens, sentences, deps, coref=None) -> list[tuple]:
     """One doc's OpenIE triples as (sent_idx, subj, pred, obj, confidence,
-    subj_head, obj_head): ``extract_sentence`` per parsed sentence, subjects
-    rewritten through ``rep_of`` (see ``pronoun_reps``), and the most
-    confident triple per caseless (subj, pred, obj) within a sentence."""
+    subj_head, obj_head): ``extract_sentence`` per parsed sentence, pronoun
+    subjects rewritten to their chain's representative when ``coref`` is
+    given (see ``pronoun_reps``), and the most confident triple per caseless
+    (subj, pred, obj) within a sentence."""
+    rep_of = pronoun_reps(coref) if coref is not None else None
     out = []
     for s, g in sentence_graphs(tokens, sentences, deps):
         if not g.edges:
@@ -199,23 +204,54 @@ def doc_triples(tokens, sentences, deps, rep_of: dict[int, str] | None = None
     return out
 
 
-def extract_triples_fused(df: DataFrame, canonicalize: bool = True) -> DataFrame:
+#: the annotation columns a per-doc function of ``doc_rows`` receives, in order
+DOC_COLUMNS = ("tokens", "sentences", "deps", "coref")
+
+
+def doc_rows(df: DataFrame, per_doc, schema: str, *, reads=DOC_COLUMNS,
+             upto: str | None = None, options: dict | None = None) -> DataFrame:
+    """The one extraction loop: ``per_doc(tokens, sentences, deps, coref)``
+    returns a doc's rows, and ONE ``mapInPandas`` yields ``(doc_id, *row)``
+    for each of them under the flat DDL ``schema`` (``doc_id`` first).
+
+    With ``upto``, ``df`` holds raw docs(doc_id, spans, ...): each Arrow
+    batch is annotated up to that cut in the same task (``_annotate_batch``
+    with the tokenizer ``options``), so no nested column crosses Arrow, and
+    nothing of ``df`` but ``mapInPandas`` is used. Without it, ``df`` is
+    annotated and only ``doc_id`` and the ``reads`` columns it has cross
+    Arrow; a column that is missing or NULL reaches ``per_doc`` as None,
+    and a doc whose ``tokens`` are NULL yields no rows."""
+    names = [field.split()[0] for field in schema.split(",")]
+
+    if upto is not None:
+        def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            for pdf in batches:
+                ann = _annotate_batch(list(pdf["spans"]), upto, options)
+                yield pd.DataFrame([(doc_id, *row) for doc_id, a in zip(pdf["doc_id"], ann)
+                                    for row in per_doc(*a)], columns=names)
+
+        return df.mapInPandas(run, schema=schema)
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            cols = [pdf[c] if c in pdf.columns else [None] * len(pdf) for c in DOC_COLUMNS]
+            yield pd.DataFrame([(doc_id, *row)
+                                for doc_id, tokens, *rest in zip(pdf["doc_id"], *cols)
+                                if tokens is not None
+                                for row in per_doc(tokens, *rest)], columns=names)
+
+    return df.select("doc_id", *[c for c in reads if c in df.columns]).mapInPandas(
+        run, schema=schema)
+
+
+def extract_triples_fused(df: DataFrame, canonicalize: bool = True,
+                          options: dict | None = None) -> DataFrame:
     """docs → triples in ONE pass: no nested columns ever cross Arrow.
 
     With ``canonicalize``, pronoun subjects are rewritten to their coref
     representative in-process, so the output equals ``openie_docs`` over
-    ``annotate(df)`` without the nested columns crossing Arrow; without it
-    the coref kernel is skipped."""
-    upto = "coref" if canonicalize else "depparse"
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            ann = _annotate_batch(list(pdf["spans"]), upto)
-            for doc_id, (tokens, sentences, deps, coref) in zip(pdf["doc_id"], ann):
-                rep_of = pronoun_reps(coref) if canonicalize else None
-                rows.extend((doc_id, *t)
-                            for t in doc_triples(tokens, sentences, deps, rep_of))
-            yield pd.DataFrame(rows, columns=TRIPLE_COLUMNS)
-
-    return df.mapInPandas(run, schema=TRIPLES_SCHEMA)
+    ``annotate(df, options=options)`` without the nested columns crossing
+    Arrow; without it the coref kernel is skipped. ``options`` are the
+    tokenizer options, as in ``annotate``."""
+    return doc_rows(df, doc_triples, TRIPLES_SCHEMA, options=options,
+                    upto="coref" if canonicalize else "depparse")

@@ -2,9 +2,9 @@
 
 Usage: python scripts/profile_kernel.py [n_docs] [--time-only]
 
-Reproduces what one mapInPandas task of plans/fused.extract_triples_fused
-does per batch: _annotate_batch over _doc_spans docs, then per-doc OpenIE
-extraction with pronoun canonicalization (doc_triples).
+Runs the function one mapInPandas task of plans/fused.extract_triples_fused
+runs per Arrow batch (fused.doc_rows: _annotate_batch, then per-doc OpenIE
+extraction with pronoun canonicalization) over _doc_spans docs.
 """
 
 from __future__ import annotations
@@ -18,14 +18,27 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+import pandas as pd  # noqa: E402
+
 from corenlp_spark.data.synth import _doc_spans  # noqa: E402
 from corenlp_spark.plans import fused  # noqa: E402
 
 
+class _Task:
+    """Stands in for a DataFrame: ``mapInPandas`` hands back the task
+    function instead of planning it."""
+
+    def mapInPandas(self, fn, schema):
+        return fn
+
+
+TASK = fused.extract_triples_fused(_Task())
+
+
 def run(n_docs: int) -> int:
-    ann = fused._annotate_batch([_doc_spans(f"doc-{i:09d}", True) for i in range(n_docs)])
-    return sum(len(fused.doc_triples(tokens, sentences, deps, fused.pronoun_reps(coref)))
-               for tokens, sentences, deps, coref in ann)
+    ids = [f"doc-{i:09d}" for i in range(n_docs)]
+    pdf = pd.DataFrame({"doc_id": ids, "spans": [_doc_spans(d, True) for d in ids]})
+    return sum(len(out) for out in TASK(iter([pdf])))
 
 
 def main() -> None:

@@ -4,7 +4,7 @@ semantics: prerequisite completion, construction-time validation)."""
 import pytest
 
 from corenlp_spark.api import Pipeline, annotate_text
-from corenlp_spark.data.synth import synth_docs
+from corenlp_spark.data.synth import synth_docs, text_docs
 
 
 def test_prerequisites_are_completed():
@@ -51,6 +51,23 @@ def test_tokenizer_properties_ride_through(spark):
     # the strict run must not leak into the shared default options
     after = words_of(default)
     assert after == before and "gon" in after
+
+
+def test_accessors_honour_tokenizer_options(spark):
+    """.triples, .sentiments and .kbp annotate with the pipeline's tokenizer
+    options, as ``pipe(docs)`` does: under ssplit_one_sentence a
+    two-sentence doc is one sentence, so every row is in sentence 0."""
+    docs = text_docs(spark, ["d"], ["Barack Obama was born in Hawaii. "
+                                    "Chris Manning works for Stanford University."])
+    one = Pipeline("openie,sentiment,kbp",
+                   properties={"tokenize.options": {"ssplit_one_sentence": True}})
+    assert len(one(docs).first()["sentences"]) == 1
+    for accessor in ("triples", "sentiments", "kbp"):
+        default = {r.sent_idx for r in getattr(Pipeline("openie,sentiment,kbp"),
+                                               accessor)(docs).collect()}
+        assert default == {0, 1}, accessor
+        got = {r.sent_idx for r in getattr(one, accessor)(docs).collect()}
+        assert got == {0}, accessor
 
 
 def test_simple_api_analog(spark):

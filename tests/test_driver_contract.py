@@ -10,6 +10,7 @@ import duckdb
 import pytest
 
 import __spark_entry__ as em
+import bench
 
 SF = "/root/testdata/sf0.01"
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -64,19 +65,18 @@ def _cache_entries(spark):
 
 
 def test_repeated_suite_queries_do_not_grow_session_state(spark):
-    """A second pass of the persisting suite queries adds no persistent RDD
-    to those of the first: dedup_components and quality_lm release what
-    they materialize, and dedup_ngram_jaccard's one cache entry is reused
-    by the repeat, not duplicated. Ids are read after every query, since
-    the ContextCleaner drops unreferenced RDDs at its own pace; the
-    CacheManager holds at most that one entry after each pass."""
+    """A second pass of every suite query (``bench.SUITE``) adds no
+    persistent RDD to those of the first: dedup_components and quality_lm
+    release what they materialize, and dedup_ngram_jaccard's one cache
+    entry is reused by the repeat, not duplicated. Ids are read after every
+    query, since the ContextCleaner drops unreferenced RDDs at its own
+    pace; the CacheManager holds at most that one entry after each pass."""
     spark.catalog.clearCache()
     passes = []
     try:
         for _ in range(2):
             seen = set()
-            for name in ("dedup_components", "quality_lm",
-                         "dedup_ngram_jaccard"):
+            for name in bench.SUITE:
                 em.queries()[name](spark, "/root/testdata/sf0.001").collect()
                 seen |= set(
                     spark.sparkContext._jsc.getPersistentRDDs().keySet())

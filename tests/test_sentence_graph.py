@@ -6,9 +6,11 @@ from pyspark.sql import functions as F
 
 from corenlp_spark.data.kbp_corpus import KBP_DISTRACTORS, KBP_GOLD
 from corenlp_spark.data.synth import DOCS_SCHEMA, _doc_spans
+from corenlp_spark.operators.aux_annotators import quote_docs, truecase_docs
 from corenlp_spark.operators.depparse import SentenceGraph, sentence_graphs
 from corenlp_spark.operators.entail import entailed_docs
 from corenlp_spark.operators.kbp import kbp_arm_rows
+from corenlp_spark.operators.mentions import mention_rows
 from corenlp_spark.operators.openie import openie_docs
 from corenlp_spark.plans.fused import CUTS, _annotate_batch, annotate
 
@@ -100,5 +102,40 @@ def test_null_deps_and_sentences_rows_yield_nothing(spark):
                 assert null_deps in {r[0] for r in got}, name
             elif name != "statistical":
                 assert null_deps not in {r[0] for r in got}, name
+    finally:
+        ann.unpersist()
+
+
+def test_null_tokens_rows_yield_nothing(spark):
+    """A NULL-tokens doc goes through every tokens consumer without failing
+    the task: the row operators yield nothing for it, ``quote_docs`` gives
+    it no quotes and ``truecase_docs`` leaves its tokens NULL. The other
+    docs' rows are unchanged."""
+    docs = spark.createDataFrame(pd.DataFrame({
+        "doc_id": [f"d{i}" for i in range(len(TEXTS))],
+        "spans": [_text_spans(t) for t in TEXTS],
+    }), schema=DOCS_SCHEMA)
+    ann = annotate(docs).cache()
+    try:
+        null = "d0"
+        broken = ann.withColumn("tokens", F.when(F.col("doc_id") == null, F.lit(None))
+                                .otherwise(F.col("tokens")))
+        ops = {"mentions": mention_rows, "openie": openie_docs,
+               "entail": entailed_docs, "kbp": kbp_arm_rows,
+               "quote": lambda df: quote_docs(df).select("doc_id", "quotes"),
+               "truecase": lambda df: truecase_docs(df).select("doc_id", "tokens")}
+        for name, op in ops.items():
+            clean = sorted(tuple(r) for r in op(ann).collect())
+            got = sorted(tuple(r) for r in op(broken).collect())
+            assert null in {r[0] for r in clean}, name
+            assert [r for r in got if r[0] != null] == \
+                [r for r in clean if r[0] != null], name
+            null_rows = [r[1] for r in got if r[0] == null]
+            if name == "quote":
+                assert null_rows == [[]], name
+            elif name == "truecase":
+                assert null_rows == [None], name
+            else:
+                assert null_rows == [], name
     finally:
         ann.unpersist()
