@@ -45,6 +45,34 @@ def _spread(spark: SparkSession, df: DataFrame) -> DataFrame:
     return df.repartition(spark.sparkContext.defaultParallelism)
 
 
+def _docs(spark: SparkSession, sf_dir: str, probes=None) -> DataFrame:
+    """The ``documents`` table as a suite query reads it: ``_spread``, with
+    the columns that ``functions/`` expects (doc_id, text, lang, source).
+    With ``probes`` — (doc_id, text) rows seeding a case the synthetic
+    corpus lacks — it is (doc_id string, text) ∪ the probes; ``_docs_sql``
+    is its DuckDB twin."""
+    d = _spread(spark, _t(spark, sf_dir, "documents"))
+    if probes is None:
+        return d
+    d = d.select(F.col("doc_id").cast("string").alias("doc_id"), "text")
+    return d.unionByName(
+        spark.createDataFrame(probes, "doc_id string, text string"))
+
+
+def _sql_str(s: str) -> str:
+    """``s`` as a DuckDB string literal (newlines and non-ASCII stay as
+    they are; only the quote is doubled)."""
+    return "'" + s.replace("'", "''") + "'"
+
+
+def _docs_sql(probes) -> str:
+    """The ``input`` CTE: DuckDB twin of ``_docs(spark, sf_dir, probes)``."""
+    rows = ", ".join(f"({_sql_str(i)}, {_sql_str(t)})" for i, t in probes)
+    return f"""input AS (
+          SELECT CAST(doc_id AS VARCHAR) AS doc_id, text FROM documents
+          UNION ALL SELECT * FROM (VALUES {rows}) v(doc_id, text))"""
+
+
 # --------------------------------------------------------------------------
 # flagship
 # --------------------------------------------------------------------------
@@ -120,18 +148,14 @@ def q_dedup_exact(spark, sf_dir):
     certifying an empty set."""
     from corenlp_spark.functions.dedup import exact_dup_clusters
 
-    d = _t(spark, sf_dir, "documents").select(
-        F.col("doc_id").cast("string").alias("doc_id"), "text")
-    probes = spark.createDataFrame(_DUP_PROBES, "doc_id string, text string")
-    return exact_dup_clusters(d.unionByName(probes))
+    return exact_dup_clusters(_docs(spark, sf_dir, _DUP_PROBES))
 
 
 def q_fingerprint(spark, sf_dir):
     from corenlp_spark.functions.textstats import fingerprint
 
-    d = _spread(spark, _t(spark, sf_dir, "documents"))
-    return d.select(F.col("doc_id").cast("long").alias("doc_id"),
-                    fingerprint(F.col("text")).alias("fp"))
+    return _docs(spark, sf_dir).select(
+        "doc_id", fingerprint(F.col("text")).alias("fp"))
 
 
 def q_rolling_fingerprints(spark, sf_dir):
@@ -139,9 +163,8 @@ def q_rolling_fingerprints(spark, sf_dir):
     dedup-fragment / attribution primitive (window 16, stride 8)."""
     from corenlp_spark.functions.textstats import rolling_fingerprints
 
-    d = _spread(spark, _t(spark, sf_dir, "documents"))
-    rf = d.select(
-        F.col("doc_id").cast("long").alias("doc_id"),
+    rf = _docs(spark, sf_dir).select(
+        "doc_id",
         F.explode(rolling_fingerprints(F.col("text"), window=16)).alias("fp"),
     )
     return (
@@ -157,9 +180,8 @@ def q_rolling_fingerprints(spark, sf_dir):
 def q_token_count(spark, sf_dir):
     from corenlp_spark.functions.textstats import token_count
 
-    d = _spread(spark, _t(spark, sf_dir, "documents"))
     return (
-        d.select(F.col("lang"), token_count(F.col("text")).alias("n_tok"))
+        _docs(spark, sf_dir).select(F.col("lang"), token_count(F.col("text")).alias("n_tok"))
         .groupBy("lang")
         .agg(F.sum("n_tok").cast("long").alias("total_tokens"),
              F.count("*").alias("n_docs"),
@@ -171,9 +193,8 @@ def q_token_count(spark, sf_dir):
 def q_quality(spark, sf_dir):
     from corenlp_spark.functions.textstats import quality_score
 
-    d = _spread(spark, _t(spark, sf_dir, "documents"))
-    return d.select(F.col("doc_id").cast("long").alias("doc_id"),
-                    quality_score(F.col("text")).alias("quality"))
+    return _docs(spark, sf_dir).select(
+        "doc_id", quality_score(F.col("text")).alias("quality"))
 
 
 def q_gopher_quality(spark, sf_dir):
@@ -181,8 +202,7 @@ def q_gopher_quality(spark, sf_dir):
     counts (integer sums — order-independent, engine-portable)."""
     from corenlp_spark.functions.textstats import gopher_quality
 
-    d = _spread(spark, _t(spark, sf_dir, "documents"))
-    g = d.select(gopher_quality(F.col("text")).alias("g"))
+    g = _docs(spark, sf_dir).select(gopher_quality(F.col("text")).alias("g"))
     c = lambda name: F.sum(F.col(f"g.{name}").cast("long")).alias(name)
     return g.agg(
         F.count("*").alias("n_docs"),
@@ -199,9 +219,7 @@ def q_gopher_repetition(spark, sf_dir):
     distribution stats + pass count (order-independent result)."""
     from corenlp_spark.functions.textstats import gopher_repetition
 
-    d = _spread(spark, _t(spark, sf_dir, "documents")).select(
-        F.col("doc_id").cast("long").alias("doc_id"), "text")
-    r = gopher_repetition(d)
+    r = gopher_repetition(_docs(spark, sf_dir))
     return r.agg(
         F.count("*").alias("n_docs"),
         F.sum(F.col("passes_repetition").cast("long")).alias("n_pass"),
@@ -232,10 +250,7 @@ def q_pii_scan(spark, sf_dir):
     violation list a 100 TB pipeline materializes, not the full corpus)."""
     from corenlp_spark.functions.pii import pii_scan
 
-    d = _spread(spark, _t(spark, sf_dir, "documents")).select(
-        F.col("doc_id").cast("string").alias("doc_id"), "text")
-    probes = spark.createDataFrame(_PII_PROBES, "doc_id string, text string")
-    return pii_scan(d.unionByName(probes)).orderBy("doc_id")
+    return pii_scan(_docs(spark, sf_dir, _PII_PROBES)).orderBy("doc_id")
 
 
 # a small "benchmark" set + one seeded-contaminated probe doc: the corpus
@@ -260,12 +275,8 @@ def q_decontam(spark, sf_dir):
     (the corpus side is one narrow pass — no corpus-side shuffle)."""
     from corenlp_spark.functions.decontam import contaminated_docs
 
-    d = _spread(spark, _t(spark, sf_dir, "documents")).select(
-        F.col("doc_id").cast("string").alias("doc_id"), "text")
-    probes = spark.createDataFrame(_CONTAM_PROBES,
-                                   "doc_id string, text string")
     bench = spark.createDataFrame(_BENCH_ITEMS, "bench_id string, text string")
-    return (contaminated_docs(d.unionByName(probes), bench, n=8)
+    return (contaminated_docs(_docs(spark, sf_dir, _CONTAM_PROBES), bench, n=8)
             .orderBy("doc_id", "bench_id"))
 
 
@@ -293,10 +304,7 @@ def q_source_quota(spark, sf_dir):
     from corenlp_spark.functions.sampling import (source_mix_report,
                                                   source_quota_sample)
 
-    d = _spread(spark, _t(spark, sf_dir, "documents")).select(
-        F.col("doc_id").cast("long").alias("doc_id"), "text",
-        "lang", "source")
-    kept = source_quota_sample(d, per_source=40)
+    kept = source_quota_sample(_docs(spark, sf_dir), per_source=40)
     return source_mix_report(kept).select(
         "source", "lang", "n_docs", "n_chars", "frac")
 
@@ -307,11 +315,8 @@ def q_paragraph_dedup(spark, sf_dir):
     distinct docs, with doc/occurrence counts."""
     from corenlp_spark.functions.dedup import paragraph_dup_stats
 
-    d = _spread(spark, _t(spark, sf_dir, "documents")).select(
-        F.col("doc_id").cast("string").alias("doc_id"), "text")
-    probes = spark.createDataFrame(_PARA_PROBES, "doc_id string, text string")
-    return (paragraph_dup_stats(d.unionByName(probes))
-            .orderBy("para_hash"))
+    return paragraph_dup_stats(_docs(spark, sf_dir, _PARA_PROBES)).orderBy(
+        "para_hash")
 
 
 def q_quality_lm(spark, sf_dir):
@@ -320,9 +325,7 @@ def q_quality_lm(spark, sf_dir):
     quality filter would drop first)."""
     from corenlp_spark.functions.textstats import unigram_lm_scores
 
-    d = _spread(spark, _t(spark, sf_dir, "documents")).select(
-        F.col("doc_id").cast("long").alias("doc_id"), "text")
-    return (unigram_lm_scores(d)
+    return (unigram_lm_scores(_docs(spark, sf_dir))
             .orderBy(F.col("avg_logprob").asc(), F.col("doc_id").asc())
             .limit(15))
 
@@ -347,11 +350,8 @@ def q_dedup_components(spark, sf_dir):
     recursive CTE reachability min — exact agreement required."""
     from corenlp_spark.functions.dedup import dup_components, minhash_dup_pairs
 
-    d = _spread(spark, _t(spark, sf_dir, "documents")).select(
-        F.col("doc_id").cast("long").alias("doc_id"), "text")
-    pairs = minhash_dup_pairs(d, n_bands=4, k=3, threshold=0.5).select(
-        F.col("doc_a").alias("id_a"), F.col("doc_b").alias("id_b"))
-    comp = dup_components(pairs)
+    comp = dup_components(
+        minhash_dup_pairs(_docs(spark, sf_dir), n_bands=4, k=3, threshold=0.5))
     return (
         comp.groupBy("component")
         .agg(F.count("*").alias("n_members"),
@@ -363,9 +363,8 @@ def q_dedup_components(spark, sf_dir):
 def q_langid(spark, sf_dir):
     from corenlp_spark.functions.textstats import lang_id
 
-    d = _spread(spark, _t(spark, sf_dir, "documents"))
     return (
-        d.select(lang_id(F.col("text")).alias("pred_lang"))
+        _docs(spark, sf_dir).select(lang_id(F.col("text")).alias("pred_lang"))
         .groupBy("pred_lang").agg(F.count("*").alias("n"))
         .orderBy("pred_lang")
     )
@@ -448,7 +447,6 @@ def q_mention_chunks_sql(spark, sf_dir):
 
     from corenlp_spark.functions.textstats import word_tokens
 
-    d = _spread(spark, _t(spark, sf_dir, "documents"))
     groups = {"TOOL": {"spark", "hash", "merge"},
               "ENTITY": {"customer", "order", "part"}}
 
@@ -479,7 +477,7 @@ def q_mention_chunks_sql(spark, sf_dir):
                     out[f"m_{tag}"].append(best)
             yield pd.DataFrame(out)
 
-    wide = d.select("text").mapInPandas(
+    wide = _docs(spark, sf_dir).select("text").mapInPandas(
         run_stats,
         schema=("r_ENTITY int, k_ENTITY int, m_ENTITY int, "
                 "r_TOOL int, k_TOOL int, m_TOOL int"))
@@ -532,10 +530,7 @@ def q_dedup_minhash(spark, sf_dir):
     sizes (portable md5 hashing — DuckDB reproduces every signature)."""
     from corenlp_spark.functions.dedup import minhash_signatures
 
-    d = _spread(spark, _t(spark, sf_dir, "documents")).select(
-        F.col("doc_id").cast("long").alias("doc_id"), "text"
-    )
-    sig = minhash_signatures(d, n_bands=4, k=3)
+    sig = minhash_signatures(_docs(spark, sf_dir), n_bands=4, k=3)
     return (
         sig.groupBy("band", "mh").agg(F.count("*").alias("bucket_size"))
         .filter(F.col("bucket_size") > 1)
@@ -553,10 +548,8 @@ def q_dedup_simhash(spark, sf_dir):
     reproduces every md5-derived bit (portable hashing)."""
     from corenlp_spark.functions.dedup import simhash
 
-    d = _spread(spark, _t(spark, sf_dir, "documents")).select(
-        F.col("doc_id").cast("long").alias("doc_id"), "text"
-    )
-    s = simhash(d).withColumn("bucket", F.shiftright("simhash", 44))
+    s = simhash(_docs(spark, sf_dir)).withColumn(
+        "bucket", F.shiftright("simhash", 44))
     return (
         s.groupBy("bucket")
         .agg(F.count("*").alias("n_docs"),
@@ -620,11 +613,8 @@ def q_dedup_simhash_pairs(spark, sf_dir):
     hamming join, so any recall miss in the Spark bucketing hash-fails."""
     from corenlp_spark.functions.dedup import simhash_dup_pairs
 
-    d = _spread(spark, _t(spark, sf_dir, "documents")).select(
-        F.col("doc_id").cast("string").alias("doc_id"), "text")
-    probes = spark.createDataFrame(_NEAR_DUP_PROBES,
-                                   "doc_id string, text string")
-    pairs = simhash_dup_pairs(d.unionByName(probes), max_hamming=3)
+    pairs = simhash_dup_pairs(_docs(spark, sf_dir, _NEAR_DUP_PROBES),
+                              max_hamming=3)
     # hash-repartition before the declared global sort (r6): the sort's
     # range-boundary sampling otherwise re-executes the whole pair verify a
     # second time; behind an AQE-materialized shuffle stage the sampling
@@ -638,11 +628,8 @@ def q_dedup_simhash_pairs(spark, sf_dir):
 def _simhash_pairs_oracle() -> str:
     """All-pairs hamming-≤3 oracle over the same simhash signatures: the
     ground truth the multi-table bucketing must fully recall."""
-    probes = ", ".join(f"('{i}', '{t}')" for i, t in _NEAR_DUP_PROBES)
     return f"""
-        WITH input AS (
-          SELECT CAST(doc_id AS VARCHAR) AS doc_id, text FROM documents
-          UNION ALL SELECT * FROM (VALUES {probes}) v(doc_id, text)),
+        WITH {_docs_sql(_NEAR_DUP_PROBES)},
         {_simhash_ctes("input")}
         SELECT x.doc_id AS doc_a, y.doc_id AS doc_b,
                bit_count(xor(x.simhash, y.simhash)) AS hamming
@@ -656,10 +643,8 @@ def q_dedup_ngram_jaccard(spark, sf_dir):
     """Exact n-gram Jaccard near-dup pairs (inverted-index join)."""
     from corenlp_spark.functions.dedup import ngram_jaccard_pairs
 
-    d = _spread(spark, _t(spark, sf_dir, "documents")).select(
-        F.col("doc_id").cast("long").alias("doc_id"), "text"
-    )
-    return ngram_jaccard_pairs(d, k=5, threshold=0.8).orderBy("doc_a", "doc_b")
+    pairs = ngram_jaccard_pairs(_docs(spark, sf_dir), k=5, threshold=0.8)
+    return pairs.orderBy("doc_a", "doc_b")
 
 
 def q_events_asof(spark, sf_dir):
@@ -1362,7 +1347,7 @@ def _sentiment_sql_tables() -> tuple[str, str, str, str]:
         DIMINISHERS, INTENSIFIERS, VALENCE, _NEG_WORDS,
     )
 
-    q = lambda w: "'" + w.replace("'", "''") + "'"
+    q = _sql_str
     val = ", ".join(f"({q(w)}, {v})" for w, v in sorted(VALENCE.items()))
     inten = ", ".join(f"({q(w)}, {v})" for w, v in sorted(INTENSIFIERS.items()))
     dim = ", ".join(f"({q(w)}, {v})" for w, v in sorted(DIMINISHERS.items())
@@ -1561,13 +1546,8 @@ def _gopher_repetition_oracle() -> str:
 def _paragraph_oracle() -> str:
     """DuckDB twin of dedup.paragraph_dup_stats over documents ∪ probes:
     same newline-run split, trim, md5, distinct-doc counting."""
-    probes = ", ".join(
-        "('%s', '%s')" % (i, t.replace("\n", "' || chr(10) || '"))
-        for i, t in _PARA_PROBES)
     return f"""
-        WITH input AS (
-          SELECT CAST(doc_id AS VARCHAR) AS doc_id, text FROM documents
-          UNION ALL SELECT * FROM (VALUES {probes}) v(doc_id, text)),
+        WITH {_docs_sql(_PARA_PROBES)},
         paras AS (
           SELECT doc_id, trim(p) AS para
           FROM input, unnest(regexp_split_to_array(text, '\\n+')) AS u(p)
@@ -1670,7 +1650,6 @@ def _pii_oracle() -> str:
     counts AND every redacted byte (md5) must match."""
     from corenlp_spark.functions.pii import PII_PATTERNS
 
-    probes = ", ".join(f"('{i}', '{t}')" for i, t in _PII_PROBES)
     counts = ",\n                 ".join(
         f"CAST(len(regexp_extract_all(text, '{pat}')) AS BIGINT) AS n_{kind}"
         for kind, pat, _ in PII_PATTERNS)
@@ -1679,9 +1658,7 @@ def _pii_oracle() -> str:
         red = f"regexp_replace({red}, '{pat}', '{repl}', 'g')"
     total = " + ".join(f"n_{kind}" for kind, _, _ in PII_PATTERNS)
     return f"""
-        WITH input AS (
-          SELECT CAST(doc_id AS VARCHAR) AS doc_id, text FROM documents
-          UNION ALL SELECT * FROM (VALUES {probes}) v(doc_id, text)),
+        WITH {_docs_sql(_PII_PROBES)},
         c AS (
           SELECT doc_id,
                  {counts},
@@ -1694,12 +1671,9 @@ def _pii_oracle() -> str:
 
 def _decontam_oracle() -> str:
     """All-in-SQL replay of the broadcast 8-gram decontamination join."""
-    probes = ", ".join(f"('{i}', '{t}')" for i, t in _CONTAM_PROBES)
-    bench = ", ".join(f"('{i}', '{t}')" for i, t in _BENCH_ITEMS)
+    bench = ", ".join(f"({_sql_str(i)}, {_sql_str(t)})" for i, t in _BENCH_ITEMS)
     return f"""
-        WITH input AS (
-          SELECT CAST(doc_id AS VARCHAR) AS doc_id, text FROM documents
-          UNION ALL SELECT * FROM (VALUES {probes}) v(doc_id, text)),
+        WITH {_docs_sql(_CONTAM_PROBES)},
         ctk AS (SELECT doc_id, {_TOKENS} AS tk FROM input),
         cg AS (
           SELECT DISTINCT doc_id, array_to_string(tk[i : i + 7], ' ') AS gram
@@ -1720,7 +1694,8 @@ def _decontam_oracle() -> str:
 def _entity_link_oracle() -> str:
     from corenlp_spark.operators.entitylink import DEFAULT_ALIASES
 
-    dict_rows = ", ".join(f"('{s}', '{l}', {sc})" for s, l, sc in DEFAULT_ALIASES)
+    dict_rows = ", ".join(f"({_sql_str(s)}, {_sql_str(l)}, {sc})"
+                          for s, l, sc in DEFAULT_ALIASES)
     return f"""
         WITH m AS (
           SELECT * FROM read_parquet('{_ann_tokens_path()}_mentions/*.parquet')),
@@ -1857,17 +1832,8 @@ def oracle_sql() -> dict[str, str]:
                    round(o_totalprice, 2) AS total_price, rk
             FROM j WHERE rk <= 3
         """,
-        "dedup_exact": """
-            WITH input AS (
-              SELECT CAST(doc_id AS VARCHAR) AS doc_id, text FROM documents
-              UNION ALL
-              SELECT * FROM (VALUES
-                ('__dup_a', 'deterministic duplicate probe alpha text'),
-                ('__dup_b', 'deterministic duplicate probe alpha text'),
-                ('__dup_c', 'deterministic duplicate probe alpha text'),
-                ('__dup_d', 'deterministic duplicate probe beta text'),
-                ('__dup_e', 'deterministic duplicate probe beta text')
-              ) v(doc_id, text))
+        "dedup_exact": f"""
+            WITH {_docs_sql(_DUP_PROBES)}
             SELECT md5(text) AS fingerprint, count(*) AS n_docs,
                    min(doc_id) AS keep_doc_id
             FROM input GROUP BY 1 HAVING count(*) > 1

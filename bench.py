@@ -13,21 +13,12 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+_HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, _HERE)
+sys.path.insert(0, os.path.join(_HERE, "perfbench"))
 
 # the operator suite: the SQL-checkable queries, run as actions
-SUITE = (
-    "pricing_summary", "top_orders_per_segment", "dedup_exact",
-    "dedup_minhash", "dedup_simhash", "dedup_simhash_pairs",
-    "dedup_ngram_jaccard",
-    "doc_fingerprint", "rolling_fingerprints", "token_count",
-    "quality_score", "lang_id", "ann_cosine_topk", "embedding_dups",
-    "events_sessions", "events_daily", "events_funnel",
-    "mention_chunks", "entity_link_dict", "gopher_quality",
-    "gopher_repetition", "pii_scan", "decontam_overlap", "source_quota",
-    "paragraph_dedup", "quality_lm", "kmeans_clusters",
-    "dedup_components",
-)
+from workloads import SUITE  # noqa: E402
 
 
 def main() -> None:

@@ -9,6 +9,9 @@ tokenize → explode n-grams → hash-join against the broadcast set →
 per-doc aggregate. No shuffle of corpus text; the only wide exchange is
 the final per-doc count aggregation over matching rows (proportional to
 contamination incidence, not corpus size).
+
+The corpus side is the fixed document columns ``doc_id, text``; the
+benchmark side is ``bench_id, text``.
 """
 
 from __future__ import annotations
@@ -17,33 +20,34 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def _grams(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
-    """(doc_id, gram): each row's distinct word ``n``-grams, built by the
-    row-local Arrow shingle kernel. The kernel emits one all-tokens gram
-    for a text shorter than ``n`` tokens; the filter drops it."""
+def _grams(df: DataFrame, id_col: str, n: int) -> DataFrame:
+    """(doc_id, gram): the distinct word ``n``-grams of each row's
+    ``text``, keyed by its ``id_col``, built by the row-local Arrow shingle
+    kernel. The kernel emits one all-tokens gram for a text shorter than
+    ``n`` tokens; the filter drops it."""
     from corenlp_spark.functions.dedup import _shingle_mhs_kernel
 
     kernel, schema = _shingle_mhs_kernel(
         0, n, with_sh=True, id_type=df.schema[id_col].dataType.simpleString())
     return (
-        df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
+        df.select(F.col(id_col).alias("doc_id"), "text")
         .mapInPandas(kernel, schema=schema)
         .select("doc_id", F.explode("sh").alias("gram"))
         .filter((F.size(F.split("gram", " ")) == n) & (F.col("gram") != ""))
     )
 
 
-def contaminated_docs(docs: DataFrame, benchmark: DataFrame, n: int = 8,
-                      text_col: str = "text",
-                      id_col: str = "doc_id") -> DataFrame:
+def contaminated_docs(docs: DataFrame, benchmark: DataFrame,
+                      n: int = 8) -> DataFrame:
     """(doc_id, bench_id, n_hits): documents sharing ≥1 exact ``n``-gram
     with a benchmark item — the contamination report a pipeline uses to
     drop or flag training docs before a model sees eval data.
 
-    ``benchmark`` is (bench_id, text); its distinct n-grams are broadcast.
+    ``docs`` is (doc_id, text, …) and ``benchmark`` is (bench_id, text);
+    the benchmark's distinct n-grams are broadcast.
     """
-    bench = _grams(benchmark, "bench_id", "text", n).withColumnRenamed("doc_id", "bench_id")
-    corpus = _grams(docs, id_col, text_col, n)
+    bench = _grams(benchmark, "bench_id", n).withColumnRenamed("doc_id", "bench_id")
+    corpus = _grams(docs, "doc_id", n)
     return (
         corpus.join(F.broadcast(bench), "gram")
         .groupBy("doc_id", "bench_id")

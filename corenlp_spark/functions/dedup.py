@@ -10,6 +10,9 @@ Four strategies over the ``documents`` table (doc_id, text, …):
                   hamming distance
   - n-gram jaccard: exact Jaccard on word n-gram sets for candidate pairs
 
+Every pair search emits (doc_a, doc_b, jaccard | hamming) with
+doc_a < doc_b, and ``dup_components`` reads those two columns.
+
 Column-level logic is built-in ``pyspark.sql.functions`` (JVM-side,
 codegen'd) except for row- or bucket-local Arrow kernels
 (``mapInPandas``): shingling + minhash signatures (``_shingle_mhs_kernel``),
@@ -43,15 +46,19 @@ def exact_dup_clusters(docs: DataFrame) -> DataFrame:
     )
 
 
-def paragraph_dup_stats(docs: DataFrame, min_docs: int = 2) -> DataFrame:
+#: a paragraph found in at least this many distinct documents is boilerplate
+PARA_MIN_DOCS = 2
+
+
+def paragraph_dup_stats(docs: DataFrame) -> DataFrame:
     """Cross-document paragraph-level exact dedup (the RefinedWeb /
     MassiveText recipe: a paragraph repeated across many pages is
     boilerplate — nav bars, cookie banners, license footers — and is
     removed from every page, not just deduped at document granularity).
 
     Split each doc on newline runs, trim, drop empties, md5 each
-    paragraph, and return every paragraph that occurs in ≥ ``min_docs``
-    DISTINCT documents: (para_hash, n_docs, n_occurrences, para_chars).
+    paragraph, and return every paragraph that occurs in ≥
+    ``PARA_MIN_DOCS`` DISTINCT documents: (para_hash, n_docs, n_occurrences, para_chars).
 
     Scale shape: one narrow split+explode pass over the corpus, one
     hash-partitioned groupBy on the paragraph hash with map-side partial
@@ -73,7 +80,7 @@ def paragraph_dup_stats(docs: DataFrame, min_docs: int = 2) -> DataFrame:
             F.count("*").alias("n_occurrences"),
             F.min(F.length("para")).alias("para_chars"),
         )
-        .filter(F.col("n_docs") >= min_docs)
+        .filter(F.col("n_docs") >= PARA_MIN_DOCS)
     )
 
 
@@ -313,15 +320,19 @@ def simhash_dup_pairs(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
     return simhash_pairs_from_sigs(simhash(docs), max_hamming)
 
 
+#: ngram_jaccard_pairs drops a shingle found in more than this many docs
+HOT_SHINGLE_CAP = 100
+
+
 def ngram_jaccard_pairs(
-    docs: DataFrame, k: int = 3, threshold: float = 0.5, hot_cap: int = 100
+    docs: DataFrame, k: int = 3, threshold: float = 0.5
 ) -> DataFrame:
     """n-gram Jaccard for candidate pairs sharing ≥1 (non-hot) shingle.
 
     Inverted-index join (shingle → docs) with a frequency cap on hot shingles
     (stop-shingle pruning — the classic skew guard for inverted joins; a
-    shingle in > ``hot_cap`` docs generates O(cap²) pairs and carries no
-    dedup signal). Jaccard is computed over the pruned shingle space on both
+    shingle in > ``HOT_SHINGLE_CAP`` docs generates O(cap²) pairs and
+    carries no dedup signal). Jaccard is computed over the pruned shingle space on both
     sides, so near-dup pairs above ``threshold`` still surface.
     """
     kernel, schema = _shingle_mhs_kernel(
@@ -329,7 +340,7 @@ def ngram_jaccard_pairs(
         id_type=docs.schema["doc_id"].dataType.simpleString())
     sh = (docs.select("doc_id", "text").mapInPandas(kernel, schema=schema)
           .select("doc_id", F.explode("sh").alias("s")))
-    hot = sh.groupBy("s").count().filter(F.col("count") > hot_cap)  # stop-shingles
+    hot = sh.groupBy("s").count().filter(F.col("count") > HOT_SHINGLE_CAP)
     # persist the pruned shingle table: it feeds BOTH sides of the
     # inverted-index self-join AND the per-doc size agg, and Catalyst does
     # not collapse those three subtrees into a ReusedExchange (verified: 8
@@ -365,11 +376,11 @@ def ngram_jaccard_pairs(
 DRIVER_MAX_PAIRS = 250_000
 
 
-def dup_components(pairs: DataFrame, id_a: str = "id_a",
-                   id_b: str = "id_b") -> DataFrame:
-    """Connected components over a duplicate-pair table → (id, component)
-    with component = min id reachable — the step that turns pair output
-    into actual dedup decisions (keep one representative per component).
+def dup_components(pairs: DataFrame) -> DataFrame:
+    """Connected components over a duplicate-pair table (doc_a, doc_b, …),
+    as every pair search here emits it → (id, component) with component =
+    min id reachable — the step that turns pair output into actual dedup
+    decisions (keep one representative per component).
 
     The common path is union-find on the driver: the directed pairs are
     persisted once and at most ``DRIVER_MAX_PAIRS + 1`` of them are fetched
@@ -386,7 +397,7 @@ def dup_components(pairs: DataFrame, id_a: str = "id_a",
     # persisted so the pair pipeline (LSH bucketing + verification) runs
     # once: above the cap the fetch and both sides of the symmetrization
     # union read it again. Released on every exit, a failed fetch included.
-    fwd = (pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
+    fwd = (pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
            .persist(StorageLevel.MEMORY_AND_DISK))
     try:
         pdf = fwd.limit(DRIVER_MAX_PAIRS + 1).toPandas()

@@ -12,6 +12,9 @@ an NER-backed contextual arm (names/addresses) via the same trained-NER
 operators this engine ships (``operators/ner.py``) — the regex cascade
 here is the part that must run on every byte of a 100 TB corpus, so it
 stays in whole-stage codegen.
+
+``pii_counts`` and ``pii_redact`` take a text ``Column``; ``pii_scan``
+reads the fixed document columns ``doc_id, text``.
 """
 
 from __future__ import annotations
@@ -67,15 +70,15 @@ def pii_redact(col) -> Column:
     return F.when(col.rlike(_PII_GATE), out).otherwise(col)
 
 
-def pii_scan(docs: DataFrame, text_col: str = "text",
-             id_col: str = "doc_id") -> DataFrame:
-    """(doc_id, n_email..n_ip, n_pii, redacted_md5) for documents containing
-    any structural PII. The filter keeps the result proportional to the
-    PII incidence, not the corpus size — at 100 TB the output is the
-    (small) violation list, and the counts/filter push into the scan."""
-    counts = pii_counts(F.col(text_col))
-    out = docs.select(F.col(id_col).alias("doc_id"), *counts,
-                      F.md5(pii_redact(F.col(text_col))).alias("redacted_md5"))
+def pii_scan(docs: DataFrame) -> DataFrame:
+    """(doc_id, n_email..n_ip, n_pii, redacted_md5) for the documents
+    (doc_id, text, …) containing any structural PII. The filter keeps the
+    result proportional to the PII incidence, not the corpus size — at
+    100 TB the output is the (small) violation list, and the counts/filter
+    push into the scan."""
+    text = F.col("text")
+    out = docs.select("doc_id", *pii_counts(text),
+                      F.md5(pii_redact(text)).alias("redacted_md5"))
     total = None
     for kind, _, _ in PII_PATTERNS:
         c = F.col(f"n_{kind}")

@@ -9,6 +9,8 @@ collect, no global shuffle beyond the per-source window).
 
 ``source_mix_report``: per (source, lang) composition of the kept set —
 the mix sheet a data-curation run records next to its outputs.
+
+Both read the fixed document columns ``doc_id, text, source, lang``.
 """
 
 from __future__ import annotations
@@ -19,21 +21,18 @@ from pyspark.sql import functions as F
 __all__ = ["source_quota_sample", "source_mix_report"]
 
 
-def source_quota_sample(docs: DataFrame, per_source: int,
-                        source_col: str = "source",
-                        id_col: str = "doc_id") -> DataFrame:
-    """Keep at most ``per_source`` docs per source, by md5(doc_id) order
-    (deterministic and engine-portable — md5 agrees across Spark and
+def source_quota_sample(docs: DataFrame, per_source: int) -> DataFrame:
+    """Keep at most ``per_source`` docs per ``source``, by md5(doc_id)
+    order (deterministic and engine-portable — md5 agrees across Spark and
     DuckDB, so the oracle replays the exact choice)."""
-    w = Window.partitionBy(source_col).orderBy(
-        F.md5(F.col(id_col).cast("string")), F.col(id_col))
+    w = Window.partitionBy("source").orderBy(
+        F.md5(F.col("doc_id").cast("string")), F.col("doc_id"))
     return (docs.withColumn("_rk", F.row_number().over(w))
             .filter(F.col("_rk") <= per_source)
             .drop("_rk"))
 
 
-def source_mix_report(docs: DataFrame, source_col: str = "source",
-                      lang_col: str = "lang") -> DataFrame:
+def source_mix_report(docs: DataFrame) -> DataFrame:
     """(source, lang, n_docs, n_chars, frac) composition rows.
 
     The corpus total is derived from the grouped result itself (an
@@ -41,7 +40,7 @@ def source_mix_report(docs: DataFrame, source_col: str = "source",
     the previous separate ``docs.count()`` action recomputed the entire
     upstream plan (the quota-sample window included) a second time
     (guide §1.2: don't compute things twice; ADVICE r5)."""
-    agg = docs.groupBy(source_col, lang_col).agg(
+    agg = docs.groupBy("source", "lang").agg(
         F.count("*").alias("n_docs"),
         F.sum(F.length("text")).alias("n_chars"),
     )
@@ -49,5 +48,5 @@ def source_mix_report(docs: DataFrame, source_col: str = "source",
     return (
         agg.withColumn(
             "frac", F.round(F.col("n_docs") / F.sum("n_docs").over(w), 6))
-        .orderBy(source_col, lang_col)
+        .orderBy("source", "lang")
     )

@@ -14,6 +14,9 @@
     random-hyperplane signatures (deterministic seeded planes, one bucket
     per band). No O(n²) cross product and no candidate-pair join.
 
+Every function reads the fixed embedding columns ``vec_id, embedding``;
+the ANN pair searches emit (id_a, id_b, score), id_a < id_b.
+
 Design for 100 TB: the query side is tiny (broadcast); the corpus side
 streams. Scores are rounded to 1e-6 like ``F.round(x, 6)`` for
 engine-portable comparison.
@@ -50,27 +53,20 @@ def cosine(a, b):
     return _dot(a, b) / (_norm(a) * _norm(b))
 
 
-def brute_force_topk(
-    emb: DataFrame, query: list[float], k: int = 10,
-    id_col: str = "vec_id", vec_col: str = "embedding",
-) -> DataFrame:
+def brute_force_topk(emb: DataFrame, query: list[float], k: int = 10) -> DataFrame:
     """Exact top-k by cosine to a single query vector (query broadcast as a
     literal array — no join at all)."""
     q = F.array(*[F.lit(float(x)) for x in query])
     scored = emb.select(
-        F.col(id_col),
-        F.round(cosine(F.col(vec_col), q), 6).alias("score"),
-    )
-    return scored.orderBy(F.desc("score"), F.col(id_col)).limit(k)
+        "vec_id", F.round(cosine(F.col("embedding"), q), 6).alias("score"))
+    return scored.orderBy(F.desc("score"), "vec_id").limit(k)
 
 
-def pairwise_topk(
-    emb: DataFrame, k: int = 5, id_col: str = "vec_id", vec_col: str = "embedding",
-) -> DataFrame:
+def pairwise_topk(emb: DataFrame, k: int = 5) -> DataFrame:
     """Exact top-k neighbors per vector (small-N baseline; the ANN path below
     is the scale version of this)."""
-    a = emb.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("v_a"))
-    b = emb.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("v_b"))
+    a = emb.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("v_a"))
+    b = emb.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("v_b"))
     scored = (
         a.crossJoin(b)
         .filter(F.col("id_a") != F.col("id_b"))
@@ -80,10 +76,15 @@ def pairwise_topk(
     return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
 
-def _planes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
+#: LCG seed of ``_planes``: the LSH planes and the default IVF / k-means
+#: centroids, which the DuckDB oracles inline as literals
+PLANE_SEED = 42
+
+
+def _planes(dim: int, n_planes: int) -> list[list[float]]:
     """Deterministic pseudo-random hyperplanes (LCG — reproducible anywhere)."""
     out = []
-    state = seed
+    state = PLANE_SEED
     for _ in range(n_planes):
         row = []
         for _ in range(dim):
@@ -94,13 +95,14 @@ def _planes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
     return out
 
 
-def _assign_kernel(cents, vec_col: str, carry: tuple[str, ...] = (),
+def _assign_kernel(cents, carry: tuple[str, ...] = (),
                    with_score: bool = False):
-    """Arrow-batched nearest-centroid (argmax-dot) assignment → ``cell``,
-    then the ``carry`` columns as they came in, then the winning dot ``s``
-    when ``with_score``. Dot products accumulate sequentially over the
-    dimension axis in float64 (same op order as the ``_dot`` fold and
-    DuckDB's list_dot_product) and ties break toward the LARGER cell (an
+    """Arrow-batched nearest-centroid (argmax-dot) assignment of each
+    ``embedding`` → ``cell``, then the ``carry`` columns as they came in,
+    then the winning dot ``s`` when ``with_score``. Dot products
+    accumulate sequentially over the dimension axis in float64 (same op
+    order as the ``_dot`` fold and DuckDB's list_dot_product) and ties
+    break toward the LARGER cell (an
     ``array_max`` over (score, cell) structs), so the DuckDB oracles replay
     it bit-for-bit. ~20× faster than that interpreted HOF tree per row
     (guide §4.2)."""
@@ -115,7 +117,7 @@ def _assign_kernel(cents, vec_col: str, carry: tuple[str, ...] = (),
         for pdf in batches:
             if not len(pdf):
                 continue
-            V = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
+            V = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["embedding"]])
             S = np.zeros((len(V), C.shape[0]))
             for kk in range(V.shape[1]):
                 S = S + V[:, kk, None] * C[None, :, kk]
@@ -133,7 +135,6 @@ def _assign_kernel(cents, vec_col: str, carry: tuple[str, ...] = (),
 
 def train_centroids(
     emb: DataFrame, dim: int, k: int = 16, iters: int = 5,
-    vec_col: str = "embedding",
 ) -> list[list[float]]:
     """Distributed Lloyd k-means for the IVF coarse quantizer: assignment
     and per-dimension means run as DataFrame aggregations (one shuffle per
@@ -146,11 +147,11 @@ def train_centroids(
 
     cents = _planes(dim, k)
     for _ in range(iters):
-        celed = emb.select(vec_col).mapInPandas(
-            _assign_kernel(cents, vec_col, carry=(vec_col,)),
-            schema=f"cell int, {vec_col} array<float>")
+        celed = emb.select("embedding").mapInPandas(
+            _assign_kernel(cents, carry=("embedding",)),
+            schema="cell int, embedding array<float>")
         means = (
-            celed.select("cell", F.posexplode(vec_col).alias("pos", "x"))
+            celed.select("cell", F.posexplode("embedding").alias("pos", "x"))
             .groupBy("cell", "pos").agg(F.avg("x").alias("m"))
             .groupBy("cell")
             .agg(F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("ms"))
@@ -245,7 +246,7 @@ def bucket_pairs(
         run, schema=f"{out[0]} {id_type}, {out[1]} {id_type}, {out[2]} double")
 
 
-def _cosine_verify(vec_col: str, threshold: float):
+def _cosine_verify(threshold: float):
     """``bucket_pairs`` verify: exact cosine, rounded like
     ``F.round(x, 6)``, kept when ≥ ``threshold``. Dot products and norms
     are vectorized over pairs but accumulated SEQUENTIALLY over the
@@ -259,7 +260,7 @@ def _cosine_verify(vec_col: str, threshold: float):
     def verify(part):
         # (dim, n): one contiguous row per dimension, gathered per pair
         VT = np.stack([np.asarray(v, dtype=np.float64)
-                       for v in part[vec_col]], axis=1)
+                       for v in part["embedding"]], axis=1)
         nrm = np.zeros(VT.shape[1])
         for x in VT:
             nrm = nrm + x * x
@@ -279,7 +280,6 @@ def _cosine_verify(vec_col: str, threshold: float):
 
 def ivf_ann_pairs(
     emb: DataFrame, dim: int, n_cells: int = 16, threshold: float = 0.7,
-    id_col: str = "vec_id", vec_col: str = "embedding",
     centroids: list[list[float]] | None = None,
 ) -> DataFrame:
     """IVF-style ANN: assign each vector to its nearest centroid (coarse
@@ -295,17 +295,16 @@ def ivf_ann_pairs(
     cells — memory is partition-bounded, as for the LSH, minhash and
     simhash verifies (ROADMAP item 2)."""
     cents = centroids if centroids is not None else _planes(dim, n_cells)
-    id_type = emb.schema[id_col].dataType.simpleString()
-    posted = emb.select(id_col, vec_col).mapInPandas(
-        _assign_kernel(cents, vec_col, carry=(id_col, vec_col)),
-        schema=f"cell int, {id_col} {id_type}, {vec_col} array<float>")
-    return bucket_pairs(posted, ("cell",), _cosine_verify(vec_col, threshold),
-                        id_col)
+    id_type = emb.schema["vec_id"].dataType.simpleString()
+    posted = emb.select("vec_id", "embedding").mapInPandas(
+        _assign_kernel(cents, carry=("vec_id", "embedding")),
+        schema=f"cell int, vec_id {id_type}, embedding array<float>")
+    return bucket_pairs(posted, ("cell",), _cosine_verify(threshold), "vec_id")
 
 
 def lsh_ann_pairs(
     emb: DataFrame, dim: int, n_bands: int = 4, band_bits: int = 8,
-    threshold: float = 0.7, id_col: str = "vec_id", vec_col: str = "embedding",
+    threshold: float = 0.7,
 ) -> DataFrame:
     """ANN near-neighbor pairs: random-hyperplane LSH bucketing + exact
     cosine verification. (id_a, id_b, score), id_a < id_b.
@@ -332,7 +331,8 @@ def lsh_ann_pairs(
         for pdf in batches:
             if not len(pdf):
                 continue
-            V = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
+            V = np.stack([np.asarray(v, dtype=np.float64)
+                          for v in pdf["embedding"]])
             # plane dots, sequential over dim (bit-parity with the fold)
             D = np.zeros((len(V), P.shape[1]))
             for k in range(V.shape[1]):
@@ -343,23 +343,21 @@ def lsh_ann_pairs(
                 for b in range(n_bands)
             ], axis=1)  # (n, n_bands)
             yield pd.concat([pd.DataFrame({
-                id_col: pdf[id_col].values, "band": band,
+                "vec_id": pdf["vec_id"].values, "band": band,
                 "sig": sigs[:, band], "sigs": list(sigs),
-                vec_col: pdf[vec_col].values,
+                "embedding": pdf["embedding"].values,
             }) for band in range(n_bands)], ignore_index=True)
 
-    id_type = emb.schema[id_col].dataType.simpleString()
-    posted = emb.select(id_col, vec_col).mapInPandas(
-        post, schema=(f"{id_col} {id_type}, band int, sig long, "
-                      f"sigs array<long>, {vec_col} array<float>"))
-    return bucket_pairs(posted, ("band", "sig"),
-                        _cosine_verify(vec_col, threshold), id_col,
-                        band_keys="sigs")
+    id_type = emb.schema["vec_id"].dataType.simpleString()
+    posted = emb.select("vec_id", "embedding").mapInPandas(
+        post, schema=(f"vec_id {id_type}, band int, sig long, "
+                      "sigs array<long>, embedding array<float>"))
+    return bucket_pairs(posted, ("band", "sig"), _cosine_verify(threshold),
+                        "vec_id", band_keys="sigs")
 
 
 def kmeans_cluster_summary(
     emb: DataFrame, dim: int, k: int = 8, iters: int = 2,
-    id_col: str = "vec_id", vec_col: str = "embedding",
 ) -> DataFrame:
     """Embedding-space clustering summary — the topic/domain bucketing stage
     of a training-data pipeline (cluster-then-sample curation, per-cluster
@@ -374,9 +372,9 @@ def kmeans_cluster_summary(
     training loop in SQL and must land on identical assignments."""
     from pyspark.sql import functions as F
 
-    cents = train_centroids(emb, dim, k=k, iters=iters, vec_col=vec_col)
-    assigned = emb.select(vec_col).mapInPandas(
-        _assign_kernel(cents, vec_col, with_score=True),
+    cents = train_centroids(emb, dim, k=k, iters=iters)
+    assigned = emb.select("embedding").mapInPandas(
+        _assign_kernel(cents, with_score=True),
         schema="cell int, s double")
     return (
         assigned.groupBy("cell")

@@ -7,6 +7,10 @@ DuckDB oracle (the formulas below are deliberately engine-portable: regexp
 token splits, md5 fingerprints, stopword-hit counts). ``gopher_repetition``
 is a row-local Arrow kernel over ``word_tokens``, the Python twin of
 ``tokens``, and matches the SQL form the oracle replays value for value.
+
+The column functions take a text ``Column``; the two table functions,
+``gopher_repetition`` and ``unigram_lm_scores``, read the fixed document
+columns ``doc_id, text``.
 """
 
 from __future__ import annotations
@@ -247,8 +251,9 @@ def _round6_like_spark_array(x):
     return out
 
 
-def gopher_repetition(df, text_col: str = "text", id_col: str = "doc_id"):
-    """Gopher repetition signals (Rae et al. 2021 Appendix A): per document,
+def gopher_repetition(df):
+    """Gopher repetition signals (Rae et al. 2021 Appendix A): per document
+    of ``df`` (doc_id, text, …),
     the character fraction of the heaviest n-gram (n=2..4) and of all
     duplicated n-grams (n=5..10), with the published pass thresholds.
 
@@ -278,7 +283,7 @@ def gopher_repetition(df, text_col: str = "text", id_col: str = "doc_id"):
 
     import pandas as pd
 
-    id_type = df.schema[id_col].dataType.simpleString()
+    id_type = df.schema["doc_id"].dataType.simpleString()
     ns = sorted(GOPHER_TOP_NGRAM) + sorted(GOPHER_DUP_NGRAM)
     top_ns, dup_ns = sorted(GOPHER_TOP_NGRAM), sorted(GOPHER_DUP_NGRAM)
     frac_cols = [f"top{n}_frac" for n in top_ns] + [f"dup{n}_frac" for n in dup_ns]
@@ -289,7 +294,7 @@ def gopher_repetition(df, text_col: str = "text", id_col: str = "doc_id"):
         for pdf in batches:
             out: dict[str, list] = {c: [] for c in ["doc_id", *frac_cols,
                                                     "passes_repetition"]}
-            for doc_id, text in zip(pdf[id_col], pdf[text_col]):
+            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
                 toks = word_tokens(text)
                 if len(toks) < 2:
                     # no repetition signal — absent from the result, same
@@ -320,14 +325,10 @@ def gopher_repetition(df, text_col: str = "text", id_col: str = "doc_id"):
     schema = ", ".join([f"doc_id {id_type}"]
                        + [f"{c} double" for c in frac_cols]
                        + ["passes_repetition boolean"])
-    out = df.select(id_col, text_col).mapInPandas(kernel, schema=schema)
-    if id_col != "doc_id":
-        out = out.withColumnRenamed("doc_id", id_col)
-    return out
+    return df.select("doc_id", "text").mapInPandas(kernel, schema=schema)
 
 
-def unigram_lm_scores(df, text_col: str = "text",
-                      id_col: str = "doc_id"):
+def unigram_lm_scores(df):
     """CCNet-style language-model quality scoring with a corpus-trained
     unigram LM (Wenzek et al. 2020 score low-perplexity ≈ fluent): the
     model is the corpus's own unigram distribution, the score is each
@@ -348,18 +349,18 @@ def unigram_lm_scores(df, text_col: str = "text",
     At 100 TB the vocab table is the (bounded) distinct-word set —
     orders of magnitude smaller than the corpus — and the scoring join
     shuffles tokens by word with map-side partial aggregation on doc_id.
-    Returns (doc_id, n_toks, avg_logprob). Docs with zero alphanumeric
-    tokens are excluded (no tokens to score)."""
-    toks = df.select(
-        F.col(id_col).alias("_id"), tokens(F.col(text_col)).alias("_tk")
-    ).select("_id", F.explode("_tk").alias("word"))
+    Reads (doc_id, text, …) and returns (doc_id, n_toks, avg_logprob).
+    Docs with zero alphanumeric tokens are excluded (no tokens to
+    score)."""
+    toks = df.select("doc_id", tokens(F.col("text")).alias("_tk")).select(
+        "doc_id", F.explode("_tk").alias("word"))
     vocab = toks.groupBy("word").agg(F.count("*").alias("c"))
     total = vocab.agg(F.sum("c").alias("_total"))
     logp = vocab.crossJoin(F.broadcast(total)).select(
         "word", (F.log(F.col("c") / F.col("_total"))).alias("logp"))
     return (
         toks.join(logp, "word")
-        .groupBy(F.col("_id").alias(id_col))
+        .groupBy("doc_id")
         .agg(F.count("*").alias("n_toks"),
              F.round(F.avg("logp"), 6).alias("avg_logprob"))
     )

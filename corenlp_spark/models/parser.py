@@ -30,6 +30,7 @@ selectable via ``model="rule"`` (distillation teacher / fallback).
 
 from __future__ import annotations
 
+import functools
 from collections import defaultdict
 
 from corenlp_spark.models.perceptron import load_weights
@@ -866,11 +867,6 @@ class ArcStandardParser:
         return m
 
 
-_PARSER = None
-
-
+@functools.cache
 def get_trained_parser() -> ArcStandardParser:
-    global _PARSER
-    if _PARSER is None:
-        _PARSER = ArcStandardParser.from_broadcastable(load_weights("parser"))
-    return _PARSER
+    return ArcStandardParser.from_broadcastable(load_weights("parser"))

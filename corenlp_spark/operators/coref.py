@@ -23,6 +23,8 @@ Output column:
 
 from __future__ import annotations
 
+import functools
+
 from corenlp_spark.data import dictionaries as _dict
 
 COREF_TYPE = (
@@ -253,18 +255,13 @@ def defnp_candidates(mentions: list, i: int) -> list[int]:
     return out
 
 
-_RANKER = None
-
-
+@functools.cache
 def _get_ranker():
     """Lazy once-per-process load of the trained mention ranker."""
-    global _RANKER
-    if _RANKER is None:
-        from corenlp_spark.models.coref_ranker import CorefRanker
-        from corenlp_spark.models.perceptron import load_weights
+    from corenlp_spark.models.coref_ranker import CorefRanker
+    from corenlp_spark.models.perceptron import load_weights
 
-        _RANKER = CorefRanker.from_broadcastable(load_weights("coref"))
-    return _RANKER
+    return CorefRanker.from_broadcastable(load_weights("coref"))
 
 
 def run_sieves(mentions: list[Mention], tokens: list[dict] | None = None) -> None:

@@ -23,6 +23,8 @@ join, and the ensemble's groupBy is the only shuffle.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -343,17 +345,12 @@ def dep_path(parent: dict, lemmas: list[str], a: int, b: int,
     return path
 
 
-_REL_MODEL = None
-
-
+@functools.cache
 def _get_rel_model():
-    global _REL_MODEL
-    if _REL_MODEL is None:
-        from corenlp_spark.models.perceptron import (
-            RelationClassifier, load_weights,
-        )
-        _REL_MODEL = RelationClassifier.from_broadcastable(load_weights("kbp"))
-    return _REL_MODEL
+    from corenlp_spark.models.perceptron import (
+        RelationClassifier, load_weights,
+    )
+    return RelationClassifier.from_broadcastable(load_weights("kbp"))
 
 
 def _trx_pattern(trigger: str, s_ner: str, o_ner: str) -> str:

@@ -23,6 +23,7 @@ Zero shuffle; no per-row Python — everything runs inside mapInPandas batches.
 
 from __future__ import annotations
 
+import functools
 import re
 
 NER_TOKENS_TYPE = (
@@ -91,19 +92,13 @@ for _lab, phrases in GAZETTEER.items():
         if _w > 0:
             _TRIGGER.setdefault(_ph[0], []).append((_lab, _ph, _w))
 
-_NER_MODEL = None
-
-
+@functools.cache
 def _get_ner_model():
     """Lazy once-per-process load of the trained structured perceptron."""
-    global _NER_MODEL
-    if _NER_MODEL is None:
-        from corenlp_spark.models.perceptron import (
-            StructuredPerceptronNER, load_weights,
-        )
-        _NER_MODEL = StructuredPerceptronNER.from_broadcastable(
-            load_weights("ner"))
-    return _NER_MODEL
+    from corenlp_spark.models.perceptron import (
+        StructuredPerceptronNER, load_weights,
+    )
+    return StructuredPerceptronNER.from_broadcastable(load_weights("ner"))
 
 
 def _gazetteer_overwrite(words: list[str], ner: list[str]) -> None:

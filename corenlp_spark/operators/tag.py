@@ -19,6 +19,7 @@ The stage is narrow: per-doc, zero shuffle.
 
 from __future__ import annotations
 
+import functools
 import re
 
 TAGGED_TOKENS_TYPE = (
@@ -95,20 +96,14 @@ _PUNCT_TAGS = {".": ".", ",": ",", ":": ":", ";": ":", "?": ".", "!": ".",
 _RE_NUM = re.compile(r"^\d[\d,.:]*$")
 _RE_ORD = re.compile(r"^\d+(st|nd|rd|th)$")
 
-_POS_MODEL = None
-
-
+@functools.cache
 def _get_pos_model():
     """Lazy once-per-process model load (executor-side; the committed
     weights artifact rides with the package via --py-files)."""
-    global _POS_MODEL
-    if _POS_MODEL is None:
-        from corenlp_spark.models.perceptron import (
-            AveragedPerceptronTagger, load_weights,
-        )
-        _POS_MODEL = AveragedPerceptronTagger.from_broadcastable(
-            load_weights("pos"))
-    return _POS_MODEL
+    from corenlp_spark.models.perceptron import (
+        AveragedPerceptronTagger, load_weights,
+    )
+    return AveragedPerceptronTagger.from_broadcastable(load_weights("pos"))
 
 
 def _pos_constraints(words: list[str]) -> dict[int, str]:

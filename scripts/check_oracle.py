@@ -1,10 +1,10 @@
 """Local replica of the driver's correctness check: run each queries() entry
 on Spark and its oracle_sql() on DuckDB over the same parquet; compare
-row count, column names, and an order-insensitive value hash."""
+row count, column names, and an order-insensitive value hash (the
+benchmark's own ``rows_digest``)."""
 
 from __future__ import annotations
 
-import hashlib
 import os
 import sys
 
@@ -12,33 +12,13 @@ import duckdb
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
+sys.path.insert(0, os.path.join(REPO, "perfbench"))
 import __spark_entry__ as entry_mod  # noqa: E402
 from corenlp_spark.session import get_spark  # noqa: E402
+from workloads import rows_digest  # noqa: E402
 
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 ONLY = sys.argv[2].split(",") if len(sys.argv) > 2 else None
-
-
-def value_hash(rows, cols):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    canon = sorted(
-        tuple(_norm(r[i]) for i in order) for r in rows
-    )
-    h = hashlib.sha256(repr(canon).encode()).hexdigest()
-    return h
-
-
-def _norm(v):
-    import datetime
-    import decimal
-
-    if isinstance(v, decimal.Decimal):
-        v = float(v)
-    if isinstance(v, float):
-        return f"{v:.6f}"
-    if isinstance(v, datetime.datetime):
-        return v.replace(tzinfo=None).isoformat()
-    return str(v)
 
 
 def main():
@@ -81,7 +61,7 @@ def main():
             problems.append(f"rowcount {len(s_rows)} vs {len(d_rows)}")
         if sorted(s_cols) != sorted(d_cols):
             problems.append(f"cols {sorted(s_cols)} vs {sorted(d_cols)}")
-        if not problems and value_hash(s_rows, s_cols) != value_hash(d_rows, d_cols):
+        if not problems and rows_digest(s_rows, s_cols) != rows_digest(d_rows, d_cols):
             problems.append("value-hash mismatch")
             so = sorted(s_rows)[:3]
             do = sorted(d_rows)[:3]

@@ -26,7 +26,7 @@ def _value_hash():
         "check_oracle", os.path.join(_REPO, "scripts", "check_oracle.py"))
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
-    return mod.value_hash
+    return mod.rows_digest
 
 
 @pytest.fixture(scope="module")
@@ -41,6 +41,23 @@ def oracle():
 def test_every_query_has_an_oracle():
     assert set(em.queries()) == set(em.oracle_sql())
     assert len(em.queries()) == 51
+
+
+def test_docs_and_docs_sql_agree_on_awkward_probes(spark, oracle):
+    """A suite query's input, ``_docs`` on Spark and ``_docs_sql`` on
+    DuckDB, is the same rows when a probe text holds a quote, a newline,
+    a backslash or non-ASCII characters."""
+    con, _, _ = oracle
+    probes = [("__q'1", "it's five o'clock"),
+              ("__nl", "line one\nline two\n"),
+              ("__bs", "a back\\slash \\n stays"),
+              ("__u", "naïve café — 東京")]
+    df = em._docs(spark, SF, probes)
+    rel = con.sql(f"WITH {em._docs_sql(probes)} SELECT * FROM input")
+    rows, want = [tuple(r) for r in df.collect()], rel.fetchall()
+    assert df.columns == rel.columns == ["doc_id", "text"]
+    assert sorted(rows) == sorted(want)
+    assert set(probes) <= set(rows)
 
 
 @pytest.mark.parametrize("name", SHARED)

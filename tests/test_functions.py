@@ -148,7 +148,7 @@ def _ivf_ann_pairs_sql(emb, dim, n_cells=16, threshold=0.7,
     cents = centroids if centroids is not None else _planes(dim, n_cells)
     id_type = emb.schema[id_col].dataType.simpleString()
     ids = emb.select(id_col, vec_col).mapInPandas(
-        _assign_kernel(cents, vec_col, carry=(id_col,)),
+        _assign_kernel(cents, carry=(id_col,)),
         schema=f"cell int, {id_col} {id_type}",
     ).select(F.col(id_col).alias("id"), "cell")
     cand = (
@@ -398,7 +398,7 @@ def test_dup_components(spark):
 
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (5, 6), (7, 8), (8, 9), (9, 7)],
-        "id_a long, id_b long")
+        "doc_a long, doc_b long")
     got = {r.id: r.component for r in dup_components(pairs).collect()}
     assert got == {1: 1, 2: 1, 3: 1, 5: 5, 6: 5, 7: 7, 8: 7, 9: 7}
 
@@ -448,8 +448,8 @@ def test_dup_components_hybrid_paths_agree(spark, monkeypatch):
     pairs = spark.createDataFrame(pd.DataFrame({
         # two chains + a clique + a singleton pair: worst shapes for
         # min-label rounds
-        "id_a": [1, 2, 3, 10, 11, 20, 20, 21, 30],
-        "id_b": [2, 3, 4, 11, 12, 21, 22, 22, 31],
+        "doc_a": [1, 2, 3, 10, 11, 20, 20, 21, 30],
+        "doc_b": [2, 3, 4, 11, 12, 21, 22, 22, 31],
     }))
     fast = sorted(tuple(r) for r in dedup.dup_components(pairs).collect())
     monkeypatch.setattr(dedup, "DRIVER_MAX_PAIRS", 0)
@@ -469,7 +469,7 @@ def test_dup_components_long_path_converges(spark, monkeypatch):
 
     monkeypatch.setattr(dedup, "DRIVER_MAX_PAIRS", 0)
     pairs = spark.createDataFrame([(i, i + 1) for i in range(39)],
-                                  "id_a long, id_b long")
+                                  "doc_a long, doc_b long")
     dist = sorted(tuple(r) for r in dedup.dup_components(pairs).collect())
     assert dist == [(i, 0) for i in range(40)]
 
@@ -668,7 +668,7 @@ def test_components_and_lm_scores_leave_no_session_state(spark):
     # ids, not a count: the ContextCleaner may drop older RDDs meanwhile
     before = set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
     pairs = spark.createDataFrame([(1, 2), (2, 3), (5, 6)],
-                                  "id_a long, id_b long")
+                                  "doc_a long, doc_b long")
     assert len(dup_components(pairs).collect()) == 5
     docs = spark.createDataFrame([(1, "the the cat"), (2, "the dog")],
                                  "doc_id long, text string")
@@ -690,9 +690,9 @@ def test_dup_components_releases_pairs_when_fetch_fails(spark):
         raise ValueError("pair verifier failed")
 
     spark.catalog.clearCache()
-    pairs = spark.createDataFrame([(1, 2)], "id_a long, id_b long")
+    pairs = spark.createDataFrame([(1, 2)], "doc_a long, doc_b long")
     with pytest.raises(PythonException, match="pair verifier failed"):
-        dup_components(pairs.withColumn("id_b", boom("id_b")))
+        dup_components(pairs.withColumn("doc_b", boom("doc_b")))
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
