@@ -433,54 +433,40 @@ def q_mention_chunks_sql(spark, sf_dir):
     gazetteer tagging of document tokens — the SQL-checkable twin of the NER
     mention chunker.
 
-    r6 shape (guide §2.4): run detection is row-local, so the per-document
-    run statistics (run count, tagged-token count, longest run) are computed
-    in-row with array algebra and reduced by ONE tiny global aggregate — the
-    previous shape exploded every token through a doc-partitioned window
-    (lag + running sum) plus two groupBys, shuffling ~60 rows per document
-    to rediscover adjacency the array already encodes. Result rows are
-    identical (same run boundaries, counts, max lengths; a tag with zero
-    runs is absent either way)."""
-    from typing import Iterator
-
-    import pandas as pd
-
-    from corenlp_spark.functions.textstats import word_tokens
+    Run detection is row-local, so each text's run statistics (run count,
+    tagged-token count, longest run, per tag) are one per-text function run
+    by ``textstats.text_rows``, reduced by ONE tiny global aggregate. Same
+    rows as the oracle's token window (a tag with zero runs is absent)."""
+    from corenlp_spark.functions.textstats import text_rows, word_tokens
 
     groups = {"TOOL": {"spark", "hash", "merge"},
               "ENTITY": {"customer", "order", "part"}}
 
-    def run_stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f"{p}_{t}" for t in ("ENTITY", "TOOL") for p in ("r", "k", "m")]
-        for pdf in batches:
-            out = {c: [] for c in cols}
-            for text in pdf["text"]:
-                toks = word_tokens(text)
-                for tag in ("ENTITY", "TOOL"):
-                    words = groups[tag]
-                    runs = toks_in = best = cur = 0
-                    prev = False
-                    for w in toks:
-                        hit = w in words
-                        if hit:
-                            toks_in += 1
-                            cur += 1
-                            if cur > best:
-                                best = cur
-                            if not prev:
-                                runs += 1
-                        else:
-                            cur = 0
-                        prev = hit
-                    out[f"r_{tag}"].append(runs)
-                    out[f"k_{tag}"].append(toks_in)
-                    out[f"m_{tag}"].append(best)
-            yield pd.DataFrame(out)
+    def run_stats(text):
+        toks = word_tokens(text)
+        row = []
+        for tag in ("ENTITY", "TOOL"):
+            words = groups[tag]
+            runs = toks_in = best = cur = 0
+            prev = False
+            for w in toks:
+                hit = w in words
+                if hit:
+                    toks_in += 1
+                    cur += 1
+                    if cur > best:
+                        best = cur
+                    if not prev:
+                        runs += 1
+                else:
+                    cur = 0
+                prev = hit
+            row += [runs, toks_in, best]
+        return [row]
 
-    wide = _docs(spark, sf_dir).select("text").mapInPandas(
-        run_stats,
-        schema=("r_ENTITY int, k_ENTITY int, m_ENTITY int, "
-                "r_TOOL int, k_TOOL int, m_TOOL int"))
+    wide = text_rows(_docs(spark, sf_dir), run_stats,
+                     "r_ENTITY int, k_ENTITY int, m_ENTITY int, "
+                     "r_TOOL int, k_TOOL int, m_TOOL int")
     agg = wide.agg(*[
         f for t in ("ENTITY", "TOOL") for f in (
             F.sum(f"r_{t}").cast("long").alias(f"nm_{t}"),

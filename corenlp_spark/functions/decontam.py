@@ -5,7 +5,7 @@ whitespace-token definition used by large-corpus pipelines).
 Scale shape: the benchmark side is small by construction (eval suites are
 KBs, the corpus is TBs) — its distinct n-grams are collected into a
 broadcast equi-join, so the corpus side stays a single narrow pass:
-tokenize → explode n-grams → hash-join against the broadcast set →
+n-gram rows (one ``text_rows`` pass) → hash-join against the broadcast set →
 per-doc aggregate. No shuffle of corpus text; the only wide exchange is
 the final per-doc count aggregation over matching rows (proportional to
 contamination incidence, not corpus size).
@@ -19,22 +19,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from corenlp_spark.functions.dedup import shingles
+from corenlp_spark.functions.textstats import text_rows
 
-def _grams(df: DataFrame, id_col: str, n: int) -> DataFrame:
-    """(doc_id, gram): the distinct word ``n``-grams of each row's
-    ``text``, keyed by its ``id_col``, built by the row-local Arrow shingle
-    kernel. The kernel emits one all-tokens gram for a text shorter than
-    ``n`` tokens; the filter drops it."""
-    from corenlp_spark.functions.dedup import _shingle_mhs_kernel
 
-    kernel, schema = _shingle_mhs_kernel(
-        0, n, with_sh=True, id_type=df.schema[id_col].dataType.simpleString())
-    return (
-        df.select(F.col(id_col).alias("doc_id"), "text")
-        .mapInPandas(kernel, schema=schema)
-        .select("doc_id", F.explode("sh").alias("gram"))
-        .filter((F.size(F.split("gram", " ")) == n) & (F.col("gram") != ""))
-    )
+def _grams(df: DataFrame, n: int) -> DataFrame:
+    """(doc_id, gram): the distinct word ``n``-grams of each document's
+    ``text``; a text of fewer than ``n`` tokens has none."""
+    return text_rows(df, lambda text: [(g,) for g in shingles(text, n)
+                                       if g and g.count(" ") == n - 1],
+                     "gram string")
 
 
 def contaminated_docs(docs: DataFrame, benchmark: DataFrame,
@@ -46,8 +40,9 @@ def contaminated_docs(docs: DataFrame, benchmark: DataFrame,
     ``docs`` is (doc_id, text, …) and ``benchmark`` is (bench_id, text);
     the benchmark's distinct n-grams are broadcast.
     """
-    bench = _grams(benchmark, "bench_id", n).withColumnRenamed("doc_id", "bench_id")
-    corpus = _grams(docs, "doc_id", n)
+    bench = _grams(benchmark.withColumnRenamed("bench_id", "doc_id"), n) \
+        .withColumnRenamed("doc_id", "bench_id")
+    corpus = _grams(docs, n)
     return (
         corpus.join(F.broadcast(bench), "gram")
         .groupBy("doc_id", "bench_id")

@@ -1,7 +1,9 @@
 """Document deduplication suite for training-data pipelines.
 
-Four strategies over the ``documents`` table (doc_id, text, …):
+Five strategies over the ``documents`` table (doc_id, text, …):
   - exact:        md5 fingerprint group-by (engine-portable hashing)
+  - paragraph:    md5 of each trimmed paragraph, grouped across documents
+                  (boilerplate found in ≥ ``PARA_MIN_DOCS`` documents)
   - minhash LSH:  shingle → per-band min(md5(shingle ∥ band)) → (band, mh)
                   buckets; pairs verified inside each bucket by exact
                   shingle Jaccard
@@ -14,13 +16,15 @@ Every pair search emits (doc_a, doc_b, jaccard | hamming) with
 doc_a < doc_b, and ``dup_components`` reads those two columns.
 
 Column-level logic is built-in ``pyspark.sql.functions`` (JVM-side,
-codegen'd) except for row- or bucket-local Arrow kernels
-(``mapInPandas``): shingling + minhash signatures (``_shingle_mhs_kernel``),
-the simhash sign sum, and the in-bucket verifies of ``minhash_dup_pairs``
-(Jaccard) and ``simhash_pairs_from_sigs`` (hamming), both run by
-``similarity.bucket_pairs``, the one in-bucket verifier, shared with the
-LSH and IVF pair searches. Each is value-identical to its SQL form. Hashes
-are md5-hex so a DuckDB oracle can reproduce every value bit-for-bit.
+codegen'd) except for two kinds of Arrow kernel. The row-local ones are
+per-text functions run by ``textstats.text_rows``, the one curation text
+loop: ``shingles`` with ``_minhashes`` (the minhash signatures) and
+``_simhash`` (the sign sum). The bucket-local ones are the in-bucket
+verifies of ``minhash_dup_pairs`` (Jaccard) and ``simhash_pairs_from_sigs``
+(hamming), both run by ``similarity.bucket_pairs``, the one in-bucket
+verifier, shared with the LSH and IVF pair searches. Each is
+value-identical to its SQL form. Hashes are md5-hex so a DuckDB oracle can
+reproduce every value bit-for-bit.
 
 Scale notes: minhash bands bound the verify fan-out (no O(n²) compare);
 the simhash blocks (4 × 15 bits) bound the hamming search the same way.
@@ -28,9 +32,16 @@ the simhash blocks (4 × 15 bits) bound the hamming search the same way.
 
 from __future__ import annotations
 
+import hashlib
+
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+from corenlp_spark.functions.textstats import (
+    _round6_like_spark_array, text_rows, word_tokens,
+)
 
 
 def exact_dup_clusters(docs: DataFrame) -> DataFrame:
@@ -84,76 +95,52 @@ def paragraph_dup_stats(docs: DataFrame) -> DataFrame:
     )
 
 
-#: (n_bands → gram → [band-salted md5 digests]) — see _shingle_mhs_kernel
+#: (n_bands → gram → [band-salted md5 digests]) — see _minhashes
 _MD5_BAND_CACHE: dict[int, dict[str, list[bytes]]] = {}
-#: token → truncated md5 int — see simhash()
+#: token → truncated md5 int — see _simhash
 _MD5_TOKEN_CACHE: dict[str, int] = {}
 
 
-def _shingle_mhs_kernel(n_bands: int, k: int, with_sh: bool, id_type: str):
-    """Arrow-batched (doc_id[, sh], mhs) kernel: distinct word k-shingles
-    and the per-band min-md5 signatures, computed row-locally in one pass
-    (r6, guide §4.2 — replaces the interpreted transform/array_min HOF
-    forest; md5 hex and the shingle construction are byte-identical to the
-    SQL twin, including the short-doc concat_ws-skips-missing semantics and
-    lexicographic hex min)."""
-    import hashlib
-    from typing import Iterator
+def shingles(text: str | None, k: int) -> list[str]:
+    """The distinct word ``k``-shingles of ``text`` in first-seen order,
+    byte-identical to the SQL twin: a text of fewer than ``k`` tokens gives
+    one shingle of all its tokens (``concat_ws`` skips missing elements),
+    and a NULL or token-free text gives ``[""]``."""
+    toks = word_tokens(text)
+    return list(dict.fromkeys(
+        " ".join(toks[i:i + k]) for i in range(max(len(toks) - k, 0) + 1)))
 
-    import pandas as pd
 
-    from corenlp_spark.functions.textstats import word_tokens
+def _minhashes(grams: list[str], n_bands: int) -> list[str]:
+    """Per band b, the least md5 hex of ``gram ∥ "#b"`` over ``grams``.
 
-    suffixes = [f"#{b}".encode() for b in range(n_bands)]
-    # r6: md5 is a pure function of (gram, band) and corpora repeat shingles
-    # (Zipf), so per-gram band digests are cached across docs AND tasks
-    # (module-level, reused Python workers). Capped so a pathological
-    # vocabulary degrades to the plain path; values identical by purity.
-    # Raw 16-byte digests take ~30% less memory than 32-char hex; fixed-
-    # width lowercase hex sorts like its bytes, so only each band's
-    # minimum is hexed.
+    md5 is a pure function of (gram, band) and corpora repeat shingles
+    (Zipf), so each gram's band digests are cached across texts and tasks
+    (module-level, reused Python workers), capped so a pathological
+    vocabulary degrades to the plain path. Raw 16-byte digests take ~30%
+    less memory than 32-char hex; fixed-width lowercase hex sorts like its
+    bytes, so only each band's minimum is hexed."""
     cache = _MD5_BAND_CACHE.setdefault(n_bands, {})
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        md5 = hashlib.md5
-        for pdf in batches:
-            out = {"doc_id": [], "mhs": []}
-            if with_sh:
-                out["sh"] = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                toks = word_tokens(text)
-                n = len(toks)
-                grams = list(dict.fromkeys(
-                    " ".join(toks[i:i + k]) for i in range(max(n - k, 0) + 1)))
-                out["doc_id"].append(doc_id)
-                if with_sh:
-                    out["sh"].append(grams)
-                rows = []
-                for g in grams:
-                    dg = cache.get(g)
-                    if dg is None:
-                        e = g.encode()
-                        dg = [md5(e + suf).digest() for suf in suffixes]
-                        if len(cache) < 200_000:
-                            cache[g] = dg
-                    rows.append(dg)
-                out["mhs"].append([min(b).hex() for b in zip(*rows)])
-            yield pd.DataFrame(out)
-
-    cols = f"doc_id {id_type}, "
-    if with_sh:
-        cols += "sh array<string>, "
-    return kernel, cols + "mhs array<string>"
+    suffixes = [f"#{b}".encode() for b in range(n_bands)]
+    rows = []
+    for g in grams:
+        dg = cache.get(g)
+        if dg is None:
+            e = g.encode()
+            dg = [hashlib.md5(e + suf).digest() for suf in suffixes]
+            if len(cache) < 200_000:
+                cache[g] = dg
+        rows.append(dg)
+    return [min(b).hex() for b in zip(*rows)]
 
 
 def minhash_signatures(docs: DataFrame, n_bands: int = 8, k: int = 3) -> DataFrame:
-    """(doc_id, band, mh): per-band minhash of word k-shingles — the
-    signatures come from the row-local Arrow kernel (one narrow map), then
-    one posexplode to the per-band rows."""
-    kernel, schema = _shingle_mhs_kernel(
-        n_bands, k, with_sh=False,
-        id_type=docs.schema["doc_id"].dataType.simpleString())
-    sigs = docs.select("doc_id", "text").mapInPandas(kernel, schema=schema)
+    """(doc_id, band, mh): per-band minhash of word k-shingles — one
+    ``text_rows`` pass for the signatures, then one posexplode to the
+    per-band rows."""
+    sigs = text_rows(
+        docs, lambda text: [(_minhashes(shingles(text, k), n_bands),)],
+        "mhs array<string>")
     return sigs.select(
         "doc_id", F.posexplode("mhs").alias("band", "mh"))
 
@@ -175,13 +162,13 @@ def minhash_dup_pairs(
     import numpy as np
 
     from corenlp_spark.functions.similarity import bucket_pairs
-    from corenlp_spark.functions.textstats import _round6_like_spark_array
 
-    id_type = docs.schema["doc_id"].dataType.simpleString()
-    kernel, schema = _shingle_mhs_kernel(n_bands, k, with_sh=True,
-                                         id_type=id_type)
+    def per_text(text):
+        sh = shingles(text, k)
+        return [(sh, _minhashes(sh, n_bands))]
+
     posted = (
-        docs.select("doc_id", "text").mapInPandas(kernel, schema=schema)
+        text_rows(docs, per_text, "sh array<string>, mhs array<string>")
         .select("doc_id", "sh", "mhs",
                 F.posexplode("mhs").alias("band", "mh"))
     )
@@ -202,64 +189,38 @@ def minhash_dup_pairs(
                         out=("doc_a", "doc_b", "jaccard"), band_keys="mhs")
 
 
+def _simhash(text: str | None) -> list[tuple[int]]:
+    """``simhash``'s row for one text; none for a text without tokens."""
+    import numpy as np
+
+    toks = dict.fromkeys(word_tokens(text))
+    if not toks:
+        return []
+    hs = []
+    for t in toks:
+        h = _MD5_TOKEN_CACHE.get(t)
+        if h is None:
+            h = int(hashlib.md5(t.encode()).hexdigest()[:15], 16)
+            if len(_MD5_TOKEN_CACHE) < 500_000:
+                _MD5_TOKEN_CACHE[t] = h
+        hs.append(h)
+    bits = np.arange(60, dtype=np.uint64)
+    ones = ((np.array(hs, dtype=np.uint64)[:, None] >> bits)
+            & np.uint64(1)).sum(axis=0)
+    return [(int(((2 * ones > len(toks)).astype(np.uint64) << bits).sum()),)]
+
+
 def simhash(docs: DataFrame) -> DataFrame:
     """(doc_id, simhash): 60-bit sign-sum simhash from per-token md5 bits.
 
     bit_j(token) = j-th bit of md5(token); simhash bit j = majority vote
-    (2·ones > n form). r6 shape (guide §2.4/§4.2): the whole signature is
-    row-local integer arithmetic, so it runs as ONE Arrow-batched kernel —
-    md5 per distinct token, a vectorized per-bit segment sum
-    (np.add.reduceat over the batch's token matrix), majority vote, done.
-    The previous shape exploded every distinct token into a 61-column
-    groupBy — a shuffle of ~45 rows × 61 longs per doc that existed only
-    to reassemble what the row already had. Tokenization mirrors the SQL
-    twin exactly (ASCII \\w/\\s, the Java regex default); md5 and the
-    15-hex-digit truncation are byte-identical, all integer math — the
-    DuckDB oracle still replays the exploded ±1 form bit-for-bit.
-    Docs with zero tokens are absent from the result, as before."""
-    import hashlib
-    from typing import Iterator
-
-    import numpy as np
-    import pandas as pd
-
-    from corenlp_spark.functions.textstats import word_tokens
-
-    id_type = docs.schema["doc_id"].dataType.simpleString()
-    shifts = np.arange(60, dtype=np.uint64)
-    pow2 = (np.uint64(1) << shifts).astype(np.int64)
-    cache = _MD5_TOKEN_CACHE  # pure value cache (md5 of the token bytes)
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        md5 = hashlib.md5
-        for pdf in batches:
-            ids, hs, counts = [], [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                toks = dict.fromkeys(word_tokens(text))
-                if not toks:
-                    continue
-                ids.append(doc_id)
-                counts.append(len(toks))
-                for t in toks:
-                    h = cache.get(t)
-                    if h is None:
-                        h = int(md5(t.encode()).hexdigest()[:15], 16)
-                        if len(cache) < 500_000:
-                            cache[t] = h
-                    hs.append(h)
-            if not ids:
-                continue
-            H = np.array(hs, dtype=np.uint64)
-            B = ((H[:, None] >> shifts[None, :]) & np.uint64(1)).astype(np.int64)
-            starts = np.zeros(len(ids), dtype=np.int64)
-            np.cumsum(np.array(counts[:-1], dtype=np.int64), out=starts[1:])
-            ones = np.add.reduceat(B, starts, axis=0)
-            n = np.array(counts, dtype=np.int64)[:, None]
-            sim = ((2 * ones > n) * pow2[None, :]).sum(axis=1)
-            yield pd.DataFrame({"doc_id": ids, "simhash": sim})
-
-    return docs.select("doc_id", "text").mapInPandas(
-        kernel, schema=f"doc_id {id_type}, simhash long")
+    (2·ones > n form) over the distinct tokens. The signature is row-local
+    integer arithmetic, one ``text_rows`` pass with no shuffle.
+    Tokenization mirrors the SQL twin exactly (ASCII \\w/\\s, the Java
+    regex default); md5 and the 15-hex-digit truncation are byte-identical,
+    all integer math, so the DuckDB oracle's exploded ±1 form replays it
+    bit-for-bit. Docs with zero tokens are absent from the result."""
+    return text_rows(docs, _simhash, "simhash long")
 
 
 #: the 60-bit simhash split into 4 disjoint 15-bit blocks — by pigeonhole
@@ -335,11 +296,8 @@ def ngram_jaccard_pairs(
     carries no dedup signal). Jaccard is computed over the pruned shingle space on both
     sides, so near-dup pairs above ``threshold`` still surface.
     """
-    kernel, schema = _shingle_mhs_kernel(
-        0, k, with_sh=True,
-        id_type=docs.schema["doc_id"].dataType.simpleString())
-    sh = (docs.select("doc_id", "text").mapInPandas(kernel, schema=schema)
-          .select("doc_id", F.explode("sh").alias("s")))
+    sh = text_rows(docs, lambda text: [(s,) for s in shingles(text, k)],
+                   "s string")
     hot = sh.groupBy("s").count().filter(F.col("count") > HOT_SHINGLE_CAP)
     # persist the pruned shingle table: it feeds BOTH sides of the
     # inverted-index self-join AND the per-doc size agg, and Catalyst does
@@ -428,9 +386,9 @@ def dup_components(pairs: DataFrame) -> DataFrame:
                 lo, hi = (ra, rb) if ra < rb else (rb, ra)
                 parent[hi] = lo
         out = [(i, find(i)) for i in sorted(set(srcs) | set(dsts))]
-        id_type = fwd.schema["src"].dataType.simpleString()
+        id_type = fwd.schema["src"].dataType
         return fwd.sparkSession.createDataFrame(
-            out, schema=f"id {id_type}, component {id_type}")
+            out, schema=StructType().add("id", id_type).add("component", id_type))
     labels = (
         edges.select(F.col("src").alias("id"))
         .distinct()

@@ -95,17 +95,32 @@ def _planes(dim: int, n_planes: int) -> list[list[float]]:
     return out
 
 
+def _dots(embeddings, M):
+    """(rows, D): the positions of the non-NULL vectors in ``embeddings``
+    and their dot products with each column of ``M`` (dim × m), stacked in
+    float64 and accumulated SEQUENTIALLY over the dimension axis — the op
+    order of the ``_dot`` fold and DuckDB's list_dot_product, so every
+    score keeps its bits. A NULL vector has no dot product, as SQL
+    ``cosine`` gives it a NULL score."""
+    import numpy as np
+
+    rows = np.flatnonzero([v is not None for v in embeddings])
+    D = np.zeros((len(rows), M.shape[1]))
+    if len(rows):
+        V = np.stack([np.asarray(embeddings[i], dtype=np.float64) for i in rows])
+        for k in range(V.shape[1]):
+            D = D + V[:, k, None] * M[None, k, :]
+    return rows, D
+
+
 def _assign_kernel(cents, carry: tuple[str, ...] = (),
                    with_score: bool = False):
     """Arrow-batched nearest-centroid (argmax-dot) assignment of each
-    ``embedding`` → ``cell``, then the ``carry`` columns as they came in,
-    then the winning dot ``s`` when ``with_score``. Dot products
-    accumulate sequentially over the dimension axis in float64 (same op
-    order as the ``_dot`` fold and DuckDB's list_dot_product) and ties
-    break toward the LARGER cell (an
-    ``array_max`` over (score, cell) structs), so the DuckDB oracles replay
-    it bit-for-bit. ~20× faster than that interpreted HOF tree per row
-    (guide §4.2)."""
+    non-NULL ``embedding`` → ``cell``, then the ``carry`` columns as they
+    came in, then the winning dot ``s`` when ``with_score``. Dot products
+    are ``_dots`` and ties break toward the LARGER cell (an ``array_max``
+    over (score, cell) structs), so the DuckDB oracles replay it
+    bit-for-bit. A row with a NULL embedding gets no cell."""
     from typing import Iterator
 
     import numpy as np
@@ -115,19 +130,16 @@ def _assign_kernel(cents, carry: tuple[str, ...] = (),
 
     def kern(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            if not len(pdf):
+            rows, S = _dots(pdf["embedding"].values, C.T)
+            if not len(rows):
                 continue
-            V = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["embedding"]])
-            S = np.zeros((len(V), C.shape[0]))
-            for kk in range(V.shape[1]):
-                S = S + V[:, kk, None] * C[None, :, kk]
             # last argmax = larger cell wins exact ties
             cell = (C.shape[0] - 1) - np.argmax(S[:, ::-1], axis=1)
             out = {"cell": cell.astype(np.int32)}
             for c in carry:
-                out[c] = pdf[c].values
+                out[c] = pdf[c].values[rows]
             if with_score:
-                out["s"] = S[np.arange(len(V)), cell]
+                out["s"] = S[np.arange(len(rows)), cell]
             yield pd.DataFrame(out)
 
     return kern
@@ -309,8 +321,8 @@ def lsh_ann_pairs(
     """ANN near-neighbor pairs: random-hyperplane LSH bucketing + exact
     cosine verification. (id_a, id_b, score), id_a < id_b.
 
-    An Arrow-batched kernel computes the signatures (plane dots folded
-    sequentially over the dimension, like ``cosine``) and posts each
+    An Arrow-batched kernel computes the signatures (plane dots by
+    ``_dots``, folded like ``cosine``) and posts each non-NULL
     vector ONCE per band into its (band, sig) bucket, carrying its full
     per-band signature vector; ``bucket_pairs`` then verifies every pair
     inside the bucket with ``_cosine_verify``, dropping a pair in all
@@ -329,23 +341,18 @@ def lsh_ann_pairs(
 
     def post(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            if not len(pdf):
+            rows, D = _dots(pdf["embedding"].values, P)
+            if not len(rows):
                 continue
-            V = np.stack([np.asarray(v, dtype=np.float64)
-                          for v in pdf["embedding"]])
-            # plane dots, sequential over dim (bit-parity with the fold)
-            D = np.zeros((len(V), P.shape[1]))
-            for k in range(V.shape[1]):
-                D = D + V[:, k, None] * P[None, k, :]
             bits = (D >= 0).astype(np.int64)
             sigs = np.stack([
                 bits[:, b * band_bits:(b + 1) * band_bits] @ pow2
                 for b in range(n_bands)
             ], axis=1)  # (n, n_bands)
             yield pd.concat([pd.DataFrame({
-                "vec_id": pdf["vec_id"].values, "band": band,
+                "vec_id": pdf["vec_id"].values[rows], "band": band,
                 "sig": sigs[:, band], "sigs": list(sigs),
-                "embedding": pdf["embedding"].values,
+                "embedding": pdf["embedding"].values[rows],
             }) for band in range(n_bands)], ignore_index=True)
 
     id_type = emb.schema["vec_id"].dataType.simpleString()

@@ -5,19 +5,26 @@ Every function but one is built-in ``pyspark.sql.functions`` column
 algebra — JVM-side, whole-stage-codegen'd, and bit-for-bit reproducible in a
 DuckDB oracle (the formulas below are deliberately engine-portable: regexp
 token splits, md5 fingerprints, stopword-hit counts). ``gopher_repetition``
-is a row-local Arrow kernel over ``word_tokens``, the Python twin of
-``tokens``, and matches the SQL form the oracle replays value for value.
+is a per-text function over ``word_tokens``, the Python twin of
+``tokens``, run by ``text_rows``, and matches the SQL form the oracle
+replays value for value.
 
-The column functions take a text ``Column``; the two table functions,
-``gopher_repetition`` and ``unigram_lm_scores``, read the fixed document
-columns ``doc_id, text``.
+``text_rows`` is the one Arrow loop of the curation text kernels: the
+shingles, minhash and simhash signatures of ``dedup``, the n-grams of
+``decontam`` and the Gopher repetition signals are per-text functions it
+runs. It lives here, not in ``plans/fused``, so curation workers never
+import the NLP layer.
+
+The column functions take a text ``Column``; the table functions read the
+fixed document columns ``doc_id, text``.
 """
 
 from __future__ import annotations
 
 import re
+from collections import Counter
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 # marker words per language (deterministic n-gram-free heuristic; a real
@@ -49,6 +56,28 @@ def word_tokens(text: str | None) -> list[str]:
     """``tokens`` for one Python string, for the Arrow kernels: lowercase,
     punctuation to spaces, whitespace split, no empties; NULL → []."""
     return [t for t in _WS.split(_PUNCT.sub(" ", (text or "").lower())) if t]
+
+
+def text_rows(df: DataFrame, per_text, schema: str) -> DataFrame:
+    """The one curation text loop: ``per_text(text)`` returns a text's rows
+    (NULL text reaches it as None), and ONE ``mapInPandas`` over ``df``'s
+    ``doc_id, text`` yields ``(doc_id, *row)`` for each of them. ``schema``
+    is the DDL of the row columns; ``doc_id`` keeps ``df``'s type."""
+    from typing import Iterator
+
+    import pandas as pd
+
+    names = ["doc_id", *(field.split()[0] for field in schema.split(","))]
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            yield pd.DataFrame([(doc_id, *row)
+                                for doc_id, text in zip(pdf["doc_id"], pdf["text"])
+                                for row in per_text(text)], columns=names)
+
+    id_type = df.schema["doc_id"].dataType.simpleString()
+    return df.select("doc_id", "text").mapInPandas(
+        run, schema=f"doc_id {id_type}, {schema}")
 
 
 def token_count(col) -> Column:
@@ -251,7 +280,35 @@ def _round6_like_spark_array(x):
     return out
 
 
-def gopher_repetition(df):
+_REPETITION_NS = sorted(GOPHER_TOP_NGRAM) + sorted(GOPHER_DUP_NGRAM)
+_REPETITION_THRESHOLDS = [{**GOPHER_TOP_NGRAM, **GOPHER_DUP_NGRAM}[n]
+                          for n in _REPETITION_NS]
+
+
+def _repetition(text: str | None) -> list[tuple]:
+    """``gopher_repetition``'s row for one text: the fractions in
+    ``_REPETITION_NS`` order, then the pass flag; no row for a text of
+    fewer than 2 tokens (no repetition signal)."""
+    toks = word_tokens(text)
+    if len(toks) < 2:
+        return []
+    total = max(len(" ".join(toks)), 1)
+    fracs = []
+    for n in _REPETITION_NS:
+        if len(toks) < n:
+            fracs.append(0.0)
+            continue
+        counts = Counter(" ".join(toks[i:i + n])
+                         for i in range(len(toks) - n + 1))
+        if n in GOPHER_TOP_NGRAM:
+            chars = max(c * len(g) for g, c in counts.items())
+        else:
+            chars = sum(c * len(g) for g, c in counts.items() if c > 1)
+        fracs.append(_round6_like_spark(min(chars / total, 1.0)))
+    return [(*fracs, all(v <= t for v, t in zip(fracs, _REPETITION_THRESHOLDS)))]
+
+
+def gopher_repetition(df: DataFrame) -> DataFrame:
     """Gopher repetition signals (Rae et al. 2021 Appendix A): per document
     of ``df`` (doc_id, text, …),
     the character fraction of the heaviest n-gram (n=2..4) and of all
@@ -267,65 +324,17 @@ def gopher_repetition(df):
     this filter rejects. Tie-free (the published "most frequent n-gram" is
     ambiguous under count ties) and replayable exactly in SQL.
 
-    Scale shape (r6, guide §2.4/§4.2): ZERO shuffles — the per-document
-    n-gram counting is embarrassingly row-local, so it runs as one
-    Arrow-batched kernel (a Counter per (doc, n)) in a single narrow map
-    over the corpus. The previous shape exploded ~9·T gram rows per doc
-    through a (doc, n, gram) groupBy plus a per-doc rollup — two exchanges
-    carrying every gram string; this one carries nothing and is linear in
-    corpus size. Tokenization is ``word_tokens``, the Python twin of
-    ``tokens()`` (ASCII \\w/\\s, the Java regex default), and rounding
-    replicates F.round's BigDecimal HALF_UP, so values are bit-identical;
-    the DuckDB oracle still replays the exploded groupBy form.
+    Zero shuffles: the n-gram counting (a Counter per (doc, n)) is
+    row-local, one ``text_rows`` pass. Tokenization is ``word_tokens``,
+    the Python twin of ``tokens()`` (ASCII \\w/\\s, the Java regex
+    default), and rounding replicates F.round's BigDecimal HALF_UP, so
+    values are bit-identical to the exploded groupBy form the DuckDB
+    oracle replays. Texts of fewer than 2 tokens have no row.
     """
-    from collections import Counter
-    from typing import Iterator
-
-    import pandas as pd
-
-    id_type = df.schema["doc_id"].dataType.simpleString()
-    ns = sorted(GOPHER_TOP_NGRAM) + sorted(GOPHER_DUP_NGRAM)
-    top_ns, dup_ns = sorted(GOPHER_TOP_NGRAM), sorted(GOPHER_DUP_NGRAM)
-    frac_cols = [f"top{n}_frac" for n in top_ns] + [f"dup{n}_frac" for n in dup_ns]
-    thresholds = [GOPHER_TOP_NGRAM[n] for n in top_ns] + [
-        GOPHER_DUP_NGRAM[n] for n in dup_ns]
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {c: [] for c in ["doc_id", *frac_cols,
-                                                    "passes_repetition"]}
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                toks = word_tokens(text)
-                if len(toks) < 2:
-                    # no repetition signal — absent from the result, same
-                    # row set as the exploded groupBy form
-                    continue
-                total = max(len(" ".join(toks)), 1)
-                fracs = []
-                for n in ns:
-                    if len(toks) < n:
-                        fracs.append(0.0)
-                        continue
-                    counts = Counter(
-                        " ".join(toks[i:i + n])
-                        for i in range(len(toks) - n + 1))
-                    if n in GOPHER_TOP_NGRAM:
-                        chars = max(c * len(g) for g, c in counts.items())
-                    else:
-                        chars = sum(c * len(g) for g, c in counts.items()
-                                    if c > 1)
-                    fracs.append(_round6_like_spark(min(chars / total, 1.0)))
-                out["doc_id"].append(doc_id)
-                for c, v in zip(frac_cols, fracs):
-                    out[c].append(v)
-                out["passes_repetition"].append(
-                    all(v <= t for v, t in zip(fracs, thresholds)))
-            yield pd.DataFrame(out)
-
-    schema = ", ".join([f"doc_id {id_type}"]
-                       + [f"{c} double" for c in frac_cols]
-                       + ["passes_repetition boolean"])
-    return df.select("doc_id", "text").mapInPandas(kernel, schema=schema)
+    cols = [f"top{n}_frac" if n in GOPHER_TOP_NGRAM else f"dup{n}_frac"
+            for n in _REPETITION_NS]
+    return text_rows(df, _repetition, ", ".join(
+        [f"{c} double" for c in cols] + ["passes_repetition boolean"]))
 
 
 def unigram_lm_scores(df):

@@ -756,3 +756,87 @@ def test_ivf_multi_block_bucket_equals_reference(spark):
     want = sorted(map(tuple, _ivf_ann_pairs_sql(
         emb, dim=8, n_cells=1, threshold=0.9).collect()))
     assert len(got) > 1000 and got == want
+
+
+def test_embedding_kernels_skip_null_vectors(spark):
+    """A NULL embedding gets no cell, no signature and no pair — the SQL
+    ``cosine`` gives it a NULL score — so adding one leaves the LSH and IVF
+    pairs and the k-means summary as they were (the kernels used to fail
+    the task on it in ``np.stack``)."""
+    from corenlp_spark.functions.similarity import (
+        ivf_ann_pairs, kmeans_cluster_summary,
+    )
+    from tests.test_plans import SF
+
+    emb = spark.read.parquet(SF.replace("sf0.01", "sf0.001")
+                             + "/embeddings.parquet").select("vec_id", "embedding")
+    with_null = emb.unionByName(spark.createDataFrame(
+        [(10**9, None)], "vec_id long, embedding array<float>"))
+    runs = [
+        lambda e: lsh_ann_pairs(e, dim=64, n_bands=8, band_bits=8, threshold=0.2),
+        lambda e: ivf_ann_pairs(e, dim=64, n_cells=8, threshold=0.2),
+        lambda e: kmeans_cluster_summary(e, dim=64, k=4, iters=2),
+    ]
+    for run in runs:
+        want = sorted(map(tuple, run(emb).collect()))
+        assert want and sorted(map(tuple, run(with_null).collect())) == want
+
+
+def _md5_min(grams, band):
+    import hashlib
+    return min(hashlib.md5(f"{g}#{band}".encode()).hexdigest() for g in grams)
+
+
+def test_degenerate_texts_through_the_text_kernels(spark):
+    """NULL, empty, whitespace-only, punctuation-only and shorter-than-k
+    texts with string ids. Token-free texts all shingle to the one empty
+    shingle: each gets a minhash signature (of ""), and they pair with one
+    another at Jaccard 1.0 under minhash and n-gram Jaccard; they get no
+    simhash, no repetition row and no n-gram to decontaminate. A text
+    shorter than k shingles to all its tokens."""
+    from corenlp_spark.functions.decontam import contaminated_docs
+    from corenlp_spark.functions.dedup import minhash_signatures
+    from corenlp_spark.functions.textstats import gopher_repetition
+
+    texts = {"n": None, "e": "", "w": " \t\n  ", "p": "?!, ...",
+             "s1": "Hello", "s2": "hello, world!", "s2b": "Hello   World",
+             "l": "the quick brown fox jumps over the lazy dog"}
+    d = spark.createDataFrame(list(texts.items()), "doc_id string, text string")
+    grams = {i: [""] for i in "newp"} | {
+        "s1": ["hello"], "s2": ["hello world"], "s2b": ["hello world"],
+        "l": ["the quick brown", "quick brown fox", "brown fox jumps",
+              "fox jumps over", "jumps over the", "over the lazy",
+              "the lazy dog"]}
+    rows = lambda df: sorted(map(tuple, df.collect()))
+
+    sigs = minhash_signatures(d, n_bands=2, k=3)
+    assert sigs.schema.simpleString() == \
+        "struct<doc_id:string,band:int,mh:string>"
+    assert rows(sigs) == sorted((i, b, _md5_min(g, b))
+                                for i, g in grams.items() for b in (0, 1))
+    empty_pairs = [("e", "n"), ("e", "p"), ("e", "w"), ("n", "p"),
+                   ("n", "w"), ("p", "w"), ("s2", "s2b")]
+    assert rows(minhash_dup_pairs(d, n_bands=2, k=3, threshold=0.5)) == \
+        [(a, b, 1.0) for a, b in empty_pairs]
+    assert rows(ngram_jaccard_pairs(d, k=3, threshold=0.5)) == \
+        [(a, b, 1.0) for a, b in empty_pairs]
+
+    sims = dict(rows(simhash(d)))
+    assert sims == {"l": 71287435741409892, "s1": 419982666956583591,
+                    "s2": 419978266733191168, "s2b": 419978266733191168}
+    assert rows(simhash_dup_pairs(d)) == [("s2", "s2b", 0)]
+
+    assert rows(gopher_repetition(d)) == [
+        ("l", 0.255814, 0.348837, 0.488372, *[0.0] * 6, False),
+        ("s2", 1.0, *[0.0] * 8, False),
+        ("s2b", 1.0, *[0.0] * 8, False)]
+
+    bench = spark.createDataFrame(
+        [("b1", "HELLO world"), ("b2", None), ("b3", ""),
+         ("b4", "a quick brown fox jumps over the lazy dog")],
+        "bench_id string, text string")
+    hits = {n: rows(contaminated_docs(d, bench, n=n)) for n in (1, 2, 8)}
+    assert hits == {
+        1: [("l", "b4", 8), ("s1", "b1", 1), ("s2", "b1", 2), ("s2b", "b1", 2)],
+        2: [("l", "b4", 7), ("s2", "b1", 1), ("s2b", "b1", 1)],
+        8: [("l", "b4", 1)]}

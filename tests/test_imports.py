@@ -51,3 +51,22 @@ def test_package_imports_resolve():
     bad = [f"{p}:{line}: from {m} import {n}" for p, line, m, n in imports
            if not _resolves(m, n)]
     assert not bad, "\n".join(bad)
+
+
+def test_curation_functions_leave_the_nlp_layer_unimported():
+    """The curation text kernels run in workers that should not pay for
+    the NLP layer: importing ``dedup``, ``decontam`` and ``textstats``
+    (where ``text_rows`` lives) imports neither ``plans.fused`` nor the
+    tokenizer."""
+    import subprocess
+    import sys
+
+    code = (
+        "import sys\n"
+        "import corenlp_spark.functions.dedup, corenlp_spark.functions.decontam, "
+        "corenlp_spark.functions.textstats\n"
+        "print(sorted(m for m in ('corenlp_spark.plans.fused', "
+        "'corenlp_spark.operators.tokenize') if m in sys.modules))\n")
+    out = subprocess.run([sys.executable, "-c", code], cwd=ROOT, check=True,
+                         capture_output=True, text=True).stdout
+    assert out.strip() == "[]"

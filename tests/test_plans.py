@@ -267,3 +267,45 @@ def test_minhash_verify_is_bucket_local_grouped(spark, search):
     assert "Join" not in p
     assert p.count("Exchange hashpartitioning") == 1, p
     assert "InMemoryRelation" not in p
+
+
+def _text_functions():
+    from corenlp_spark.functions.decontam import contaminated_docs
+    from corenlp_spark.functions.dedup import (
+        minhash_dup_pairs, minhash_signatures, ngram_jaccard_pairs, simhash,
+    )
+    from corenlp_spark.functions.textstats import gopher_repetition
+
+    # (function of the documents, text passes it plans)
+    return {
+        "minhash_signatures": (minhash_signatures, 1),
+        "minhash_dup_pairs": (minhash_dup_pairs, 1),
+        "simhash": (simhash, 1),
+        "gopher_repetition": (gopher_repetition, 1),
+        # the hot-shingle census and the persisted table (ROADMAP item 3)
+        "ngram_jaccard_pairs": (ngram_jaccard_pairs, 2),
+        # one per side: the documents are their own benchmark here
+        "contaminated_docs": (lambda d: contaminated_docs(
+            d, d.withColumnRenamed("doc_id", "bench_id")), 2),
+    }
+
+
+@pytest.mark.parametrize("name", list(_text_functions()))
+def test_text_functions_run_one_text_loop(spark, name):
+    """Each curation text function runs its per-text work in the one
+    ``textstats.text_rows`` kernel: every documents scan reads only
+    ``doc_id, text`` and feeds straight into one MapInPandas over those
+    two columns, and no other kernel reads the documents."""
+    import re
+
+    fn, passes = _text_functions()[name]
+    lines = [line for line in plan_of(fn(spark.read.parquet(
+        f"{SF}/documents.parquet"))).splitlines() if "ColumnarToRow" not in line]
+    text_loop = r"MapInPandas \w+\(doc_id#\d+L, text#\d+\)"
+    scans = [i for i, line in enumerate(lines) if "FileScan" in line]
+    assert scans
+    for i in scans:
+        assert "ReadSchema: struct<doc_id:bigint,text:string>" in lines[i]
+        assert re.search(text_loop, lines[i - 1]), lines[i - 1]
+    kernels = {m for line in lines for m in re.findall(text_loop, line)}
+    assert len(kernels) == passes, kernels
